@@ -4229,7 +4229,8 @@ def q_regdomain_stats(spark, sf_dir):
     collapse into one row; host-level keys overcount)."""
     from edspdf_spark.operators.urls import registered_domain
 
-    u = _docs(spark, sf_dir).selectExpr(f"{_REGDOM_URL_SQL} AS url")
+    u = _docs(spark, sf_dir, spread=False).selectExpr(
+        f"{_REGDOM_URL_SQL} AS url")
     rd = registered_domain(u)
     return (rd.groupBy("reg_domain")
             .agg(F.count(F.lit(1)).alias("n_urls"),

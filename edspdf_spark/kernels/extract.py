@@ -12,37 +12,24 @@ pdfminer.py:117-194`):
 * parse failure => error=True, zero pages, unless raise_on_error
   (pdfminer.py:128-135)
 
-The parse itself is `kernels.pdf.parse_pdf` (this sandbox has no
-pdfminer); when pdfminer.six IS importable the `use_pdfminer=True`
-path runs the real library with the reference's LAParams for
-differential testing.
+The parse itself is `kernels.pdf.parse_pdf`, a self-built parser;
+pdfminer.six is not a dependency.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 from .pdf import PdfParseError, parse_pdf
 from .reading_order import reading_order
 from .styles import walk_line, walk_line_text
-
-try:  # optional, for differential tests only
-    from pdfminer.high_level import extract_pages as _pdfminer_extract_pages
-    from pdfminer.layout import LAParams as _LAParams
-    from pdfminer.layout import LTTextBoxHorizontal as _LTTBH
-    from pdfminer.pdftypes import PDFException as _PDFException
-
-    HAVE_PDFMINER = True
-except Exception:  # pragma: no cover - not installed in this sandbox
-    HAVE_PDFMINER = False
 
 
 Bloc = Dict[str, object]
 
 
 def extract_doc(content: bytes, extract_style: bool = False,
-                raise_on_error: bool = False,
-                use_pdfminer: bool = False) -> Dict[str, object]:
+                raise_on_error: bool = False) -> Dict[str, object]:
     """Extract one document.
 
     Returns {"error": bool, "num_pages": int,
@@ -50,9 +37,6 @@ def extract_doc(content: bytes, extract_style: bool = False,
              "blocs": [ {page_num, x0, x1, y0, y1, text, props}, ...]}
     with blocs already in reading order (per page, pages concatenated).
     """
-    if use_pdfminer:
-        return _extract_doc_pdfminer(content, extract_style, raise_on_error)
-
     try:
         parsed = parse_pdf(content)
     except PdfParseError:
@@ -94,57 +78,3 @@ def extract_doc(content: bytes, extract_style: bool = False,
     return {"error": False, "num_pages": len(pages), "pages": pages,
             "blocs": blocs}
 
-
-def _extract_doc_pdfminer(content: bytes, extract_style: bool,
-                          raise_on_error: bool) -> Dict[str, object]:
-    """Differential path through real pdfminer.six with the reference's
-    LAParams (pdfminer.py:103-111). Only used when the library exists.
-    """
-    if not HAVE_PDFMINER:  # pragma: no cover
-        raise RuntimeError("pdfminer.six is not installed")
-    from io import BytesIO
-
-    laparams = _LAParams(line_overlap=0.5, char_margin=2.05, line_margin=0.5,
-                         word_margin=0.1, boxes_flow=0.5, detect_vertical=False,
-                         all_texts=False)
-    try:
-        layout = list(_pdfminer_extract_pages(BytesIO(content), laparams=laparams))
-    except _PDFException:
-        if raise_on_error:
-            raise
-        return {"error": True, "num_pages": 0, "pages": [], "blocs": []}
-
-    blocs: List[Bloc] = []
-    pages = []
-    for page_no, pm_page in enumerate(layout):
-        w, h = pm_page.width, pm_page.height
-        pages.append((w, h))
-        page_blocs: List[Bloc] = []
-        for group in pm_page:
-            if not isinstance(group, _LTTBH):
-                continue
-            for line in group:
-                chars = [(c._text, getattr(c, "fontname", None),
-                          getattr(c, "upright", True))
-                         for c in line if hasattr(c, "_text")]
-                text, props = walk_line(chars)
-                if len(text) == 0:
-                    continue
-                page_blocs.append({
-                    "page_num": page_no,
-                    "x0": line.x0 / w,
-                    "x1": line.x1 / w,
-                    "y0": 1 - line.y1 / h,
-                    "y1": 1 - line.y0 / h,
-                    "text": text,
-                    "props": props if extract_style else [],
-                })
-        kept = [b for b in page_blocs
-                if b["x0"] >= 0 and b["y0"] >= 0 and b["x1"] <= 1 and b["y1"] <= 1]
-        order = reading_order(
-            [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"]) for b in kept]
-        )
-        blocs.extend(kept[i] for i in order)
-
-    return {"error": False, "num_pages": len(pages), "pages": pages,
-            "blocs": blocs}

@@ -22,11 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..plans import gate
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact components for a broadcast-scale edge set: collect once,
-    union-find on the driver, return (id, component=min reachable id).
-    Identical output to the distributed propagation."""
+
+def _driver_union_find(table, edges: DataFrame) -> DataFrame:
+    """Exact components for a broadcast-scale edge set: union-find on
+    the driver over the collected edge `table`, returned as (id,
+    component=min reachable id) with `edges`' id type. Identical
+    output to the distributed propagation."""
     parent: dict = {}
 
     def find(x):
@@ -37,8 +40,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
-        a, b = row[0], row[1]
+    for a, b in zip(*table.to_pydict().values()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -50,18 +52,12 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         if r not in best or node < best[r]:
             best[r] = node
     rows = [(node, best[find(node)]) for node in parent]
-    spark = edges.sparkSession
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType([
-        StructField("id", edges.schema[0].dataType),
-        StructField("component", edges.schema[0].dataType)])
-    return spark.createDataFrame(rows, schema)
+    t = edges.dtypes[0][1]
+    return edges.sparkSession.createDataFrame(
+        rows, f"id {t}, component {t}")
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50,
-                         driver_threshold: int = 1_000_000,
-                         driver_max_bytes: int = 32 * 2 ** 20) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """pairs(id_a, id_b) -> (id, component) where component = min id
     reachable via pair edges. Nodes appearing in no pair are absent
     (callers union singletons if needed).
@@ -69,19 +65,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
     Size-adaptive strategy: near-dup edge sets are usually TINY
     relative to the corpus (pairs above threshold after LSH), and each
     distributed propagation round costs a join + checkpoint regardless
-    of size — pure overhead on a small graph. Edge sets at or under
-    `driver_threshold` rows AND `driver_max_bytes` of raw id payload
-    run exact union-find on the driver (one collect of the edges);
-    larger sets use the distributed min-label propagation, whose
-    per-round cost is then actually amortized. The bytes gate is
-    what keeps WIDE ids honest (r4 ADVICE): a million 200-byte URL
-    edges is ~400 MB of raw payload — and several times that as
-    Python objects on the driver — so payload is measured in-plan
-    (octet_length sum for string/binary ids, 16 bytes/edge for
-    numerics) in the same aggregation that counts the edges. The
-    32 MB raw default leaves the driver transient at a couple hundred
-    MB worst-case after Python object overhead. Both paths produce
-    identical labels.
+    of size — pure overhead on a small graph. Edge sets within the
+    driver gate's EDGE_MAX_ROWS rows AND EDGE_MAX_BYTES in-memory
+    bytes (plans.gate.driver_table, measured in-plan, so wide string
+    ids route distributed) run exact union-find on the driver; larger
+    sets use the distributed min-label propagation, whose per-round
+    cost is then actually amortized. Both paths produce identical
+    labels.
 
     Raises RuntimeError if the propagation has not converged after
     max_iter rounds (component diameter > max_iter) — unconverged
@@ -96,25 +86,23 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
                                          F.col("id_a").alias("dst")))
              .distinct()
              .persist())
-    # the persist is materialized either way; count + payload bytes
-    # come out of ONE aggregation job (free routing signal)
-    id_kind = edges.schema["src"].dataType.simpleString()
-    if id_kind in ("string", "binary"):
-        stats = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.octet_length("src")
-                  + F.octet_length("dst")).alias("payload")).collect()[0]
-        n_edges = stats["n"]
-        payload_bytes = stats["payload"] or 0
-    else:
-        n_edges = edges.count()
-        payload_bytes = 16 * n_edges
-    pairs_p.unpersist()
-    if n_edges <= driver_threshold and payload_bytes <= driver_max_bytes:
-        try:
-            return _driver_union_find(edges)
-        finally:
-            edges.unpersist()
+    try:
+        # the gate's sizing pass also fills the edge cache
+        table = gate.driver_table(edges, gate.EDGE_MAX_ROWS,
+                                  gate.EDGE_MAX_BYTES)
+        # the edges are cached now; propagation never reads the input
+        pairs_p.unpersist()
+        if table is not None:
+            return _driver_union_find(table, edges)
+        return _propagate(edges, max_iter)
+    finally:
+        pairs_p.unpersist()
+        edges.unpersist()
+
+
+def _propagate(edges: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed min-label propagation over the symmetric, persisted
+    `edges`; the caller owns their cache."""
     # eager localCheckpoint TRUNCATES lineage each iteration — without
     # it the per-round join DAG nests and the driver's plan (and any
     # recompute) grows exponentially with iterations
@@ -129,7 +117,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
     # ("did any label change?") is read off the SAME materialized
     # result with a cheap checkpoint scan — no second full join job
     # per round (the round-2 shape roughly doubled iteration cost).
-    converged = False
     for _ in range(max_iter):
         msgs = (edges.join(labels, edges["dst"] == labels["id"])
                 .select(F.col("src").alias("id"), "component",
@@ -147,15 +134,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
                    .limit(1).count())  # scan of the checkpoint, no join
         labels = step.select("id", "component")
         if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "iterations (component diameter exceeds the cap); raise "
-            "max_iter or switch to a large-star/small-star variant")
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        "iterations (component diameter exceeds the cap); raise "
+        "max_iter or switch to a large-star/small-star variant")
 
 
 def dedup_keep_list(corpus: DataFrame, pairs: DataFrame,

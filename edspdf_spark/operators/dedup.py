@@ -120,6 +120,11 @@ def _cap_doc_freq(shingles: DataFrame,
     self-join (shingle_table emits one row per DISTINCT shingle per
     doc, so count(*) per code IS document frequency).
 
+    Precondition: `code` is never NULL (shingle_table emits none). The
+    window would count all NULL-code rows as ONE shingle's document
+    frequency, so they would be kept or dropped together by that
+    count rather than per document.
+
     Plan shape: the shingle table is explicitly hash-repartitioned on
     `code` FIRST; the doc-freq count then runs as a count(*) window
     over that one exchange and the filter drops hot codes in the same
@@ -141,67 +146,43 @@ def _cap_doc_freq(shingles: DataFrame,
             .where(F.col("_df") <= max_doc_freq).drop("_df"))
 
 
-# gate for the broadcast-postings pair counter: when the (materialized)
-# shingle table is at most this many parquet bytes, pair counting runs
-# as per-doc posting-list merges against a broadcast CSR — every pair
-# is generated, counted AND threshold-filtered inside one task, so only
-# the final (tiny) result rows ever cross an exchange. Beyond the gate
-# the capped self-join runs (the 100-TB path: one reused code exchange,
-# stop-shingle guard bounding the quadratic term). The sf1.0 corpus
-# showed why the fast path matters: 3.1M shingle rows fan out to 180M
-# join rows with 161M DISTINCT pairs, so the join's partial aggregation
-# cannot reduce anything and the exchange moves ~4 GB to keep 1.5M
-# rows. Same gated-driver-path pattern as components.py's union-find
-# gate (bounded collect, explicit byte ceiling, distributed fallback).
+# gate for the broadcast-postings pair counter: when the shingle table
+# is at most this many in-memory Arrow bytes (plans.gate.driver_table;
+# 16 B per bigint row), pair counting runs as per-doc posting-list
+# merges against a broadcast CSR — every pair is generated, counted AND
+# threshold-filtered inside one task, so only the final (tiny) result
+# rows ever cross an exchange. Beyond the gate the capped self-join
+# runs (the 100-TB path: one reused code exchange, stop-shingle guard
+# bounding the quadratic term). The sf1.0 corpus showed why the fast
+# path matters: 3.1M shingle rows (~50 MB) fan out to 180M join rows
+# with 161M DISTINCT pairs, so the join's partial aggregation cannot
+# reduce anything and the exchange moves ~4 GB to keep 1.5M rows.
 PAIR_DRIVER_MAX_BYTES = 512 << 20
 
 
 def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
-                        driver_max_bytes: int, mode: str,
-                        threshold: float, min_intersect: int,
-                        collect: str = "gated"):
+                        mode: str, threshold: float, min_intersect: int):
     """Gated all-pairs intersection counter. Returns the result
-    DataFrame, or None when the input exceeds the byte gate (or has an
-    id type the kernel does not handle) — caller falls back to the
-    join formulation. Semantics replicated exactly: rows are NOT
-    deduplicated (doc frequency and sizes count raw rows, as the join
-    did), ids compare strictly (equal ids never pair), sizes are
-    taken after the doc-frequency drop, and all ratios are the same
-    int64 / float64 IEEE divisions.
-
-    collect="gated" (default) materializes the shingle table to a tmp
-    parquet and checks its byte size BEFORE loading the driver — the
-    safe path for unbounded inputs. collect="direct" pulls it with the
-    arrow collect (DataFrame.toArrow), skipping the disk round-trip —
-    for callers whose input is bounded BY CONSTRUCTION (the LSH-
-    candidate verification: leftsemi-pruned to candidate documents),
-    where the write+read cost ~1.5 s per query for no protection."""
+    DataFrame, or None when the input exceeds PAIR_DRIVER_MAX_BYTES
+    (or has an id type the kernel does not handle) — caller falls
+    back to the join formulation. Semantics replicated exactly: rows
+    are NOT deduplicated (doc frequency and sizes count raw rows, as
+    the join did), ids compare strictly (equal ids never pair), sizes
+    are taken after the doc-frequency drop, and all ratios are the
+    same int64 / float64 IEEE divisions."""
     import numpy as np
     import pyarrow as pa
+
+    from ..plans.gate import driver_table
 
     id_ddl = dict(shingles.dtypes).get("id")
     if id_ddl not in ("bigint", "string"):
         return None
+    table = driver_table(shingles.select("id", "code"), None,
+                         PAIR_DRIVER_MAX_BYTES)
+    if table is None:
+        return None
     spark = shingles.sparkSession
-    if collect == "direct":
-        table = shingles.select("id", "code").toArrow()
-    else:
-        import glob
-        import os
-        import shutil
-        import tempfile
-
-        import pyarrow.parquet as pq_
-
-        tmp = tempfile.mkdtemp(prefix="pairs_shingles_")
-        try:
-            shingles.select("id", "code").write.mode("overwrite")                 .parquet(tmp)
-            files = glob.glob(os.path.join(tmp, "*.parquet"))
-            if sum(os.path.getsize(f) for f in files) > driver_max_bytes:
-                return None
-            table = pq_.read_table(tmp, columns=["id", "code"])
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     ids_raw = table.column("id").to_numpy(zero_copy_only=False)
     codes_raw = table.column("code").to_numpy(zero_copy_only=False)
@@ -353,9 +334,8 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
 
 def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
                   min_intersect: int = 1,
-                  max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ,
-                  driver_max_bytes: int = PAIR_DRIVER_MAX_BYTES,
-                  driver_collect: str = "gated") -> DataFrame:
+                  max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ
+                  ) -> DataFrame:
     """Exact Jaccard over shingle sets: (id_a, id_b, inter, size_a,
     size_b, jaccard) for pairs with jaccard >= threshold.
 
@@ -368,15 +348,22 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
     universe. Pass None ONLY for inputs already bounded by
     construction (e.g. LSH-candidate verification).
 
-    Within `driver_max_bytes` (of the materialized shingle parquet)
-    the pair space is counted by the broadcast-postings kernel and
-    filtered in-task (see PAIR_DRIVER_MAX_BYTES); beyond it, the
-    capped self-join below is the scale path."""
-    fast = _pairs_via_postings(shingles, max_doc_freq, driver_max_bytes,
-                               "jaccard", threshold, min_intersect,
-                               collect=driver_collect)
+    Within PAIR_DRIVER_MAX_BYTES (in-memory bytes of the shingle
+    table) the pair space is counted by the broadcast-postings kernel
+    and filtered in-task; beyond it, the capped self-join in
+    _jaccard_join is the scale path."""
+    fast = _pairs_via_postings(shingles, max_doc_freq, "jaccard",
+                               threshold, min_intersect)
     if fast is not None:
         return fast
+    return _jaccard_join(shingles, threshold, min_intersect, max_doc_freq)
+
+
+def _jaccard_join(shingles: DataFrame, threshold: float,
+                  min_intersect: int,
+                  max_doc_freq: Optional[int]) -> DataFrame:
+    """jaccard_pairs' distributed formulation: the capped shingle
+    self-join, one reused code exchange."""
     shingles = _cap_doc_freq(shingles, max_doc_freq)
     sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
     a = shingles.select(F.col("id").alias("id_a"), "code")
@@ -441,7 +428,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     The shingle table and signatures are persisted: the DAG reuses
     the shingle table up to 7 times (signature build, one join per
     LSH band, both sides + sizes of the verification) and Spark would
-    otherwise re-scan and re-hash the corpus for each reuse."""
+    otherwise re-scan and re-hash the corpus for each reuse. When the
+    verification runs on the driver path, the returned plan reads only
+    `cand` (the verified side comes from a broadcast), so both are
+    released before returning; `cand` stays cached for that plan."""
     sh = shingle_table(df, id_col, text_col, k, max_doc_freq).persist()
     sigs = minhash_signatures(sh, n_hashes).persist()
     # cand is consumed twice (cand_ids prune + the final join); without
@@ -456,12 +446,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # verified jaccard must be over the SAME shingle universe the
     # signatures were built from — corpus-level capping happens via
     # this function's own max_doc_freq at shingle_table time
-    # driver_collect="direct": sh_cand is bounded BY CONSTRUCTION
-    # (leftsemi-pruned to candidate documents), so the verification
-    # skips the write-gated materialization (~1.5 s/query saved)
-    verified = jaccard_pairs(sh_cand, threshold=threshold,
-                             max_doc_freq=None,
-                             driver_collect="direct")
+    verified = _pairs_via_postings(sh_cand, None, "jaccard", threshold, 1)
+    if verified is None:
+        verified = _jaccard_join(sh_cand, threshold, 1, None)
+    else:
+        sh.unpersist()
+        sigs.unpersist()
     return (cand.join(verified, ["id_a", "id_b"])
             .select("id_a", "id_b", "jaccard"))
 
@@ -825,8 +815,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
 
 def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
                       min_intersect: int = 1,
-                      max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ,
-                      driver_max_bytes: int = PAIR_DRIVER_MAX_BYTES
+                      max_doc_freq: Optional[int] = HOT_SHINGLE_DOC_FREQ
                       ) -> DataFrame:
     """One-way near-duplication: containment(src in dst) =
     |S_src ∩ S_dst| / |S_src| — catches excerpts, quotes, and
@@ -842,12 +831,12 @@ def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
     fanned into both directions after aggregation — the direction
     fan-out happens on pair rows, never on shingle rows.
 
-    Within `driver_max_bytes` the broadcast-postings kernel counts and
-    filters the pair space in-task (see PAIR_DRIVER_MAX_BYTES); beyond
-    it, the capped self-join below is the scale path.
+    Within PAIR_DRIVER_MAX_BYTES the broadcast-postings kernel counts
+    and filters the pair space in-task; beyond it, the capped
+    self-join below is the scale path.
     """
-    fast = _pairs_via_postings(shingles, max_doc_freq, driver_max_bytes,
-                               "containment", threshold, min_intersect)
+    fast = _pairs_via_postings(shingles, max_doc_freq, "containment",
+                               threshold, min_intersect)
     if fast is not None:
         return fast
     shingles = _cap_doc_freq(shingles, max_doc_freq)

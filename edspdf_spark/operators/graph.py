@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..plans import gate
+
 # double-quoted href in an <a> tag, case-insensitive. Deliberately the
 # common-denominator subset (no single quotes / unquoted values): the
 # same pattern string must mean the same thing to Java regex (Spark)
@@ -142,28 +144,6 @@ def release_graph_caches() -> int:
     return n
 
 
-# size-adaptive gate shared by pagerank / label-prop (the
-# components.py precedent): a fixpoint over a broadcast-scale edge
-# set pays per-iteration job-scheduling + broadcast latency that
-# dwarfs the arithmetic, so edge sets at or under these bounds run
-# the exact integer iteration on the driver instead. Bytes measured
-# in-plan (octet_length of both endpoints) so wide string hosts
-# route honestly (r4 ADVICE on the union-find gate).
-DRIVER_EDGE_THRESHOLD = 1_000_000
-DRIVER_EDGE_MAX_BYTES = 32 * 2 ** 20
-
-
-def _edge_stats(e: DataFrame) -> tuple:
-    """(n_edges, payload_bytes) in ONE aggregation over the (cached)
-    distinct edge table — the job that fills the shared cache."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.octet_length(F.col("src_host").cast("string")) +
-              F.octet_length(F.col("dst_host").cast("string")))
-        .alias("b")).collect()[0]
-    return int(row["n"] or 0), int(row["b"] or 0)
-
-
 def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
                           scale: int):
     """Exact mirror of the distributed BIGINT iteration in plain
@@ -194,10 +174,7 @@ def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
 def host_pagerank(edges: DataFrame, iterations: int = 4,
                   damping_pct: int = 85, scale: int = PAGERANK_SCALE,
                   broadcast_ranks: bool = True,
-                  checkpoint: bool | None = None,
-                  driver_threshold: int = DRIVER_EDGE_THRESHOLD,
-                  driver_max_bytes: int = DRIVER_EDGE_MAX_BYTES
-                  ) -> DataFrame:
+                  checkpoint: bool | None = None) -> DataFrame:
     """(src_host, dst_host[, n_links]) -> (host, rank_scaled, rank).
 
     Exact-integer PageRank over the DISTINCT edge set:
@@ -212,13 +189,12 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
     Three execution shapes, value-identical (r4 VERDICT #3, r5
     size-adaptive gate — the components.py precedent):
 
-    * driver fixpoint (default whenever the distinct edge set fits
-      `driver_threshold` rows AND `driver_max_bytes` of endpoint
-      payload, measured in-plan): per-iteration job scheduling and
-      broadcast latency dwarf the arithmetic on a broadcast-scale
+    * driver fixpoint (default whenever the distinct edge set passes
+      the driver gate, plans.gate.driver_table with EDGE_MAX_ROWS /
+      EDGE_MAX_BYTES, sized in-plan): per-iteration job scheduling
+      and broadcast latency dwarf the arithmetic on a broadcast-scale
       graph, so the exact integer iteration runs on collected edges
       instead (_driver_pagerank_rows; bit-identical by tests).
-      driver_threshold=0 disables.
     * checkpoint=False (default for iterations <= LAZY_MAX_ITERS):
       ONE lazy plan over session-memoized edge tables
       (_shared_cache; see module comment). n_hosts is a
@@ -243,24 +219,19 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
     if checkpoint is None:
         checkpoint = iterations > LAZY_MAX_ITERS
     if not checkpoint:
-        # size-adaptive: the one stats aggregation fills the shared
-        # edge cache either way; a broadcast-scale graph then skips
-        # the per-iteration broadcast+shuffle scheduling entirely.
+        # size-adaptive: the gate's sizing pass fills the shared edge
+        # cache either way; a broadcast-scale graph then skips the
+        # per-iteration broadcast+shuffle scheduling entirely.
         e = _shared_cache(_distinct_edges(edges))
-        if driver_threshold > 0:
-            n, payload = _edge_stats(e)
-            if n <= driver_threshold and payload <= driver_max_bytes:
-                from pyspark.sql.types import (DoubleType, LongType,
-                                               StructField, StructType)
-
-                rows = _driver_pagerank_rows(
-                    [(r[0], r[1]) for r in e.collect()],
-                    iterations, damping_pct, scale)
-                schema = StructType([
-                    StructField("host", e.schema[0].dataType),
-                    StructField("rank_scaled", LongType()),
-                    StructField("rank", DoubleType())])
-                return edges.sparkSession.createDataFrame(rows, schema)
+        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
+                                  gate.EDGE_MAX_BYTES)
+        if table is not None:
+            rows = _driver_pagerank_rows(
+                list(zip(*table.to_pydict().values())),
+                iterations, damping_pct, scale)
+            return edges.sparkSession.createDataFrame(
+                rows, f"host {e.dtypes[0][1]}, rank_scaled bigint, "
+                "rank double")
         return _host_pagerank_lazy(edges, iterations, damping_pct,
                                    scale, broadcast_ranks)
     e = _distinct_edges(edges).persist()
@@ -473,10 +444,7 @@ def _driver_label_prop_rows(rows, seed_of: dict, iterations: int,
 def host_label_propagation(edges: DataFrame, seeds: DataFrame,
                            iterations: int = 2, scale: int = 1000,
                            hi_milli: int = 700,
-                           lo_milli: int = 300,
-                           driver_threshold: int = DRIVER_EDGE_THRESHOLD,
-                           driver_max_bytes: int = DRIVER_EDGE_MAX_BYTES
-                           ) -> DataFrame:
+                           lo_milli: int = 300) -> DataFrame:
     """Semi-supervised label spread over the host graph (the classic
     spam/quality propagation: labels are expensive, links are free —
     a host linked mostly by spam hosts is probably spam). Seeds carry
@@ -515,26 +483,22 @@ def host_label_propagation(edges: DataFrame, seeds: DataFrame,
         # size-adaptive (same gate as host_pagerank): a broadcast-
         # scale graph runs the exact integer spread on the driver,
         # skipping per-iteration broadcast+shuffle scheduling.
-        if driver_threshold > 0:
-            n, payload = _edge_stats(e)
-            if n <= driver_threshold and payload <= driver_max_bytes:
-                # NULL-labeled seeds are unseeded in the distributed
-                # path (isNotNull join); mirror that here instead of
-                # crashing on None * int (r5 ADVICE #2)
-                seed_rows = seeds.where(F.col("label").isNotNull()) \
-                    .select(F.col("host"),
-                            F.col("label").cast("bigint")).collect()
-                rows = _driver_label_prop_rows(
-                    [(r[0], r[1]) for r in e.collect()],
-                    {r[0]: r[1] for r in seed_rows},
-                    iterations, scale, hi_milli, lo_milli)
-                from pyspark.sql.types import (LongType, StringType,
-                                               StructField, StructType)
-                schema = StructType([
-                    StructField("host", e.schema[0].dataType),
-                    StructField("score_scaled", LongType()),
-                    StructField("verdict", StringType())])
-                return edges.sparkSession.createDataFrame(rows, schema)
+        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
+                                  gate.EDGE_MAX_BYTES)
+        if table is not None:
+            # NULL-labeled seeds are unseeded in the distributed path
+            # (isNotNull join); mirror that here instead of crashing
+            # on None * int (r5 ADVICE #2)
+            seed_rows = seeds.where(F.col("label").isNotNull()) \
+                .select(F.col("host"),
+                        F.col("label").cast("bigint")).collect()
+            rows = _driver_label_prop_rows(
+                list(zip(*table.to_pydict().values())),
+                {r[0]: r[1] for r in seed_rows},
+                iterations, scale, hi_milli, lo_milli)
+            return edges.sparkSession.createDataFrame(
+                rows, f"host {e.dtypes[0][1]}, score_scaled bigint, "
+                "verdict string")
     nodes = (e.select(F.col("src_host").alias("host"))
              .union(e.select(F.col("dst_host").alias("host")))
              .distinct())

@@ -3,6 +3,7 @@ shingle path (Spark's sequence(0,-1) DESCENDS instead of being empty)
 and must agree with the DuckDB oracle's empty-shingle behavior."""
 
 import duckdb
+import pytest
 
 
 def test_short_docs_shingle_pipeline(spark):
@@ -295,3 +296,91 @@ def test_lsh_params_advisor():
     assert hi["band_size"] >= got["band_size"]
     with _pytest.raises(ValueError):
         lsh_params(1.5, 8)
+
+
+# --- driver gate: postings path vs join fallback ---------------------------
+
+def _gate_shingles(spark, id_type):
+    """The stop-shingle corpus of test_hot_shingle_cap_kills_stop_
+    shingle_blowup plus the excerpt pair of test_containment_catches_
+    excerpt_jaccard_misses and a near copy; string ids sort differently
+    from their numbers ("doc10" < "doc2")."""
+    from edspdf_spark.operators.dedup import shingle_table
+
+    stop = "all rights reserved"
+    rows = [(i, f"{stop} unique{i}a unique{i}b unique{i}c")
+            for i in range(12)]
+    big = " ".join(f"w{i}" for i in range(60))
+    rows += [(100, big), (101, " ".join(f"w{i}" for i in range(10))),
+             (102, big + " tail end")]
+    if id_type == "string":
+        rows = [(f"doc{i}", t) for i, t in rows]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    return shingle_table(df, k=3)
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("max_doc_freq", [None, 8])
+def test_pair_gate_refusal_matches_postings(spark, monkeypatch, id_type,
+                                            max_doc_freq):
+    """A zero PAIR_DRIVER_MAX_BYTES makes the gate refuse; the join
+    fallback must return the same (ids, inter, sizes, ratio) rows as
+    the broadcast-postings path, bit for bit."""
+    from edspdf_spark.operators import dedup
+
+    sh = _gate_shingles(spark, id_type)
+
+    def run(refused):
+        assert (dedup._pairs_via_postings(sh, max_doc_freq, "jaccard",
+                                          0.01, 1) is None) == refused
+        jac = {tuple(r) for r in dedup.jaccard_pairs(
+            sh, threshold=0.01, max_doc_freq=max_doc_freq).collect()}
+        con = {tuple(r) for r in dedup.containment_pairs(
+            sh, threshold=0.01, max_doc_freq=max_doc_freq).collect()}
+        return jac, con
+
+    postings = run(refused=False)
+    monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+    join = run(refused=True)
+    assert postings == join
+    jac, con = postings
+    assert jac and con
+    # the stop shingle pairs every doc only when uncapped
+    assert len(jac) == (66 + 3 if max_doc_freq is None else 3)
+
+
+def test_pair_gate_writes_no_files(spark, monkeypatch):
+    """The gate sizes its input in-plan: no driver-local temp dir,
+    which executors on other hosts could not see."""
+    import tempfile
+
+    from edspdf_spark.operators.dedup import jaccard_pairs
+
+    sh = _gate_shingles(spark, "bigint")
+
+    def no_tmp(*a, **k):
+        raise AssertionError("driver gate must not touch the filesystem")
+
+    monkeypatch.setattr(tempfile, "mkdtemp", no_tmp)
+    got = {(r.id_a, r.id_b) for r in jaccard_pairs(sh, threshold=0.5)
+           .collect()}
+    assert got == {(100, 102)}
+
+
+def test_minhash_lsh_releases_shingles_and_signatures(spark):
+    """On the driver verification path the returned plan reads only
+    the candidate table, so the shingle table and the signatures are
+    unpersisted: at most one new cached RDD survives the call."""
+    from edspdf_spark.operators.dedup import minhash_lsh_pairs
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    rows = [(0, ""), (1, "hello"), (2, "hello world"),
+            (3, "one two three"), (4, "one two three four"),
+            (5, "one two three four")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    before = persisted()
+    pairs = minhash_lsh_pairs(df, k=3, threshold=0.5).collect()
+    assert (4, 5) in {(r.id_a, r.id_b) for r in pairs}
+    assert len(persisted() - before) <= 1

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from edspdf_spark.operators.graph import (PAGERANK_SCALE, anchor_terms,
                                           extract_anchors, extract_links,
                                           host_edges, host_pagerank)
+from edspdf_spark.plans import gate
 
 
 def _plan(df) -> str:
@@ -252,10 +253,10 @@ def test_canonical_grouping(spark):
     assert got == {"https://c.com/x": (2, "u1"), "u3": (1, "u3")}
 
 
-def test_pagerank_iteration_broadcasts_ranks(spark):
+def test_pagerank_iteration_broadcasts_ranks(spark, monkeypatch):
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
-    plan = _plan(host_pagerank(edges, iterations=1, checkpoint=False,
-                               driver_threshold=0))
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
+    plan = _plan(host_pagerank(edges, iterations=1, checkpoint=False))
     assert "EvalPython" not in plan
     assert "BroadcastHashJoin" in plan, plan
 
@@ -276,7 +277,7 @@ def test_host_degrees_and_reciprocity(spark):
             got["d"].recip_milli) == (0, 1, 0)
 
 
-def test_union_find_paths_agree_across_threshold(spark):
+def test_union_find_paths_agree_across_threshold(spark, monkeypatch):
     """The driver/distributed cutover inside connected_components can
     never silently diverge: identical (id, component) labels from the
     exact driver union-find and the distributed min-label propagation
@@ -299,9 +300,10 @@ def test_union_find_paths_agree_across_threshold(spark):
     edges |= {(5000, 5000), (6000, 6001)}
     pairs = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
     drv = {(r.id, r.component) for r in
-           connected_components(pairs, driver_threshold=10**6).collect()}
+           connected_components(pairs).collect()}
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
     dist = {(r.id, r.component) for r in
-            connected_components(pairs, driver_threshold=0).collect()}
+            connected_components(pairs).collect()}
     assert drv == dist and drv
 
 
@@ -322,14 +324,16 @@ def test_union_find_bytes_gate_routes_wide_ids_distributed(spark, monkeypatch):
     calls = []
     orig = C._driver_union_find
     monkeypatch.setattr(C, "_driver_union_find",
-                        lambda e: calls.append(1) or orig(e))
-    # payload ~ 580 edges x ~850 bytes >> 64 KiB gate -> distributed
-    dist = {(r.id, r.component) for r in C.connected_components(
-        pairs, driver_max_bytes=64 * 1024).collect()}
+                        lambda *a: calls.append(1) or orig(*a))
+    # payload ~ 1160 edges x ~850 bytes >> 64 KiB gate -> distributed
+    monkeypatch.setattr(gate, "EDGE_MAX_BYTES", 64 * 1024)
+    dist = {(r.id, r.component) for r in
+            C.connected_components(pairs).collect()}
     assert not calls, "wide-id edge set must not be collected"
     # generous gate -> driver path; labels must be identical
-    drv = {(r.id, r.component) for r in C.connected_components(
-        pairs, driver_max_bytes=1 << 30).collect()}
+    monkeypatch.setattr(gate, "EDGE_MAX_BYTES", 1 << 30)
+    drv = {(r.id, r.component) for r in
+           C.connected_components(pairs).collect()}
     assert calls, "small-payload path should use driver union-find"
     assert drv == dist and len({c for _, c in drv}) == 220
 
@@ -413,24 +417,26 @@ def test_host_degrees_plan_reads_shared_edge_cache(spark):
         G.release_graph_caches()
 
 
-def test_pagerank_driver_and_distributed_paths_identical(spark):
+def test_pagerank_driver_and_distributed_paths_identical(spark,
+                                                        monkeypatch):
     """The size-adaptive gate (r5): broadcast-scale graphs run the
     exact integer iteration on the driver; forcing the distributed
-    lazy plan (driver_threshold=0) and the deep checkpointed path
-    must all yield bit-identical ranks."""
+    lazy plan (zero driver-gate row cap) and the deep checkpointed
+    path must all yield bit-identical ranks."""
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
     drv = sorted((r.host, r.rank_scaled, r.rank)
                  for r in host_pagerank(edges, iterations=4).collect())
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
     dist = sorted((r.host, r.rank_scaled, r.rank)
-                  for r in host_pagerank(edges, iterations=4,
-                                         driver_threshold=0).collect())
+                  for r in host_pagerank(edges, iterations=4).collect())
     deep = sorted((r.host, r.rank_scaled, r.rank)
                   for r in host_pagerank(edges, iterations=4,
                                          checkpoint=True).collect())
     assert drv == dist == deep
 
 
-def test_label_prop_driver_and_distributed_paths_identical(spark):
+def test_label_prop_driver_and_distributed_paths_identical(spark,
+                                                          monkeypatch):
     from edspdf_spark.operators.graph import host_label_propagation
 
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
@@ -439,10 +445,10 @@ def test_label_prop_driver_and_distributed_paths_identical(spark):
     drv = sorted((r.host, r.score_scaled, r.verdict)
                  for r in host_label_propagation(
                      edges, seeds, iterations=3).collect())
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
     dist = sorted((r.host, r.score_scaled, r.verdict)
                   for r in host_label_propagation(
-                      edges, seeds, iterations=3,
-                      driver_threshold=0).collect())
+                      edges, seeds, iterations=3).collect())
     deep = sorted((r.host, r.score_scaled, r.verdict)
                   for r in host_label_propagation(
                       edges, seeds, iterations=9).collect())
@@ -456,19 +462,22 @@ def test_label_prop_driver_and_distributed_paths_identical(spark):
     assert sorted(deep) == want
 
 
-def test_pagerank_bytes_gate_routes_wide_ids_distributed(spark):
+def test_pagerank_bytes_gate_routes_wide_ids_distributed(spark,
+                                                         monkeypatch):
     """A tiny edge COUNT with very wide string hosts must exceed the
     bytes gate and take the distributed path (same ranks)."""
     wide = [("h" * 4096 + s, "h" * 4096 + d) for s, d in GRAPH]
     edges = spark.createDataFrame(wide, "src_host string, dst_host string")
     drv = sorted((r.host, r.rank_scaled) for r in host_pagerank(
         edges, iterations=2).collect())
+    monkeypatch.setattr(gate, "EDGE_MAX_BYTES", 1024)
     routed = sorted((r.host, r.rank_scaled) for r in host_pagerank(
-        edges, iterations=2, driver_max_bytes=1024).collect())
+        edges, iterations=2).collect())
     assert drv == routed
 
 
-def test_label_propagation_null_seed_matches_distributed(spark):
+def test_label_propagation_null_seed_matches_distributed(spark,
+                                                         monkeypatch):
     """r5 ADVICE #2: a NULL-labeled seed row is unseeded in the
     distributed path (isNotNull semantics); the driver fixpoint must
     mirror that instead of raising TypeError."""
@@ -483,9 +492,9 @@ def test_label_propagation_null_seed_matches_distributed(spark):
     try:
         fast = {(r.host, r.score_scaled, r.verdict)
                 for r in host_label_propagation(edges, seeds).collect()}
+        monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
         dist = {(r.host, r.score_scaled, r.verdict)
-                for r in host_label_propagation(
-                    edges, seeds, driver_threshold=0).collect()}
+                for r in host_label_propagation(edges, seeds).collect()}
     finally:
         release_graph_caches()
     assert fast == dist

@@ -116,6 +116,45 @@ def test_fast_stream_replay_matches_interpreter():
         P._FAST_STREAM_RE = saved
 
 
+def test_fast_op_findall_dispatch_is_unambiguous():
+    """The fast replay dispatches on findall tuples by truthiness, so
+    each op must fill exactly its own group(s), and no group may be
+    able to match empty bytes (an empty match would read as "not this
+    op")."""
+    from re import _parser as sre_parse
+
+    from edspdf_spark.kernels import pdf as P
+
+    groups = ("s", "tm", "tag", "size", "bt", "et")
+    ops = [(b"(hi) Tj\n", {"s"}), (b"() Tj\n", {"s"}),
+           (b"1 0 0 1 72.5 -7 Tm\n", {"tm"}),
+           (b"/F1 12 Tf\n", {"tag", "size"}),
+           (b"BT\n", {"bt"}), (b"ET\n", {"et"}), (b"ET", {"et"})]
+    for op, own in ops:
+        (hit,) = P._FAST_OP_RE.findall(op)
+        assert {g for g, v in zip(groups, hit) if v} == own, op
+    stream = b"".join(op for op, _own in ops[:-1]) + b"ET"
+    assert len(P._FAST_OP_RE.findall(stream)) == len(ops)
+
+    def group_widths(sub):
+        for code, av in sub:
+            if code is sre_parse.SUBPATTERN:
+                if av[0]:
+                    yield av[0], av[-1].getwidth()[0]
+                yield from group_widths(av[-1])
+            elif code is sre_parse.BRANCH:
+                for branch in av[1]:
+                    yield from group_widths(branch)
+            elif code in (sre_parse.MAX_REPEAT, sre_parse.MIN_REPEAT):
+                yield from group_widths(av[2])
+
+    names = {i: n for n, i in P._FAST_OP_RE.groupindex.items()}
+    widths = {names[i]: w for i, w in group_widths(
+        sre_parse.parse(P._FAST_OP_RE.pattern))}
+    assert set(widths) == set(groups)
+    assert all(w > 0 for w in widths.values()), widths
+
+
 def test_walk_line_text_matches_walk_line():
     """The extract_style=False fast path must produce the exact text
     of the per-char walk for every whitespace shape the normalizer

@@ -270,15 +270,17 @@ def test_bloc_embed_python_stages_are_bounded(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_connected_components_lineage_is_truncated(spark):
-    """Distributed path (forced via driver_threshold=0): after
+def test_connected_components_lineage_is_truncated(spark, monkeypatch):
+    """Distributed path (forced via a zero driver-gate row cap): after
     convergence the result plan must be a checkpoint scan, not a
     nested join tree (the OOM failure mode)."""
     from edspdf_spark.operators.components import connected_components
+    from edspdf_spark.plans import gate
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
                                   "id_a long, id_b long")
-    comp = connected_components(pairs, driver_threshold=0)
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
+    comp = connected_components(pairs)
     plan = _plan(comp)
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan
     assert plan.count("Join") == 0, plan  # lineage truncated
@@ -286,13 +288,15 @@ def test_connected_components_lineage_is_truncated(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_connected_components_paths_agree_and_guard_convergence(spark):
+def test_connected_components_paths_agree_and_guard_convergence(
+        spark, monkeypatch):
     """The driver union-find fast path and the distributed propagation
     must label identically; the distributed path must still raise
     loudly when max_iter is too small for the diameter."""
     import pytest as _pytest
 
     from edspdf_spark.operators.components import connected_components
+    from edspdf_spark.plans import gate
 
     # chain (diameter 6) + clique + singleton pair, shuffled order
     edges = ([(i, i + 1) for i in range(7, 1, -1)]
@@ -300,13 +304,13 @@ def test_connected_components_paths_agree_and_guard_convergence(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {(r.id, r.component)
             for r in connected_components(pairs).collect()}
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
     dist = {(r.id, r.component)
-            for r in connected_components(
-                pairs, driver_threshold=0).collect()}
+            for r in connected_components(pairs).collect()}
     assert fast == dist
     assert (2, 2) in fast and (7, 2) in fast  # chain collapses to min
     with _pytest.raises(RuntimeError, match="converge"):
-        connected_components(pairs, max_iter=2, driver_threshold=0)
+        connected_components(pairs, max_iter=2)
 
 
 def test_filter_pushdown_reaches_scan(pages_parquet):
@@ -587,7 +591,7 @@ def test_dsir_weights_scoring_is_doc_local(spark):
     assert plan.count("Exchange") <= 1, plan
 
 
-def test_shingle_cap_bounded_distinct_exchanges(spark):
+def test_shingle_cap_bounded_distinct_exchanges(spark, monkeypatch):
     """The doc-freq guard's plan (jaccard_pairs with the default cap):
     the shingle table is explicitly repartitioned on `code`, so the
     pair self-join's far side reuses that one exchange instead of
@@ -597,6 +601,7 @@ def test_shingle_cap_bounded_distinct_exchanges(spark):
     fires, and no Python stage appears. Compiled with AQE off so the
     static ReuseExchange rule exposes what AQE's runtime stage-level
     dedup does for the production plan."""
+    from edspdf_spark.operators import dedup
     from edspdf_spark.operators.dedup import jaccard_pairs, shingle_table
 
     df = spark.createDataFrame(
@@ -612,10 +617,10 @@ def test_shingle_cap_bounded_distinct_exchanges(spark):
     old = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # driver_max_bytes=0 pins the JOIN fallback (the 100-TB path);
+        # a zero byte cap pins the JOIN fallback (the 100-TB path);
         # within the gate the broadcast-postings kernel runs instead
-        out = jaccard_pairs(shingle_table(df, k=3), threshold=0.5,
-                            driver_max_bytes=0)
+        monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+        out = jaccard_pairs(shingle_table(df, k=3), threshold=0.5)
         plan = out._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)

@@ -328,3 +328,32 @@ def test_read_pages_table_dispatch(spark, tmp_path):
     assert read_pages_table(spark, p, fmt="parquet").count() == 2
     with pytest.raises(ValueError, match="unknown table format"):
         read_pages_table(spark, p, fmt="orc")
+
+
+def test_driver_table_caps_rows_and_arrow_bytes(spark):
+    """driver_table returns the whole input or None, sized by an
+    in-plan aggregate: 8 bytes per bigint value, a 4-byte offset plus
+    the payload per other value. It releases its own persist and
+    keeps whatever cache the caller set up."""
+    from pyspark import StorageLevel
+
+    from edspdf_spark.plans.gate import driver_table
+
+    ids = spark.range(5)  # one bigint column: 8 bytes a row
+    assert driver_table(ids, 5, 40).column("id").to_pylist() == \
+        [0, 1, 2, 3, 4]
+    assert driver_table(ids, 4, 1 << 20) is None
+    assert driver_table(ids, None, 39) is None
+    assert ids.storageLevel == StorageLevel.NONE
+
+    words = spark.createDataFrame([("abc",), ("de",), (None,)], "w string")
+    assert driver_table(words, 3, 17).num_rows == 3   # 3 x 4 + 5 bytes
+    assert driver_table(words, None, 16) is None
+    assert driver_table(words, 2, 1 << 20) is None
+    assert words.storageLevel == StorageLevel.NONE    # its own persist
+    words.persist()
+    try:
+        assert driver_table(words, None, 16) is None
+        assert words.storageLevel != StorageLevel.NONE
+    finally:
+        words.unpersist()
