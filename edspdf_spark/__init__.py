@@ -5,10 +5,11 @@ A from-scratch reimplementation of the capabilities of `aphp/edspdf`
 
 * pages table (url, warc_ts, html BINARY, text, lang) -> extract ->
   classify -> aggregate, all expressed as DataFrame transforms whose
-  document-local math lives in Arrow-batched pandas UDFs
+  document-local math runs in Arrow-batched maps (mapInArrow,
+  mapInPandas), never per-row UDFs
 * every reference operator is document-local (SURVEY.md §2.9), so the
   hot path is an embarrassingly-parallel map: the fused pipeline runs
-  extract+classify+aggregate in ONE mapInPandas with ZERO shuffles
+  extract+classify+aggregate in ONE mapInArrow with ZERO shuffles
 * skew defused by salted repartition on url-hash + payload size
 * checkpoint/resume via bucketed runs; per-partition lineage+metrics
 """

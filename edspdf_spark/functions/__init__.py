@@ -1,14 +1,22 @@
-"""Portable native-expression helpers shared by the dedup/analysis
-operators and their DuckDB oracles.
+"""Portable text primitives shared by the dedup/analysis operators
+and their DuckDB oracles.
 
-Everything here is a JVM-side Column expression (whole-stage codegen,
-no Python). The hash primitive is engine-portable by construction:
-`code15(col)` = first 15 hex chars of md5 as BIGINT — identical in
-Spark (conv/substring) and DuckDB ('0x'||substr(...)::BIGINT), which
-is what lets every dedup query carry an exact SQL oracle.
+This module owns the token and hash format for every engine, in three
+renderings kept side by side: a JVM-side Column expression (whole-stage
+codegen, no Python), a DuckDB SQL string for the oracles, and a Python
+twin for the doc-local Arrow kernels.
+
+* tokens: split on a single space, empties dropped.
+* n-grams: windows of n tokens joined with one space.
+* code15: the first 15 hex chars of md5 (of the UTF-8 bytes) as a
+  BIGINT — Spark conv/substring, DuckDB '0x'||substr(...)::BIGINT,
+  Python int(hexdigest[:15], 16). This is what lets every dedup query
+  carry an exact SQL oracle.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F  # noqa: N812
@@ -39,26 +47,23 @@ def tokens(text_col) -> Column:
     return F.filter(F.split(text_col, " "), lambda t: t != "")
 
 
-def word_shingles(text_col, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array<string>.
+def tokens_py(text: str) -> list:
+    """Python twin of `tokens`."""
+    return [w for w in text.split(" ") if w]
 
-    Documents with fewer than k tokens yield an empty array (the
-    slice length is clamped to 0, which zips to nothing).
 
-    Shape note: k shifted slices zipped into one struct array — NOT
-    transform(sequence, i -> element_at(toks, i+j)): projection
-    collapse inlines the split() into every element_at, making that
-    form O(k * len^2) per document; here the split evaluates a
-    constant number of times per row."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    m = F.greatest(F.lit(0), n - k + 1)
-    parts = [F.slice(toks, j + 1, m).alias(f"w{j}") for j in range(k)]
-    z = F.arrays_zip(*parts)
-    return F.array_distinct(
-        F.transform(
-            z, lambda s: F.concat_ws(" ", *[s[f"w{j}"]
-                                            for j in range(k)])))
+def ngrams_py(toks: list, n: int, step: int = 1) -> list:
+    """Windows of n tokens joined with one space, one starting every
+    `step` tokens and none running past the end (fewer than n tokens
+    -> none). step=1 cuts overlapping shingles, step=n non-overlapping
+    passages."""
+    return [" ".join(toks[i:i + n])
+            for i in range(0, len(toks) - n + 1, step)]
+
+
+def code15_py(s: str) -> int:
+    """Python twin of `code15`."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def minhash_exprs(code_col, n_hashes: int):

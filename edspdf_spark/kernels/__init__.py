@@ -3,7 +3,7 @@
 Each kernel replicates one reference component's math exactly
 (citations in each module) and is unit-testable without Spark. The
 Spark layer (`edspdf_spark.operators`) only ever calls these from
-Arrow-batched UDFs (mapInPandas / applyInPandas), never per row.
+Arrow-batched maps (mapInArrow / mapInPandas), never per row.
 """
 
 from .aggregate import aggregate_doc, to_markdown  # noqa: F401

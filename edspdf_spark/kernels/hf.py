@@ -46,10 +46,11 @@ CLS/SEP get reserved ids 1/2.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Dict, List, Optional, Sequence
 
 import numpy as np
+
+from ..functions import code15_py, tokens_py
 
 CLS_ID = 1
 SEP_ID = 2
@@ -65,16 +66,16 @@ def subword_pieces(word: str, piece_len: int = PIECE_LEN) -> List[str]:
 
 
 def tokenize_line(text: str, piece_len: int = PIECE_LEN) -> List[str]:
-    """Split on single space (empties dropped — matches the engine's
-    portable tokenizer), then fixed-width subword pieces."""
-    return [p for w in text.split(" ") if w
+    """The engine's portable tokens (functions.tokens_py), then
+    fixed-width subword pieces."""
+    return [p for w in tokens_py(text)
             for p in subword_pieces(w, piece_len)]
 
 
 def token_id(piece: str) -> int:
     """md5-prefix BIGINT id (functions.code15 semantics), so the
     affine embedding table is reproducible in DuckDB."""
-    return int(hashlib.md5(piece.encode("utf-8")).hexdigest()[:15], 16)
+    return code15_py(piece)
 
 
 def token_embedding(tid: int, dim: int) -> np.ndarray:

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions import CODE_MOD, code15, tokens
+from ..functions import (CODE_MOD, code15, code15_py, ngrams_py, tokens,
+                         tokens_py)
 
 # tiny per-language stopword lists for the n-gram-free heuristic;
 # deterministic argmax order = list order here. 16 languages: the
@@ -399,92 +400,78 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     emits INTEGER numerators/denominators only; fractions are computed
     as a codegen select of CAST(int AS DOUBLE)/int, bit-identical in
     Spark and DuckDB."""
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
+    from collections import Counter
+
+    import numpy as np
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    from ..plans.salt import doc_map
 
     int_cols = (["n_chars", "n_lines", "dup_lines", "dup_line_chars",
                  "n_paras", "dup_paras", "dup_para_chars"]
                 + [f"top{n}_chars" for n in (2, 3, 4)]
                 + [f"dup{n}_chars" for n in range(5, 11)])
-    out_schema = StructType(
-        [StructField("id", df.schema[id_col].dataType)]
-        + [StructField(c, LongType()) for c in int_cols])
 
-    def fn(batches):
-        from collections import Counter
+    def fn(ids, texts):
+        rows: dict = {c: [] for c in int_cols}
+        for text in texts:
+            if text is None:
+                text = ""
+            rows["n_chars"].append(len(text))
+            for unit, sep in (("line", "\n"), ("para", "\n\n")):
+                segs = [s for s in text.split(sep) if s]
+                cnt = Counter(segs)
+                rows[f"n_{unit}s"].append(len(segs))
+                rows[f"dup_{unit}s"].append(
+                    sum(c - 1 for c in cnt.values()))
+                rows[f"dup_{unit}_chars"].append(
+                    sum((c - 1) * len(s) for s, c in cnt.items()))
+            tk = tokens_py(text.replace("\n", " "))
+            # n-gram grouping WITHOUT building gram strings:
+            # intern tokens to ids, group sliding windows of the id
+            # array with np.unique(axis=0) (exact equality — no
+            # hashing), and recover each gram's char length from a
+            # token-length prefix sum (identical grams = identical
+            # tokens = identical length, so the first occurrence's
+            # offsets suffice)
+            vocab: dict = {}
+            tids = np.fromiter(
+                (vocab.setdefault(t, len(vocab)) for t in tk),
+                dtype=np.int32, count=len(tk))
+            cum = np.zeros(len(tk) + 1, dtype=np.int64)
+            if tk:
+                np.cumsum(np.fromiter((len(t) for t in tk),
+                                      dtype=np.int64, count=len(tk)),
+                          out=cum[1:])
+            for n in range(2, 11):
+                key = (f"top{n}_chars" if n <= 4 else
+                       f"dup{n}_chars")
+                if len(tk) < n:
+                    rows[key].append(0)
+                    continue
+                # group windows via a void (raw-bytes) view: exact
+                # equality grouping like unique(axis=0) but a
+                # single memcmp sort instead of a lexsort; group
+                # ORDER differs, which is irrelevant — only
+                # first-occurrence indices and counts are used,
+                # and identical grams have identical lengths
+                wins = np.ascontiguousarray(
+                    sliding_window_view(tids, n))
+                voidv = wins.view(np.dtype(
+                    (np.void, wins.dtype.itemsize * n))).ravel()
+                _, first, counts = np.unique(
+                    voidv, return_index=True, return_counts=True)
+                lens = cum[first + n] - cum[first] + (n - 1)
+                if n <= 4:
+                    rows[key].append(int((counts * lens).max()))
+                else:
+                    dup = counts >= 2
+                    rows[key].append(
+                        int((counts[dup] * lens[dup]).sum()))
+        return [ids] + [rows[c] for c in int_cols]
 
-        import numpy as np
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        for batch in batches:
-            id_type = batch.column(id_col).type
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            rows: dict = {c: [] for c in ["id"] + int_cols}
-            for rid, text in zip(ids, texts):
-                if text is None:
-                    text = ""
-                rows["id"].append(rid)
-                rows["n_chars"].append(len(text))
-                for unit, sep in (("line", "\n"), ("para", "\n\n")):
-                    segs = [s for s in text.split(sep) if s]
-                    cnt = Counter(segs)
-                    rows[f"n_{unit}s"].append(len(segs))
-                    rows[f"dup_{unit}s"].append(
-                        sum(c - 1 for c in cnt.values()))
-                    rows[f"dup_{unit}_chars"].append(
-                        sum((c - 1) * len(s) for s, c in cnt.items()))
-                tk = [t for t in text.replace("\n", " ").split(" ") if t]
-                # n-gram grouping WITHOUT building gram strings:
-                # intern tokens to ids, group sliding windows of the id
-                # array with np.unique(axis=0) (exact equality — no
-                # hashing), and recover each gram's char length from a
-                # token-length prefix sum (identical grams = identical
-                # tokens = identical length, so the first occurrence's
-                # offsets suffice)
-                vocab: dict = {}
-                tids = np.fromiter(
-                    (vocab.setdefault(t, len(vocab)) for t in tk),
-                    dtype=np.int32, count=len(tk))
-                cum = np.zeros(len(tk) + 1, dtype=np.int64)
-                if tk:
-                    np.cumsum(np.fromiter((len(t) for t in tk),
-                                          dtype=np.int64, count=len(tk)),
-                              out=cum[1:])
-                for n in range(2, 11):
-                    key = (f"top{n}_chars" if n <= 4 else
-                           f"dup{n}_chars")
-                    if len(tk) < n:
-                        rows[key].append(0)
-                        continue
-                    # group windows via a void (raw-bytes) view: exact
-                    # equality grouping like unique(axis=0) but a
-                    # single memcmp sort instead of a lexsort; group
-                    # ORDER differs, which is irrelevant — only
-                    # first-occurrence indices and counts are used,
-                    # and identical grams have identical lengths
-                    wins = np.ascontiguousarray(
-                        sliding_window_view(tids, n))
-                    voidv = wins.view(np.dtype(
-                        (np.void, wins.dtype.itemsize * n))).ravel()
-                    _, first, counts = np.unique(
-                        voidv, return_index=True, return_counts=True)
-                    lens = cum[first + n] - cum[first] + (n - 1)
-                    if n <= 4:
-                        rows[key].append(int((counts * lens).max()))
-                    else:
-                        dup = counts >= 2
-                        rows[key].append(
-                            int((counts[dup] * lens[dup]).sum()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows["id"], type=id_type)]
-                + [pa.array(rows[c], pa.int64()) for c in int_cols],
-                names=["id"] + int_cols)
-
-    from ..plans.salt import spread_compute
-
-    ints = (spread_compute(df.select(id_col, text_col))
-            .mapInArrow(fn, schema=out_schema))
+    ints = doc_map(df, id_col, text_col, fn,
+                   ", ".join(f"{c} bigint" for c in int_cols))
 
     c1 = F.when(F.col("n_chars") == 0, F.lit(1).cast("bigint")) \
         .otherwise(F.col("n_chars"))
@@ -615,60 +602,32 @@ def bigram_coverage(df: DataFrame, id_col: str = "doc_id",
        this is one hash join on the same code both sides.
     Docs with < 2 tokens keep a row (coverage 0 over a guarded
     denominator)."""
-    import hashlib
+    from collections import Counter
 
-    import pyarrow as pa
+    from ..plans.salt import doc_map
 
     # Doc-local bigram counting kernel: one row per DISTINCT bigram
     # per doc with its occurrence count — the per-doc distinct
     # aggregation happens where the text is parsed, so the build pass
     # needs no occ.distinct() shuffle at all and the apply pass
-    # aggregates pre-counted rows. (The earlier explode + HOF chain
-    # also ran on the scan's 1-2 effective tasks — driver parquets
-    # hold ONE row group — and instantiated the explode per branch.)
-    id_type = dict(df.dtypes)[id_col]
-
-    def fn(batches):
-        md5 = hashlib.md5
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_i: list = []
-            out_c: list = []
-            out_n: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = [w for w in t.split(" ") if w]
-                if len(toks) < 2:
-                    continue
-                counts: dict = {}
-                prev = toks[0]
-                for w in toks[1:]:
-                    g = prev + " " + w
-                    counts[g] = counts.get(g, 0) + 1
-                    prev = w
-                for g, c in counts.items():
-                    out_i.append(i)
-                    out_c.append(int(
-                        md5(g.encode("utf-8")).hexdigest()[:15], 16))
-                    out_n.append(c)
-            if out_i:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_i, type=batch.column("id").type),
-                     pa.array(out_c, pa.int64()),
-                     pa.array(out_n, pa.int64())],
-                    names=["id", "code", "cnt"])
-
-    from ..plans.salt import spread_compute
+    # aggregates pre-counted rows.
+    def fn(ids, texts):
+        out_i: list = []
+        out_c: list = []
+        out_n: list = []
+        for i, t in zip(ids, texts):
+            if t is None:
+                continue
+            counts = Counter(ngrams_py(tokens_py(t), 2))
+            out_i += [i] * len(counts)
+            out_c += [code15_py(g) for g in counts]
+            out_n += counts.values()
+        return out_i, out_c, out_n
 
     # ONE code-keyed exchange feeds both the build and the apply
     # branch (the _cap_doc_freq reuse idiom) — without it each branch
     # re-runs the kernel
-    occ = (spread_compute(df.select(F.col(id_col).alias("id"),
-                                    F.col(text_col).alias("text")))
-           .mapInArrow(fn, schema=f"id {id_type}, code bigint, "
-                                   "cnt bigint")
+    occ = (doc_map(df, id_col, text_col, fn, "code bigint, cnt bigint")
            .repartition(F.col("code")))
     freq = (occ.groupBy("code")
             .agg(F.count("*").alias("_df"))
@@ -739,72 +698,42 @@ QC_LCG = {0: (48271, 7), 1: (69621, 13)}  # class -> (A, C)
 QC_MOD = 1_000_003
 
 
-def _qc_weight(bucket, cls: int):
-    a, c = QC_LCG[cls]
-    return ((bucket + 1) * a + c) % QC_MOD % 201 - 100
-
-
-def hashed_feature_buckets(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           buckets: int = QC_BUCKETS) -> DataFrame:
-    """(id, b) rows: one per unigram+bigram occurrence, b = hashed
-    bucket (the fastText/DSIR hashing trick). Shared by
-    quality_classify and dsir_weights."""
-    from edspdf_spark.plans.salt import spread_compute
-
-    toks = tokens(F.col(text_col))
-    base = spread_compute(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), toks.alias("tk"))
-    n = F.size(F.col("tk"))
-    m = F.greatest(F.lit(0), n - 1)
-    z = F.arrays_zip(F.slice(F.col("tk"), 1, m).alias("w0"),
-                     F.slice(F.col("tk"), 2, m).alias("w1"))
-    bigrams = F.transform(z, lambda s: F.concat_ws(" ", s["w0"], s["w1"]))
-    feats = F.concat(F.col("tk"), bigrams)
-    return (base.select("id", F.explode(feats).alias("f"))
-            .select("id", (code15(F.col("f")) % buckets).alias("b")))
-
-
 def _iter_bucket_counts(ids, texts, buckets: int, memo: dict):
     """Per-doc hashed-feature bucket counts for the fastText-style
     unigram+bigram feature set (every OCCURRENCE counts): yields
-    (id, {bucket: count}, n_occurrences) for docs with >= 1 token;
+    (id, buckets, counts, n_occurrences), the distinct buckets and
+    their counts as int64 arrays, for docs with >= 1 token;
     NULL/empty docs yield nothing (the explode semantics). The
-    feature->bucket memo is per task: features repeat heavily across
-    documents, so the md5 runs once per DISTINCT feature per task
-    instead of once per occurrence (size-capped against adversarial
-    vocabularies)."""
-    import hashlib
+    feature->bucket memo is per task (a doc_map kernel keeps it in its
+    closure, which every task unpickles afresh): features repeat
+    heavily across documents, so the md5 runs once per DISTINCT
+    feature per task instead of once per occurrence (size-capped
+    against adversarial vocabularies)."""
+    from itertools import chain
 
-    md5 = hashlib.md5
+    import numpy as np
+
     cap = 1 << 22
     for i, t in zip(ids, texts):
         if t is None:
             continue
-        toks = [w for w in t.split(" ") if w]
+        toks = tokens_py(t)
         if not toks:
             continue
         counts: dict = {}
-        prev = None
-        for w in toks:
-            b = memo.get(w)
+        for f in chain(toks, ngrams_py(toks, 2)):
+            b = memo.get(f)
             if b is None:
-                b = int(md5(w.encode("utf-8")).hexdigest()[:15],
-                        16) % buckets
+                b = code15_py(f) % buckets
                 if len(memo) < cap:
-                    memo[w] = b
+                    memo[f] = b
             counts[b] = counts.get(b, 0) + 1
-            if prev is not None:
-                g = prev + " " + w
-                b2 = memo.get(g)
-                if b2 is None:
-                    b2 = int(md5(g.encode("utf-8")).hexdigest()[:15],
-                             16) % buckets
-                    if len(memo) < cap:
-                        memo[g] = b2
-                counts[b2] = counts.get(b2, 0) + 1
-            prev = w
-        yield i, counts, 2 * len(toks) - 1
+        yield (i,
+               np.fromiter(counts.keys(), dtype=np.int64,
+                           count=len(counts)),
+               np.fromiter(counts.values(), dtype=np.int64,
+                           count=len(counts)),
+               2 * len(toks) - 1)
 
 
 def quality_classify(df: DataFrame, id_col: str = "doc_id",
@@ -833,51 +762,32 @@ def quality_classify(df: DataFrame, id_col: str = "doc_id",
     A real (non-closed-form) weight table would be the same kernel
     with a broadcast weight array."""
     import numpy as np
-    import pyarrow as pa
 
-    from edspdf_spark.plans.salt import spread_compute
+    from ..plans.salt import doc_map
 
     buckets = QC_BUCKETS
     idx = np.arange(buckets, dtype=np.int64)
     w_arr = {cls: ((idx + 1) * a + c) % QC_MOD % 201 - 100
              for cls, (a, c) in QC_LCG.items()}
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (f"id {id_type}, n_features bigint, score0 bigint, "
-                  "score1 bigint, label int")
+    w0a, w1a = w_arr[0], w_arr[1]
+    memo: dict = {}
 
-    def fn(batches):
-        w0a, w1a = w_arr[0], w_arr[1]
-        memo: dict = {}
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            o_id, o_n, o_s0, o_s1, o_lb = [], [], [], [], []
-            for i, counts, n_occ in _iter_bucket_counts(
-                    ids, texts, buckets, memo):
-                bs = np.fromiter(counts.keys(), dtype=np.int64,
-                                 count=len(counts))
-                cs = np.fromiter(counts.values(), dtype=np.int64,
-                                 count=len(counts))
-                s0 = int((w0a[bs] * cs).sum())
-                s1 = int((w1a[bs] * cs).sum())
-                o_id.append(i)
-                o_n.append(n_occ)
-                o_s0.append(s0)
-                o_s1.append(s1)
-                o_lb.append(1 if s1 > s0 else 0)
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(o_id, type=batch.column("id").type),
-                     pa.array(o_n, pa.int64()),
-                     pa.array(o_s0, pa.int64()),
-                     pa.array(o_s1, pa.int64()),
-                     pa.array(o_lb, pa.int32())],
-                    names=["id", "n_features", "score0", "score1",
-                           "label"])
+    def fn(ids, texts):
+        o_id, o_n, o_s0, o_s1, o_lb = [], [], [], [], []
+        for i, bs, cs, n_occ in _iter_bucket_counts(
+                ids, texts, buckets, memo):
+            s0 = int((w0a[bs] * cs).sum())
+            s1 = int((w1a[bs] * cs).sum())
+            o_id.append(i)
+            o_n.append(n_occ)
+            o_s0.append(s0)
+            o_s1.append(s1)
+            o_lb.append(1 if s1 > s0 else 0)
+        return o_id, o_n, o_s0, o_s1, o_lb
 
-    return (spread_compute(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col).alias("text")))
-            .mapInArrow(fn, schema=out_schema))
+    return doc_map(df, id_col, text_col, fn,
+                   "n_features bigint, score0 bigint, score1 bigint, "
+                   "label int")
 
 
 def lm_perplexity_buckets(df: DataFrame, id_col: str = "doc_id",
@@ -997,82 +907,67 @@ def dsir_weights(df: DataFrame, target: DataFrame,
     small by construction (DSIR targets are quality subsets, not
     corpora)."""
     import numpy as np
-    import pyarrow as pa
 
-    from edspdf_spark.plans.salt import spread_compute
+    from ..plans.salt import doc_map
 
-    def bucket_totals(src: DataFrame) -> np.ndarray:
-        def count_fn(batches):
-            memo: dict = {}
-            tot = np.zeros(buckets, dtype=np.int64)
-            for batch in batches:
-                ids = batch.column("id").to_pylist()
-                texts = batch.column("text").to_pylist()
-                for _i, counts, _n in _iter_bucket_counts(
-                        ids, texts, buckets, memo):
-                    bs = np.fromiter(counts.keys(), dtype=np.int64,
-                                     count=len(counts))
-                    cs = np.fromiter(counts.values(), dtype=np.int64,
-                                     count=len(counts))
-                    tot[bs] += cs
-            nz = np.flatnonzero(tot)
-            if nz.size:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(nz, pa.int64()),
-                     pa.array(tot[nz], pa.int64())],
-                    names=["b", "cnt"])
-
-        rows = (spread_compute(src.select(F.col(id_col).alias("id"),
-                                          F.col(text_col).alias("text")))
-                .mapInArrow(count_fn, schema="b bigint, cnt bigint")
-                .groupBy("b").agg(F.sum("cnt").alias("cnt"))
-                .toArrow())
-        out = np.zeros(buckets, dtype=np.int64)
-        bcol = np.asarray(rows.column("b"))
-        ccol = np.asarray(rows.column("cnt"))
-        if bcol.size:
-            out[bcol] = ccol
-        return out
-
-    cr = bucket_totals(df)
-    ct = bucket_totals(target)
+    cr = _bucket_totals(df, id_col, text_col, buckets)
+    ct = _bucket_totals(target, id_col, text_col, buckets)
     # ilog2(c) = length(bin(c)) - 1 = bit_length - 1 for positive c
     lp_arr = np.array(
         [(int(ct[b]) + 1).bit_length() - (int(cr[b]) + 1).bit_length()
          for b in range(buckets)], dtype=np.int64)
+    memo: dict = {}
 
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (f"id {id_type}, n_features bigint, weight bigint, "
-                  "selected boolean")
+    def score_fn(ids, texts):
+        o_id, o_n, o_w, o_s = [], [], [], []
+        for i, bs, cs, n_occ in _iter_bucket_counts(
+                ids, texts, buckets, memo):
+            w = int((lp_arr[bs] * cs).sum())
+            o_id.append(i)
+            o_n.append(n_occ)
+            o_w.append(w)
+            o_s.append(w >= cutoff)
+        return o_id, o_n, o_w, o_s
 
-    def score_fn(batches):
+    return doc_map(df, id_col, text_col, score_fn,
+                   "n_features bigint, weight bigint, selected boolean")
+
+
+def _bucket_totals(src: DataFrame, id_col: str, text_col: str,
+                   buckets: int):
+    """Corpus-wide hashed-feature bucket counts as a dense int64 array
+    of length `buckets`: one per-task partial-sum kernel (at most
+    `buckets` rows per task), one groupBy, collected to the driver."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..plans.salt import spread_compute
+
+    def count_fn(batches):
         memo: dict = {}
+        tot = np.zeros(buckets, dtype=np.int64)
         for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            o_id, o_n, o_w, o_s = [], [], [], []
-            for i, counts, n_occ in _iter_bucket_counts(
-                    ids, texts, buckets, memo):
-                bs = np.fromiter(counts.keys(), dtype=np.int64,
-                                 count=len(counts))
-                cs = np.fromiter(counts.values(), dtype=np.int64,
-                                 count=len(counts))
-                w = int((lp_arr[bs] * cs).sum())
-                o_id.append(i)
-                o_n.append(n_occ)
-                o_w.append(w)
-                o_s.append(w >= cutoff)
-            if o_id:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(o_id, type=batch.column("id").type),
-                     pa.array(o_n, pa.int64()),
-                     pa.array(o_w, pa.int64()),
-                     pa.array(o_s, pa.bool_())],
-                    names=["id", "n_features", "weight", "selected"])
+            for _i, bs, cs, _n in _iter_bucket_counts(
+                    batch.column("id").to_pylist(),
+                    batch.column("text").to_pylist(), buckets, memo):
+                tot[bs] += cs
+        nz = np.flatnonzero(tot)
+        if nz.size:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(nz, pa.int64()), pa.array(tot[nz], pa.int64())],
+                names=["b", "cnt"])
 
-    return (spread_compute(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col).alias("text")))
-            .mapInArrow(score_fn, schema=out_schema))
+    rows = (spread_compute(src.select(F.col(id_col).alias("id"),
+                                      F.col(text_col).alias("text")))
+            .mapInArrow(count_fn, schema="b bigint, cnt bigint")
+            .groupBy("b").agg(F.sum("cnt").alias("cnt"))
+            .toArrow())
+    out = np.zeros(buckets, dtype=np.int64)
+    bcol = np.asarray(rows.column("b"))
+    ccol = np.asarray(rows.column("cnt"))
+    if bcol.size:
+        out[bcol] = ccol
+    return out
 
 
 def word_blocklist_filter(df: DataFrame, words,
@@ -1245,9 +1140,8 @@ def cm_token_counts(df: DataFrame, id_col: str = "doc_id",
             for t in batch.column("text").to_pylist():
                 if t is None:
                     continue
-                for w in t.split(" "):
-                    if w:
-                        counts[w] = counts.get(w, 0) + 1
+                for w in tokens_py(t):
+                    counts[w] = counts.get(w, 0) + 1
         if counts:
             yield pa.RecordBatch.from_arrays(
                 [pa.array(list(counts.keys()), pa.string()),

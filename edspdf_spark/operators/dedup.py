@@ -1,9 +1,11 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all expressed with native DataFrame ops (JVM-side,
-whole-stage codegen; zero Python in the hot path), each designed so a
-DuckDB oracle can reproduce it exactly (portable md5-prefix hashing,
-integer arithmetic only — see functions/__init__.py):
+Four families, each designed so a DuckDB oracle can reproduce it
+exactly (portable md5-prefix hashing, integer arithmetic only — see
+functions/__init__.py). Joins, aggregations and windows are native
+DataFrame ops (JVM-side, whole-stage codegen); the doc-local shingle,
+simhash and passage cutting run as Arrow-batched Python kernels
+(plans/salt.doc_map), never per-row UDFs:
 
 * exact_dedup        — hash-groupBy on md5(text)
 * jaccard_pairs      — word-k-shingle self-join with exact Jaccard
@@ -18,7 +20,7 @@ Scale notes (100 TB framing):
 - MinHash/LSH replaces the all-pairs join with per-band equality
   joins on tiny signatures; candidate verification re-joins the
   (pruned) shingle sets only for candidate pairs.
-- simhash is a pure map + one groupBy; near-dup lookup joins on the
+- simhash is one doc-local map, no shuffle; near-dup lookup joins on the
   top bits (band) so the pair space never materializes globally.
 """
 
@@ -29,8 +31,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions import (CODE_MOD, MINHASH_AB, code15, minhash_exprs,
-                         tokens)
+from ..functions import (code15, code15_py, minhash_exprs, ngrams_py,
+                         tokens, tokens_py)
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -51,54 +53,23 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id",
     The explode+hash runs as ONE Arrow kernel (spread over the full
     core count first — document parquets are small in bytes, so the
     scan alone gets a handful of tasks and byte heuristics would
-    serialize the CPU-heavy shingling). The earlier codegen
-    formulation (word_shingles HOF chain + explode + md5) was exact
-    but paid interpreted per-element lambda evaluation for every
-    shingle of every document — ~6M interpreted concat_ws/transform
-    evals at sf1.0 ON FOUR TASKS. Values are identical: split on
-    single space dropping empties, k-token shingles joined with one
-    space, first 15 md5 hex chars as BIGINT (md5 of UTF-8 bytes in
-    both engines)."""
-    import hashlib
+    serialize the CPU-heavy shingling). Values match the codegen and
+    DuckDB forms: functions.tokens, k-token shingles joined with one
+    space, functions.code15."""
+    from ..plans.salt import doc_map
 
-    import pyarrow as pa
+    def fn(ids, texts):
+        out_i: list = []
+        out_c: list = []
+        for i, t in zip(ids, texts):
+            if t is None:
+                continue
+            grams = dict.fromkeys(ngrams_py(tokens_py(t), k))
+            out_i += [i] * len(grams)
+            out_c += [code15_py(g) for g in grams]
+        return out_i, out_c
 
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"id {id_type}, code bigint"
-
-    def fn(batches):
-        md5 = hashlib.md5
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_i: list = []
-            out_c: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = [w for w in t.split(" ") if w]
-                n = len(toks) - k + 1
-                if n <= 0:
-                    continue
-                seen = set()
-                for j in range(n):
-                    s = " ".join(toks[j:j + k])
-                    if s not in seen:
-                        seen.add(s)
-                        out_i.append(i)
-                        out_c.append(int(
-                            md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_i:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_i, type=batch.column("id").type),
-                     pa.array(out_c, pa.int64())],
-                    names=["id", "code"])
-
-    from ..plans.salt import spread_compute
-
-    sh = (spread_compute(df.select(F.col(id_col).alias("id"),
-                                   F.col(text_col).alias("text")))
-          .mapInArrow(fn, schema=out_schema))
+    sh = doc_map(df, id_col, text_col, fn, "code bigint")
     if max_doc_freq is not None:
         sh = _cap_doc_freq(sh, max_doc_freq)
     return sh
@@ -471,55 +442,38 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     hashing is the only Python loop (one md5 per distinct token);
     the bit tallies are one vectorized numpy pass per batch, and the
     fingerprint never leaves the task that read the document."""
-    import hashlib
-
     import numpy as np
-    import pyarrow as pa
 
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"id {id_type}, simhash bigint"
+    from ..plans.salt import doc_map
 
-    def fn(batches):
-        md5 = hashlib.md5
-        shifts = np.arange(bits, dtype=np.int64)
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_i: list = []
-            codes: list = []
-            counts: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = {w for w in t.split(" ") if w}
-                if not toks:
-                    continue
-                out_i.append(i)
-                counts.append(len(toks))
-                codes.extend(
-                    int(md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    for w in toks)
-            if not out_i:
+    shifts = np.arange(bits, dtype=np.int64)
+
+    def fn(ids, texts):
+        out_i: list = []
+        codes: list = []
+        counts: list = []
+        for i, t in zip(ids, texts):
+            if t is None:
                 continue
-            carr = np.asarray(codes, dtype=np.int64)
-            ones = (carr[:, None] >> shifts) & 1       # (tokens, bits)
-            bounds = np.zeros(len(out_i), dtype=np.int64)
-            np.cumsum(counts[:-1], out=bounds[1:])
-            ones_per_doc = np.add.reduceat(ones, bounds, axis=0)
-            n_tok = np.asarray(counts, dtype=np.int64)[:, None]
-            tally = 2 * ones_per_doc - n_tok           # (+1/-1 votes)
-            fp = ((tally > 0).astype(np.int64)
-                  << shifts[None, :]).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_i, type=batch.column("id").type),
-                 pa.array(fp, pa.int64())],
-                names=["id", "simhash"])
+            toks = set(tokens_py(t))
+            if not toks:
+                continue
+            out_i.append(i)
+            counts.append(len(toks))
+            codes += [code15_py(w) for w in toks]
+        if not out_i:
+            return out_i, []
+        carr = np.asarray(codes, dtype=np.int64)
+        ones = (carr[:, None] >> shifts) & 1       # (tokens, bits)
+        bounds = np.zeros(len(out_i), dtype=np.int64)
+        np.cumsum(counts[:-1], out=bounds[1:])
+        ones_per_doc = np.add.reduceat(ones, bounds, axis=0)
+        n_tok = np.asarray(counts, dtype=np.int64)[:, None]
+        tally = 2 * ones_per_doc - n_tok           # (+1/-1 votes)
+        fp = ((tally > 0).astype(np.int64) << shifts[None, :]).sum(axis=1)
+        return out_i, fp
 
-    from ..plans.salt import spread_compute
-
-    return (spread_compute(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col).alias("text")))
-            .mapInArrow(fn, schema=out_schema))
+    return doc_map(df, id_col, text_col, fn, "simhash bigint")
 
 
 def simhash_near_pairs(fingerprints: DataFrame, bits: int = 16,
@@ -554,49 +508,30 @@ def passage_dedup(df: DataFrame, id_col: str = "doc_id",
     BIGINT codes (never the text), and the first-occurrence ranking is
     ONE shuffle on the code — the same single-exchange profile as
     exact_dedup, just at sub-document granularity."""
-    import hashlib
-
-    import pyarrow as pa
     from pyspark.sql import Window
+
+    from ..plans.salt import doc_map
 
     # Passage cutting + hashing is doc-local: one Arrow kernel behind
     # the compute-spread repartition (the codegen explode inlined the
     # tokenize HOF chain per passage and ran on the scan's 1-2
-    # effective tasks). Codes identical: k-token non-overlapping
-    # windows joined with one space, md5-prefix BIGINT.
-    id_type = dict(df.dtypes)[id_col]
+    # effective tasks).
+    def fn(ids, texts):
+        out_i: list = []
+        out_j: list = []
+        out_c: list = []
+        for i, t in zip(ids, texts):
+            if t is None:
+                continue
+            passages = ngrams_py(tokens_py(t), k, k)
+            out_i += [i] * len(passages)
+            out_j += range(len(passages))
+            out_c += [code15_py(g) for g in passages]
+        return out_i, out_j, out_c
 
-    def fn(batches):
-        md5 = hashlib.md5
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_i: list = []
-            out_j: list = []
-            out_c: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = [w for w in t.split(" ") if w]
-                for j in range(len(toks) // k):
-                    s = " ".join(toks[j * k:(j + 1) * k])
-                    out_i.append(i)
-                    out_j.append(j)
-                    out_c.append(int(
-                        md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_i:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_i, type=batch.column("id").type),
-                     pa.array(out_j, pa.int32()),
-                     pa.array(out_c, pa.int64())],
-                    names=["doc_id", "passage_idx", "passage_code"])
-
-    from ..plans.salt import spread_compute
-
-    ex = (spread_compute(df.select(F.col(id_col).alias("id"),
-                                   F.col(text_col).alias("text")))
-          .mapInArrow(fn, schema=f"doc_id {id_type}, passage_idx int, "
-                                 "passage_code bigint"))
+    ex = (doc_map(df, id_col, text_col, fn,
+                  "passage_idx int, passage_code bigint")
+          .withColumnRenamed("id", "doc_id"))
     w = Window.partitionBy("passage_code").orderBy("doc_id", "passage_idx")
     return ex.withColumn("keep", F.row_number().over(w) == 1)
 
@@ -636,9 +571,9 @@ def substring_dedup(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk"))
     n = F.size(F.col("tk"))
     m = F.greatest(F.lit(0), n - w + 1)
-    # positional w-gram codes via slice-zip (see word_shingles note:
-    # transform(sequence, i -> slice(tk, i, w)) would inline tk's
-    # expression per element -> O(w * len^2))
+    # positional w-gram codes via slice-zip: projection collapse would
+    # inline tk's expression into every element of transform(sequence,
+    # i -> slice(tk, i, w)) -> O(w * len^2)
     parts = [F.slice(F.col("tk"), j + 1, m).alias(f"w{j}")
              for j in range(w)]
     wins = (base.select(

@@ -1,10 +1,10 @@
-"""Fused extract->classify->aggregate pipeline: ONE mapInPandas pass.
+"""Fused extract->classify->aggregate pipeline: ONE mapInArrow pass.
 
 Every reference operator is document-local (SURVEY.md §2.9), so the
 whole pipeline is an embarrassingly-parallel map: no bloc explosion,
 no re-grouping shuffle, no window. The plan is
 
-    scan(url, html) -> [salted repartition] -> mapInPandas -> sink
+    scan(url, html) -> [salted repartition] -> mapInArrow -> sink
 
 which is the plan that survives a 100x scale-up: the only shuffle is
 the optional skew-defusing repartition, and each Python worker sees

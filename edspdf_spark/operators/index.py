@@ -58,8 +58,10 @@ def cooc_pairs(df: DataFrame, id_col: str = "doc_id",
     that appear together far above chance (collocations; word-vector
     training signal).
 
-    Shape: pair construction is zip-with-shifted-slices (the
-    word_shingles pattern — no position self-join, no range join);
+    Shape: pair construction is zip-with-shifted-slices — no position
+    self-join, no range join, and not transform(sequence, i ->
+    element_at(toks, i+d)), which projection collapse makes
+    O(d * len^2) by inlining the split into every element_at;
     one shuffle to pair counts, token counts and the total as
     broadcast sides. min_count bounds output (and is the standard
     noise floor for PMI)."""

@@ -82,6 +82,43 @@ def spread_compute(df: DataFrame,
     return df
 
 
+def doc_map(df: DataFrame, id_col: str, text_col: str, fn,
+            schema: str) -> DataFrame:
+    """The doc-local Arrow kernel scaffold: ONE mapInArrow behind
+    spread_compute, so a kernel owns only its per-document math.
+
+    `fn(ids, texts)` gets one batch's ids and texts as Python lists
+    (NULL text arrives as None) and returns the output columns, ids
+    first, as equal-length sequences. The output is `id`, with id_col's
+    type (the input batch's Arrow type is kept), followed by the
+    columns of the `schema` DDL string, whose Arrow types the other
+    columns take. A batch for which fn returns no rows emits nothing.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    rest = StructType.fromDDL(schema)
+    types = [to_arrow_type(f.dataType) for f in rest.fields]
+    out = StructType([StructField("id", df.schema[id_col].dataType)]
+                     + rest.fields)
+    names = out.fieldNames()
+
+    def kernel(batches):
+        for batch in batches:
+            ids = batch.column("id")
+            cols = fn(ids.to_pylist(), batch.column("text").to_pylist())
+            if len(cols[0]):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[0], type=ids.type)]
+                    + [pa.array(c, t) for c, t in zip(cols[1:], types)],
+                    names=names)
+
+    return (spread_compute(df.select(F.col(id_col).alias("id"),
+                                     F.col(text_col).alias("text")))
+            .mapInArrow(kernel, schema=out))
+
+
 def skew_stats(df, key_col: str, n_parts: int = 32):
     """One-row key-skew diagnosis for a prospective shuffle on
     `key_col`: (n_rows, n_keys, max_count, max_key, top1_share_milli,

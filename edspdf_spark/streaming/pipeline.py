@@ -4,7 +4,7 @@ The reference has no streaming surface (SURVEY.md §2.9); at crawl
 scale the natural deployment is a continuous backfill: new WARC
 batches land as files, the engine picks them up exactly once.
 
-readStream(pages dir) -> run_fused (mapInPandas works unchanged on a
+readStream(pages dir) -> run_fused (mapInArrow works unchanged on a
 streaming DataFrame: the pipeline is stateless per document) ->
 writeStream parquet with checkpointLocation. Spark's streaming
 checkpoint gives exactly-once file-batch semantics and free resume —

@@ -121,13 +121,12 @@ def row_minhash_bands(docs: DataFrame, url_col: str = "url",
     function (8x). Here each shingle hashes once (hashlib) and the 8
     mins are one vectorized numpy pass; works identically on batch
     and streaming DataFrames (mapInArrow is stream-safe)."""
-    import hashlib
-
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from ..functions import CODE_MOD, MINHASH_AB
+    from ..functions import (CODE_MOD, MINHASH_AB, code15_py, ngrams_py,
+                             tokens_py)
 
     assert n_hashes % band_size == 0
     ab = np.array(MINHASH_AB[:n_hashes], dtype=np.int64)
@@ -144,15 +143,11 @@ def row_minhash_bands(docs: DataFrame, url_col: str = "url",
             for url, text in zip(urls, texts):
                 if text is None:
                     continue
-                toks = [t for t in text.split(" ") if t != ""]
-                if len(toks) < k:
+                shingles = set(ngrams_py(tokens_py(text), k))
+                if not shingles:
                     continue
-                shingles = {" ".join(toks[i:i + k])
-                            for i in range(len(toks) - k + 1)}
-                codes = np.array(
-                    [int(hashlib.md5(s.encode("utf-8"))
-                         .hexdigest()[:15], 16) % CODE_MOD
-                     for s in shingles], dtype=np.int64)
+                codes = np.array([code15_py(s) % CODE_MOD
+                                  for s in shingles], dtype=np.int64)
                 # (n_hashes, n_codes) affine mod, then row mins
                 hs = ((ab[:, 0:1] * codes[None, :] + ab[:, 1:2])
                       % CODE_MOD).min(axis=1)

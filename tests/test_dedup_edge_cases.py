@@ -384,3 +384,77 @@ def test_minhash_lsh_releases_shingles_and_signatures(spark):
     pairs = minhash_lsh_pairs(df, k=3, threshold=0.5).collect()
     assert (4, 5) in {(r.id_a, r.id_b) for r in pairs}
     assert len(persisted() - before) <= 1
+
+
+# --- Python twins of the portable text primitives --------------------------
+
+TWIN_TEXTS = {
+    "empty": "",
+    "all_space": "   ",
+    "double_space": "a  b c",
+    "lead_trail": " lead and trail ",
+    "tab_newline": "tab\there new\nline x",
+    "accents": "café é crème brûlée",
+    "cjk": "中文 分词 测试 文本",
+    "astral": "emoji 😀 astral 𝄞 clef",
+    "long_token": "x" * 10_000 + " y z",
+}
+
+
+@pytest.mark.parametrize("text", list(TWIN_TEXTS.values()),
+                         ids=list(TWIN_TEXTS))
+def test_python_twins_match_spark_and_duckdb(spark, text):
+    """tokens_py equals Spark `tokens`; code15_py equals Spark `code15`
+    and DuckDB `code15_sql`; ngrams_py with step 1 and step n equals
+    the windows DuckDB cuts, and the codes shingle_table and
+    passage_dedup emit are those windows' codes."""
+    from edspdf_spark.functions import (code15, code15_py, code15_sql,
+                                        ngrams_py, tokens, tokens_py)
+    from edspdf_spark.operators.dedup import passage_dedup, shingle_table
+
+    n = 2
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    row = df.select(tokens("text").alias("tk"),
+                    code15("text").alias("code")).first()
+    toks = tokens_py(text)
+    assert toks == row.tk
+    duck_code = duckdb.execute(f"SELECT {code15_sql('?')}",
+                               [text]).fetchone()[0]
+    assert code15_py(text) == row.code == duck_code
+
+    def duck_windows(step):
+        return duckdb.execute(f"""
+            WITH s AS (SELECT list_filter(string_split(?, ' '),
+                                          w -> w <> '') AS t),
+            g AS (SELECT [array_to_string(list_slice(t, i, i + {n - 1}),
+                                          ' ')
+                          FOR i IN generate_series(1, len(t) - {n - 1},
+                                                   {step})] AS w
+                  FROM s)
+            SELECT w, [{code15_sql('x')} FOR x IN w] FROM g""",
+                              [text]).fetchone()
+
+    shingles, shingle_codes = duck_windows(1)
+    passages, passage_codes = duck_windows(n)
+    assert ngrams_py(toks, n) == shingles
+    assert ngrams_py(toks, n, n) == passages
+    assert [code15_py(g) for g in shingles] == shingle_codes
+    got = [r.code for r in shingle_table(df, k=n).collect()]
+    assert got == list(dict.fromkeys(shingle_codes))
+    got = [r.passage_code for r in passage_dedup(df, k=n)
+           .orderBy("passage_idx").collect()]
+    assert got == passage_codes
+
+
+def test_md5_code_format_has_one_owner():
+    """The md5-prefix code format is written out in functions/ only:
+    every kernel calls code15_py, so Spark, DuckDB and Python cannot
+    drift apart."""
+    import pathlib
+
+    import edspdf_spark
+
+    root = pathlib.Path(edspdf_spark.__file__).parent
+    owners = sorted(str(p.relative_to(root)) for p in root.rglob("*.py")
+                    if "hexdigest()[:15]" in p.read_text("utf-8"))
+    assert owners == ["functions/__init__.py"]

@@ -357,3 +357,49 @@ def test_driver_table_caps_rows_and_arrow_bytes(spark):
         assert words.storageLevel != StorageLevel.NONE
     finally:
         words.unpersist()
+
+
+def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
+        spark, monkeypatch):
+    """doc_map: the output id keeps the input's type, NULL text reaches
+    fn, a batch for which fn returns no rows emits no batch, and the
+    plan is one MapInArrow behind at most one spread Exchange."""
+    import pyarrow as pa
+
+    from edspdf_spark.plans.salt import doc_map
+
+    def fn(ids, texts):
+        kept = [(i, t is None) for i, t in zip(ids, texts) if t != "drop"]
+        return [i for i, _ in kept], [null for _, null in kept]
+
+    kernels = []
+    for id_type, ids in (("bigint", [1, 2, 3]), ("string", ["a", "b", "c"])):
+        df = spark.createDataFrame(list(zip(ids, ["x", None, "drop"])),
+                                   f"doc_id {id_type}, text string")
+        real = type(df).mapInArrow
+
+        def capture(self, func, schema, *a, **k):
+            kernels.append(func)
+            return real(self, func, schema, *a, **k)
+
+        monkeypatch.setattr(type(df), "mapInArrow", capture)
+        out = doc_map(df, "doc_id", "text", fn, "is_null boolean")
+        monkeypatch.undo()
+        assert out.dtypes == [("id", id_type), ("is_null", "boolean")]
+        assert sorted(map(tuple, out.collect())) == [(ids[0], False),
+                                                     (ids[1], True)]
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert plan.count("Exchange") <= 1, plan
+        assert "EvalPython" not in plan
+
+    batches = [pa.RecordBatch.from_pydict(
+                   {"id": pa.array([7], pa.int32()), "text": ["drop"]}),
+               pa.RecordBatch.from_pydict(
+                   {"id": pa.array([8, 9], pa.int32()),
+                    "text": [None, "y"]})]
+    emitted = list(kernels[0](iter(batches)))
+    assert len(emitted) == 1
+    assert emitted[0].schema.field("id").type == pa.int32()
+    assert emitted[0].to_pydict() == {"id": [8, 9],
+                                      "is_null": [True, False]}
