@@ -49,6 +49,7 @@ from edspdf_spark.operators.multimodal import (binary_metadata,  # noqa: E402
 from edspdf_spark.operators.simsearch import (brute_force_topk,  # noqa: E402
                                               cosine_bucket_pairs)
 from edspdf_spark.plans import defuse_skew  # noqa: E402
+from edspdf_spark.plans.salt import group_map  # noqa: E402
 
 BODY_MASKS = [(None, 0.1, 0.9, 0.1, 0.9, "body")]
 PIPE_CFG = PipelineConfig(masks=BODY_MASKS, threshold=0.1)
@@ -1055,10 +1056,9 @@ def q_reading_order(spark, sf_dir):
     )
 
     def _handle(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain-list group walk (rows arrive sorted by (doc_id, k)
-        # from the repartition+sortWithinPartitions below; the former
-        # per-doc pandas groupby/sort_values/at[] cost ~10x the
-        # 6-element reading-order kernel)
+        # plain-list group walk over whole docs sorted by (doc_id, k):
+        # pandas groupby/sort_values/at[] cost ~10x the 6-element
+        # reading-order kernel
         ids = pdf["doc_id"].tolist()
         ks = pdf["k"].tolist()
         y0s = pdf["y0"].tolist()
@@ -1078,35 +1078,8 @@ def q_reading_order(spark, sf_dir):
         return pd.DataFrame(out_rows,
                             columns=["doc_id", "k", "ord_pos"])
 
-    # batched kernel dispatch (the aggregator's buffered pattern):
-    # repartition by doc + sortWithinPartitions + ONE mapInPandas that
-    # walks doc groups inside each Arrow batch, carrying the possibly-
-    # split last group into the next batch. applyInPandas here paid
-    # one Python round-trip per 6-row document — 18.8 s at sf0.1 vs
-    # sub-second batched (the worst never-timed query of r3's bench
-    # gap).
-    def fn(batches):
-        tail = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["doc_id"].iloc[-1]
-            is_tail = pdf["doc_id"] == last
-            tail = pdf[is_tail]
-            head = pdf[~is_tail]
-            if len(head):
-                yield _handle(head)
-        if tail is not None and len(tail):
-            yield _handle(tail)
-
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    prepared = (rows.repartition(n_parts, F.col("doc_id"))
-                .sortWithinPartitions("doc_id", "k"))
-    return prepared.mapInPandas(
-        fn, schema="doc_id long, k long, ord_pos long")
+    return group_map(rows, "doc_id", ["k"], _handle,
+                     "doc_id long, k long, ord_pos long")
 
 
 def q_dedup_exact(spark, sf_dir):

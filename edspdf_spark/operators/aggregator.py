@@ -2,12 +2,11 @@
 
 The exact reference kernel (kernels.aggregate, mirroring
 pipes/aggregators/simple.py:108-173) applied per document. Physical
-strategy: repartition by url + sortWithinPartitions, then ONE
-mapInPandas whose kernel walks url groups inside each Arrow batch,
-buffering groups that span batch boundaries. This is Spark's
-applyInPandas semantics without its per-group overhead (one pandas
-frame per ARROW BATCH instead of one per url — ~100x fewer Python
-round-trips when documents are small).
+strategy: plans.salt.group_map on url — one shuffle, one sort within
+partitions, ONE mapInPandas whose kernel walks the whole url groups of
+each frame. This is Spark's applyInPandas semantics without its
+per-group overhead (one pandas frame per ARROW BATCH instead of one
+per url — ~100x fewer Python round-trips when documents are small).
 
 This is the pipeline's ONLY shuffle (co-locate all blocs of a url);
 the fused pipeline (operators/fused.py) avoids even that by never
@@ -21,13 +20,13 @@ the independent ORACLE in __spark_entry__, not the engine.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Union
+from typing import Dict, List, Optional, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.aggregate import aggregate_doc, to_markdown
+from ..plans.salt import group_map
 from ..schemas import TEXTS_SCHEMA
 
 LabelMap = Dict[str, Union[str, List[str]]]
@@ -61,31 +60,11 @@ def aggregate(labeled_blocs: DataFrame, sort: bool = False,
     url, page_num, order_idx, x0, x1, y0, y1, text, props, label, error."""
     nl, np_ = new_line_threshold, new_paragraph_threshold
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tail: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if len(pdf) == 0:
-                continue
-            # the last url may continue into the next Arrow batch
-            last_url = pdf["url"].iloc[-1]
-            is_tail = pdf["url"] == last_url
-            tail = pdf[is_tail]
-            head = pdf[~is_tail]
-            if len(head):
-                yield _process(head)
-        if tail is not None and len(tail):
-            yield _process(tail)
-
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain-list group walk: rows arrive sorted by (url, page_num,
-        # order_idx) — sortWithinPartitions upstream, order preserved
-        # through the batch-boundary tail concat — so the former
-        # per-group pandas sort_values was a stable no-op, and the
-        # groupby/itertuples machinery cost ~10x the kernel on small
-        # documents
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        # plain-list group walk: group_map hands over whole urls sorted
+        # by (url, page_num, order_idx), so a per-group pandas
+        # sort_values would be a stable no-op, and the groupby/
+        # itertuples machinery cost ~10x the kernel on small documents
         rows: List[tuple] = []
         urls = pdf["url"].tolist()
         pages = pdf["page_num"].tolist()
@@ -121,12 +100,5 @@ def aggregate(labeled_blocs: DataFrame, sort: bool = False,
             i = j
         return pd.DataFrame(rows, columns=_OUT_COLS)
 
-    # explicit numPartitions: without it AQE may coalesce this tiny-by-
-    # bytes shuffle to ~1 partition and serialize the (CPU-heavy)
-    # Python stage behind it — shuffle-size heuristics see bytes, not
-    # kernel cost (same trap as plans/salt.py)
-    n_parts = labeled_blocs.sparkSession.sparkContext.defaultParallelism * 2
-    prepared = (labeled_blocs.select(*_IN_COLS)
-                .repartition(n_parts, F.col("url"))
-                .sortWithinPartitions("url", "page_num", "order_idx"))
-    return prepared.mapInPandas(fn, schema=TEXTS_SCHEMA)
+    return group_map(labeled_blocs.select(*_IN_COLS), "url",
+                     ["page_num", "order_idx"], fn, TEXTS_SCHEMA)

@@ -8,9 +8,9 @@ Two interchangeable mask-classifier implementations:
   argmax. The expression order mirrors the reference numpy kernel
   (utils/alignment.py:37-55) operation for operation, so float64
   results bit-match.
-* `mask_classify_kernel` is the same math through the numpy kernel
-  inside the fused pipeline (operators/fused.py) — used when the
-  whole pipeline runs in one map pass.
+* `kernels.alignment.classify_with_masks` is the same math as a numpy
+  kernel, called inside the fused pipeline (operators/fused.py) when
+  the whole pipeline runs in one map pass.
 
 Plus the reference's trivial classifiers: dummy (withColumn lit) and
 random (np.random.default_rng per doc, chaos/testing only —
@@ -30,6 +30,7 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..plans.salt import group_map
 from ..schemas import MASKS_SCHEMA
 
 # (name, label, x0, y0, x1, y1, page_num|None)
@@ -114,9 +115,13 @@ def random_classify(blocs: DataFrame,
     docs in scheduler-dependent order (multiprocessing.py:761-765), so
     cross-doc stream parity is ill-defined there. This distributed
     variant is the deterministic analog: each document gets an
-    independent stream seeded by (seed, xxhash64(url)), identical
-    under any partitioning and parallelism. Per-doc draws use the
-    reference's rng.choice(labels, p=probs, size=n_blocs).
+    independent stream, np.random.default_rng([seed, doc_key]),
+    identical under any partitioning and parallelism. doc_key is the
+    url's whole UTF-8 encoding behind one 0x01 byte, read as a
+    big-endian integer: every byte counts, and distinct urls get
+    distinct keys. Per-doc draws use the reference's
+    rng.choice(labels, p=probs, size=n_blocs), in (page_num, order_idx)
+    order.
     """
     import numpy as np
     import pandas as pd
@@ -130,38 +135,15 @@ def random_classify(blocs: DataFrame,
     schema_out = blocs.drop("label").withColumn("label", F.lit("")).schema
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["page_num", "order_idx"])
         url = str(pdf["url"].iloc[0])
-        doc_key = int.from_bytes(url.encode("utf-8")[-8:] or b"\0", "big")
+        doc_key = int.from_bytes(b"\1" + url.encode("utf-8"), "big")
         rng = np.random.default_rng(seed=[seed, doc_key])
         pdf = pdf.drop(columns=[c for c in ("label",) if c in pdf.columns])
         pdf["label"] = rng.choice(names, p=probs, size=len(pdf))
         return pdf
 
-    # batched dispatch (aggregator pattern): one mapInPandas walking
-    # url groups per Arrow batch with a cross-batch tail buffer —
-    # applyInPandas would pay a Python round-trip per document. The
-    # per-doc RNG stream makes results identical either way.
-    def fn(batches):
-        tail = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["url"].iloc[-1]
-            is_tail = pdf["url"] == last
-            tail = pdf[is_tail]
-            head = pdf[~is_tail]
-            if len(head):
-                yield pd.concat([_one(g) for _, g in
-                                 head.groupby("url", sort=False)],
-                                ignore_index=True)
-        if tail is not None and len(tail):
-            yield _one(tail)
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat([_one(g) for _, g in pdf.groupby("url", sort=False)],
+                         ignore_index=True)
 
-    n_parts = blocs.sparkSession.sparkContext.defaultParallelism * 2
-    prepared = (blocs.repartition(n_parts, F.col("url"))
-                .sortWithinPartitions("url", "page_num", "order_idx"))
-    return prepared.mapInPandas(fn, schema=schema_out)
+    return group_map(blocs, "url", ["page_num", "order_idx"], fn, schema_out)

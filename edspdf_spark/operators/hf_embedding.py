@@ -9,20 +9,20 @@ micro-batching machinery is replicated exactly.
 
 Physical strategy: identical to operators/transformer.py — the window
 machinery is PAGE-local (the reference preprocesses per page,
-huggingface_embedding.py:166-204), so one explicit-width shuffle on
-url + buffered page groups inside a single mapInPandas. No per-row
-Python, deterministic under any partitioning.
+huggingface_embedding.py:166-204), so plans.salt.group_map on url and
+a walk over the page groups of each frame. No per-row Python,
+deterministic under any partitioning.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.hf import hf_page_embed
+from ..plans.salt import group_map
 
 
 def hf_line_embed(blocs: DataFrame, *, dim: int = 8, window: int = 510,
@@ -44,43 +44,17 @@ def hf_line_embed(blocs: DataFrame, *, dim: int = 8, window: int = 510,
         blocs.schema.fields
         + [StructField(c, DoubleType()) for c in out_cols])
 
-    def run_page(g: pd.DataFrame, rows: List[tuple]) -> None:
-        g = g.sort_values("order_idx")
-        embs = hf_page_embed(
-            [t if t is not None else "" for t in g["text"].tolist()],
-            dim=dim, window=window, stride=stride, pooling=line_pooling,
-            contextualizer=contextualizer, weights=weights,
-            max_tokens_per_device=max_tokens_per_device)
-        for (_, r), e in zip(g.iterrows(), embs):
-            rows.append((*[r[c] for c in in_cols],
-                         *[float(v) for v in e]))
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows: List[tuple] = []
+        for _key, g in pdf.groupby(["url", "page_num"], sort=False):
+            embs = hf_page_embed(
+                [t if t is not None else "" for t in g["text"].tolist()],
+                dim=dim, window=window, stride=stride, pooling=line_pooling,
+                contextualizer=contextualizer, weights=weights,
+                max_tokens_per_device=max_tokens_per_device)
+            for (_, r), e in zip(g.iterrows(), embs):
+                rows.append((*[r[c] for c in in_cols],
+                             *[float(v) for v in e]))
+        return pd.DataFrame(rows, columns=in_cols + out_cols)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tail = None
-        cols = in_cols + out_cols
-
-        def process(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows: List[tuple] = []
-            for _key, g in pdf.groupby(["url", "page_num"], sort=False):
-                run_page(g, rows)
-            return pd.DataFrame(rows, columns=cols)
-
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["url"] == pdf["url"].iloc[-1]
-            tail = pdf[last]
-            head = pdf[~last]
-            if len(head):
-                yield process(head)
-        if tail is not None and len(tail):
-            yield process(tail)
-
-    n_parts = blocs.sparkSession.sparkContext.defaultParallelism * 2
-    prepared = (blocs
-                .repartition(n_parts, F.col("url"))
-                .sortWithinPartitions("url", "page_num", "order_idx"))
-    return prepared.mapInPandas(fn, schema=out_schema)
+    return group_map(blocs, "url", ["page_num", "order_idx"], fn, out_schema)

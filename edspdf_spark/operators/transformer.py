@@ -4,22 +4,22 @@ BoxTransformerModule; numpy inference kernel in kernels/transformer.py).
 
 Physical strategy: the transformer attends WITHIN a page (the
 reference refolds to ("page", "line"), box_transformer.py:243), so the
-operator repartitions by url and walks page groups inside one
-mapInPandas — the aggregator's buffered-group pattern, one shuffle,
-no per-group applyInPandas overhead. Output is deterministic under any
-partitioning: each page's float64 computation is self-contained and
-its rows arrive sorted."""
+operator runs plans.salt.group_map on url and walks the page groups of
+each frame — one shuffle, one mapInPandas, no per-group applyInPandas
+overhead. Output is deterministic under any partitioning: each page's
+float64 computation is self-contained and its rows arrive sorted by
+order_idx."""
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List
+from typing import Dict, List
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.transformer import box_transformer_page
+from ..plans.salt import group_map
 
 
 def box_transformer_embed(blocs: DataFrame, weights: Dict,
@@ -34,50 +34,26 @@ def box_transformer_embed(blocs: DataFrame, weights: Dict,
     out_schema = ", ".join(
         ["url string", "page_num int", "order_idx int"]
         + [f"{out_prefix}{c} double" for c in range(size)])
+    cols = (["url", "page_num", "order_idx"]
+            + [f"{out_prefix}{c}" for c in range(size)])
 
-    def run_page(g: pd.DataFrame, rows: List[tuple]) -> None:
-        g = g.sort_values("order_idx")
-        E = g[in_cols].to_numpy(dtype=np.float64)
-        boxes = {
-            "x0": g["x0"].to_numpy(np.float64),
-            "x1": g["x1"].to_numpy(np.float64),
-            "y0": g["y0"].to_numpy(np.float64),
-            "y1": g["y1"].to_numpy(np.float64),
-        }
-        boxes["width"] = boxes["x1"] - boxes["x0"]
-        boxes["height"] = boxes["y1"] - boxes["y0"]
-        Z = box_transformer_page(weights, E, boxes)
-        for (_, r), z in zip(g.iterrows(), Z):
-            rows.append((r["url"], int(r["page_num"]), int(r["order_idx"]),
-                         *[float(v) for v in z]))
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows: List[tuple] = []
+        for _key, g in pdf.groupby(["url", "page_num"], sort=False):
+            E = g[in_cols].to_numpy(dtype=np.float64)
+            boxes = {
+                "x0": g["x0"].to_numpy(np.float64),
+                "x1": g["x1"].to_numpy(np.float64),
+                "y0": g["y0"].to_numpy(np.float64),
+                "y1": g["y1"].to_numpy(np.float64),
+            }
+            boxes["width"] = boxes["x1"] - boxes["x0"]
+            boxes["height"] = boxes["y1"] - boxes["y0"]
+            Z = box_transformer_page(weights, E, boxes)
+            for (_, r), z in zip(g.iterrows(), Z):
+                rows.append((r["url"], int(r["page_num"]),
+                             int(r["order_idx"]), *[float(v) for v in z]))
+        return pd.DataFrame(rows, columns=cols)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tail = None
-        cols = (["url", "page_num", "order_idx"]
-                + [f"{out_prefix}{c}" for c in range(size)])
-
-        def process(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows: List[tuple] = []
-            for _key, g in pdf.groupby(["url", "page_num"], sort=False):
-                run_page(g, rows)
-            return pd.DataFrame(rows, columns=cols)
-
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if len(pdf) == 0:
-                continue
-            last = pdf["url"] == pdf["url"].iloc[-1]
-            tail = pdf[last]
-            head = pdf[~last]
-            if len(head):
-                yield process(head)
-        if tail is not None and len(tail):
-            yield process(tail)
-
-    n_parts = blocs.sparkSession.sparkContext.defaultParallelism * 2
-    prepared = (blocs.select(*keep)
-                .repartition(n_parts, F.col("url"))
-                .sortWithinPartitions("url", "page_num", "order_idx"))
-    return prepared.mapInPandas(fn, schema=out_schema)
+    return group_map(blocs.select(*keep), "url", ["page_num", "order_idx"],
+                     fn, out_schema)

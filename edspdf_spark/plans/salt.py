@@ -33,7 +33,7 @@ parse cost.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
@@ -41,12 +41,16 @@ from pyspark.sql import functions as F  # noqa: N812
 DEFAULT_OVERSIZE_BYTES = 1 << 20  # 1 MiB of PDF bytes ~ hundreds of pages
 
 
+def _width(df: DataFrame) -> int:
+    """Explicit shuffle width: finer than the core count."""
+    return df.sparkSession.sparkContext.defaultParallelism * 2
+
+
 def defuse_skew(pages: DataFrame, num_partitions: Optional[int] = None,
                 oversize_bytes: int = DEFAULT_OVERSIZE_BYTES,
                 two_phase: bool = False) -> DataFrame:
     """Return pages repartitioned for even parse cost."""
-    n = num_partitions or (
-        pages.sparkSession.sparkContext.defaultParallelism * 2)
+    n = num_partitions or _width(pages)
     if not two_phase:
         return pages.repartition(n, F.xxhash64("url"))
     size = F.length(F.col("html"))
@@ -117,6 +121,53 @@ def doc_map(df: DataFrame, id_col: str, text_col: str, fn,
     return (spread_compute(df.select(F.col(id_col).alias("id"),
                                      F.col(text_col).alias("text")))
             .mapInArrow(kernel, schema=out))
+
+
+def group_map(df: DataFrame, key: str, order: Sequence[str], fn,
+              schema) -> DataFrame:
+    """The group-local pandas kernel scaffold: ONE hash repartition on
+    `key`, a sort within each partition by (key, *order), then ONE
+    mapInPandas, so a kernel owns only its per-group math.
+
+    `fn(pdf)` gets a frame of whole `key` groups, rows sorted by
+    (key, *order), and returns a frame matching `schema`. This is
+    applyInPandas semantics at one pandas frame per Arrow batch
+    instead of one per group. The last key of a batch may continue
+    into the next one, so its rows are held back until the key changes
+    or the input ends; the held pieces are concatenated once, so a
+    group spanning k batches costs O(k), not O(k^2). Keys are
+    non-NULL.
+
+    The partition count is explicit: without it AQE may coalesce this
+    tiny-by-bytes shuffle to about one partition and serialize the
+    CPU-heavy Python stage behind it, because shuffle-size heuristics
+    see bytes, not kernel cost.
+    """
+    import pandas as pd
+
+    def kernel(batches):
+        pending, pending_key = [], None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            keys = pdf[key]
+            last = keys.iat[-1]
+            if pending and last == pending_key:
+                pending.append(pdf)  # sorted: all of it is that group
+                continue
+            is_last = (keys == last).to_numpy()
+            head = pdf[~is_last]
+            if len(head):
+                pending.append(head)
+            if pending:
+                yield fn(pd.concat(pending, ignore_index=True))
+            pending, pending_key = [pdf[is_last]], last
+        if pending:
+            yield fn(pd.concat(pending, ignore_index=True))
+
+    return (df.repartition(_width(df), F.col(key))
+            .sortWithinPartitions(key, *order)
+            .mapInPandas(kernel, schema=schema))
 
 
 def skew_stats(df, key_col: str, n_parts: int = 32):

@@ -119,18 +119,29 @@ def test_random_classifier_reference_seeding(spark):
     m = a.merge(b, on=key, suffixes=("_1", "_2"))
     assert len(m) == len(a) and (m["label_1"] == m["label_2"]).all()
 
-    # per-doc stream: seeded by (seed, url-derived key), reference draw
-    url0 = a.url.iloc[0]
-    one = a[a.url == url0].sort_values(["page_num", "order_idx"])
-    doc_key = int.from_bytes(str(url0).encode("utf-8")[-8:], "big")
-    rng = np.random.default_rng(seed=[5, doc_key])
-    want = rng.choice(["a", "b"], p=[0.3, 0.7], size=len(one))
-    assert list(one["label"]) == list(want)
+    # per-doc stream: seeded by (seed, whole-url key), reference draw
+    def doc_key(url):
+        return int.from_bytes(b"\1" + str(url).encode("utf-8"), "big")
+
+    for url, doc in a.groupby("url"):
+        doc = doc.sort_values(["page_num", "order_idx"])
+        rng = np.random.default_rng(seed=[5, doc_key(url)])
+        want = rng.choice(["a", "b"], p=[0.3, 0.7], size=len(doc))
+        assert list(doc["label"]) == list(want), url
     # different docs get different streams
-    url1 = sorted(set(a.url) - {url0})[0]
-    two = a[a.url == url1].sort_values(["page_num", "order_idx"])
-    if len(two) == len(one) and len(one) >= 4:
-        assert list(two["label"]) != list(one["label"]) or True
+    heads = {tuple(np.random.default_rng([5, doc_key(u)]).random(8))
+             for u in set(a.url)}
+    assert len(heads) == a.url.nunique() > 1
+
+    # urls that share their last 8 bytes still get different streams
+    urls = ["https://a.example/x/index.pdf", "https://b.example/x/index.pdf"]
+    same_tail = spark.createDataFrame(
+        [(u, 0, i, None) for u in urls for i in range(32)],
+        "url string, page_num int, order_idx int, label string")
+    got = random_classify(same_tail, ["a", "b"], seed=5).toPandas()
+    streams = [list(got[got.url == u].sort_values("order_idx")["label"])
+               for u in urls]
+    assert len(streams[0]) == 32 and streams[0] != streams[1]
 
 
 def test_streaming_late_and_too_late_events(spark, tmp_path):

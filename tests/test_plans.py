@@ -403,3 +403,92 @@ def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
     assert emitted[0].schema.field("id").type == pa.int32()
     assert emitted[0].to_pydict() == {"id": [8, 9],
                                       "is_null": [True, False]}
+
+
+def test_group_map_hands_fn_whole_sorted_groups(spark, monkeypatch):
+    """group_map at 3 rows per Arrow batch: every fn call sees whole key
+    groups sorted by (key, order), each key reaches exactly one call,
+    rows in == rows out, empty input emits no batch, and the plan is one
+    Exchange plus one MapInPandas."""
+    import random
+
+    import pandas as pd
+
+    from edspdf_spark.plans.salt import group_map
+
+    sizes = {2 ** 40 + 1: 1, -5: 2, 0: 3, 7: 7, 2 ** 33: 20}
+    rows = [(k, o, f"{k}:{o}") for k, n in sizes.items()
+            for o in random.Random(k).sample(range(100), n)]
+    random.Random(0).shuffle(rows)
+    df = spark.createDataFrame(rows, "k bigint, o int, v string")
+
+    def fn(pdf):  # tags each call's rows with a call id and position
+        call = int.from_bytes(os.urandom(7), "big")
+        return pdf.assign(call=call, pos=range(len(pdf)))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        out = group_map(df, "k", ["o"], fn,
+                        "k bigint, o int, v string, call bigint, pos int")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = out.toPandas()
+    finally:
+        spark.conf.set(key, prev)
+
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "EvalPython" not in plan
+    assert sorted(map(tuple, got[["k", "o", "v"]].values.tolist())) == \
+        sorted(rows)
+    assert got.groupby("k")["call"].nunique().eq(1).all()
+    assert got["call"].nunique() < len(rows)  # some calls hold >1 row
+    for _, call in got.groupby("call"):
+        call = call.sort_values("pos")
+        keys = list(zip(call["k"], call["o"]))
+        assert keys == sorted(keys)
+        assert call.groupby("k").size().to_dict() == \
+            {k: sizes[k] for k in set(call["k"])}
+
+    # the carry itself, in-process: a group cut by batch boundaries
+    # reaches fn once, whole; empty batches and empty input emit nothing
+    calls, kernels = [], []
+    real = type(df).mapInPandas
+
+    def capture(self, func, schema, *a, **k):
+        kernels.append(func)
+        return real(self, func, schema, *a, **k)
+
+    def spy(pdf):
+        calls.append(pdf["k"].tolist())
+        return pdf
+
+    def frames(*ks):
+        return [pd.DataFrame({"k": list(b), "o": range(len(b))}) for b in ks]
+
+    monkeypatch.setattr(type(df), "mapInPandas", capture)
+    group_map(df, "k", ["o"], spy, "k bigint, o int")
+    monkeypatch.undo()
+    kernel = kernels[0]
+    emitted = list(kernel(iter(frames([1, 1, 2], [2, 2, 2], [], [2, 3],
+                                      [4, 4], [4], [5]))))
+    assert calls == [[1, 1], [2, 2, 2, 2, 2], [3], [4, 4, 4], [5]]
+    assert [len(e) for e in emitted] == [2, 5, 1, 3, 1]
+    assert list(kernel(iter([]))) == []
+    assert list(kernel(iter(frames([])))) == []
+
+
+def test_batch_carry_has_one_owner():
+    """The carry of a group across Arrow batches is written once, in
+    plans/salt.py::group_map: group-local kernels own only their
+    per-group math."""
+    import pathlib
+
+    import edspdf_spark
+
+    pkg = pathlib.Path(edspdf_spark.__file__).parent
+    files = [*pkg.rglob("*.py"), pkg.parent / "__spark_entry__.py"]
+    owners = sorted(str(p.relative_to(pkg.parent)) for p in files
+                    if "pd.concat([tail" in p.read_text("utf-8"))
+    assert set(owners) <= {"edspdf_spark/plans/salt.py"}, owners
