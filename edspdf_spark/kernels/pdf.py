@@ -1061,6 +1061,18 @@ def _pretranslate(tx, ty, m):
     return (a, b, c, d, tx * a + ty * c + e, tx * b + ty * d + f)
 
 
+def _floats(stack: List[object], n: int) -> Optional[List[float]]:
+    """The last n operands as floats, or None when there are fewer
+    than n or one has no float value. pdfminer's rule: such an op is
+    skipped, it does not fail the document."""
+    if len(stack) < n:
+        return None
+    try:
+        return [float(v) for v in stack[-n:]]
+    except (TypeError, ValueError):
+        return None
+
+
 def _run_content(stream: bytes,
                  font_names: Dict[str, object]) -> List[ParsedLine]:
     """Interpret a content stream; every BT..ET block becomes one line.
@@ -1176,15 +1188,18 @@ def _run_content(stream: bytes,
             append(_decode_pdf_string(tok))
         elif kind == 6:                   # op
             if tok == b"Tj":
-                show(str(stack[-1]))
+                if stack:
+                    show(str(stack[-1]))
                 clear()
             elif tok == b"Td" or tok == b"TD":
-                dx, dy = float(stack[-2]), float(stack[-1])
-                if tok == b"TD":
-                    leading = -dy
-                tlm = _pretranslate(dx, dy, tlm)
-                tm = tlm
-                flush()
+                d = _floats(stack, 2)
+                if d:
+                    dx, dy = d
+                    if tok == b"TD":
+                        leading = -dy
+                    tlm = _pretranslate(dx, dy, tlm)
+                    tm = tlm
+                    flush()
                 clear()
             elif tok == b"Tm":
                 nums = [v for v in stack if isinstance(v, float)]
@@ -1204,9 +1219,12 @@ def _run_content(stream: bytes,
                             -item / 1000.0 * size, 0.0, tm)
                 clear()
             elif tok == b"Tf":
-                size = float(stack[-1])
-                finfo = fonts.get(str(stack[-2]), FontInfo(name="Unknown"))
-                font = finfo.name
+                f = _floats(stack, 1)
+                if f and len(stack) >= 2:
+                    size = f[0]
+                    finfo = fonts.get(str(stack[-2]),
+                                      FontInfo(name="Unknown"))
+                    font = finfo.name
                 clear()
             elif tok == b"BT":
                 in_text = True
@@ -1228,7 +1246,9 @@ def _run_content(stream: bytes,
                     ctm = _mat_mult(tuple(nums[-6:]), ctm)
                 clear()
             elif tok == b"TL":
-                leading = float(stack[-1])
+                f = _floats(stack, 1)
+                if f:
+                    leading = f[0]
                 clear()
             elif tok == b"T*":
                 tlm = _pretranslate(0.0, -leading, tlm)

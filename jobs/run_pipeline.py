@@ -15,7 +15,11 @@ Deployment (the north rule's `spark-submit --py-files` shape):
         [--style] [--markdown] [--threshold 0.1]
 
 Re-running the same command after a failure resumes from the bucket
-markers under <output>/_progress (plans/checkpoint.py).
+markers under <output>/_progress (plans/checkpoint.py): each bucket
+group runs the fused map once, as its write into <output>/data, then
+rolls per-partition metrics up from the rows just written into
+<output>/metrics. Resume with the same --n-buckets; a different one
+is refused.
 """
 
 from __future__ import annotations

@@ -15,10 +15,12 @@ the standard two-phase production shape.
         [--id-col doc_id] [--text-col text] \
         [--badwords w1,w2,...] [--n-buckets 16]
 
-Stage 1 (per bucket, resumable via <output>/_progress markers):
+Stage 1 (per bucket, resumable via <output>/_progress markers; the
+same commit loop as jobs/run_pipeline.py, plans/checkpoint.py):
   Gopher quality rules + Gopher repetition rules + bad-word filter +
   PII scrub — each doc keeps its per-rule verdicts, survivors carry
-  scrubbed text. Per-bucket row counts land in <output>/metrics/.
+  scrubbed text. Per-bucket row counts, read back from the committed
+  rows, land in <output>/metrics/. Resume with the same --n-buckets.
 Stage 2 (global, idempotent overwrite):
   exact dedup over survivors (first occurrence per content hash) ->
   <output>/clean. Funnel counts land in <output>/funnel.json.

@@ -21,3 +21,17 @@ def spark():
              .getOrCreate())
     yield spark
     spark.stop()
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "requires_reference(*paths): skip, naming the first "
+        "missing path, when a file of the reference checkout is absent")
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_runtest_setup(item):
+    for mark in item.iter_markers("requires_reference"):
+        for path in mark.args:
+            if not os.path.exists(path):
+                pytest.skip(f"missing {path}")

@@ -28,6 +28,8 @@ from edspdf_spark.kernels.pdf import (DESCENT, Line, Segment, build_pdf,
 GROUND_TRUTH = ("/root/reference/tests/pipes/extractors/"
                 "blocks_ground_truth.py")
 
+pytestmark = pytest.mark.requires_reference(GROUND_TRUTH)
+
 # real MediaBox of each reference resource PDF (read from the files)
 CORPORA = {
     "pdf_blocks": (595.32, 841.92),          # test.pdf

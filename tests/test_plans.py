@@ -43,7 +43,11 @@ def test_metrics_rollup(spark):
     assert lin.iloc[0]["run_id"] == run_id
 
 
-def test_checkpoint_resume_after_crash(spark, tmp_path):
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_checkpoint_resume_after_crash(spark, tmp_path, monkeypatch):
     out_dir = str(tmp_path / "ckpt")
     pages = synth.pages_spark(spark, 30, num_partitions=4).cache()
     pages.count()
@@ -51,22 +55,56 @@ def test_checkpoint_resume_after_crash(spark, tmp_path):
     # reference run without checkpointing
     want = _flat(run_fused(pages, CFG))
 
-    # crash after 2 of 6 buckets
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_with_checkpoint(pages, CFG, out_dir, n_buckets=6,
-                            buckets_per_job=2, fail_after_buckets=2)
-    assert len(done_buckets(out_dir, 6)) == 2
+    # with unpersist disabled, anything cached during the crash+resume
+    # cycle is still registered when the cycle ends
+    cached_before = _persistent_rdds(spark)
+    with monkeypatch.context() as m:
+        m.setattr(type(pages), "unpersist", lambda self, blocking=False: self)
+        # crash after 2 of 6 buckets
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run_with_checkpoint(pages, CFG, out_dir, n_buckets=6,
+                                buckets_per_job=2, fail_after_buckets=2)
+        assert len(done_buckets(out_dir, 6)) == 2
 
-    # resume completes the rest; result identical to the one-shot run
-    run_with_checkpoint(pages, CFG, out_dir, n_buckets=6, buckets_per_job=2)
+        # resume completes the rest; result identical to the one-shot run
+        run_with_checkpoint(pages, CFG, out_dir, n_buckets=6,
+                            buckets_per_job=2)
+    assert _persistent_rdds(spark) == cached_before
     assert len(done_buckets(out_dir, 6)) == 6
     got = _flat(read_result(spark, out_dir))
     assert got == want
+
+    # the metrics of both runs cover every doc exactly once
+    metrics = spark.read.parquet(os.path.join(out_dir, "metrics", "*"))
+    totals = metrics.agg(F.sum("docs"), F.sum("error_docs")).first()
+    assert tuple(totals) == (30, 2)  # error docs 13, 26
 
     # idempotence: running again does nothing and changes nothing
     run_with_checkpoint(pages, CFG, out_dir, n_buckets=6, buckets_per_job=2)
     assert _flat(read_result(spark, out_dir)) == want
     pages.unpersist()
+
+
+def test_checkpoint_refuses_resume_with_other_bucket_layout(spark,
+                                                            tmp_path):
+    """A resume under another n_buckets would skip buckets cut under
+    the old modulus and rewrite their rows under new bucket numbers."""
+    out_dir = str(tmp_path / "ckpt")
+    pages = synth.pages_spark(spark, 40, num_partitions=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_with_checkpoint(pages, CFG, out_dir, n_buckets=4,
+                            buckets_per_job=1, fail_after_buckets=2)
+
+    def snapshot():
+        return {os.path.join(d, f): open(os.path.join(d, f), "rb").read()
+                for d, _, files in os.walk(out_dir) for f in files}
+
+    before = snapshot()
+    assert any("bucket=" in path for path in before)
+    with pytest.raises(ValueError, match="'n_buckets': 4.*'n_buckets': 8"):
+        run_with_checkpoint(pages, CFG, out_dir, n_buckets=8,
+                            buckets_per_job=1)
+    assert snapshot() == before
 
 
 def test_sources_roundtrip(spark, tmp_path):

@@ -37,6 +37,7 @@ def _key(b):
     return (b["page_num"], round(b["y0"], 3), round(b["x0"], 3))
 
 
+@pytest.mark.requires_reference(f"{RES}/test.pdf", GROUND_TRUTH)
 def test_real_test_pdf_matches_pdfminer_ground_truth():
     """41/41 boxes of the real Word-generated test.pdf, byte-identical
     text, geometry ~50x inside the reference's own tolerance."""
@@ -57,8 +58,10 @@ def test_real_test_pdf_matches_pdfminer_ground_truth():
 
 
 @pytest.mark.parametrize("name,key,n", [
-    ("styles", "styles_blocks", 2),
-    ("letter", "letter_blocks", 48),
+    pytest.param("styles", "styles_blocks", 2, marks=pytest.mark
+                 .requires_reference(f"{RES}/styles.pdf", GROUND_TRUTH)),
+    pytest.param("letter", "letter_blocks", 48, marks=pytest.mark
+                 .requires_reference(f"{RES}/letter.pdf", GROUND_TRUTH)),
 ])
 def test_real_cid_font_pdfs_match_ground_truth(name, key, n):
     """Google-Docs (Skia) and Word PDFs with Type0/Identity-H CID
@@ -79,12 +82,14 @@ def test_real_cid_font_pdfs_match_ground_truth(name, key, n):
             assert g[fld] == pytest.approx(f[fld], abs=2e-3)
 
 
+@pytest.mark.requires_reference(f"{RES}/blank.pdf")
 def test_real_blank_pdf_zero_blocs():
     res = extract_doc(open(f"{RES}/blank.pdf", "rb").read())
     assert not res["error"]
     assert res["blocs"] == []
 
 
+@pytest.mark.requires_reference(f"{RES}/error.pdf")
 def test_real_error_pdf_error_flag():
     """error.pdf must set error=True, never raise (reference
     pdfminer.py:128-135 semantics)."""

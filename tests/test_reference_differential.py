@@ -5,8 +5,6 @@ components whose dependencies exist in this environment (alignment,
 mask classification, aggregation, reading order via Box.__lt__).
 """
 
-import os
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -14,13 +12,21 @@ from hypothesis import strategies as st
 from edspdf_spark.kernels.aggregate import aggregate_doc
 from edspdf_spark.kernels.alignment import align_labels, classify_with_masks
 from edspdf_spark.kernels.reading_order import reading_order
+from tests.reference_loader import REF as REF_DIR
+from tests.reference_loader import load_reference
 
-if not os.path.isdir("/root/reference/edspdf"):  # pragma: no cover
-    pytest.skip("reference checkout unavailable", allow_module_level=True)
+pytestmark = pytest.mark.requires_reference(REF_DIR)
 
-from tests.reference_loader import load_reference  # noqa: E402
 
-REF = load_reference()
+class _LazyReference:
+    """The reference modules, loaded on first use so the module still
+    imports (and its tests skip) without the checkout."""
+
+    def __getattr__(self, name):
+        return getattr(load_reference(), name)
+
+
+REF = _LazyReference()
 
 coord = st.floats(min_value=0.0, max_value=1.0, allow_nan=False,
                   width=64).map(lambda v: round(v, 3))

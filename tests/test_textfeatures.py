@@ -3,12 +3,14 @@
 It does: the module imports torch. So shapes are pinned by the
 spaCy-documented cases instead, plus self-consistency properties)."""
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from edspdf_spark.kernels.textfeatures import (text_token_features,
                                                token_features,
                                                tokenize_words, word_shape)
+from tests.reference_loader import REF
 
 
 def test_word_shape_spacy_cases():
@@ -76,6 +78,8 @@ def test_tokenizer_covers_non_space_chars(s):
                for f in feats)
 
 
+@pytest.mark.requires_reference(
+    f"{REF}/pipes/embeddings/simple_text_embedding.py")
 def test_word_regex_matches_reference_source():
     """The tokenizer pattern is transcribed from the reference
     (simple_text_embedding.py:108-113); pin the transcription to the
