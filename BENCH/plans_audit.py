@@ -130,7 +130,8 @@ def main() -> None:
         "dedup components) compile to a LocalTableScan at this SF --",
         "the sf0.01 edge set sits under their bytes-aware driver",
         "gate; the distributed plan shapes are pinned by tests",
-        "(test_graph.py three-path equality, gate.EDGE_MAX_ROWS forced to 0).",
+        "(test_graph.py driver/distributed equality, gate.EDGE_MAX_ROWS",
+        "forced to 0).",
         "",
         "Per-query COST evidence is BENCH/history.jsonl and the scale",
         "curve; this table is the SHAPE evidence.",

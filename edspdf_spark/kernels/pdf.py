@@ -1188,8 +1188,10 @@ def _run_content(stream: bytes,
             append(_decode_pdf_string(tok))
         elif kind == 6:                   # op
             if tok == b"Tj":
-                if stack:
-                    show(str(stack[-1]))
+                # only a string is shown: a number or the `[` marker
+                # is a malformed operand, skipped as pdfminer does
+                if stack and isinstance(stack[-1], str):
+                    show(stack[-1])
                 clear()
             elif tok == b"Td" or tok == b"TD":
                 d = _floats(stack, 2)

@@ -17,11 +17,13 @@ Scale design (10^12 pages):
   rank_scaled / 10^12): integer sums are associative, so the result
   is bit-identical regardless of partitioning, executor count, or
   aggregation order — the property every oracled operator in this
-  repo maintains. Per iteration: one broadcast (or co-partitioned)
-  join of edges with the rank table and one map-side-combined sum on
-  dst — a single Exchange. Ranks are localCheckpoint-ed each
-  iteration to truncate lineage (the connected-components pattern,
-  operators/components.py).
+  repo maintains. It and `host_label_propagation` share one rule
+  (`_fixpoint`): the driver gate first, else one distributed
+  iteration owned by the call — one broadcast join of edges with the
+  rank table and one map-side-combined sum on dst per round, ranks
+  localCheckpoint-ed each round to truncate lineage (the
+  connected-components pattern, operators/components.py). Nothing
+  stays cached after a call returns.
 
 Dangling hosts (no out-links) follow the "no redistribution" PageRank
 variant: their mass leaks each step. That keeps the iteration one
@@ -85,63 +87,40 @@ def host_edges(links: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_links"))
 
 
-# iteration depth up to which the lazy shared-cache path is used:
-# plan depth grows linearly with iterations, so shallow fixpoints —
-# the 2-6 rounds a quality prior actually runs — return one lazy
-# plan over session-memoized edge tables. Beyond this, lineage depth
-# argues for the persisted + per-round-checkpointed eager path.
-LAZY_MAX_ITERS = 8
-
-# --- session-scoped shared caches ------------------------------------------
-#
-# The three host-graph analytics (degrees, pagerank, label-prop) all
-# derive from the SAME distinct host-edge table, which in turn sits on
-# the expensive page scan + href extraction. Production runs them
-# together, so the edge tables are persist()-marked and left cached
-# for the session: Spark's CacheManager dedupes identical plans, so
-# repeated calls (and the sibling analytics) share ONE cache entry per
-# distinct input instead of stacking new ones — storage is bounded by
-# the number of DISTINCT graphs touched, not by call count. This is
-# deliberate memoization, not a leak (r3 ADVICE -> r4 regression -> r5
-# resolution: the r4 eager-materialize-and-unpersist shape recomputed
-# the scan on every call and cost +30-80% on the graph suite). A
-# session that walks MANY distinct graphs releases explicitly via
-# release_graph_caches() at graph boundaries (tests and long-lived
-# jobs do).
-
-_SHARED_CACHES: list[DataFrame] = []
-
-
 def _distinct_edges(edges: DataFrame) -> DataFrame:
-    """The canonical distinct host-edge table every analytic shares.
-    The explicit not-null filter keeps all consumers' plans
-    canonically identical (join branches would otherwise get inferred
-    IsNotNull filters the aggregation branches lack), so CacheManager
-    recognizes them as the same table."""
+    """The distinct host-edge set the fixpoints iterate over. NULL
+    endpoints are dropped up front: the distributed joins would drop
+    them anyway, and the driver mirrors must never see a None host."""
     return (edges.select("src_host", "dst_host")
             .where(F.col("src_host").isNotNull()
                    & F.col("dst_host").isNotNull())
             .distinct())
 
 
-def _shared_cache(df: DataFrame) -> DataFrame:
-    """persist()-mark df and register it for release_graph_caches().
-    CacheManager already dedupes plan-identical entries, so calling
-    this twice on the same logical table costs nothing extra."""
-    df.persist()
-    _SHARED_CACHES.append(df)
-    return df
+def _fixpoint(edges: DataFrame, columns: str, driver, distributed
+              ) -> DataFrame:
+    """The one execution rule of the iterative host-graph operators.
 
-
-def release_graph_caches() -> int:
-    """Unpersist every table the graph operators have cache-marked in
-    this session; returns how many marks were released. Call between
-    unrelated graphs in a long-lived session (or at job end)."""
-    n = len(_SHARED_CACHES)
-    for df in _SHARED_CACHES:
-        df.unpersist()
-    _SHARED_CACHES.clear()
-    return n
+    The distinct edge set is persisted for this call and offered to
+    the driver gate (plans.gate.driver_table with EDGE_MAX_ROWS /
+    EDGE_MAX_BYTES, sized in-plan) whatever the iteration count. A
+    broadcast-scale graph then runs `driver(rows)`, the exact integer
+    mirror on collected (src, dst) tuples: per-iteration job
+    scheduling and broadcast latency would dwarf its arithmetic.
+    Otherwise `distributed(e)` iterates in Spark and returns an
+    eagerly materialized result. Either way the edge cache is
+    released before returning, so nothing outlives the call."""
+    e = _distinct_edges(edges).persist()
+    try:
+        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
+                                  gate.EDGE_MAX_BYTES)
+        if table is None:
+            return distributed(e)
+        rows = driver(list(zip(*table.to_pydict().values())))
+        return edges.sparkSession.createDataFrame(
+            rows, f"host {e.dtypes[0][1]}, {columns}")
+    finally:
+        e.unpersist()
 
 
 def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
@@ -149,8 +128,8 @@ def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
     """Exact mirror of the distributed BIGINT iteration in plain
     Python ints (all values non-negative, so `//` == Spark `div`):
     r0 = scale div n_hosts; contrib_h = sum in-edges rank div outdeg;
-    r' = teleport + damping * contrib div 100. Bit-identical labels
-    to both Spark paths by construction (asserted in tests)."""
+    r' = teleport + damping * contrib div 100. Bit-identical ranks
+    to the Spark path by construction (asserted in tests)."""
     nodes = set()
     outdeg: dict = {}
     for s, d in rows:
@@ -172,9 +151,8 @@ def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
 
 
 def host_pagerank(edges: DataFrame, iterations: int = 4,
-                  damping_pct: int = 85, scale: int = PAGERANK_SCALE,
-                  broadcast_ranks: bool = True,
-                  checkpoint: bool | None = None) -> DataFrame:
+                  damping_pct: int = 85,
+                  scale: int = PAGERANK_SCALE) -> DataFrame:
     """(src_host, dst_host[, n_links]) -> (host, rank_scaled, rank).
 
     Exact-integer PageRank over the DISTINCT edge set:
@@ -186,65 +164,35 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
     Every operation is BIGINT, so distributed sums are bit-exact and
     partition-invariant; `rank` is the single final float division.
 
-    Three execution shapes, value-identical (r4 VERDICT #3, r5
-    size-adaptive gate — the components.py precedent):
-
-    * driver fixpoint (default whenever the distinct edge set passes
-      the driver gate, plans.gate.driver_table with EDGE_MAX_ROWS /
-      EDGE_MAX_BYTES, sized in-plan): per-iteration job scheduling
-      and broadcast latency dwarf the arithmetic on a broadcast-scale
-      graph, so the exact integer iteration runs on collected edges
-      instead (_driver_pagerank_rows; bit-identical by tests).
-    * checkpoint=False (default for iterations <= LAZY_MAX_ITERS):
-      ONE lazy plan over session-memoized edge tables
-      (_shared_cache; see module comment). n_hosts is a
-      broadcast-joined 1-row aggregate instead of a driver-side
-      count, so nothing executes until the caller's action; the
-      cached edge/degree tables are computed once per session per
-      distinct input and shared with host_degrees / label-prop.
-    * checkpoint=True (default above LAZY_MAX_ITERS): edge tables
-      persisted call-locally, per-iteration lazy localCheckpoints
-      truncate lineage, result materialized eagerly so the caches
-      are released before returning — the deep-fixpoint shape,
-      paying one extra materialization to keep lineage bounded.
-
-    broadcast_ranks=True broadcasts the rank table into the edge join
-    — right whenever hosts fit an executor broadcast (~10^7 hosts).
-    At the extreme (10^9 hosts) set False: the join falls back to
-    sort-merge and AQE co-partitions ranks with the (persisted,
-    already-hash-partitioned) edge table instead.
-    """
+    Runs under the `_fixpoint` rule: the driver mirror
+    (_driver_pagerank_rows) when the edge set passes the driver gate,
+    else the distributed iteration below. Both give identical rows
+    (asserted in tests)."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    if checkpoint is None:
-        checkpoint = iterations > LAZY_MAX_ITERS
-    if not checkpoint:
-        # size-adaptive: the gate's sizing pass fills the shared edge
-        # cache either way; a broadcast-scale graph then skips the
-        # per-iteration broadcast+shuffle scheduling entirely.
-        e = _shared_cache(_distinct_edges(edges))
-        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
-                                  gate.EDGE_MAX_BYTES)
-        if table is not None:
-            rows = _driver_pagerank_rows(
-                list(zip(*table.to_pydict().values())),
-                iterations, damping_pct, scale)
-            return edges.sparkSession.createDataFrame(
-                rows, f"host {e.dtypes[0][1]}, rank_scaled bigint, "
-                "rank double")
-        return _host_pagerank_lazy(edges, iterations, damping_pct,
-                                   scale, broadcast_ranks)
-    e = _distinct_edges(edges).persist()
+    return _fixpoint(
+        edges, "rank_scaled bigint, rank double",
+        lambda rows: _driver_pagerank_rows(rows, iterations,
+                                           damping_pct, scale),
+        lambda e: _distributed_pagerank(e, iterations, damping_pct,
+                                        scale))
+
+
+def _distributed_pagerank(e: DataFrame, iterations: int,
+                          damping_pct: int, scale: int) -> DataFrame:
+    """PageRank over the persisted distinct edges `e`. Per iteration:
+    one broadcast join of the edges with the rank table and one
+    map-side-combined sum on dst — a single Exchange. Each round's
+    ranks are lazily localCheckpoint-ed to truncate lineage (the
+    connected-components pattern, operators/components.py), and the
+    result is materialized before the call-local caches go."""
     nodes = (e.select(F.col("src_host").alias("host"))
              .union(e.select(F.col("dst_host").alias("host")))
              .distinct().persist())
+    outdeg = e.groupBy("src_host").agg(F.count(F.lit(1)).alias("outdeg"))
+    e_deg = e.join(outdeg, "src_host").persist()
     try:
-        n_hosts = nodes.count()
-        outdeg = e.groupBy("src_host").agg(
-            F.count(F.lit(1)).alias("outdeg"))
-        e_deg = e.join(outdeg, "src_host").persist()
-
-        r0 = scale // n_hosts
+        r0 = scale // nodes.count()
         teleport = (100 - damping_pct) * r0 // 100
         ranks = nodes.select("host", F.lit(r0).cast("bigint")
                              .alias("rank_scaled"))
@@ -252,10 +200,10 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
         # sum(contribs + 0) == coalesce(sum(contribs), 0) bit-exactly,
         # so dangling hosts keep teleport-only rank WITHOUT a per-
         # iteration nodes-left-join (one fewer join/broadcast build per
-        # round; at 10^9 hosts it also removes a co-partitioned SMJ).
+        # round).
         zero = nodes.select("host", F.lit(0).cast("bigint").alias("c"))
         for _ in range(iterations):
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
+            r = F.broadcast(ranks)
             contrib_rows = (e_deg
                             .join(r, e_deg.src_host == r.host)
                             .select(F.col("dst_host").alias("host"),
@@ -269,72 +217,13 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
                                     f"contrib) div 100")
                              .alias("rank_scaled")))
             ranks = ranks.localCheckpoint(eager=False)
-        out = ranks.select(
+        return ranks.select(
             "host", "rank_scaled",
             (F.col("rank_scaled").cast("double") / F.lit(float(scale)))
-            .alias("rank"))
-        # one row per host — materialize it so the cached edge tables
-        # can be released NOW instead of leaking across a session of
-        # many queries (r3 ADVICE); same pattern as components.py.
-        return out.localCheckpoint(eager=True)
+            .alias("rank")).localCheckpoint(eager=True)
     finally:
-        for df in (e, nodes):
-            df.unpersist()
-        try:
-            e_deg.unpersist()
-        except NameError:  # raised before e_deg was built
-            pass
-
-
-def _host_pagerank_lazy(edges: DataFrame, iterations: int,
-                        damping_pct: int, scale: int,
-                        broadcast_ranks: bool) -> DataFrame:
-    """Single-plan PageRank: the n_hosts scalar rides as a broadcast
-    1-row aggregate, so the whole fixpoint is one declarative plan
-    over the shared-cached edge/degree tables; the caller's single
-    action computes everything once. Bit-identical to the
-    checkpointed path (same BIGINT ops, same order)."""
-    e = _shared_cache(_distinct_edges(edges))
-    nodes = _shared_cache(
-        e.select(F.col("src_host").alias("host"))
-        .union(e.select(F.col("dst_host").alias("host")))
-        .distinct())
-    nh = nodes.agg(F.count(F.lit(1)).alias("n_hosts"))
-    # (host, n_hosts): the per-iteration update needs the scalar in
-    # row scope; a broadcast nested-loop join of a 1-row table is free
-    base = nodes.crossJoin(F.broadcast(nh))
-    outdeg = e.groupBy("src_host").agg(
-        F.count(F.lit(1)).alias("outdeg"))
-    e_deg = _shared_cache(e.join(outdeg, "src_host"))
-
-    r0 = f"({scale}L div n_hosts)"
-    teleport = f"(({100 - damping_pct}L * {r0}) div 100)"
-    ranks = base.select("host",
-                        F.expr(f"{r0}").alias("rank_scaled"))
-    # same zero-row-union shape as the eager path (see comment there);
-    # the per-iteration crossJoin re-attaches the n_hosts scalar, and
-    # its broadcast subplan is IDENTICAL every round so ReuseExchange
-    # materializes it once.
-    zero = nodes.select("host", F.lit(0).cast("bigint").alias("c"))
-    for _ in range(iterations):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib_rows = (e_deg
-                        .join(r, e_deg.src_host == r.host)
-                        .select(F.col("dst_host").alias("host"),
-                                F.expr("rank_scaled div outdeg")
-                                .alias("c")))
-        ranks = (contrib_rows.unionByName(zero)
-                 .groupBy("host")
-                 .agg(F.sum("c").alias("contrib"))
-                 .crossJoin(F.broadcast(nh))
-                 .select("host",
-                         F.expr(f"{teleport} + ({damping_pct}L * "
-                                f"contrib) div 100")
-                         .alias("rank_scaled")))
-    return ranks.select(
-        "host", "rank_scaled",
-        (F.col("rank_scaled").cast("double") / F.lit(float(scale)))
-        .alias("rank"))
+        nodes.unpersist()
+        e_deg.unpersist()
 
 
 # --- anchor text -----------------------------------------------------------
@@ -417,7 +306,7 @@ def _driver_label_prop_rows(rows, seed_of: dict, iterations: int,
     Python ints (non-negative, `//` == Spark `div`): seeded hosts
     clamped to seed*scale every round; unseeded hosts take the
     integer mean of in-neighbor scores, keeping their score when no
-    in-edges exist. Bit-identical to the Spark paths (tests)."""
+    in-edges exist. Bit-identical to the Spark path (tests)."""
     nodes = set()
     for s, d in rows:
         nodes.add(s)
@@ -464,41 +353,35 @@ def host_label_propagation(edges: DataFrame, seeds: DataFrame,
     result is bit-identical under any partitioning.
 
     Output: (host, score_scaled, verdict) with verdict spam/ham/
-    unknown by the hi/lo per-mille cut. Per iteration: one broadcast
-    of the score table into the edge join and one map-side-combined
-    aggregation on dst — the host_pagerank plan shape, with the same
-    broadcast-vs-co-partitioned dial at 10^9 hosts.
+    unknown by the hi/lo per-mille cut. Runs under the `_fixpoint`
+    rule, like host_pagerank; the distributed iteration has the
+    host_pagerank plan shape (one broadcast of the score table into
+    the edge join and one map-side-combined aggregation on dst per
+    round)."""
 
-    Lazy plan over the session-memoized edge table for shallow
-    fixpoints (iterations <= LAZY_MAX_ITERS, the production shape —
-    label spread converges in 2-3 hops); the cached edges are the
-    same table host_degrees / host_pagerank share (r4 VERDICT #3).
-    Deeper fixpoints persist the edge/base tables call-locally,
-    truncate lineage per round, and materialize eagerly so the
-    caches release before returning."""
-    lazy = iterations <= LAZY_MAX_ITERS
-    e = _distinct_edges(edges)
-    if lazy:
-        e = _shared_cache(e)
-        # size-adaptive (same gate as host_pagerank): a broadcast-
-        # scale graph runs the exact integer spread on the driver,
-        # skipping per-iteration broadcast+shuffle scheduling.
-        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
-                                  gate.EDGE_MAX_BYTES)
-        if table is not None:
-            # NULL-labeled seeds are unseeded in the distributed path
-            # (isNotNull join); mirror that here instead of crashing
-            # on None * int (r5 ADVICE #2)
-            seed_rows = seeds.where(F.col("label").isNotNull()) \
-                .select(F.col("host"),
-                        F.col("label").cast("bigint")).collect()
-            rows = _driver_label_prop_rows(
-                list(zip(*table.to_pydict().values())),
-                {r[0]: r[1] for r in seed_rows},
-                iterations, scale, hi_milli, lo_milli)
-            return edges.sparkSession.createDataFrame(
-                rows, f"host {e.dtypes[0][1]}, score_scaled bigint, "
-                "verdict string")
+    def driver(rows):
+        # NULL-labeled seeds are unseeded in the distributed path
+        # (isNotNull join); mirror that here instead of crashing on
+        # None * int
+        seed_rows = seeds.where(F.col("label").isNotNull()) \
+            .select(F.col("host"),
+                    F.col("label").cast("bigint")).collect()
+        return _driver_label_prop_rows(
+            rows, {r[0]: r[1] for r in seed_rows},
+            iterations, scale, hi_milli, lo_milli)
+
+    return _fixpoint(
+        edges, "score_scaled bigint, verdict string", driver,
+        lambda e: _distributed_label_prop(e, seeds, iterations, scale,
+                                          hi_milli, lo_milli))
+
+
+def _distributed_label_prop(e: DataFrame, seeds: DataFrame,
+                            iterations: int, scale: int, hi_milli: int,
+                            lo_milli: int) -> DataFrame:
+    """Label spread over the persisted distinct edges `e`: per-round
+    lazy localCheckpoints truncate lineage and the result is
+    materialized before the call-local base table is released."""
     nodes = (e.select(F.col("src_host").alias("host"))
              .union(e.select(F.col("dst_host").alias("host")))
              .distinct())
@@ -508,12 +391,8 @@ def host_label_propagation(edges: DataFrame, seeds: DataFrame,
             .select("host", "seed",
                     F.coalesce(F.col("seed") * scale,
                                F.lit(scale // 2))
-                    .cast("bigint").alias("score_scaled")))
-    if lazy:
-        base = _shared_cache(base)
-    else:
-        e = e.persist()
-        base = base.persist()
+                    .cast("bigint").alias("score_scaled"))
+            .persist())
     try:
         scores = base.select("host", "score_scaled")
         for _ in range(iterations):
@@ -531,20 +410,16 @@ def host_label_propagation(edges: DataFrame, seeds: DataFrame,
                                     F.expr("s div n").cast("bigint"))
                               .otherwise(F.col("score_scaled"))
                               .alias("score_scaled")))
-            if not lazy:
-                scores = scores.localCheckpoint(eager=False)
+            scores = scores.localCheckpoint(eager=False)
         verdict = (F.when(F.col("score_scaled") > hi_milli,
                           F.lit("spam"))
                    .when(F.col("score_scaled") < lo_milli, F.lit("ham"))
                    .otherwise(F.lit("unknown")))
-        out = scores.select("host", "score_scaled",
-                            verdict.alias("verdict"))
-        # deep path: per-host result — materialize, release caches
-        return out if lazy else out.localCheckpoint(eager=True)
+        return scores.select("host", "score_scaled",
+                             verdict.alias("verdict")) \
+            .localCheckpoint(eager=True)
     finally:
-        if not lazy:
-            e.unpersist()
-            base.unpersist()
+        base.unpersist()
 
 
 def host_degrees(edges: DataFrame) -> DataFrame:
@@ -556,41 +431,29 @@ def host_degrees(edges: DataFrame) -> DataFrame:
     reciprocal = |{v : h->v AND v->h}| over the DISTINCT edge set;
     recip_milli = 1000 * reciprocal div out_deg (0 when out_deg = 0).
 
-    Shuffle shape (r4 VERDICT #3 rework): NO edge self-join. Both
-    degrees come from ONE union + host-keyed aggregation, and
-    reciprocity from ONE undirected-pair aggregation (groupBy
-    (least, greatest) marking which directions were seen) — at 10^8
-    hosts that is two map-side-combined shuffles of the host-level
-    table instead of the sort-merge self-join's two full sorts.
-    A self-loop is its own reverse and counts reciprocal once,
-    exactly as the join formulation did. The edge table itself is
-    session-memoized and shared with pagerank / label-prop.
-    """
-    e = _shared_cache(_distinct_edges(edges))
-    deg = (e.select(F.col("src_host").alias("host"),
-                    F.lit(1).alias("o"), F.lit(0).alias("i"))
-           .unionByName(e.select(F.col("dst_host").alias("host"),
-                                 F.lit(0).alias("o"),
-                                 F.lit(1).alias("i")))
-           .groupBy("host")
-           .agg(F.sum("o").cast("bigint").alias("out_deg"),
-                F.sum("i").cast("bigint").alias("in_deg")))
-    p = e.select(F.least("src_host", "dst_host").alias("a"),
-                 F.greatest("src_host", "dst_host").alias("b"),
-                 (F.col("src_host") <= F.col("dst_host")).alias("f"),
-                 (F.col("src_host") >= F.col("dst_host")).alias("r"))
-    rp = (p.groupBy("a", "b")
-          .agg(F.max("f").alias("f"), F.max("r").alias("r"))
-          .where(F.col("f") & F.col("r")))
-    recip = (rp.select(F.explode(F.array_distinct(F.array("a", "b")))
-                       .alias("host"))
-             .groupBy("host")
-             .agg(F.count(F.lit(1)).alias("reciprocal")))
-    base = (deg.join(recip, "host", "left")
-            .select("host", "out_deg", "in_deg",
-                    F.coalesce("reciprocal", F.lit(0))
-                    .cast("bigint").alias("reciprocal")))
-    return base.withColumn(
-        "recip_milli",
-        F.expr("CASE WHEN out_deg = 0 THEN 0L "
-               "ELSE (1000 * reciprocal) div out_deg END"))
+    One chain that reads its input once and caches nothing: each
+    undirected pair (least, greatest) is aggregated with `max` over
+    the two direction flags (which also absorbs duplicate edges, so
+    no distinct is needed), the pair is exploded to one row per
+    endpoint carrying that endpoint's (out, in) flags, and a host-
+    keyed sum gives both degrees and the reciprocal count — two
+    map-side-combined shuffles, no join. A self-loop is its own
+    reverse: it explodes to one row and counts out 1, in 1,
+    reciprocal 1. Edges with a NULL endpoint are dropped."""
+    src, dst = F.col("src_host"), F.col("dst_host")
+    pairs = (edges.where(src.isNotNull() & dst.isNotNull())
+             .groupBy(F.least(src, dst).alias("a"),
+                      F.greatest(src, dst).alias("b"))
+             .agg(F.max(src <= dst).alias("f"),
+                  F.max(src >= dst).alias("r")))
+    ends = pairs.selectExpr(
+        "inline(array_distinct(array(struct(a AS host, f AS o, r AS i),"
+        " struct(b AS host, r AS o, f AS i))))")
+    return (ends.groupBy("host")
+            .agg(F.count_if("o").alias("out_deg"),
+                 F.count_if("i").alias("in_deg"),
+                 F.count_if(F.col("o") & F.col("i")).alias("reciprocal"))
+            .withColumn(
+                "recip_milli",
+                F.expr("CASE WHEN out_deg = 0 THEN 0L "
+                       "ELSE (1000 * reciprocal) div out_deg END")))

@@ -1,7 +1,9 @@
 """Link-graph extraction + exact-integer host PageRank
 (operators/graph.py): regex subset semantics, edge rollup rules, a
 hand-computed python reference for the integer iteration, partition
-invariance, and plan pins (codegen extraction, broadcast rank join)."""
+invariance, plan pins (codegen extraction, broadcast rank join), and
+the fixpoint rule (one driver-gate call, identical driver and
+distributed rows, no cache left behind)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,16 @@ from edspdf_spark.plans import gate
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _both_paths(monkeypatch, run):
+    """run() as routed by the driver gate, then again with the gate's
+    row cap forced to 0 so the distributed iteration runs."""
+    drv = run()
+    with monkeypatch.context() as m:
+        m.setattr(gate, "EDGE_MAX_ROWS", 0)
+        dist = run()
+    return drv, dist
 
 
 @pytest.fixture(scope="module")
@@ -254,20 +266,32 @@ def test_canonical_grouping(spark):
 
 
 def test_pagerank_iteration_broadcasts_ranks(spark, monkeypatch):
+    """The distributed round's plan (captured as it is checkpointed)
+    broadcasts the rank table into the edge join."""
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
     monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
-    plan = _plan(host_pagerank(edges, iterations=1, checkpoint=False))
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan, plan
+    plans = []
+    orig = type(edges).localCheckpoint
+    monkeypatch.setattr(type(edges), "localCheckpoint",
+                        lambda self, *a, **k: plans.append(_plan(self))
+                        or orig(self, *a, **k))
+    host_pagerank(edges, iterations=1).collect()
+    round_plan = plans[0]
+    assert "EvalPython" not in round_plan
+    assert "BroadcastHashJoin" in round_plan, round_plan
 
 
 def test_host_degrees_and_reciprocity(spark):
     from edspdf_spark.operators.graph import host_degrees
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a"),        # mutual pair
-         ("a", "c"), ("c", "d")],       # one-way chain
+         ("a", "c"), ("c", "d"),        # one-way chain
+         ("a", "c"),                    # duplicate edge: counted once
+         ("e", "e"),                    # self-loop: its own reverse
+         ("a", None), (None, "f")],     # NULL endpoint: dropped
         "src_host string, dst_host string")
     got = {r.host: r for r in host_degrees(edges).collect()}
+    assert set(got) == {"a", "b", "c", "d", "e"}
     assert (got["a"].out_deg, got["a"].in_deg) == (2, 1)
     assert got["a"].reciprocal == 1 and got["a"].recip_milli == 500
     assert got["b"].reciprocal == 1 and got["b"].recip_milli == 1000
@@ -275,6 +299,8 @@ def test_host_degrees_and_reciprocity(spark):
     # sink-only host: out_deg 0, recip 0 (no division blowup)
     assert (got["d"].out_deg, got["d"].in_deg,
             got["d"].recip_milli) == (0, 1, 0)
+    assert (got["e"].out_deg, got["e"].in_deg, got["e"].reciprocal,
+            got["e"].recip_milli) == (1, 1, 1, 1000)
 
 
 def test_union_find_paths_agree_across_threshold(spark, monkeypatch):
@@ -338,101 +364,85 @@ def test_union_find_bytes_gate_routes_wide_ids_distributed(spark, monkeypatch):
     assert drv == dist and len({c for _, c in drv}) == 220
 
 
-def test_pagerank_lazy_and_checkpointed_paths_agree(spark):
-    """The single-plan lazy path (iterations <= LAZY_MAX_ITERS) and
-    the persisted/checkpointed deep path must be bit-identical — same
-    BIGINT ops in the same order, only the execution shape differs
-    (r4 VERDICT #3)."""
-    edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
-    lazy = sorted((r.host, r.rank_scaled) for r in
-                  host_pagerank(edges, iterations=4,
-                                checkpoint=False).collect())
-    deep = sorted((r.host, r.rank_scaled) for r in
-                  host_pagerank(edges, iterations=4,
-                                checkpoint=True).collect())
-    assert lazy == deep and lazy
-
-
-def test_label_prop_lazy_and_deep_paths_agree(spark):
+def test_graph_fixpoints_consult_driver_gate_once(spark, monkeypatch):
+    """Every host_pagerank / host_label_propagation call asks the
+    driver gate exactly once, whatever the iteration count and
+    whichever path it then takes; both paths give identical rows."""
     from edspdf_spark.operators import graph as G
+
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
     seeds = spark.createDataFrame([("a", 1), ("d", 0)],
                                   "host string, label int")
-    lazy = sorted(map(tuple, G.host_label_propagation(
-        edges, seeds, iterations=2).collect()))
-    try:
-        G.LAZY_MAX_ITERS = -1          # force the deep path
-        deep = sorted(map(tuple, G.host_label_propagation(
-            edges, seeds, iterations=2).collect()))
-    finally:
-        G.LAZY_MAX_ITERS = 8
-    assert lazy == deep and lazy
+    calls = []
+    orig = gate.driver_table
+    monkeypatch.setattr(gate, "driver_table",
+                        lambda *a: calls.append(1) or orig(*a))
+    for iters in (4, 12):
+        for op in (lambda: G.host_pagerank(edges, iterations=iters),
+                   lambda: G.host_label_propagation(
+                       edges, seeds, iterations=iters)):
+            def run():
+                calls.clear()
+                rows = sorted(map(tuple, op().collect()))
+                assert len(calls) == 1, (iters, len(calls))
+                return rows
+            drv, dist = _both_paths(monkeypatch, run)
+            assert drv == dist and drv
 
 
-def test_graph_shared_caches_bounded_and_releasable(spark):
-    """The shared-cache design must be BOUNDED memoization, not a
-    leak (r3 ADVICE / r4 VERDICT #3): repeated calls on the same
-    input add no new cache entries (CacheManager plan-dedupe), and
-    release_graph_caches() empties what the graph ops marked."""
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager() \
+        .numCachedEntries()
+
+
+def test_graph_operators_leave_no_cache_entry(spark, monkeypatch):
+    """No graph operator leaves a CacheManager entry behind, on the
+    driver path or the distributed one: each call owns and releases
+    what it persists."""
     from edspdf_spark.operators import graph as G
 
-    G.release_graph_caches()
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
     seeds = spark.createDataFrame([("a", 1)], "host string, label int")
-    jsc = spark.sparkContext._jsc
-
-    def cached_rdds():
-        return len(jsc.sc().getRDDStorageInfo())
-
-    # NOTE <= not ==: other tests' localCheckpoint RDDs share this
-    # session and may be context-cleaned concurrently (counts can only
-    # DROP from that); growth is what the invariant forbids.
-    G.host_degrees(edges).count()
-    first = cached_rdds()
-    G.host_degrees(edges).count()
-    assert cached_rdds() <= first
-    G.host_pagerank(edges, iterations=4).count()
-    G.host_label_propagation(edges, seeds, iterations=2).count()
-    grown = cached_rdds()
-    G.host_pagerank(edges, iterations=4).count()
-    G.host_degrees(edges).count()
-    assert cached_rdds() <= grown
-    marked = list(G._SHARED_CACHES)
-    released = G.release_graph_caches()
-    assert released > 0 and not G._SHARED_CACHES
-    assert not any(d.is_cached for d in marked)
+    ops = [lambda: G.host_degrees(edges),
+           lambda: G.host_pagerank(edges, iterations=4),
+           lambda: G.host_pagerank(edges, iterations=12),
+           lambda: G.host_label_propagation(edges, seeds, iterations=2),
+           lambda: G.host_label_propagation(edges, seeds, iterations=9)]
+    for op in ops:
+        def run():
+            before = _cache_entries(spark)
+            op().collect()
+            return _cache_entries(spark) - before
+        assert _both_paths(monkeypatch, run) == (0, 0)
 
 
-def test_host_degrees_plan_reads_shared_edge_cache(spark):
-    """Every occurrence of the distinct-edge subplan must read the
-    ONE shared-cached table (InMemoryTableScan) — the raw link scan
-    below it runs once per session, not once per branch."""
-    from edspdf_spark.operators import graph as G
-    edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
-    try:
-        df = G.host_degrees(edges)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("InMemoryTableScan") >= 3, plan
-    finally:
-        G.release_graph_caches()
+def test_host_degrees_plan_reads_input_once(spark, tmp_path):
+    """host_degrees is one chain over its input: one file scan, two
+    hash exchanges (pairs, then hosts), no join, no broadcast and no
+    cached table."""
+    from edspdf_spark.operators.graph import host_degrees
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(GRAPH, "src_host string, dst_host string") \
+        .write.parquet(path)
+    plan = _plan(host_degrees(spark.read.parquet(path)))
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "Join" not in plan and "Broadcast" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_pagerank_driver_and_distributed_paths_identical(spark,
                                                         monkeypatch):
     """The size-adaptive gate (r5): broadcast-scale graphs run the
     exact integer iteration on the driver; forcing the distributed
-    lazy plan (zero driver-gate row cap) and the deep checkpointed
-    path must all yield bit-identical ranks."""
+    iteration (zero driver-gate row cap) must yield bit-identical
+    ranks."""
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
-    drv = sorted((r.host, r.rank_scaled, r.rank)
-                 for r in host_pagerank(edges, iterations=4).collect())
-    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
-    dist = sorted((r.host, r.rank_scaled, r.rank)
-                  for r in host_pagerank(edges, iterations=4).collect())
-    deep = sorted((r.host, r.rank_scaled, r.rank)
-                  for r in host_pagerank(edges, iterations=4,
-                                         checkpoint=True).collect())
-    assert drv == dist == deep
+    drv, dist = _both_paths(monkeypatch, lambda: sorted(
+        (r.host, r.rank_scaled, r.rank)
+        for r in host_pagerank(edges, iterations=4).collect()))
+    assert drv == dist and drv
 
 
 def test_label_prop_driver_and_distributed_paths_identical(spark,
@@ -442,24 +452,17 @@ def test_label_prop_driver_and_distributed_paths_identical(spark,
     edges = spark.createDataFrame(GRAPH, "src_host string, dst_host string")
     seeds = spark.createDataFrame([("a", 1), ("d", 0)],
                                   "host string, label int")
-    drv = sorted((r.host, r.score_scaled, r.verdict)
-                 for r in host_label_propagation(
-                     edges, seeds, iterations=3).collect())
-    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
-    dist = sorted((r.host, r.score_scaled, r.verdict)
-                  for r in host_label_propagation(
-                      edges, seeds, iterations=3).collect())
-    deep = sorted((r.host, r.score_scaled, r.verdict)
-                  for r in host_label_propagation(
-                      edges, seeds, iterations=9).collect())
-    assert drv == dist
-    # the deep checkpointed path runs more iterations; compare it at
-    # its own depth against the forced-distributed lazy... the lazy
-    # cap is LAZY_MAX_ITERS, so match it against the driver rule
+    for iters in (3, 9):
+        drv, dist = _both_paths(monkeypatch, lambda: sorted(
+            (r.host, r.score_scaled, r.verdict)
+            for r in host_label_propagation(
+                edges, seeds, iterations=iters).collect()))
+        assert drv == dist and drv
+    # the distributed 9-round spread against the plain-int mirror
     from edspdf_spark.operators.graph import _driver_label_prop_rows
     want = sorted(_driver_label_prop_rows(
         sorted(set(GRAPH)), {"a": 1, "d": 0}, 9, 1000, 700, 300))
-    assert sorted(deep) == want
+    assert dist == want
 
 
 def test_pagerank_bytes_gate_routes_wide_ids_distributed(spark,
@@ -481,20 +484,14 @@ def test_label_propagation_null_seed_matches_distributed(spark,
     """r5 ADVICE #2: a NULL-labeled seed row is unseeded in the
     distributed path (isNotNull semantics); the driver fixpoint must
     mirror that instead of raising TypeError."""
-    from edspdf_spark.operators.graph import (host_label_propagation,
-                                              release_graph_caches)
+    from edspdf_spark.operators.graph import host_label_propagation
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c")],
         "src_host string, dst_host string")
     seeds = spark.createDataFrame(
         [("a", 1), ("b", None)], "host string, label int")
-    try:
-        fast = {(r.host, r.score_scaled, r.verdict)
-                for r in host_label_propagation(edges, seeds).collect()}
-        monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
-        dist = {(r.host, r.score_scaled, r.verdict)
-                for r in host_label_propagation(edges, seeds).collect()}
-    finally:
-        release_graph_caches()
+    fast, dist = _both_paths(monkeypatch, lambda: {
+        (r.host, r.score_scaled, r.verdict)
+        for r in host_label_propagation(edges, seeds).collect()})
     assert fast == dist

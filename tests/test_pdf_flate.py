@@ -168,6 +168,19 @@ def test_hex_bracket_string_survives_tj_array():
     assert "".join(c for c, _f, _u in lines[0].chars) == "A[B"
 
 
+def test_tj_shows_only_a_string_operand():
+    """A `[` delimiter or a number before Tj is a malformed operand:
+    it is skipped, never shown as its repr or as "5.0". A hex string
+    that decodes to `[` is still a string and is shown."""
+    from edspdf_spark.kernels.pdf import _run_content
+
+    fonts = {"F1": "Helvetica"}
+    assert _run_content(b"BT /F1 10 Tf [ Tj ET", fonts) == []
+    assert _run_content(b"BT /F1 10 Tf 5 Tj ET", fonts) == []
+    lines = _run_content(b"BT /F1 10 Tf <5B> Tj ET", fonts)
+    assert "".join(c for c, _f, _u in lines[0].chars) == "["
+
+
 def test_annotate_preserves_version_header():
     from edspdf_spark.kernels.pdf import annotate_pdf
 

@@ -639,3 +639,47 @@ def test_shingle_cap_bounded_distinct_exchanges(spark, monkeypatch):
     # explodes adds more.
     assert len(shuffles) <= 7, plan.toString()
     assert reused >= 1, plan.toString()
+
+
+# persists with no owner in their function, by (module, function, name).
+# minhash_lsh_pairs returns a plan that reads `cand` lazily, so it
+# cannot release it; giving it an owner is ROADMAP #3.
+_UNOWNED_PERSISTS = {("operators/dedup.py", "minhash_lsh_pairs", "cand")}
+
+
+def test_every_persist_is_released_by_its_function():
+    """Static cache-ownership guard: in every function under
+    edspdf_spark/, a name bound to `<expr>.persist()` / `.cache()`, or
+    persisted by the statement `name.persist()` / `name.cache()`, is
+    also released with `name.unpersist()` in that same function."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "edspdf_spark"
+
+    def cached_call(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache"))
+
+    unowned = set()
+    for path in sorted(root.rglob("*.py")):
+        module = path.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cached, released = set(), set()
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Assign) and cached_call(node.value):
+                    cached |= {t.id for t in node.targets
+                               if isinstance(t, ast.Name)}
+                elif (isinstance(node, ast.Expr) and cached_call(node.value)
+                      and isinstance(node.value.func.value, ast.Name)):
+                    cached.add(node.value.func.value.id)
+                elif (isinstance(node, ast.Call)
+                      and isinstance(node.func, ast.Attribute)
+                      and node.func.attr == "unpersist"
+                      and isinstance(node.func.value, ast.Name)):
+                    released.add(node.func.value.id)
+            unowned |= {(module, fn.name, n) for n in cached - released}
+    assert unowned == _UNOWNED_PERSISTS
