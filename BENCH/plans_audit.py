@@ -127,11 +127,12 @@ def main() -> None:
         "leaves, so counts reflect data that actually moves in a",
         "warm-cache run. Drift in this table is a plan regression.",
         "Size-adaptive operators (host_pagerank, host_label_prop,",
-        "dedup components) compile to a LocalTableScan at this SF --",
-        "the sf0.01 edge set sits under their bytes-aware driver",
-        "gate; the distributed plan shapes are pinned by tests",
-        "(test_graph.py driver/distributed equality, gate.EDGE_MAX_ROWS",
-        "forced to 0).",
+        "the near-dup chain of dedup_minhash_lsh and dedup components)",
+        "compile to a LocalTableScan at this SF -- the sf0.01 shingle",
+        "and edge sets sit under their bytes-aware driver gates; the",
+        "distributed plan shapes are pinned by tests (test_graph.py and",
+        "test_dedup_edge_cases.py driver/distributed equality, the",
+        "gates' caps forced to 0).",
         "",
         "Per-query COST evidence is BENCH/history.jsonl and the scale",
         "curve; this table is the SHAPE evidence.",

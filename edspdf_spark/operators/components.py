@@ -19,42 +19,39 @@ DuckDB oracle: WITH RECURSIVE reachability, min reachable id per node
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..plans import gate
 
 
-def _driver_union_find(table, edges: DataFrame) -> DataFrame:
-    """Exact components for a broadcast-scale edge set: union-find on
-    the driver over the collected edge `table`, returned as (id,
-    component=min reachable id) with `edges`' id type. Identical
-    output to the distributed propagation."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in zip(*table.to_pydict().values()):
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    best: dict = {}
-    for node in parent:
-        r = find(node)
-        if r not in best or node < best[r]:
-            best[r] = node
-    rows = [(node, best[find(node)]) for node in parent]
-    t = edges.dtypes[0][1]
-    return edges.sparkSession.createDataFrame(
-        rows, f"id {t}, component {t}")
+def _driver_union_find(table, pairs: DataFrame) -> DataFrame:
+    """Exact components of the collected (id_a, id_b) `table`: numpy
+    min-label propagation with pointer jumping over ids factorized in
+    sorted order (a component's min index IS its min id), returned as
+    one Arrow (id, component) DataFrame of `pairs`' id type."""
+    ends = pa.chunked_array(table.column(0).chunks + table.column(1).chunks,
+                            table.schema.field(0).type)
+    _, first, inv = np.unique(ends.to_numpy(zero_copy_only=False),
+                              return_index=True, return_inverse=True)
+    a, b = inv.reshape(2, -1)
+    comp = np.arange(len(first))
+    while True:
+        # labels only fall and stay >= the component min, so this
+        # stops exactly when every edge joins equal, rooted labels
+        nxt = comp.copy()
+        low = np.minimum(comp[a], comp[b])
+        np.minimum.at(nxt, a, low)
+        np.minimum.at(nxt, b, low)
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, comp):
+            break
+        comp = nxt
+    node = ends.take(first)
+    return pairs.sparkSession.createDataFrame(
+        pa.table({"id": node, "component": node.take(comp)}))
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -62,42 +59,43 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     reachable via pair edges. Nodes appearing in no pair are absent
     (callers union singletons if needed).
 
-    Size-adaptive strategy: near-dup edge sets are usually TINY
+    Size-adaptive strategy: near-dup pair sets are usually TINY
     relative to the corpus (pairs above threshold after LSH), and each
     distributed propagation round costs a join + checkpoint regardless
-    of size — pure overhead on a small graph. Edge sets within the
-    driver gate's EDGE_MAX_ROWS rows AND EDGE_MAX_BYTES in-memory
+    of size — pure overhead on a small graph. Pair sets within the
+    driver gate's EDGE_MAX_ROWS pair rows AND EDGE_MAX_BYTES in-memory
     bytes (plans.gate.driver_table, measured in-plan, so wide string
-    ids route distributed) run exact union-find on the driver; larger
-    sets use the distributed min-label propagation, whose per-round
-    cost is then actually amortized. Both paths produce identical
-    labels.
+    ids route distributed) run exact union-find on the driver, which
+    needs neither symmetric nor distinct edges. Larger sets, and sets
+    with a NULL id, build the symmetric distinct edge set and run the
+    distributed min-label propagation, whose per-round cost is then
+    actually amortized. Both paths produce identical labels.
 
     Raises RuntimeError if the propagation has not converged after
     max_iter rounds (component diameter > max_iter) — unconverged
     labels must never masquerade as a correct keep-list."""
-    # persist the INPUT first: the src/dst symmetrization reads it in
-    # both union branches, and pair generation (an LSH pipeline) is
-    # usually far more expensive than the component labeling itself
+    # persist the INPUT first: the gate sizes and collects it, and a
+    # refusal reads it in both union branches — pair generation (an
+    # LSH pipeline) is usually far more expensive than the labeling
     pairs_p = pairs.persist()
-    edges = (pairs_p.select(F.col("id_a").alias("src"),
-                            F.col("id_b").alias("dst"))
-             .unionByName(pairs_p.select(F.col("id_b").alias("src"),
-                                         F.col("id_a").alias("dst")))
-             .distinct()
-             .persist())
     try:
-        # the gate's sizing pass also fills the edge cache
-        table = gate.driver_table(edges, gate.EDGE_MAX_ROWS,
-                                  gate.EDGE_MAX_BYTES)
-        # the edges are cached now; propagation never reads the input
-        pairs_p.unpersist()
-        if table is not None:
-            return _driver_union_find(table, edges)
-        return _propagate(edges, max_iter)
+        table = gate.driver_table(pairs_p.select("id_a", "id_b"),
+                                  gate.EDGE_MAX_ROWS, gate.EDGE_MAX_BYTES)
+        if table is not None and not any(c.null_count
+                                         for c in table.columns):
+            return _driver_union_find(table, pairs)
+        edges = (pairs_p.select(F.col("id_a").alias("src"),
+                                F.col("id_b").alias("dst"))
+                 .unionByName(pairs_p.select(F.col("id_b").alias("src"),
+                                             F.col("id_a").alias("dst")))
+                 .distinct()
+                 .persist())
+        try:
+            return _propagate(edges, max_iter)
+        finally:
+            edges.unpersist()
     finally:
         pairs_p.unpersist()
-        edges.unpersist()
 
 
 def _propagate(edges: DataFrame, max_iter: int) -> DataFrame:

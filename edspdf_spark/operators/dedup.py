@@ -19,7 +19,9 @@ Scale notes (100 TB framing):
   shingle" guard) BEFORE the join, which also kills the skew.
 - MinHash/LSH replaces the all-pairs join with per-band equality
   joins on tiny signatures; candidate verification re-joins the
-  (pruned) shingle sets only for candidate pairs.
+  (pruned) shingle sets only for candidate pairs. Within the driver
+  gate the whole chain is one numpy pass on the driver instead: at
+  that size per-job framing, not per-row work, is the cost.
 - simhash is one doc-local map, no shuffle; near-dup lookup joins on the
   top bits (band) so the pair space never materializes globally.
 """
@@ -28,11 +30,14 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions import (code15, code15_py, minhash_exprs, ngrams_py,
-                         tokens, tokens_py)
+from ..functions import (CODE_MOD, MINHASH_AB, code15, code15_py,
+                         minhash_exprs, ngrams_py, tokens, tokens_py)
+from ..plans import gate
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -131,6 +136,37 @@ def _cap_doc_freq(shingles: DataFrame,
 PAIR_DRIVER_MAX_BYTES = 512 << 20
 
 
+def _factorize(vals, order):
+    """(sorted distinct values, each element's index among them) from
+    `vals`' stable argsort `order` (np.unique would sort again)."""
+    sv = vals[order]
+    new = np.ones(len(sv), dtype=bool)
+    new[1:] = sv[1:] != sv[:-1]
+    inv = np.empty(len(sv), dtype=np.int64)
+    inv[order] = np.cumsum(new) - 1
+    return sv[new], inv
+
+
+def _driver_shingles(shingles: DataFrame):
+    """The driver pair paths' prologue: the gated (id, code) table,
+    NULL ids/codes dropped (joins never match them), ids factorized in
+    sorted order (index order IS id order): (id_ddl, ids, codes,
+    doc_inv, order_d), or None to stay distributed."""
+    id_ddl = dict(shingles.dtypes).get("id")
+    if id_ddl not in ("bigint", "string"):
+        return None
+    table = gate.driver_table(shingles.select("id", "code"), None,
+                              PAIR_DRIVER_MAX_BYTES)
+    if table is None:
+        return None
+    table = table.drop_null()
+    ids_raw = table.column("id").to_numpy(zero_copy_only=False)
+    order_d = np.argsort(ids_raw, kind="stable")
+    ids, doc_inv = _factorize(ids_raw, order_d)
+    return (id_ddl, ids, table.column("code").to_numpy().astype(np.int64),
+            doc_inv, order_d)
+
+
 def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
                         mode: str, threshold: float, min_intersect: int):
     """Gated all-pairs intersection counter. Returns the result
@@ -141,52 +177,17 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
     the join did), ids compare strictly (equal ids never pair), sizes
     are taken after the doc-frequency drop, and all ratios are the
     same int64 / float64 IEEE divisions."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..plans.gate import driver_table
-
-    id_ddl = dict(shingles.dtypes).get("id")
-    if id_ddl not in ("bigint", "string"):
+    got = _driver_shingles(shingles)
+    if got is None:
         return None
-    table = driver_table(shingles.select("id", "code"), None,
-                         PAIR_DRIVER_MAX_BYTES)
-    if table is None:
-        return None
+    id_ddl, uniq_ids, codes, doc_inv, order_d = got
     spark = shingles.sparkSession
-
-    ids_raw = table.column("id").to_numpy(zero_copy_only=False)
-    codes_raw = table.column("code").to_numpy(zero_copy_only=False)
-    if table.column("id").null_count or table.column("code").null_count:
-        import pyarrow.compute as pc
-
-        # NULL ids/codes never matched the equi-join; drop them
-        valid = ~(pc.is_null(table.column("id")).to_numpy(
-            zero_copy_only=False)
-            | pc.is_null(table.column("code")).to_numpy(
-                zero_copy_only=False))
-        ids_raw, codes_raw = ids_raw[valid], codes_raw[valid]
-    # TWO sorts total (by code, by id); factorizations, counts and
+    # TWO sorts total (by id, by code); factorizations, counts and
     # both CSR layouts derive from the sorted orders (np.unique would
     # pay an internal sort per call, and the CSR builds another two)
-    n_rows = len(ids_raw)
-    codes = codes_raw.astype(np.int64)
-
-    def _factorize(vals, order):
-        sv = vals[order]
-        new = np.empty(len(sv), dtype=bool)
-        if len(sv):
-            new[0] = True
-            new[1:] = sv[1:] != sv[:-1]
-        grp_sorted = np.cumsum(new) - 1
-        inv = np.empty(len(sv), dtype=np.int64)
-        inv[order] = grp_sorted
-        return sv[new], inv
-
+    n_rows = len(codes)
     order_c = np.argsort(codes, kind="stable")
     _, code_inv = _factorize(codes, order_c)
-    order_d = np.argsort(ids_raw, kind="stable")
-    uniq_ids, doc_inv = _factorize(ids_raw, order_d)
     n_docs = len(uniq_ids)
     n_codes = int(code_inv.max()) + 1 if n_rows else 0
     if max_doc_freq is not None and n_rows:
@@ -389,24 +390,23 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       threshold: float = 0.5,
                       max_doc_freq: Optional[int] = None) -> DataFrame:
     """Full near-dup chain: shingle -> minhash -> LSH bucket join ->
-    exact-Jaccard verification of the candidates only.
+    exact-Jaccard verification of the candidates only; within the
+    driver gate, one driver pass (_minhash_driver).
 
-    The verification joins only shingles of documents that appear in
-    some candidate pair (leftsemi prune) — at corpus scale the
-    candidate set is orders of magnitude smaller than the corpus, so
-    the expensive shingle self-join never touches non-candidates.
-
-    The shingle table and signatures are persisted: the DAG reuses
-    the shingle table up to 7 times (signature build, one join per
-    LSH band, both sides + sizes of the verification) and Spark would
-    otherwise re-scan and re-hash the corpus for each reuse. When the
-    verification runs on the driver path, the returned plan reads only
-    `cand` (the verified side comes from a broadcast), so both are
-    released before returning; `cand` stays cached for that plan."""
+    The distributed fallback verifies only shingles of documents in
+    some candidate pair (leftsemi prune). It reuses the persisted
+    shingle table up to 7 times (signature build, one join per LSH
+    band, both sides + sizes of the verification) and persists the
+    signatures and `cand` (read by the prune and the final join).
+    When its verification runs on the driver, the returned plan reads
+    only `cand`, so the shingles and signatures are released and
+    `cand` stays cached for that plan."""
     sh = shingle_table(df, id_col, text_col, k, max_doc_freq).persist()
+    fast = _minhash_driver(sh, n_hashes, band_size, threshold)
+    if fast is not None:
+        sh.unpersist()
+        return fast
     sigs = minhash_signatures(sh, n_hashes).persist()
-    # cand is consumed twice (cand_ids prune + the final join); without
-    # the persist the band self-join + distinct re-runs for each use
     cand = lsh_candidates(sigs, band_size).persist()
     cand_ids = (cand.select(F.col("id_a").alias("id"))
                 .unionByName(cand.select(F.col("id_b").alias("id")))
@@ -427,6 +427,64 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
             .select("id_a", "id_b", "jaccard"))
 
 
+def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
+                    threshold: float) -> Optional[DataFrame]:
+    """minhash_lsh_pairs as one numpy pass over the gated shingle
+    table, row for row the distributed chain's output (inter counts
+    code-matching row pairs and sizes count rows, as the join does);
+    None to stay distributed, also past gate.EDGE_MAX_ROWS pairs."""
+    assert n_hashes <= len(MINHASH_AB) and n_hashes % band_size == 0
+    got = _driver_shingles(sh)
+    if got is None:
+        return None
+    id_ddl, ids, codes, doc_inv, order_d = got
+    n = len(ids)
+    docs, codes = doc_inv[order_d], codes[order_d]  # doc-major rows
+    sizes = np.bincount(docs, minlength=n)
+    starts = np.cumsum(sizes) - sizes
+    cm = np.fmod(codes, CODE_MOD)
+    sig = np.stack([np.minimum.reduceat(np.fmod(a * cm + b, CODE_MOD),
+                                        starts)
+                    for a, b in MINHASH_AB[:n_hashes]], axis=1)
+    bands = [np.unique(sig[:, lo:lo + band_size], axis=0,
+                       return_inverse=True)[1].reshape(-1)
+             for lo in range(0, n_hashes, band_size)]
+    counts = [np.bincount(bucket) for bucket in bands]
+    if sum(int((c * (c - 1) // 2).sum()) for c in counts) \
+            > gate.EDGE_MAX_ROWS:
+        return None
+    # in-bucket pairs, all buckets of one size at once; the stable sort
+    # keeps a bucket's docs ascending, so column i < j is id order
+    keys = [np.empty(0, dtype=np.int64)]
+    for bucket, c in zip(bands, counts):
+        order, first = np.argsort(bucket, kind="stable"), np.cumsum(c) - c
+        for size in np.unique(c[c > 1]):
+            m = order[first[c == size][:, None] + np.arange(size)]
+            i, j = np.triu_indices(size, 1)
+            keys.append((m[:, i] * n + m[:, j]).ravel())
+    a, b = np.divmod(np.unique(np.concatenate(keys)), max(n, 1))
+    # walk each pair's a-rows, counting equal (doc b, code) row keys
+    code_idx = np.unique(codes, return_inverse=True)[1].reshape(-1)
+    n_codes = int(code_idx.max(initial=0)) + 1
+    packed = np.sort(docs * n_codes + code_idx)
+    inter = np.empty(len(a), dtype=np.int64)
+    step = max(1, (1 << 22) // max(int(sizes.max(initial=0)), 1))
+    for lo in range(0, len(a), step):
+        xa, xb = a[lo:lo + step], b[lo:lo + step]
+        r = sizes[xa]
+        seg = np.cumsum(r) - r
+        pos = np.repeat(starts[xa] - seg, r) + np.arange(int(r.sum()))
+        q = np.repeat(xb * n_codes, r) + packed[pos] % n_codes
+        hits = np.searchsorted(packed, q, "right") - np.searchsorted(packed, q)
+        inter[lo:lo + step] = np.add.reduceat(hits, seg)
+    jac = inter / (sizes[a] + sizes[b] - inter)
+    keep = (inter >= 1) & (jac >= threshold)
+    pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
+    return sh.sparkSession.createDataFrame(pa.table({
+        "id_a": pa.array(ids[a[keep]], pa_id),
+        "id_b": pa.array(ids[b[keep]], pa_id), "jaccard": jac[keep]}))
+
+
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             bits: int = 16) -> DataFrame:
     """(id, simhash) fingerprints: per distinct token, each of the
@@ -442,8 +500,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     hashing is the only Python loop (one md5 per distinct token);
     the bit tallies are one vectorized numpy pass per batch, and the
     fingerprint never leaves the task that read the document."""
-    import numpy as np
-
     from ..plans.salt import doc_map
 
     shifts = np.arange(bits, dtype=np.int64)

@@ -59,6 +59,8 @@ def process_doc(url: str, html: bytes, cfg: PipelineConfig
     Content sniffing: %PDF payloads take the layout path; HTML
     payloads take the boilerplate-strip path (north rule: the corpus
     is Common-Crawl-style, so both arrive in the same binary column).
+    Any exception out of the layout path (extract -> classify ->
+    aggregate) becomes the error row, so no document fails its task.
     """
     n_bytes = len(html) if html is not None else 0
     if html is not None and not html.startswith(b"%PDF-") \
@@ -71,20 +73,23 @@ def process_doc(url: str, html: bytes, cfg: PipelineConfig
         return [(url, label, text if text else None, [], False, 1,
                  int(stats["n_blocks"]), n_bytes, -1)]
 
-    res = extract_doc(html, extract_style=cfg.extract_style)
-    if res["error"]:
+    try:
+        res = extract_doc(html, extract_style=cfg.extract_style)
+        if res["error"]:
+            return [(url, None, None, [], True, 0, 0, n_bytes, -1)]
+        blocs = res["blocs"]
+        keys = [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"])
+                for b in blocs]
+        labels = classify_with_masks(cfg.masks, keys,
+                                     threshold=cfg.threshold)
+        for b, lab in zip(blocs, labels):
+            b["label"] = lab
+        agg = aggregate_doc(
+            blocs, sort=cfg.sort, new_line_threshold=cfg.new_line_threshold,
+            new_paragraph_threshold=cfg.new_paragraph_threshold,
+            label_map=cfg.label_map)
+    except Exception:  # last-resort guard: no kernel raise fails a task
         return [(url, None, None, [], True, 0, 0, n_bytes, -1)]
-
-    blocs = res["blocs"]
-    keys = [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"]) for b in blocs]
-    labels = classify_with_masks(cfg.masks, keys, threshold=cfg.threshold)
-    for b, lab in zip(blocs, labels):
-        b["label"] = lab
-
-    agg = aggregate_doc(blocs, sort=cfg.sort,
-                        new_line_threshold=cfg.new_line_threshold,
-                        new_paragraph_threshold=cfg.new_paragraph_threshold,
-                        label_map=cfg.label_map)
     rows = []
     for label, t in agg.items():
         if cfg.keep_labels is not None and label not in cfg.keep_labels:

@@ -368,9 +368,9 @@ def test_pair_gate_writes_no_files(spark, monkeypatch):
 
 
 def test_minhash_lsh_releases_shingles_and_signatures(spark):
-    """On the driver verification path the returned plan reads only
-    the candidate table, so the shingle table and the signatures are
-    unpersisted: at most one new cached RDD survives the call."""
+    """On the driver path the returned DataFrame is the verified pairs
+    themselves, built from the collected shingle table, so no cached
+    RDD survives the call."""
     from edspdf_spark.operators.dedup import minhash_lsh_pairs
 
     def persisted():
@@ -383,7 +383,112 @@ def test_minhash_lsh_releases_shingles_and_signatures(spark):
     before = persisted()
     pairs = minhash_lsh_pairs(df, k=3, threshold=0.5).collect()
     assert (4, 5) in {(r.id_a, r.id_b) for r in pairs}
-    assert len(persisted() - before) <= 1
+    assert persisted() - before == set()
+
+
+# --- near-dup chain: one driver pass vs the distributed chain --------------
+
+def _near_corpus(spark, name):
+    """(doc_id, text) inputs for the driver/distributed equality."""
+    from test_entry_contract import SF_DIR
+
+    import __spark_entry__ as entry_mod
+
+    if name == "corpus_near":
+        return entry_mod._corpus_near(spark, SF_DIR)
+    base = ["the quick brown fox jumps over the lazy dog again",
+            "the quick brown fox jumps over the lazy dog once",
+            "a completely different sentence about other things here",
+            "a completely different sentence about other things there"]
+    if name == "string_ids":  # "doc10" < "doc2": id order != number
+        rows = [(f"doc{i}", base[i % 4]) for i in (1, 2, 3, 10, 11, 20)]
+        return spark.createDataFrame(rows, "doc_id string, text string")
+    rows = {
+        # id 7 twice: its rows are both texts' shingles, still pairing
+        "duplicated_id": [(7, base[0]), (7, base[2]), (8, base[1]),
+                          (9, base[3]), (10, base[0])],
+        "null_id": [(None, base[0]), (1, base[1]), (2, base[0]),
+                    (3, base[2]), (None, base[3])],
+        "short_docs": [(0, ""), (1, "hello"), (2, "hello world"),
+                       (3, "one two three"), (4, "one two three four"),
+                       (5, "one two three four"), (6, None)],
+        "empty": [],
+        # 710 equal docs: 4 bands x C(710, 2) > gate.EDGE_MAX_ROWS
+        "one_big_bucket": [(i, "alpha beta gamma delta")
+                           for i in range(710)] + [(999, base[0])],
+    }[name]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("name", ["corpus_near", "string_ids",
+                                  "duplicated_id", "null_id", "short_docs",
+                                  "empty", "one_big_bucket"])
+def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
+                                                       name):
+    """minhash_lsh_pairs and dedup_keep_list give the same rows on the
+    driver pass and with both driver gates refused (the distributed
+    chain). Only a bucket set whose in-bucket pairs exceed
+    gate.EDGE_MAX_ROWS leaves the driver pass for the fallback."""
+    from edspdf_spark.operators import dedup
+    from edspdf_spark.operators.components import dedup_keep_list
+    from edspdf_spark.plans import gate
+
+    df = _near_corpus(spark, name)
+    calls = []
+    orig = dedup.lsh_candidates
+    monkeypatch.setattr(dedup, "lsh_candidates",
+                        lambda *a: calls.append(1) or orig(*a))
+
+    def run():
+        pairs = dedup.minhash_lsh_pairs(df, k=3, n_hashes=8, band_size=2,
+                                        threshold=0.5)
+        keep = dedup_keep_list(df, pairs)
+        return (sorted(map(tuple, pairs.collect()), key=repr),
+                sorted(map(tuple, keep.collect()), key=repr))
+
+    drv = run()
+    assert bool(calls) == (name == "one_big_bucket")
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+        m.setattr(gate, "EDGE_MAX_ROWS", 0)
+        dist = run()
+    assert drv == dist
+    pairs, keep = drv
+    assert bool(pairs) == (name != "empty")
+    if name == "one_big_bucket":
+        assert len(pairs) == 710 * 709 // 2
+
+
+def test_dedup_components_job_count(spark):
+    """The near-dup chain plus its keep-list is one driver pass: at
+    most 12 Spark jobs for q_dedup_components at sf0.01 (the
+    distributed chain ran 29)."""
+    from test_entry_contract import SF_DIR
+
+    import __spark_entry__ as entry_mod
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.setJobGroup("q_dedup_components", "job count")
+    try:
+        entry_mod.q_dedup_components(spark, SF_DIR).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("q_dedup_components")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= 12, jobs
+
+
+def test_dedup_components_leaves_no_cache(spark):
+    """q_dedup_components owns its storage: the persistent RDD set is
+    the same before and after the query runs."""
+    from test_entry_contract import SF_DIR
+
+    import __spark_entry__ as entry_mod
+
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert entry_mod.q_dedup_components(spark, SF_DIR).count()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
 
 
 # --- Python twins of the portable text primitives --------------------------

@@ -642,8 +642,9 @@ def test_shingle_cap_bounded_distinct_exchanges(spark, monkeypatch):
 
 
 # persists with no owner in their function, by (module, function, name).
-# minhash_lsh_pairs returns a plan that reads `cand` lazily, so it
-# cannot release it; giving it an owner is ROADMAP #3.
+# minhash_lsh_pairs persists `cand` only on its distributed fallback,
+# whose returned plan reads it lazily, so it cannot release it there;
+# the driver pass leaves no cache behind.
 _UNOWNED_PERSISTS = {("operators/dedup.py", "minhash_lsh_pairs", "cand")}
 
 

@@ -134,3 +134,22 @@ def test_process_doc_markdown():
     rows = process_doc("u", synth.make_pdf_bytes(7), cfg)
     body = [r for r in rows if r[1] == "body"]
     assert body and ("**" in body[0][2] or "_" in body[0][2])
+
+
+def test_process_doc_maps_pdf_branch_exception_to_error_row(monkeypatch):
+    """A kernel exception the PDF branch did not anticipate becomes the
+    error row instead of failing the task; HTML docs never enter it."""
+    from edspdf_spark.operators import fused
+
+    def boom(*a, **k):
+        raise IndexError("unexpected")
+
+    monkeypatch.setattr(fused, "extract_doc", boom)
+    cfg = PipelineConfig(masks=KERNEL_MASKS, threshold=0.1)
+    pdf = synth.make_pdf_bytes(7)
+    assert process_doc("u", pdf, cfg) == [
+        ("u", None, None, [], True, 0, 0, len(pdf), -1)]
+    html = (b"<html><body><p>" + b"plain words here " * 20
+            + b"</p></body></html>")
+    rows = process_doc("h", html, cfg)
+    assert len(rows) == 1 and rows[0][1] == "body" and not rows[0][4]
