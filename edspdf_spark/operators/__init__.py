@@ -8,5 +8,5 @@ from .extractor import blocs, doc_summaries, extract  # noqa: F401
 from .fused import PipelineConfig, process_doc, run_fused  # noqa: F401
 from .multimodal import binary_metadata, extract_features  # noqa: F401
 from .simsearch import brute_force_topk, cosine_bucket_pairs  # noqa: F401
-from .trainable import (bloc_features, classify_batched,  # noqa: F401
-                        classify_native, train)
+from .trainable import (bloc_features, classify_native,  # noqa: F401
+                        train)

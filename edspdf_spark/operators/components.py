@@ -174,11 +174,7 @@ def keep_best_per_cluster(corpus: DataFrame, pairs: DataFrame,
     one component-keyed aggregation of (component, best) pairs, one
     join back on component.
     """
-    comp = connected_components(pairs)
-    all_ids = corpus.select(F.col(id_col).alias("id"))
-    labeled = (all_ids.join(comp, "id", "left")
-               .withColumn("component",
-                           F.coalesce(F.col("component"), F.col("id"))))
+    labeled = dedup_keep_list(corpus, pairs, id_col).drop("keep")
     sc = scores.select(F.col(id_col).alias("id"),
                        F.col("score").cast("bigint").alias("score"))
     j = labeled.join(sc, "id")

@@ -8,20 +8,24 @@ simhash and passage cutting run as Arrow-batched Python kernels
 (plans/salt.doc_map), never per-row UDFs:
 
 * exact_dedup        — hash-groupBy on md5(text)
-* jaccard_pairs      — word-k-shingle self-join with exact Jaccard
+* jaccard_pairs      — word-k-shingle pair count with exact Jaccard
 * minhash_lsh_pairs  — shingle->minhash->band->bucket-join->verify
 * simhash            — n-bit fingerprint from token-hash bit voting
 
 Scale notes (100 TB framing):
 - exact dedup shuffles once on the 15-byte hash, not the text.
-- the shingle self-join's blowup is bounded by document frequency of
-  a shingle; `max_doc_freq` drops stop-shingles (the classic "common
-  shingle" guard) BEFORE the join, which also kills the skew.
+- the pair operators (jaccard_pairs, containment_pairs) have one
+  formulation per side: within the driver gate the broadcast-postings
+  kernel, beyond it the shingle self-join _pair_join, whose blowup is
+  bounded by document frequency of a shingle; `max_doc_freq` drops
+  stop-shingles (the classic "common shingle" guard) BEFORE the join,
+  which also kills the skew.
 - MinHash/LSH replaces the all-pairs join with per-band equality
-  joins on tiny signatures; candidate verification re-joins the
-  (pruned) shingle sets only for candidate pairs. Within the driver
-  gate the whole chain is one numpy pass on the driver instead: at
-  that size per-job framing, not per-row work, is the cost.
+  joins on tiny signatures; candidate verification runs jaccard_pairs
+  on the (pruned) shingle sets of candidate documents only. Within
+  the driver gate the whole chain is one numpy pass on the driver
+  instead: at that size per-job framing, not per-row work, is the
+  cost.
 - simhash is one doc-local map, no shuffle; near-dup lookup joins on the
   top bits (band) so the pair space never materializes globally.
 """
@@ -223,6 +227,7 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
         names = ["id_src", "id_dst", "inter", "size_src", "size_dst",
                  "containment"]
     pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
+    types = [pa_id, pa_id] + [pa.int64()] * 3 + [pa.float64()]
 
     block = 4096
 
@@ -256,46 +261,31 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
                     cand, cnt = cand[m], cnt[m]
                     if not cand.size:
                         continue
-                    sz_c = szs[cand]
-                    sz_d = szs[d]
+                    sz_c, sz_d = szs[cand], szs[d]
                     if mode == "jaccard":
-                        jac = cnt / (sz_c + sz_d - cnt)
-                        m = jac >= threshold
+                        den = sz_c + sz_d - cnt
+                        # repeated ids with equal row multisets leave
+                        # no denominator: the pair is dropped, as in
+                        # _pair_join and _minhash_driver
+                        ok = den > 0
+                        cand, cnt = cand[ok], cnt[ok]
+                        parts = [(cand, d, cnt / den[ok])]
+                    else:  # src = smaller id, then src = larger id
+                        parts = [(cand, d, cnt / sz_c),
+                                 (d, cand, cnt / sz_d)]
+                    for src, dst, ratio in parts:
+                        m = ratio >= threshold
                         if not m.any():
                             continue
-                        cols[0].extend(u_ids[cand[m]].tolist())
-                        cols[1].extend([u_ids[d]] * int(m.sum()))
-                        cols[2].extend(cnt[m].tolist())
-                        cols[3].extend(sz_c[m].tolist())
-                        cols[4].extend([int(sz_d)] * int(m.sum()))
-                        cols[5].extend(jac[m].tolist())
-                    else:
-                        fwd = cnt / sz_c          # src = smaller id
-                        rev = cnt / sz_d          # src = larger id
-                        mf = fwd >= threshold
-                        if mf.any():
-                            cols[0].extend(u_ids[cand[mf]].tolist())
-                            cols[1].extend([u_ids[d]] * int(mf.sum()))
-                            cols[2].extend(cnt[mf].tolist())
-                            cols[3].extend(sz_c[mf].tolist())
-                            cols[4].extend([int(sz_d)] * int(mf.sum()))
-                            cols[5].extend(fwd[mf].tolist())
-                        mr = rev >= threshold
-                        if mr.any():
-                            cols[0].extend([u_ids[d]] * int(mr.sum()))
-                            cols[1].extend(u_ids[cand[mr]].tolist())
-                            cols[2].extend(cnt[mr].tolist())
-                            cols[3].extend([int(sz_d)] * int(mr.sum()))
-                            cols[4].extend(sz_c[mr].tolist())
-                            cols[5].extend(rev[mr].tolist())
+                        src = np.broadcast_to(src, m.shape)[m]
+                        dst = np.broadcast_to(dst, m.shape)[m]
+                        for col, vals in zip(cols, (
+                                u_ids[src], u_ids[dst], cnt[m],
+                                szs[src], szs[dst], ratio[m])):
+                            col.extend(vals.tolist())
                 if cols[0]:
                     yield pa.RecordBatch.from_arrays(
-                        [pa.array(cols[0], pa_id),
-                         pa.array(cols[1], pa_id),
-                         pa.array(cols[2], pa.int64()),
-                         pa.array(cols[3], pa.int64()),
-                         pa.array(cols[4], pa.int64()),
-                         pa.array(cols[5], pa.float64())],
+                        [pa.array(c, t) for c, t in zip(cols, types)],
                         names=names)
 
     n_blocks = max(1, -(-n_docs // block))
@@ -322,20 +312,24 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
 
     Within PAIR_DRIVER_MAX_BYTES (in-memory bytes of the shingle
     table) the pair space is counted by the broadcast-postings kernel
-    and filtered in-task; beyond it, the capped self-join in
-    _jaccard_join is the scale path."""
+    and filtered in-task; beyond it, the capped self-join _pair_join
+    is the scale path. A pair whose denominator is not positive (ids
+    repeated with equal row multisets) is dropped on both paths."""
     fast = _pairs_via_postings(shingles, max_doc_freq, "jaccard",
                                threshold, min_intersect)
     if fast is not None:
         return fast
-    return _jaccard_join(shingles, threshold, min_intersect, max_doc_freq)
+    den = F.col("size_a") + F.col("size_b") - F.col("inter")
+    return (_pair_join(shingles, min_intersect, max_doc_freq)
+            .withColumn("jaccard", F.when(den > 0, F.col("inter") / den))
+            .where(F.col("jaccard") >= threshold))
 
 
-def _jaccard_join(shingles: DataFrame, threshold: float,
-                  min_intersect: int,
-                  max_doc_freq: Optional[int]) -> DataFrame:
-    """jaccard_pairs' distributed formulation: the capped shingle
-    self-join, one reused code exchange."""
+def _pair_join(shingles: DataFrame, min_intersect: int,
+               max_doc_freq: Optional[int]) -> DataFrame:
+    """The pair operators' distributed formulation: the capped shingle
+    self-join on one reused code exchange, (id_a, id_b, inter, size_a,
+    size_b) per pair id_a < id_b with inter >= min_intersect."""
     shingles = _cap_doc_freq(shingles, max_doc_freq)
     sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
     a = shingles.select(F.col("id").alias("id_a"), "code")
@@ -345,15 +339,12 @@ def _jaccard_join(shingles: DataFrame, threshold: float,
              .groupBy("id_a", "id_b")
              .agg(F.count("*").alias("inter"))
              .where(F.col("inter") >= min_intersect))
-    out = (inter
-           .join(sizes.withColumnRenamed("id", "id_a")
-                 .withColumnRenamed("sz", "size_a"), "id_a")
-           .join(sizes.withColumnRenamed("id", "id_b")
-                 .withColumnRenamed("sz", "size_b"), "id_b"))
-    jac = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    return (out.withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard"))
+    return (inter
+            .join(sizes.withColumnRenamed("id", "id_a")
+                  .withColumnRenamed("sz", "size_a"), "id_a")
+            .join(sizes.withColumnRenamed("id", "id_b")
+                  .withColumnRenamed("sz", "size_b"), "id_b")
+            .select("id_a", "id_b", "inter", "size_a", "size_b"))
 
 
 def minhash_signatures(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
@@ -394,37 +385,37 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     driver gate, one driver pass (_minhash_driver).
 
     The distributed fallback verifies only shingles of documents in
-    some candidate pair (leftsemi prune). It reuses the persisted
-    shingle table up to 7 times (signature build, one join per LSH
-    band, both sides + sizes of the verification) and persists the
-    signatures and `cand` (read by the prune and the final join).
-    When its verification runs on the driver, the returned plan reads
-    only `cand`, so the shingles and signatures are released and
-    `cand` stays cached for that plan."""
+    some candidate pair (leftsemi prune) through jaccard_pairs. The
+    call owns both of its caches and releases them before returning:
+    the shingle table (read by the driver gate, the signature build
+    and the verification) and `cand` (read by the prune and the final
+    join). The returned pairs are an eager local checkpoint, so they
+    outlive both."""
     sh = shingle_table(df, id_col, text_col, k, max_doc_freq).persist()
-    fast = _minhash_driver(sh, n_hashes, band_size, threshold)
-    if fast is not None:
+    cand = None
+    try:
+        fast = _minhash_driver(sh, n_hashes, band_size, threshold)
+        if fast is not None:
+            return fast
+        cand = lsh_candidates(minhash_signatures(sh, n_hashes),
+                              band_size).persist()
+        cand_ids = (cand.select(F.col("id_a").alias("id"))
+                    .unionByName(cand.select(F.col("id_b").alias("id")))
+                    .distinct())
+        # max_doc_freq=None: the verification input is leftsemi-pruned
+        # to candidate documents only (bounded by construction), and
+        # the verified jaccard must be over the SAME shingle universe
+        # the signatures were built from — corpus-level capping happens
+        # via this function's own max_doc_freq at shingle_table time
+        verified = jaccard_pairs(sh.join(cand_ids, "id", "leftsemi"),
+                                 threshold, 1, None)
+        return (cand.join(verified, ["id_a", "id_b"])
+                .select("id_a", "id_b", "jaccard")
+                .localCheckpoint(eager=True))
+    finally:
         sh.unpersist()
-        return fast
-    sigs = minhash_signatures(sh, n_hashes).persist()
-    cand = lsh_candidates(sigs, band_size).persist()
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    sh_cand = sh.join(cand_ids, "id", "leftsemi")
-    # max_doc_freq=None: the verification input is leftsemi-pruned to
-    # candidate documents only (bounded by construction), and the
-    # verified jaccard must be over the SAME shingle universe the
-    # signatures were built from — corpus-level capping happens via
-    # this function's own max_doc_freq at shingle_table time
-    verified = _pairs_via_postings(sh_cand, None, "jaccard", threshold, 1)
-    if verified is None:
-        verified = _jaccard_join(sh_cand, threshold, 1, None)
-    else:
-        sh.unpersist()
-        sigs.unpersist()
-    return (cand.join(verified, ["id_a", "id_b"])
-            .select("id_a", "id_b", "jaccard"))
+        if cand is not None:
+            cand.unpersist()
 
 
 def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
@@ -477,8 +468,12 @@ def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
         q = np.repeat(xb * n_codes, r) + packed[pos] % n_codes
         hits = np.searchsorted(packed, q, "right") - np.searchsorted(packed, q)
         inter[lo:lo + step] = np.add.reduceat(hits, seg)
+    # a pair with no positive denominator (ids repeated with equal
+    # row multisets) is dropped, as in jaccard_pairs
+    ok = (inter >= 1) & (sizes[a] + sizes[b] > inter)
+    a, b, inter = a[ok], b[ok], inter[ok]
     jac = inter / (sizes[a] + sizes[b] - inter)
-    keep = (inter >= 1) & (jac >= threshold)
+    keep = jac >= threshold
     pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
     return sh.sparkSession.createDataFrame(pa.table({
         "id_a": pa.array(ids[a[keep]], pa_id),
@@ -815,35 +810,21 @@ def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
     containment -> 1). Emits DIRECTIONAL rows (id_src, id_dst, inter,
     size_src, size_dst, containment) with containment >= threshold.
 
-    Same scale shape as jaccard_pairs: one shingle self-join behind
-    the DEFAULT-ON max_doc_freq stop-shingle/skew guard (sizes are
+    Same scale shape as jaccard_pairs: within PAIR_DRIVER_MAX_BYTES
+    the broadcast-postings kernel counts and filters the pair space
+    in-task; beyond it, _pair_join's capped self-join behind the
+    DEFAULT-ON max_doc_freq stop-shingle/skew guard (sizes are
     computed after the drop; None opts out for inputs bounded by
-    construction), intersections computed once per unordered pair and
-    fanned into both directions after aggregation — the direction
-    fan-out happens on pair rows, never on shingle rows.
-
-    Within PAIR_DRIVER_MAX_BYTES the broadcast-postings kernel counts
-    and filters the pair space in-task; beyond it, the capped
-    self-join below is the scale path.
+    construction) is the scale path. Intersections are computed once
+    per unordered pair and fanned into both directions after
+    aggregation — the direction fan-out happens on pair rows, never
+    on shingle rows.
     """
     fast = _pairs_via_postings(shingles, max_doc_freq, "containment",
                                threshold, min_intersect)
     if fast is not None:
         return fast
-    shingles = _cap_doc_freq(shingles, max_doc_freq)
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
-    a = shingles.select(F.col("id").alias("id_a"), "code")
-    b = shingles.select(F.col("id").alias("id_b"), "code")
-    inter = (a.join(b, "code")
-             .where(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("inter"))
-             .where(F.col("inter") >= min_intersect))
-    j = (inter
-         .join(sizes.withColumnRenamed("id", "id_a")
-               .withColumnRenamed("sz", "size_a"), "id_a")
-         .join(sizes.withColumnRenamed("id", "id_b")
-               .withColumnRenamed("sz", "size_b"), "id_b"))
+    j = _pair_join(shingles, min_intersect, max_doc_freq)
     fwd = j.select(F.col("id_a").alias("id_src"),
                    F.col("id_b").alias("id_dst"), "inter",
                    F.col("size_a").alias("size_src"),

@@ -10,8 +10,7 @@ torch (absent in this environment):
 * inference = SPARK-NATIVE: the tiny weight matrix is inlined as
   literal column expressions (w·x + b per class, argmax via a
   greatest/when chain), so scoring runs inside whole-stage codegen
-  with no Python at all. A mapInPandas variant exists for wide label
-  vocabularies.
+  with no Python at all.
 
 The artifact is a plain dict (labels, W, b) — JSON-serializable, the
 --py-files-friendly analog of the reference's safetensors dir
@@ -20,7 +19,7 @@ The artifact is a plain dict (labels, W, b) — JSON-serializable, the
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -110,21 +109,3 @@ def classify_native(blocs: DataFrame, model: Dict) -> DataFrame:
         best_score = F.when(cond, F.col(f"_s{j}")).otherwise(best_score)
     out = scored.withColumn("label", best_label)
     return out.drop(*[f"_s{j}" for j in range(len(labels))])
-
-
-def classify_batched(blocs: DataFrame, model: Dict) -> DataFrame:
-    """mapInPandas variant for wide label vocabularies (the executor
-    holds the weights once per worker, scores whole Arrow batches)."""
-    import pandas as pd
-
-    schema_out = blocs.drop("label").withColumn("label", F.lit("")).schema
-    in_cols = [f.name for f in schema_out.fields if f.name != "label"]
-
-    def fn(batches):
-        for pdf in batches:
-            pdf = pdf[in_cols].copy()
-            pdf["label"] = predict_np(model, pdf) if len(pdf) else \
-                pd.Series([], dtype=str)
-            yield pdf
-
-    return blocs.mapInPandas(fn, schema=schema_out)

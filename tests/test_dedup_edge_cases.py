@@ -388,6 +388,14 @@ def test_minhash_lsh_releases_shingles_and_signatures(spark):
 
 # --- near-dup chain: one driver pass vs the distributed chain --------------
 
+_EQUAL_MULTISET_ROWS = [
+    (7, "the quick brown fox jumps over the lazy dog again"),
+    (7, "the quick brown fox jumps over the lazy dog again"),
+    (8, "the quick brown fox jumps over the lazy dog again"),
+    (8, "the quick brown fox jumps over the lazy dog again"),
+    (9, "the quick brown fox jumps over the lazy dog once")]
+
+
 def _near_corpus(spark, name):
     """(doc_id, text) inputs for the driver/distributed equality."""
     from test_entry_contract import SF_DIR
@@ -407,6 +415,8 @@ def _near_corpus(spark, name):
         # id 7 twice: its rows are both texts' shingles, still pairing
         "duplicated_id": [(7, base[0]), (7, base[2]), (8, base[1]),
                           (9, base[3]), (10, base[0])],
+        # ids 7 and 8 repeat equal rows: their Jaccard denominator is 0
+        "equal_multiset_ids": _EQUAL_MULTISET_ROWS,
         "null_id": [(None, base[0]), (1, base[1]), (2, base[0]),
                     (3, base[2]), (None, base[3])],
         "short_docs": [(0, ""), (1, "hello"), (2, "hello world"),
@@ -421,8 +431,9 @@ def _near_corpus(spark, name):
 
 
 @pytest.mark.parametrize("name", ["corpus_near", "string_ids",
-                                  "duplicated_id", "null_id", "short_docs",
-                                  "empty", "one_big_bucket"])
+                                  "duplicated_id", "equal_multiset_ids",
+                                  "null_id", "short_docs", "empty",
+                                  "one_big_bucket"])
 def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
                                                        name):
     """minhash_lsh_pairs and dedup_keep_list give the same rows on the
@@ -457,6 +468,45 @@ def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
     assert bool(pairs) == (name != "empty")
     if name == "one_big_bucket":
         assert len(pairs) == 710 * 709 // 2
+    if name == "equal_multiset_ids":
+        assert {p[:2] for p in pairs} == {(7, 9), (8, 9)}
+
+
+def test_equal_multiset_ids_jaccard_matches_refused_gate(spark, monkeypatch):
+    """Two ids repeating equal row multisets have size_a + size_b -
+    inter == 0: the postings kernel and the refused gate's self-join
+    both drop that pair (no inf, no DIVIDE_BY_ZERO) and agree on the
+    rest, bit for bit."""
+    from edspdf_spark.operators import dedup
+
+    df = spark.createDataFrame(_EQUAL_MULTISET_ROWS,
+                               "doc_id long, text string")
+    sh = dedup.shingle_table(df, k=3)
+
+    def run():
+        return {tuple(r) for r in dedup.jaccard_pairs(
+            sh, threshold=0.0, max_doc_freq=None).collect()}
+
+    postings = run()
+    monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+    assert run() == postings
+    assert {r[:2] for r in postings} == {(7, 9), (8, 9)}
+
+
+def test_minhash_fallback_leaves_no_cache(spark, monkeypatch):
+    """With both driver gates refused, minhash_lsh_pairs releases every
+    Dataset it cached: the CacheManager is empty after the call, and
+    the returned pairs still read."""
+    from edspdf_spark.operators import dedup
+    from edspdf_spark.plans import gate
+
+    monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+    monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
+    df = _near_corpus(spark, "duplicated_id")
+    spark.catalog.clearCache()
+    pairs = dedup.minhash_lsh_pairs(df, k=3, threshold=0.5)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert pairs.count()
 
 
 def test_dedup_components_job_count(spark):

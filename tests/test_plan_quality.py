@@ -641,13 +641,6 @@ def test_shingle_cap_bounded_distinct_exchanges(spark, monkeypatch):
     assert reused >= 1, plan.toString()
 
 
-# persists with no owner in their function, by (module, function, name).
-# minhash_lsh_pairs persists `cand` only on its distributed fallback,
-# whose returned plan reads it lazily, so it cannot release it there;
-# the driver pass leaves no cache behind.
-_UNOWNED_PERSISTS = {("operators/dedup.py", "minhash_lsh_pairs", "cand")}
-
-
 def test_every_persist_is_released_by_its_function():
     """Static cache-ownership guard: in every function under
     edspdf_spark/, a name bound to `<expr>.persist()` / `.cache()`, or
@@ -683,4 +676,4 @@ def test_every_persist_is_released_by_its_function():
                       and isinstance(node.func.value, ast.Name)):
                     released.add(node.func.value.id)
             unowned |= {(module, fn.name, n) for n in cached - released}
-    assert unowned == _UNOWNED_PERSISTS
+    assert unowned == set()

@@ -7,7 +7,6 @@ import pytest
 from edspdf_spark import synth
 from edspdf_spark.operators import blocs, extract
 from edspdf_spark.operators.trainable import (bloc_features,
-                                              classify_batched,
                                               classify_native, predict_np,
                                               train)
 
@@ -47,18 +46,6 @@ def test_native_inference_matches_numpy(spark, featurized, gold):
     ref = gold.sort_values(["url", "page_num", "order_idx"]).reset_index(drop=True)
     want = predict_np(model, ref)
     assert (got["label"].to_numpy() == want).all()
-
-
-def test_batched_inference_matches_native(spark, featurized, gold):
-    model = train(gold)
-    a = classify_native(featurized, model).select(
-        "url", "page_num", "order_idx", "label").toPandas()
-    b = classify_batched(featurized, model).select(
-        "url", "page_num", "order_idx", "label").toPandas()
-    key = ["url", "page_num", "order_idx"]
-    merged = a.merge(b, on=key, suffixes=("_n", "_b"))
-    assert len(merged) == len(a)
-    assert (merged["label_n"] == merged["label_b"]).all()
 
 
 def test_native_plan_is_codegen_only(spark, featurized, gold):
