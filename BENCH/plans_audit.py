@@ -26,7 +26,9 @@ catches drift (a new Exchange shows up as a diff in the committed
 table).
 
 Usage: python BENCH/plans_audit.py   (analysis only — plans are
-compiled, nothing executes; safe to run alongside other work)
+compiled, nothing executes; safe to run alongside other work).
+Drift check against the committed table:
+    python BENCH/plans_audit.py && git diff --exit-code BENCH/PLANS.md
 """
 
 from __future__ import annotations

@@ -42,9 +42,9 @@ def code15_sql(expr: str) -> str:
 
 
 def tokens(text_col) -> Column:
-    """Whitespace tokens, empties dropped (portable: split on single
-    space + filter, NOT a regex — regex dialects differ)."""
-    return F.filter(F.split(text_col, " "), lambda t: t != "")
+    """Whitespace tokens, empties dropped (split on single space, NOT a
+    regex: dialects differ; array_remove, not an interpreted lambda)."""
+    return F.array_remove(F.split(text_col, " "), "")
 
 
 def tokens_py(text: str) -> list:

@@ -821,53 +821,50 @@ def lm_perplexity_buckets(df: DataFrame, id_col: str = "doc_id",
 
     Output: (id, n_bigrams, logq, avg_logq, bucket).
 
-    Scale shape: unigram/bigram count tables are vocab-sized (tiny vs
-    the corpus) and broadcast back; the only corpus-scale shuffle is
-    the per-doc groupBy(id) partial-aggregated sum.
+    Scale shape: one codegen posexplode_outer to (id, w0, w1) token
+    rows; one count table (c2 per bigram, c1 per unigram) combined
+    map-side by a rollup before its only exchange, broadcast once and
+    probed twice by the per-doc groupBy(id), which also counts each
+    id's input rows to replay them: no join back to the input.
     """
-    from pyspark.sql import Window
-
-    from edspdf_spark.plans.salt import spread_compute
-
-    base = spread_compute(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk"))
-    n = F.size(F.col("tk"))
-    m = F.greatest(F.lit(0), n - 1)
-    z = F.arrays_zip(F.slice(F.col("tk"), 1, m).alias("w0"),
-                     F.slice(F.col("tk"), 2, m).alias("w1"))
-    bg = base.select(
-        "id", F.explode(z).alias("s")).select(
-        "id", F.col("s.w0").alias("w1"),
-        F.concat_ws(" ", F.col("s.w0"), F.col("s.w1")).alias("bg"))
-    c1 = (base.select(F.explode("tk").alias("w"))
-          .groupBy("w").agg(F.count("*").alias("c1")))
-    c2 = bg.groupBy("bg").agg(F.count("*").alias("c2"))
-    ilog2 = lambda c: F.length(F.bin(c)) - 1  # noqa: E731
-    sc = (bg.join(F.broadcast(c1), bg["w1"] == c1["w"])
-          .join(F.broadcast(c2), "bg")
-          .select("id", (ilog2(F.col("c2")) - ilog2(F.col("c1")))
-                  .alias("lp")))
-    agg = (sc.groupBy("id")
-           .agg(F.count("*").alias("nb"), F.sum("lp").alias("lq")))
-    j = (base.select("id").join(agg, "id", "left")
-         .select(
-             "id",
-             F.coalesce(F.col("nb"), F.lit(0)).cast("bigint")
-             .alias("n_bigrams"),
-             F.col("lq").cast("bigint").alias("logq"),
-             F.when(F.col("nb") > 0,
-                    F.col("lq").cast("double") / F.col("nb"))
-             .alias("avg_logq")))
+    # a row per token (w0, successor w1 or "") or ("", "") for a text
+    # with no token; pos 0 / NULL starts an input row. SQL strings where
+    # they fit: every Column node is a py4j round trip at build time
+    pos = (df.select(F.col(id_col).alias("id"),
+                     tokens(F.col(text_col)).alias("tk"))
+           .select("id", F.posexplode_outer(F.arrays_zip(
+               F.col("tk").alias("w0"),
+               F.slice("tk", 2, F.size("tk")).alias("w1"))))
+           .selectExpr("id", "coalesce(col.w0, '') AS w0",
+                       "coalesce(col.w1, '') AS w1",
+                       "coalesce(pos, 0) = 0 AS start")
+           .selectExpr("*", "concat_ws(' ', w0, w1) AS bg"))
+    # ONE count table keyed "w0 w1" -> c2, "w0" -> c1 (tokens hold no
+    # space; the "" after a doc's last token makes c1 the unigram count)
+    cnt = pos.rollup("w0", "bg").agg(F.expr("count(1) AS c")).selectExpr(
+        "coalesce(bg, w0) AS key", "c")
+    c2, c1 = F.broadcast(cnt).alias("c2"), F.broadcast(cnt).alias("c1")
+    # each probe finds its own row's count: the inner joins drop none
+    hit = "w1 != '' AND id IS NOT NULL"
+    j = (pos.join(c2, F.expr("bg = c2.key"))
+         .join(c1, F.expr("w0 = c1.key")).groupBy("id")
+         .agg(*map(F.expr, [
+             f"count_if({hit}) AS nb", "count_if(start) AS n_rows",
+             f"sum(IF({hit}, length(bin(c2.c)) - length(bin(c1.c)), "
+             "NULL)) AS lq"]))
+         .selectExpr("id", "nb AS n_bigrams", "lq AS logq",
+                     "IF(nb > 0, lq / nb, NULL) AS avg_logq",
+                     "explode(array_repeat(0, CAST(n_rows AS INT)))")
+         .drop("col"))
     if cutoffs is not None:
         hi, lo = cutoffs
         bucket = (F.when(F.col("avg_logq") >= hi, "head")
                   .when(F.col("avg_logq") >= lo, "middle")
                   .otherwise("tail"))
     else:
-        w = Window.orderBy(F.desc_nulls_last("avg_logq"), F.asc("id"))
-        t = F.ntile(3).over(w)
-        bucket = (F.when(t == 1, "head").when(t == 2, "middle")
-                  .otherwise("tail"))
+        bucket = F.expr("CASE ntile(3) OVER (ORDER BY avg_logq DESC NULLS "
+                        "LAST, id) WHEN 1 THEN 'head' WHEN 2 THEN 'middle' "
+                        "ELSE 'tail' END")
     return j.select("id", "n_bigrams", "logq", "avg_logq",
                     bucket.alias("bucket"))
 

@@ -55,7 +55,8 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
 def shingle_table(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", k: int = 3,
                   max_doc_freq: Optional[int] = None) -> DataFrame:
-    """(id, shingle_code) rows, one per DISTINCT shingle per doc.
+    """(id, shingle_code) rows, one per DISTINCT shingle per input
+    row (a repeated id's rows make a multiset, see jaccard_pairs).
     max_doc_freq drops shingles appearing in more than that many docs
     (stop-shingle + skew guard applied before any join).
 
@@ -302,7 +303,8 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
     size_b, jaccard) for pairs with jaccard >= threshold.
 
     jaccard = inter / (size_a + size_b - inter): integer inputs, so
-    the double division is bit-identical across engines.
+    the double division is bit-identical across engines. A repeated
+    id's rows are a multiset, so its jaccard can exceed 1.
 
     max_doc_freq (DEFAULT ON) drops shingles appearing in more than
     that many documents before the self-join — set sizes are computed
@@ -382,7 +384,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       max_doc_freq: Optional[int] = None) -> DataFrame:
     """Full near-dup chain: shingle -> minhash -> LSH bucket join ->
     exact-Jaccard verification of the candidates only; within the
-    driver gate, one driver pass (_minhash_driver).
+    driver gate, one driver pass (_minhash_driver). A repeated id's
+    rows are a multiset, as in jaccard_pairs: jaccard can exceed 1.
 
     The distributed fallback verifies only shingles of documents in
     some candidate pair (leftsemi prune) through jaccard_pairs. The

@@ -1,13 +1,12 @@
-"""Retrieval-prep operators: positional inverted index construction
-and windowed co-occurrence (PMI) statistics — the two classic
-corpus-to-index workloads (search indexing; word-vector / collocation
-prep).
+"""Retrieval-prep operators: positional inverted index construction,
+windowed co-occurrence (PMI) statistics and BM25 retrieval.
 
-Both are shuffle-on-term plans with map-side partial aggregation: the
-corpus explodes to token rows ONCE, aggregates to (term, doc) /
-(pair) granularity before any exchange carries raw text, and every
-score is integer-quantized (md5-prefix codes, bin-length log2) so the
-DuckDB oracles match bit-for-bit.
+Index and PMI are shuffle-on-term plans with map-side partial
+aggregation: the corpus explodes to token rows ONCE, aggregates to
+(term, doc) / (pair) granularity before any exchange carries raw
+text; BM25 never explodes (one row of counts per doc). Every score is
+integer-quantized (md5-prefix codes, bin-length log2) so the DuckDB
+oracles match bit-for-bit.
 """
 
 from __future__ import annotations
@@ -120,45 +119,45 @@ def bm25_topk(df: DataFrame, query_terms, top_k: int = 10,
     the oracle. Quantization changes scores by <0.1% vs float BM25;
     ranking ties break by doc_id.
 
-    Shape: the corpus explodes once to (term, doc) aggregates
-    (shuffle 1, map-side combined); query terms, df counts and
-    corpus stats are all broadcast; top-k is a single ungrouped
-    window over only the scored candidates (docs hitting >= 1 query
-    term — a tiny fraction of the corpus for realistic queries).
+    Shape: no token explode. One codegen row per input row carries dl
+    and one tf per query term, summed per doc_id (shuffle 1, map-side
+    combined; a repeated id sums its rows); n_docs, total_tokens and
+    every df are one broadcast aggregate; top-k is a single ungrouped
+    window over only the docs hitting >= 1 query term. Per-doc cost
+    is one array pass per query term: a shape for short queries.
     """
-    q = sorted(set(query_terms))
-    base = (df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(tokens(F.col(text_col)))
-                      .alias("term")))
-    dl = base.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.groupBy().agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("total_tokens"))
-    tf = (base.where(F.col("term").isin(q))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    # broadcast the CANDIDATE side into the corpus-sized dl table so
-    # dl never shuffles (candidates = docs hitting a query term — tiny
-    # for selective queries; for stopword-scale terms swap the hint)
-    scored = dl.join(F.broadcast(tf.join(F.broadcast(dfreq), "term")),
-                     "doc_id").join(F.broadcast(stats))
+    terms = sorted(set(query_terms))
+    ix = range(len(terms))
+    # SQL strings, not Column trees: each Column node is a py4j round
+    # trip, and on small inputs building the plan costs about half of
+    # running it. The terms ride as one literal array `q`, folded into
+    # each tf at plan time, so no term is spliced into SQL text.
+    docs = (df.select(F.col(id_col).alias("doc_id"),
+                      tokens(F.coalesce(F.col(text_col), F.lit("")))
+                      .alias("tk"), F.array(*map(F.lit, terms)).alias("q"))
+            .groupBy("doc_id")
+            .agg(*map(F.expr, ["sum(size(tk)) AS dl", *[
+                f"sum(size(tk) - size(array_remove(tk, q[{i}]))) AS tf{i}"
+                for i in ix]]))
+            .where("dl > 0"))
+    stats = docs.selectExpr("count(1) AS n_docs", "sum(dl) AS total_tokens",
+                            *[f"count_if(tf{i} > 0) AS df{i}" for i in ix])
     # n_docs * 2^20 stays under BIGINT range through ~10^12 docs
-    idf = (f"CAST(length(bin((n_docs * {BM25_SCALE}) div df)) - 1 "
+    idf = (f"CAST(length(bin((n_docs * {BM25_SCALE}) div df{{i}})) - 1 "
            f"AS BIGINT)")
     dl_norm = (f"({BM25_K1_MILLI} * (1000 - {BM25_B_MILLI} + "
                f"({BM25_B_MILLI} * dl * n_docs) div total_tokens)) "
                f"div 1000")
-    term_score = (f"({idf}) * ((tf * 1000 * ({BM25_K1_MILLI} + 1000)) "
-                  f"div (tf * 1000 + ({dl_norm})))")
-    scored = scored.withColumn("_ts", F.expr(term_score))
-    agg = (scored.groupBy("doc_id")
-           .agg(F.sum("_ts").alias("score_scaled"),
-                F.count(F.lit(1)).alias("n_hit_terms")))
-    from pyspark.sql import Window
-    wnd = Window.orderBy(F.desc("score_scaled"), F.asc("doc_id"))
-    return (agg.withColumn("rk", F.row_number().over(wnd)
-                           .cast("bigint"))
-            .where(F.col("rk") <= top_k)
-            .select("doc_id", F.col("score_scaled").cast("bigint"),
-                    F.col("n_hit_terms").cast("bigint"), "rk"))
+    term_score = (f"IF(tf{{i}} > 0, ({idf}) * ((tf{{i}} * 1000 * "
+                  f"({BM25_K1_MILLI} + 1000)) div (tf{{i}} * 1000 + "
+                  f"({dl_norm}))), 0)")
+    n_hit = " + ".join([f"CAST(tf{i} > 0 AS BIGINT)" for i in ix] or ["0L"])
+    score = " + ".join([term_score.format(i=i) for i in ix] or ["0L"])
+    # a NULL id counts in stats, is never ranked (one unpushed filter)
+    return (docs.where(f"IF(doc_id IS NULL, 0, {n_hit}) > 0")
+            .join(F.broadcast(stats))
+            .selectExpr("doc_id", f"{score} AS score_scaled",
+                        f"{n_hit} AS n_hit_terms")
+            .selectExpr("*", "CAST(row_number() OVER (ORDER BY "
+                        "score_scaled DESC, doc_id) AS BIGINT) AS rk")
+            .where(f"rk <= {int(top_k)}"))

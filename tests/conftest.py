@@ -23,6 +23,27 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def run_in_job_group(spark):
+    """`run(name, make_df)` builds and collects `make_df()` in a fresh
+    Spark job group, with the cache cleared first (some operators run
+    jobs while planning), and returns (the group's job ids, the
+    adaptive plan's final section)."""
+    def run(name, make_df):
+        sc = spark.sparkContext
+        spark.catalog.clearCache()
+        sc.setJobGroup(name, "job count")
+        try:
+            df = make_df()
+            df.collect()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return jobs, plan.split("== Initial Plan ==")[0]
+    return run
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "requires_reference(*paths): skip, naming the first "

@@ -470,13 +470,14 @@ def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
         assert len(pairs) == 710 * 709 // 2
     if name == "equal_multiset_ids":
         assert {p[:2] for p in pairs} == {(7, 9), (8, 9)}
+        assert (7, 9, 1.4) in pairs  # a repeated id is a multiset
 
 
 def test_equal_multiset_ids_jaccard_matches_refused_gate(spark, monkeypatch):
     """Two ids repeating equal row multisets have size_a + size_b -
     inter == 0: the postings kernel and the refused gate's self-join
     both drop that pair (no inf, no DIVIDE_BY_ZERO) and agree on the
-    rest, bit for bit."""
+    rest, bit for bit, including a ratio above 1."""
     from edspdf_spark.operators import dedup
 
     df = spark.createDataFrame(_EQUAL_MULTISET_ROWS,
@@ -491,6 +492,8 @@ def test_equal_multiset_ids_jaccard_matches_refused_gate(spark, monkeypatch):
     monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
     assert run() == postings
     assert {r[:2] for r in postings} == {(7, 9), (8, 9)}
+    # id 7's two rows are a multiset: 7 shared shingles twice over
+    assert (7, 9, 14, 16, 8, 1.4) in postings
 
 
 def test_minhash_fallback_leaves_no_cache(spark, monkeypatch):
@@ -509,7 +512,7 @@ def test_minhash_fallback_leaves_no_cache(spark, monkeypatch):
     assert pairs.count()
 
 
-def test_dedup_components_job_count(spark):
+def test_dedup_components_job_count(spark, run_in_job_group):
     """The near-dup chain plus its keep-list is one driver pass: at
     most 12 Spark jobs for q_dedup_components at sf0.01 (the
     distributed chain ran 29)."""
@@ -517,14 +520,9 @@ def test_dedup_components_job_count(spark):
 
     import __spark_entry__ as entry_mod
 
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    sc.setJobGroup("q_dedup_components", "job count")
-    try:
-        entry_mod.q_dedup_components(spark, SF_DIR).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("q_dedup_components")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs, _ = run_in_job_group(
+        "q_dedup_components",
+        lambda: entry_mod.q_dedup_components(spark, SF_DIR))
     assert 0 < len(jobs) <= 12, jobs
 
 

@@ -97,3 +97,73 @@ def test_bm25_partition_invariant(spark):
     b = sorted(map(tuple, bm25_topk(df.repartition(9),
                                     ["apple", "banana"]).collect()))
     assert a == b
+
+
+def test_bm25_and_lm_repeated_id_and_empty_edges(spark):
+    """Edge rows both token operators must keep: a repeated id sums
+    its rows into one doc (BM25 ranks it once; the LM reports the id's
+    totals on each of its input rows), and NULL / empty / one-token
+    texts score no bigram but still get an LM row."""
+    from edspdf_spark.operators.analysis import lm_perplexity_buckets
+    from edspdf_spark.operators.index import bm25_topk
+    df = spark.createDataFrame(
+        [(1, "hash join a b"), (1, "window hash c"), (2, "hash x y z"),
+         (3, None), (4, ""), (5, "join")], "doc_id long, text string")
+    got = sorted(map(tuple, bm25_topk(
+        df, ["hash", "join", "window"], top_k=10).collect()))
+    assert got == [(1, 54065, 3, 1), (2, 20000, 1, 3), (5, 28860, 1, 2)]
+    no_bigram = [(3, 0, None, None), (4, 0, None, None),
+                 (5, 0, None, None)]
+    rows = [(1, 5, -3, -0.6)] * 2 + [(2, 3, -1, -1 / 3)] + no_bigram
+    got = sorted(map(tuple, lm_perplexity_buckets(df).collect()))
+    assert got == sorted(
+        r + (b,) for r, b in zip(rows, ["head", "middle", "head",
+                                        "middle", "tail", "tail"]))
+    got = sorted(map(tuple, lm_perplexity_buckets(
+        df, cutoffs=(-0.5, -1.0)).collect()))
+    assert got == sorted(
+        r + (b,) for r, b in zip(rows, ["middle", "middle", "head",
+                                        "tail", "tail", "tail"]))
+
+
+_PY_STAGES = ("EvalPython", "MapInArrow", "MapInPandas", "FlatMapGroups")
+
+
+def test_bm25_topk_job_count(spark, run_in_job_group):
+    """q_bm25_topk at sf0.01 runs at most 5 Spark jobs (the token
+    explode plan ran 13): one codegen row per doc, no Generate, no
+    Python stage."""
+    from test_entry_contract import SF_DIR
+
+    import __spark_entry__ as entry_mod
+
+    jobs, plan = run_in_job_group(
+        "q_bm25_topk", lambda: entry_mod.q_bm25_topk(spark, SF_DIR))
+    assert 0 < len(jobs) <= 5, jobs
+    assert "isFinalPlan=true" in plan, plan
+    assert "Generate" not in plan, plan
+    assert not any(p in plan for p in _PY_STAGES), plan
+
+
+def test_lm_ppl_buckets_job_count(spark, run_in_job_group):
+    """q_lm_ppl_buckets at sf0.01 runs at most 7 Spark jobs (the plan
+    with a base join ran 13), with no Python stage. Its final plan has
+    three Generates: the position explode, once for the per-doc side
+    and once under the count table's one exchange, and the replay of
+    a repeated id's rows. The count table is combined map-side (a
+    partial count over the rollup's Expand) and its one broadcast is
+    reused by the second probe."""
+    from test_entry_contract import SF_DIR
+
+    import __spark_entry__ as entry_mod
+
+    jobs, plan = run_in_job_group(
+        "q_lm_ppl_buckets",
+        lambda: entry_mod.q_lm_ppl_buckets(spark, SF_DIR))
+    assert 0 < len(jobs) <= 7, jobs
+    assert "isFinalPlan=true" in plan, plan
+    assert not any(p in plan for p in _PY_STAGES), plan
+    assert plan.count("Generate posexplode") == 2, plan
+    assert plan.count("Generate ") <= 3, plan
+    assert "Expand" in plan and "partial_count(1)" in plan, plan
+    assert plan.count("ReusedExchange") == 1, plan
