@@ -129,9 +129,10 @@ def main() -> None:
         "leaves, so counts reflect data that actually moves in a",
         "warm-cache run. Drift in this table is a plan regression.",
         "Size-adaptive operators (host_pagerank, host_label_prop,",
-        "the near-dup chain of dedup_minhash_lsh and dedup components)",
-        "compile to a LocalTableScan at this SF -- the sf0.01 shingle",
-        "and edge sets sit under their bytes-aware driver gates; the",
+        "the near-dup family: shingling, the pair counters, the",
+        "minhash chain and dedup components) compile to a",
+        "LocalTableScan at this SF -- the sf0.01 text, shingle and",
+        "edge sets sit under their bytes-aware driver gates; the",
         "distributed plan shapes are pinned by tests (test_graph.py and",
         "test_dedup_edge_cases.py driver/distributed equality, the",
         "gates' caps forced to 0).",

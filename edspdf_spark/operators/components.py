@@ -66,7 +66,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     driver gate's EDGE_MAX_ROWS pair rows AND EDGE_MAX_BYTES in-memory
     bytes (plans.gate.driver_table, measured in-plan, so wide string
     ids route distributed) run exact union-find on the driver, which
-    needs neither symmetric nor distinct edges. Larger sets, and sets
+    needs neither symmetric nor distinct edges; pairs a driver pass
+    built (minhash_lsh_pairs, the one-block postings kernel) are gated
+    from their own table, with no Spark job. Larger sets, and sets
     with a NULL id, build the symmetric distinct edge set and run the
     distributed min-label propagation, whose per-round cost is then
     actually amortized. Both paths produce identical labels.
@@ -76,18 +78,21 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     labels must never masquerade as a correct keep-list."""
     # persist the INPUT first: the gate sizes and collects it, and a
     # refusal reads it in both union branches — pair generation (an
-    # LSH pipeline) is usually far more expensive than the labeling
-    pairs_p = pairs.persist()
+    # LSH pipeline) is usually far more expensive than the labeling.
+    # A local (driver-built) frame is on the driver already: the gate
+    # answers from its table, and caching it would only copy it
+    if not pairs.isLocal():
+        pairs.persist()
     try:
-        table = gate.driver_table(pairs_p.select("id_a", "id_b"),
-                                  gate.EDGE_MAX_ROWS, gate.EDGE_MAX_BYTES)
+        table = gate.driver_table(pairs, gate.EDGE_MAX_ROWS,
+                                  gate.EDGE_MAX_BYTES, ["id_a", "id_b"])
         if table is not None and not any(c.null_count
                                          for c in table.columns):
             return _driver_union_find(table, pairs)
-        edges = (pairs_p.select(F.col("id_a").alias("src"),
-                                F.col("id_b").alias("dst"))
-                 .unionByName(pairs_p.select(F.col("id_b").alias("src"),
-                                             F.col("id_a").alias("dst")))
+        edges = (pairs.select(F.col("id_a").alias("src"),
+                              F.col("id_b").alias("dst"))
+                 .unionByName(pairs.select(F.col("id_b").alias("src"),
+                                           F.col("id_a").alias("dst")))
                  .distinct()
                  .persist())
         try:
@@ -95,7 +100,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         finally:
             edges.unpersist()
     finally:
-        pairs_p.unpersist()
+        pairs.unpersist()
 
 
 def _propagate(edges: DataFrame, max_iter: int) -> DataFrame:

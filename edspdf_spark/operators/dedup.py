@@ -5,7 +5,8 @@ exactly (portable md5-prefix hashing, integer arithmetic only — see
 functions/__init__.py). Joins, aggregations and windows are native
 DataFrame ops (JVM-side, whole-stage codegen); the doc-local shingle,
 simhash and passage cutting run as Arrow-batched Python kernels
-(plans/salt.doc_map), never per-row UDFs:
+(plans/salt.doc_map), never per-row UDFs. Shingling a corpus within
+the text gate runs the same kernel on the driver instead:
 
 * exact_dedup        — hash-groupBy on md5(text)
 * jaccard_pairs      — word-k-shingle pair count with exact Jaccard
@@ -26,6 +27,11 @@ Scale notes (100 TB framing):
   the driver gate the whole chain is one numpy pass on the driver
   instead: at that size per-job framing, not per-row work, is the
   cost.
+- the gated paths chain on the driver: shingle_table within
+  TEXT_DRIVER_MAX_BYTES collects (id, text) once and returns a driver
+  frame (plans.gate.driver_frame), which the pair gate, the minhash
+  pass and connected_components read with no further Spark job, so a
+  small corpus runs the near-dup family with no Python stage at all.
 - simhash is one doc-local map, no shuffle; near-dup lookup joins on the
   top bits (band) so the pair space never materializes globally.
 """
@@ -36,6 +42,7 @@ from typing import Optional
 
 import numpy as np
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -60,12 +67,16 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id",
     max_doc_freq drops shingles appearing in more than that many docs
     (stop-shingle + skew guard applied before any join).
 
-    The explode+hash runs as ONE Arrow kernel (spread over the full
-    core count first — document parquets are small in bytes, so the
-    scan alone gets a handful of tasks and byte heuristics would
-    serialize the CPU-heavy shingling). Values match the codegen and
-    DuckDB forms: functions.tokens, k-token shingles joined with one
-    space, functions.code15."""
+    Within TEXT_DRIVER_MAX_BYTES of (id, text) (plans.gate.driver_table)
+    the input is collected once and shingled in-process, and the rows
+    come back as a driver frame, so the driver pair paths read them
+    with no further job. Beyond it the same kernel runs as ONE Arrow
+    map (plans.salt.doc_map: spread over the full core count first —
+    document parquets are small in bytes, so the scan alone gets a
+    handful of tasks and byte heuristics would serialize the
+    CPU-heavy shingling). Values match the codegen and DuckDB forms:
+    functions.tokens, k-token shingles joined with one space,
+    functions.code15."""
     from ..plans.salt import doc_map
 
     def fn(ids, texts):
@@ -79,10 +90,32 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id",
             out_c += [code15_py(g) for g in grams]
         return out_i, out_c
 
-    sh = doc_map(df, id_col, text_col, fn, "code bigint")
+    table = gate.driver_table(df, None, TEXT_DRIVER_MAX_BYTES,
+                              [id_col, text_col])
+    if table is None:
+        sh = doc_map(df, id_col, text_col, fn, "code bigint")
+    else:
+        ids = table.column(0)
+        out_i, out_c = fn(ids.to_pylist(), table.column(1).to_pylist())
+        sh = gate.driver_frame(df.sparkSession, pa.table({
+            "id": pa.array(out_i, ids.type),
+            "code": pa.array(out_c, pa.int64())}))
     if max_doc_freq is not None:
         sh = _cap_doc_freq(sh, max_doc_freq)
     return sh
+
+
+# gate of shingle_table's in-process path, in (id, text) Arrow bytes
+# (plans.gate.driver_table). Serial driver shingling (~0.13 s per 1,000
+# short docs) beats the distributed map while the Python stage's
+# framing (worker start, task launch, the Arrow round trip) outweighs
+# the per-document work it spreads over the cores. Measured crossover
+# (4-vCPU host, local[4], q_dedup_jaccard / q_dedup_components on the
+# near-dup corpus of sf0.1 prefixes): 551 KB (1,800 docs) 0.62 / 0.78 s
+# on the driver against 0.97 / 0.93 s distributed; 918 KB (3,000 docs)
+# 0.98 / 1.27 s against 1.08 / 1.21 s; sf0.1 (1.8 MB) and above lose
+# on the driver (sf0.1 1.89 / 1.99 s against 1.59 / 1.38 s).
+TEXT_DRIVER_MAX_BYTES = 768 << 10
 
 
 # default hot-shingle cap for the SELF-JOINING pair operators: a
@@ -160,8 +193,18 @@ def _driver_shingles(shingles: DataFrame):
     id_ddl = dict(shingles.dtypes).get("id")
     if id_ddl not in ("bigint", "string"):
         return None
-    table = gate.driver_table(shingles.select("id", "code"), None,
-                              PAIR_DRIVER_MAX_BYTES)
+    # the gate reads its input twice (size, collect): a doc_map table
+    # is cached so that its Python stage runs once
+    owned = (not shingles.isLocal()
+             and shingles.storageLevel == StorageLevel.NONE)
+    if owned:
+        shingles.persist()
+    try:
+        table = gate.driver_table(shingles, None, PAIR_DRIVER_MAX_BYTES,
+                                  ["id", "code"])
+    finally:
+        if owned:
+            shingles.unpersist()
     if table is None:
         return None
     table = table.drop_null()
@@ -177,11 +220,14 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
     """Gated all-pairs intersection counter. Returns the result
     DataFrame, or None when the input exceeds PAIR_DRIVER_MAX_BYTES
     (or has an id type the kernel does not handle) — caller falls
-    back to the join formulation. Semantics replicated exactly: rows
-    are NOT deduplicated (doc frequency and sizes count raw rows, as
-    the join did), ids compare strictly (equal ids never pair), sizes
-    are taken after the doc-frequency drop, and all ratios are the
-    same int64 / float64 IEEE divisions."""
+    back to the join formulation. The kernel runs per block of 4,096
+    docs: one block runs in-process and comes back as a driver frame;
+    more run as one task each against a broadcast of the CSR arrays.
+    Semantics replicated exactly: rows are NOT deduplicated (doc
+    frequency and sizes count raw rows, as the join did), ids compare
+    strictly (equal ids never pair), sizes are taken after the
+    doc-frequency drop, and all ratios are the same int64 / float64
+    IEEE divisions."""
     got = _driver_shingles(shingles)
     if got is None:
         return None
@@ -213,9 +259,8 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
     doc_offsets = np.zeros(n_docs + 1, dtype=np.int64)
     np.cumsum(sizes, out=doc_offsets[1:])
 
-    bc = spark.sparkContext.broadcast(
-        (uniq_ids, sizes, doc_offsets, doc_codes, post_offsets,
-         code_lens, post_docs))
+    arrays = (uniq_ids, sizes, doc_offsets, doc_codes, post_offsets,
+              code_lens, post_docs)
 
     if mode == "jaccard":
         out_schema = (f"id_a {id_ddl}, id_b {id_ddl}, inter bigint, "
@@ -228,71 +273,78 @@ def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
         names = ["id_src", "id_dst", "inter", "size_src", "size_dst",
                  "containment"]
     pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
-    types = [pa_id, pa_id] + [pa.int64()] * 3 + [pa.float64()]
+    schema = pa.schema(zip(names, [pa_id, pa_id] + [pa.int64()] * 3
+                           + [pa.float64()]))
 
     block = 4096
 
-    def fn(batches):
-        (u_ids, szs, d_off, d_codes, p_off, c_lens, p_docs) = bc.value
-        for batch in batches:
-            for b in batch.column(0).to_pylist():
-                lo, hi = b * block, min(n_docs, (b + 1) * block)
-                cols: list = [[] for _ in names]
-                for d in range(lo, hi):
-                    cs = d_codes[d_off[d]:d_off[d + 1]]
-                    if not cs.size:
+    def fn(arrays, blocks):
+        (u_ids, szs, d_off, d_codes, p_off, c_lens, p_docs) = arrays
+        for b in blocks:
+            lo, hi = b * block, min(n_docs, (b + 1) * block)
+            cols: list = [[] for _ in names]
+            for d in range(lo, hi):
+                cs = d_codes[d_off[d]:d_off[d + 1]]
+                if not cs.size:
+                    continue
+                lens = c_lens[cs]
+                total = int(lens.sum())
+                if not total:
+                    continue
+                ends = np.cumsum(lens)
+                idx = (np.arange(total, dtype=np.int64)
+                       + np.repeat(p_off[cs] - (ends - lens), lens))
+                cand, cnt = np.unique(p_docs[idx], return_counts=True)
+                # uniq_ids is sorted, so index order IS id order: keep
+                # strictly-smaller partners only (each unordered pair
+                # is emitted by its larger member)
+                cut = np.searchsorted(cand, d, side="left")
+                cand, cnt = cand[:cut], cnt[:cut]
+                if not cand.size:
+                    continue
+                m = cnt >= min_intersect
+                cand, cnt = cand[m], cnt[m]
+                if not cand.size:
+                    continue
+                sz_c, sz_d = szs[cand], szs[d]
+                if mode == "jaccard":
+                    den = sz_c + sz_d - cnt
+                    # repeated ids with equal row multisets leave no
+                    # denominator: the pair is dropped, as in
+                    # _pair_join and _minhash_driver
+                    ok = den > 0
+                    cand, cnt = cand[ok], cnt[ok]
+                    parts = [(cand, d, cnt / den[ok])]
+                else:  # src = smaller id, then src = larger id
+                    parts = [(cand, d, cnt / sz_c), (d, cand, cnt / sz_d)]
+                for src, dst, ratio in parts:
+                    m = ratio >= threshold
+                    if not m.any():
                         continue
-                    lens = c_lens[cs]
-                    total = int(lens.sum())
-                    if not total:
-                        continue
-                    ends = np.cumsum(lens)
-                    idx = (np.arange(total, dtype=np.int64)
-                           + np.repeat(p_off[cs] - (ends - lens), lens))
-                    cand, cnt = np.unique(p_docs[idx],
-                                          return_counts=True)
-                    # uniq_ids is sorted, so index order IS id order:
-                    # keep strictly-smaller partners only (each
-                    # unordered pair is emitted by its larger member)
-                    cut = np.searchsorted(cand, d, side="left")
-                    cand, cnt = cand[:cut], cnt[:cut]
-                    if not cand.size:
-                        continue
-                    m = cnt >= min_intersect
-                    cand, cnt = cand[m], cnt[m]
-                    if not cand.size:
-                        continue
-                    sz_c, sz_d = szs[cand], szs[d]
-                    if mode == "jaccard":
-                        den = sz_c + sz_d - cnt
-                        # repeated ids with equal row multisets leave
-                        # no denominator: the pair is dropped, as in
-                        # _pair_join and _minhash_driver
-                        ok = den > 0
-                        cand, cnt = cand[ok], cnt[ok]
-                        parts = [(cand, d, cnt / den[ok])]
-                    else:  # src = smaller id, then src = larger id
-                        parts = [(cand, d, cnt / sz_c),
-                                 (d, cand, cnt / sz_d)]
-                    for src, dst, ratio in parts:
-                        m = ratio >= threshold
-                        if not m.any():
-                            continue
-                        src = np.broadcast_to(src, m.shape)[m]
-                        dst = np.broadcast_to(dst, m.shape)[m]
-                        for col, vals in zip(cols, (
-                                u_ids[src], u_ids[dst], cnt[m],
-                                szs[src], szs[dst], ratio[m])):
-                            col.extend(vals.tolist())
-                if cols[0]:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(c, t) for c, t in zip(cols, types)],
-                        names=names)
+                    src = np.broadcast_to(src, m.shape)[m]
+                    dst = np.broadcast_to(dst, m.shape)[m]
+                    for col, vals in zip(cols, (
+                            u_ids[src], u_ids[dst], cnt[m],
+                            szs[src], szs[dst], ratio[m])):
+                        col.extend(vals.tolist())
+            if cols[0]:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(cols, schema)],
+                    schema=schema)
 
     n_blocks = max(1, -(-n_docs // block))
+    if n_blocks == 1:  # the driver holds the arrays: no task to launch
+        return gate.driver_frame(spark, pa.Table.from_batches(
+            list(fn(arrays, [0])), schema))
+    bc = spark.sparkContext.broadcast(arrays)
+
+    def task(batches):
+        for batch in batches:
+            yield from fn(bc.value, batch.column(0).to_pylist())
+
     width = min(spark.sparkContext.defaultParallelism, n_blocks)
     return spark.range(0, n_blocks, 1, width).mapInArrow(
-        fn, schema=out_schema)
+        task, schema=out_schema)
 
 
 def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
@@ -313,9 +365,10 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
     construction (e.g. LSH-candidate verification).
 
     Within PAIR_DRIVER_MAX_BYTES (in-memory bytes of the shingle
-    table) the pair space is counted by the broadcast-postings kernel
-    and filtered in-task; beyond it, the capped self-join _pair_join
-    is the scale path. A pair whose denominator is not positive (ids
+    table) the pair space is counted by the postings kernel and
+    filtered in-task (in-process on the driver for up to one block of
+    4,096 docs); beyond it, the capped self-join _pair_join is the
+    scale path. A pair whose denominator is not positive (ids
     repeated with equal row multisets) is dropped on both paths."""
     fast = _pairs_via_postings(shingles, max_doc_freq, "jaccard",
                                threshold, min_intersect)
@@ -384,17 +437,22 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       max_doc_freq: Optional[int] = None) -> DataFrame:
     """Full near-dup chain: shingle -> minhash -> LSH bucket join ->
     exact-Jaccard verification of the candidates only; within the
-    driver gate, one driver pass (_minhash_driver). A repeated id's
-    rows are a multiset, as in jaccard_pairs: jaccard can exceed 1.
+    driver gate, one driver pass (_minhash_driver), which reads a
+    driver-shingled table with no Spark job and returns its pairs as
+    a driver frame (plans.gate.driver_frame), so connected_components
+    labels them with no job either. A repeated id's rows are a
+    multiset, as in jaccard_pairs: jaccard can exceed 1.
 
     The distributed fallback verifies only shingles of documents in
     some candidate pair (leftsemi prune) through jaccard_pairs. The
     call owns both of its caches and releases them before returning:
-    the shingle table (read by the driver gate, the signature build
-    and the verification) and `cand` (read by the prune and the final
-    join). The returned pairs are an eager local checkpoint, so they
+    the shingle table unless it is a driver frame (read by the driver
+    gate, the signature build and the verification) and `cand` (read
+    by the prune and the final join). The returned pairs are an eager local checkpoint, so they
     outlive both."""
-    sh = shingle_table(df, id_col, text_col, k, max_doc_freq).persist()
+    sh = shingle_table(df, id_col, text_col, k, max_doc_freq)
+    if not sh.isLocal():  # a driver frame needs no cache
+        sh.persist()
     cand = None
     try:
         fast = _minhash_driver(sh, n_hashes, band_size, threshold)
@@ -478,7 +536,7 @@ def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
     jac = inter / (sizes[a] + sizes[b] - inter)
     keep = jac >= threshold
     pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
-    return sh.sparkSession.createDataFrame(pa.table({
+    return gate.driver_frame(sh.sparkSession, pa.table({
         "id_a": pa.array(ids[a[keep]], pa_id),
         "id_b": pa.array(ids[b[keep]], pa_id), "jaccard": jac[keep]}))
 
@@ -673,10 +731,7 @@ def decontaminate(df: DataFrame, benchmark: DataFrame,
     distinct shingle codes are broadcast, so the corpus-side scan is
     shuffle-free up to the per-doc overlap count (one groupBy(id) over
     matched shingles only, a set near-empty for clean corpora)."""
-    from edspdf_spark.plans.salt import spread_compute
-
-    doc_sh = shingle_table(spread_compute(df.select(id_col, text_col)),
-                           id_col, text_col, k)
+    doc_sh = shingle_table(df, id_col, text_col, k)
     bench_codes = (shingle_table(benchmark, id_col, text_col, k)
                    .select("code").distinct())
     hits = (doc_sh.join(F.broadcast(bench_codes), "code")

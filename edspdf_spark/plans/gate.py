@@ -1,19 +1,25 @@
-"""The driver gate of the size-adaptive operators (the postings pair
-counter, union-find, PageRank, label propagation): collect a small
-input to the driver as one Arrow table, or refuse so the caller stays
-distributed. Sizing runs inside the Spark plan and nothing is written
-to disk, so the gate routes the same whether or not the driver shares
-a disk with the executors. Caps are in-memory (Arrow) bytes, since
-what callers build from the table lives uncompressed on the driver.
+"""The driver gate of the size-adaptive operators (shingling, the
+postings pair counter, union-find, PageRank, label propagation):
+collect a small input to the driver as one Arrow table, or refuse so
+the caller stays distributed. Sizing runs inside the Spark plan and
+nothing is written to disk, so the gate routes the same whether or not
+the driver shares a disk with the executors. Caps are in-memory
+(Arrow) bytes, since what callers build from the table lives
+uncompressed on the driver.
+
+A frame a driver path built (driver_frame) is known on the driver: the
+gate sizes and returns its table with no Spark job, so a chain of
+driver paths pays one collect at its head.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import weakref
+from typing import Optional, Sequence
 
 import pyarrow as pa
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 # caps of the graph operators' driver paths. The byte cap keeps WIDE
@@ -27,31 +33,58 @@ _BIGINT_BYTES = 8  # per value of a bigint column (ids, codes, edges)
 _OFFSET_BYTES = 4  # per value of any other column, plus its payload
 
 
-def driver_table(df: DataFrame, max_rows: Optional[int],
-                 max_bytes: int) -> Optional[pa.Table]:
-    """All of `df` as one Arrow table, or None when it has more than
-    `max_rows` rows (None: no row cap) or `max_bytes` Arrow bytes.
+# the tables of driver-built frames, keyed by the frame object itself:
+# a frame derived from one (select, join, ...) is a new object, so it
+# is never mistaken for the table; an entry dies with its frame
+_DRIVER_TABLES: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = \
+    weakref.WeakKeyDictionary()
 
-    An in-plan count + octet_length aggregate sizes the input BEFORE
-    any collect, so a refusal costs one aggregate pass (one row per
-    partition crosses the exchange) and wide URLs are never pulled
-    just to learn they are too big. Sizing and collect both read the
-    input, so it is persisted for them unless the caller has cached
-    it already."""
-    var = [c for c, t in df.dtypes if t != "bigint"]
-    owned = df.storageLevel == StorageLevel.NONE
-    if owned:
-        df.persist()
-    try:
-        n, *payload = df.agg(F.count(F.lit(1)), *[
-            F.sum(F.octet_length(F.col(c).cast("string"))) for c in var
-        ]).first()
-        row_bytes = (_BIGINT_BYTES * (len(df.columns) - len(var))
-                     + _OFFSET_BYTES * len(var))
-        nbytes = n * row_bytes + sum(b or 0 for b in payload)
-        if (max_rows is not None and n > max_rows) or nbytes > max_bytes:
-            return None
-        return df.toArrow()
-    finally:
-        if owned:
-            df.unpersist()
+
+def driver_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """`table` as a DataFrame (a local relation) that driver_table
+    answers from `table` itself, with no Spark job."""
+    df = spark.createDataFrame(table)
+    _DRIVER_TABLES[df] = table
+    return df
+
+
+def driver_table(df: DataFrame, max_rows: Optional[int], max_bytes: int,
+                 columns: Optional[Sequence[str]] = None
+                 ) -> Optional[pa.Table]:
+    """`df`'s `columns` (default: all) as one Arrow table, or None
+    when they have more than `max_rows` rows (None: no row cap) or
+    `max_bytes` Arrow bytes: 8 per bigint value, a 4-byte offset plus
+    the UTF-8 bytes of its string form per other value.
+
+    A driver_frame is sized from its own table, with no Spark job.
+    Otherwise count + octet_length metrics observed on one pass to a
+    noop sink size the input BEFORE any collect, so a refusal costs
+    one scan (no exchange: one job, where an aggregate runs two) and
+    wide URLs are never pulled just to learn they are too big.
+    Sizing and collect each read `df`: a caller whose input is costly
+    to recompute caches it first (a cache of a plain scan costs more
+    on a refusal than the second read saves on a pass)."""
+    columns = list(columns or df.columns)
+    var = [c for c, t in df.dtypes if c in columns and t != "bigint"]
+    row_bytes = (_BIGINT_BYTES * (len(columns) - len(var))
+                 + _OFFSET_BYTES * len(var))
+
+    def fits(n, payload):
+        return ((max_rows is None or n <= max_rows)
+                and n * row_bytes + sum(b or 0 for b in payload)
+                <= max_bytes)
+
+    table = _DRIVER_TABLES.get(df)
+    if table is not None:
+        table = table.select(columns)
+        payload = [pc.sum(pc.binary_length(table[c].cast(pa.string())))
+                   .as_py() for c in var]
+        return table if fits(table.num_rows, payload) else None
+    df = df.select(*columns)
+    size = Observation()
+    df.observe(size, F.count(F.lit(1)).alias("n"), *[
+        F.sum(F.octet_length(F.col(c).cast("string"))).alias(f"b{i}")
+        for i, c in enumerate(var)
+    ]).write.format("noop").mode("overwrite").save()
+    n, *payload = size.get.values()
+    return df.toArrow() if fits(n, payload) else None

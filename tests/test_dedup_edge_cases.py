@@ -328,6 +328,9 @@ def test_pair_gate_refusal_matches_postings(spark, monkeypatch, id_type,
     the broadcast-postings path, bit for bit."""
     from edspdf_spark.operators import dedup
 
+    # shingled on the doc_map path, so the join reads the plan it
+    # reads past the text gate
+    monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
     sh = _gate_shingles(spark, id_type)
 
     def run(refused):
@@ -460,6 +463,7 @@ def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
     drv = run()
     assert bool(calls) == (name == "one_big_bucket")
     with monkeypatch.context() as m:
+        m.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
         m.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
         m.setattr(gate, "EDGE_MAX_ROWS", 0)
         dist = run()
@@ -471,6 +475,44 @@ def test_minhash_driver_pass_matches_distributed_chain(spark, monkeypatch,
     if name == "equal_multiset_ids":
         assert {p[:2] for p in pairs} == {(7, 9), (8, 9)}
         assert (7, 9, 1.4) in pairs  # a repeated id is a multiset
+
+
+@pytest.mark.parametrize("name", ["corpus_near", "string_ids",
+                                  "duplicated_id", "null_id",
+                                  "short_docs", "empty"])
+def test_text_gate_refusal_matches_driver_shingles(spark, monkeypatch,
+                                                   name):
+    """shingle_table within TEXT_DRIVER_MAX_BYTES (shingled on the
+    driver) and past it (the doc_map path) give the same rows,
+    and so do the pair operators and minhash_lsh_pairs built on them:
+    bigint and string ids, a repeated id, a NULL id, NULL text and an
+    empty input."""
+    from edspdf_spark.operators import dedup
+    from edspdf_spark.plans import salt
+
+    df = _near_corpus(spark, name)
+    maps = []
+    orig = salt.doc_map
+    monkeypatch.setattr(salt, "doc_map",
+                        lambda *a: maps.append(1) or orig(*a))
+
+    def run():
+        def rows(out):
+            return sorted(map(tuple, out.collect()), key=repr)
+
+        sh = dedup.shingle_table(df, k=3)
+        return (rows(sh),
+                rows(dedup.jaccard_pairs(sh, threshold=0.3)),
+                rows(dedup.containment_pairs(sh, threshold=0.5)),
+                rows(dedup.minhash_lsh_pairs(df, k=3, threshold=0.5)))
+
+    drv = run()
+    assert not maps
+    # below any size, the empty input's 0 bytes included
+    monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", -1)
+    assert run() == drv
+    assert maps
+    assert bool(drv[0]) == (name != "empty")
 
 
 def test_equal_multiset_ids_jaccard_matches_refused_gate(spark, monkeypatch):
@@ -503,6 +545,7 @@ def test_minhash_fallback_leaves_no_cache(spark, monkeypatch):
     from edspdf_spark.operators import dedup
     from edspdf_spark.plans import gate
 
+    monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
     monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
     monkeypatch.setattr(gate, "EDGE_MAX_ROWS", 0)
     df = _near_corpus(spark, "duplicated_id")
@@ -512,18 +555,62 @@ def test_minhash_fallback_leaves_no_cache(spark, monkeypatch):
     assert pairs.count()
 
 
-def test_dedup_components_job_count(spark, run_in_job_group):
-    """The near-dup chain plus its keep-list is one driver pass: at
-    most 12 Spark jobs for q_dedup_components at sf0.01 (the
-    distributed chain ran 29)."""
+def _query_jobs(spark, run_in_job_group, query):
     from test_entry_contract import SF_DIR
 
     import __spark_entry__ as entry_mod
 
     jobs, _ = run_in_job_group(
-        "q_dedup_components",
-        lambda: entry_mod.q_dedup_components(spark, SF_DIR))
-    assert 0 < len(jobs) <= 12, jobs
+        f"q_{query}", lambda: entry_mod.queries()[query](spark, SF_DIR))
+    return jobs
+
+
+def test_dedup_components_job_count(spark, run_in_job_group):
+    """The near-dup chain plus its keep-list is one collect of the
+    text and one driver pass: at most 5 Spark jobs for
+    q_dedup_components at sf0.01 (4 measured; 11 with the shingling on
+    executors; the distributed chain ran 29)."""
+    jobs = _query_jobs(spark, run_in_job_group, "dedup_components")
+    assert 0 < len(jobs) <= 5, jobs
+
+
+def test_dedup_jaccard_job_count(spark, run_in_job_group):
+    """q_dedup_jaccard at sf0.01 runs at most 3 Spark jobs (2
+    measured; 6 with the shingling and the postings task on
+    executors)."""
+    jobs = _query_jobs(spark, run_in_job_group, "dedup_jaccard")
+    assert 0 < len(jobs) <= 3, jobs
+
+
+@pytest.mark.parametrize("query", ["dedup_jaccard", "dedup_components",
+                                   "bm25_topk", "lm_ppl_buckets",
+                                   "regdomain_stats"])
+def test_corpus_ops_queries_run_no_python_stage(spark, monkeypatch,
+                                                run_in_job_group, query):
+    """No corpus_ops query starts a Python worker at sf0.01: no Python
+    map is built while the query is planned (the gated paths run their
+    jobs then), and its final plan has no Python stage."""
+    from pyspark.sql import GroupedData
+    from test_entry_contract import SF_DIR
+    from test_index import _PY_STAGES
+
+    import __spark_entry__ as entry_mod
+
+    calls = []
+
+    def spy(cls, name):
+        orig = getattr(cls, name)
+        monkeypatch.setattr(cls, name, lambda *a, **k: calls.append(
+            name) or orig(*a, **k))
+
+    for name in ("mapInArrow", "mapInPandas"):
+        spy(type(spark.range(1)), name)
+    for name in ("applyInPandas", "applyInArrow"):
+        spy(GroupedData, name)
+    _, plan = run_in_job_group(
+        f"q_{query}", lambda: entry_mod.queries()[query](spark, SF_DIR))
+    assert not calls, calls
+    assert not any(p in plan for p in _PY_STAGES), plan
 
 
 def test_dedup_components_leaves_no_cache(spark):

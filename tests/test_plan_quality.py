@@ -148,15 +148,19 @@ def test_ivf_assignment_preserves_rows(spark):
     assert cells == [(1, 0), (1, 0), (2, -1), (3, -1), (4, 1)]
 
 
-def test_lsh_candidates_shuffles_do_not_scale_with_bands(spark):
+def test_lsh_candidates_shuffles_do_not_scale_with_bands(spark,
+                                                          monkeypatch):
     """lsh_candidates is ONE explode + ONE self-join on the composite
     (band_idx, values) key: its Exchange count is a constant (pinned),
     and doubling the band count must not add shuffles (the round-1
     per-band-join shape scaled Exchanges linearly with bands)."""
+    from edspdf_spark.operators import dedup
     from edspdf_spark.operators.dedup import (lsh_candidates,
                                               minhash_signatures,
                                               shingle_table)
 
+    # the doc_map shingling, which a corpus past the text gate runs
+    monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
     df = spark.createDataFrame(
         [(i, f"w{i} x y z a b c d e f g h" * 3) for i in range(40)],
         "doc_id long, text string")
@@ -617,8 +621,10 @@ def test_shingle_cap_bounded_distinct_exchanges(spark, monkeypatch):
     old = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # a zero byte cap pins the JOIN fallback (the 100-TB path);
-        # within the gate the broadcast-postings kernel runs instead
+        # zero byte caps pin the doc_map shingling and the JOIN
+        # fallback (the 100-TB path); within the gates the driver
+        # shingling and the broadcast-postings kernel run instead
+        monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
         monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
         out = jaccard_pairs(shingle_table(df, k=3), threshold=0.5)
         plan = out._jdf.queryExecution().executedPlan()

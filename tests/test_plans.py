@@ -371,11 +371,13 @@ def test_read_pages_table_dispatch(spark, tmp_path):
 def test_driver_table_caps_rows_and_arrow_bytes(spark):
     """driver_table returns the whole input or None, sized by an
     in-plan aggregate: 8 bytes per bigint value, a 4-byte offset plus
-    the payload per other value. It releases its own persist and
-    keeps whatever cache the caller set up."""
+    the payload per other value. It caches nothing itself and keeps
+    whatever cache the caller set up. A driver_frame is sized from its
+    own table, with no job."""
+    import pyarrow as pa
     from pyspark import StorageLevel
 
-    from edspdf_spark.plans.gate import driver_table
+    from edspdf_spark.plans.gate import driver_frame, driver_table
 
     ids = spark.range(5)  # one bigint column: 8 bytes a row
     assert driver_table(ids, 5, 40).column("id").to_pylist() == \
@@ -388,13 +390,47 @@ def test_driver_table_caps_rows_and_arrow_bytes(spark):
     assert driver_table(words, 3, 17).num_rows == 3   # 3 x 4 + 5 bytes
     assert driver_table(words, None, 16) is None
     assert driver_table(words, 2, 1 << 20) is None
-    assert words.storageLevel == StorageLevel.NONE    # its own persist
+    assert words.storageLevel == StorageLevel.NONE
     words.persist()
     try:
         assert driver_table(words, None, 16) is None
         assert words.storageLevel != StorageLevel.NONE
     finally:
         words.unpersist()
+    assert driver_table(words, None, 1 << 20, ["w"]).num_rows == 3
+
+    # a driver_frame's table comes back with no Spark job, under the
+    # same caps and byte rule; a frame derived from it (select, join)
+    # is a new plan, sized and collected by Spark
+    table = pa.table({"id": pa.array([3, 1, 2], pa.int64()),
+                      "w": pa.array(["abc", "de", None])})
+    df = driver_frame(spark, table)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn(), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    got, n_jobs = jobs("held", lambda: driver_table(df, 3, 3 * 12 + 5))
+    assert got.equals(table) and n_jobs == 0
+    got, n_jobs = jobs("held_col", lambda: driver_table(df, 3, 17, ["w"]))
+    assert got.equals(table.select(["w"])) and n_jobs == 0
+    assert driver_table(df, 2, 1 << 20) is None
+    assert driver_table(df, None, 3 * 12 + 4) is None
+    assert driver_table(df, 0, 1 << 20) is None
+    assert driver_table(df, None, 0) is None
+    empty = driver_frame(spark, table.slice(0, 0))
+    assert driver_table(empty, 0, 0).num_rows == 0
+
+    for derived in (df.select("id", "w"),
+                    df.join(df.select("id"), "id")):
+        got, n_jobs = jobs("derived", lambda: driver_table(
+            derived, None, 1 << 20))
+        assert n_jobs > 0
+        assert sorted(got.column("id").to_pylist()) == [1, 2, 3]
 
 
 def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
