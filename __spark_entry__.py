@@ -3325,7 +3325,7 @@ def q_containment_pairs(spark, sf_dir):
     jaccard is small (the case this operator exists for)."""
     from edspdf_spark.operators.dedup import containment_pairs
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = _docs(spark, sf_dir, spread=False).select("doc_id", "text")
     exc = (d.where(F.col("doc_id") % 9 == 0)
            .select((F.col("doc_id") + 2000000000000000).alias("doc_id"),
                    F.expr("substr(text, 1, 120)").alias("text")))

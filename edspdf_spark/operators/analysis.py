@@ -299,62 +299,49 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     set is computed inside the kernel).
 
     Physical shape: the algorithm is entirely DOCUMENT-LOCAL, so it
-    runs as one Arrow-batched numpy kernel inside mapInArrow — the
-    only exchange is a row-preserving repartition for compute spread
-    (explicit count: parquet byte-splitting can't see per-char
-    arithmetic cost). The previous column-math formulation posexploded
-    one row PER CHARACTER (~8,000x row amplification) through a
-    per-doc sort-shuffle window; at corpus scale that exchange
-    dominates everything. All integer math, bit-exact vs the DuckDB
-    oracle:
+    runs as one Arrow-batched numpy doc_map kernel — the only
+    exchange is doc_map's row-preserving compute-spread repartition,
+    paid only on an input narrower than the core count (parquet
+    byte-splitting can't see per-char arithmetic cost). The previous
+    column-math formulation posexploded one row PER CHARACTER
+    (~8,000x row amplification) through a per-doc sort-shuffle
+    window; at corpus scale that exchange dominates everything. All
+    integer math, bit-exact vs the DuckDB oracle:
         H_t = sum_{j<k} code[t+j] * B^j  (mod M),  t 0-based
         fp_t = min(H_t..H_{t+w-1}), windows fully inside the sequence
     Texts longer than WINNOW_MAX_LEN are truncated to it (documented
     cap; the corpus case for longer docs is chunking upstream)."""
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    from ..plans.salt import doc_map
 
     pows = np.array([pow(WINNOW_B, j, WINNOW_M) for j in range(k)],
                     dtype=np.int64)
     min_len = k + w - 1
-    out_schema = StructType([
-        StructField("id", df.schema[id_col].dataType),
-        StructField("fp", LongType())])
 
-    def fn(batches):
-        from numpy.lib.stride_tricks import sliding_window_view
+    def fn(ids, texts):
+        out_ids: list = []
+        out_fps = []
+        for rid, text in zip(ids, texts):
+            if text is None:
+                continue
+            t = text.lower()[:WINNOW_MAX_LEN]
+            if len(t) < min_len:
+                continue
+            # utf-32-le bytes ARE the codepoint sequence (matches
+            # ascii(substr(t, i, 1)) in Spark/DuckDB)
+            codes = np.frombuffer(t.encode("utf-32-le"),
+                                  dtype=np.uint32).astype(np.int64)
+            h = (sliding_window_view(codes, k) @ pows) % WINNOW_M
+            fps = np.unique(sliding_window_view(h, w).min(axis=1))
+            out_ids.extend([rid] * len(fps))
+            out_fps.append(fps)
+        fp_all = (np.concatenate(out_fps) if out_fps
+                  else np.empty(0, dtype=np.int64))
+        return out_ids, fp_all
 
-        for batch in batches:
-            id_type = batch.column(id_col).type
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            out_ids: list = []
-            out_fps = []
-            for rid, text in zip(ids, texts):
-                if text is None:
-                    continue
-                t = text.lower()[:WINNOW_MAX_LEN]
-                if len(t) < min_len:
-                    continue
-                # utf-32-le bytes ARE the codepoint sequence (matches
-                # ascii(substr(t, i, 1)) in Spark/DuckDB)
-                codes = np.frombuffer(t.encode("utf-32-le"),
-                                      dtype=np.uint32).astype(np.int64)
-                h = (sliding_window_view(codes, k) @ pows) % WINNOW_M
-                fps = np.unique(sliding_window_view(h, w).min(axis=1))
-                out_ids.extend([rid] * len(fps))
-                out_fps.append(fps)
-            fp_all = (np.concatenate(out_fps) if out_fps
-                      else np.empty(0, dtype=np.int64))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_type),
-                 pa.array(fp_all, pa.int64())],
-                names=["id", "fp"])
-
-    width = df.sparkSession.sparkContext.defaultParallelism
-    return (df.select(id_col, text_col).repartition(width)
-            .mapInArrow(fn, schema=out_schema))
+    return doc_map(df, id_col, text_col, fn, "fp bigint")
 
 
 # Gopher repetition-filter rules (Rae et al. 2021, Table A1 — the
@@ -1031,6 +1018,45 @@ def token_budget_select(df: DataFrame, budget: int,
                     (F.col("cum_before") < budget).alias("keep")))
 
 
+def _hll_sketch(df: DataFrame, col: str, p: int, *keys: str) -> DataFrame:
+    """HLL registers and raw estimate of `col` per group of `keys` (ONE
+    row when there are none): (*keys, m, used_registers,
+    zero_registers, s_scaled, estimate). The one register definition
+    hll_distinct and hll_distinct_by share."""
+    m = 1 << p
+    rmax = 60 - p + 1
+    h = code15(F.col(col))
+    bucket = h % m
+    # top 60-p hash bits: literal shift, NOT `/` (double division
+    # would round above 2^53)
+    w = F.shiftright(h, p)
+    ilog2 = F.length(F.bin(w)) - 1
+    rho = F.when(w > 0, F.lit(60 - p) - ilog2).otherwise(F.lit(rmax))
+    # keys ride under private names so no key can collide with b/rho/M
+    grp = [f"_k{i}" for i in range(len(keys))]
+    regs = (df.select(*[F.col(k).alias(g) for k, g in zip(keys, grp)],
+                      bucket.alias("b"), rho.alias("rho"))
+            .groupBy(*grp, "b").agg(F.max("rho").alias("M")))
+    alpha = (F.lit(7213).cast("double") / 10000
+             / (F.lit(1.0) + F.lit(1079).cast("double") / 1000 / m))
+    agg = regs.groupBy(*grp).agg(
+        F.count(F.lit(1)).alias("used_registers"),
+        F.sum(F.expr(f"cast(1 as bigint) << ({rmax} - M)"))
+        .alias("s_present"))
+    out = agg.select(
+        *[F.col(g).alias(k) for k, g in zip(keys, grp)],
+        F.lit(m).cast("int").alias("m"),
+        F.col("used_registers").cast("bigint"),
+        (F.lit(m) - F.col("used_registers")).cast("bigint")
+        .alias("zero_registers"),
+        (F.col("s_present")
+         + (F.lit(m) - F.col("used_registers"))
+         * F.lit(1 << rmax).cast("bigint")).alias("s_scaled"))
+    est = (alpha * F.lit(float(m * m)) * F.lit(float(1 << rmax))
+           / F.col("s_scaled").cast("double"))
+    return out.withColumn("estimate", est)
+
+
 def hll_distinct(df: DataFrame, col: str, p: int = 6,
                  exact: bool = True) -> DataFrame:
     """Deterministic HyperLogLog distinct-count sketch (Flajolet et
@@ -1057,35 +1083,7 @@ def hll_distinct(df: DataFrame, col: str, p: int = 6,
     rows before the single tiny shuffle; per-partition sketches merge
     by register-wise max, which is exactly what the groupBy computes.
     """
-    m = 1 << p
-    rmax = 60 - p + 1
-    h = code15(F.col(col))
-    bucket = h % m
-    # top 60-p hash bits: literal shift, NOT `/` (double division
-    # would round above 2^53)
-    w = F.shiftright(h, p)
-    ilog2 = F.length(F.bin(w)) - 1
-    rho = F.when(w > 0, F.lit(60 - p) - ilog2).otherwise(F.lit(rmax))
-    regs = (df.select(bucket.alias("b"), rho.alias("rho"))
-            .groupBy("b").agg(F.max("rho").alias("M")))
-    alpha = (F.lit(7213).cast("double") / 10000
-             / (F.lit(1.0) + F.lit(1079).cast("double") / 1000 / m))
-    two_rmax = float(1 << rmax)
-    agg = regs.agg(
-        F.count("*").alias("used_registers"),
-        F.sum(F.expr(f"cast(1 as bigint) << ({rmax} - M)"))
-        .alias("s_present"))
-    out = agg.select(
-        F.lit(m).cast("int").alias("m"),
-        F.col("used_registers").cast("bigint"),
-        (F.lit(m) - F.col("used_registers")).cast("bigint")
-        .alias("zero_registers"),
-        (F.col("s_present")
-         + (F.lit(m) - F.col("used_registers"))
-         * F.lit(1 << rmax).cast("bigint")).alias("s_scaled"))
-    est = (alpha * F.lit(float(m * m)) * F.lit(two_rmax)
-           / F.col("s_scaled").cast("double"))
-    out = out.withColumn("estimate", est)
+    out = _hll_sketch(df, col, p)
     if exact:
         ex = df.agg(F.countDistinct(F.col(col)).alias("exact_count"))
         out = out.crossJoin(F.broadcast(ex)).withColumn(
@@ -1279,22 +1277,31 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
     repartitions the tf table by id (shuffle 2 — inherent to any
     per-doc ranking, and it carries aggregated rows, not tokens).
     """
-    toks = tokens(F.col(text_col))
     tf = (df.select(F.col(id_col).alias("id"),
-                    F.explode(toks).alias("term"))
+                    F.explode(tokens(F.col(text_col))).alias("term"))
           .groupBy("id", "term")
           .agg(F.count(F.lit(1)).alias("tf")))
+    n_docs = df.groupBy().agg(F.count(F.lit(1)).alias("n_units"))
+    return _tfidf_top(tf, "id", n_docs, top_k)
+
+
+def _tfidf_top(tf: DataFrame, key: str, n_units: DataFrame,
+               top_k: int) -> DataFrame:
+    """Top-k terms per `key` unit from its (key, term, tf) table and
+    the one-row `n_units` unit count: df, the integer-quantized idf
+    score and the (score desc, tf desc, term asc) rank — the one
+    scoring body of tfidf_top_terms and domain_top_terms."""
+    from pyspark.sql import Window
+
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.groupBy().agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (tf.join(F.broadcast(dfreq), "term")
-              .join(F.broadcast(n_docs))
-              .select("id", "term", "tf", "df",
+              .join(F.broadcast(n_units))
+              .select(key, "term", "tf", "df",
                       (F.col("tf") *
                        (F.length(F.bin(F.expr(
-                           f"(n_docs * {TFIDF_IDF_SCALE}L) div df")))
+                           f"(n_units * {TFIDF_IDF_SCALE}L) div df")))
                         - 1).cast("bigint")).alias("score_scaled")))
-    from pyspark.sql import Window
-    wnd = (Window.partitionBy("id")
+    wnd = (Window.partitionBy(key)
            .orderBy(F.desc("score_scaled"), F.desc("tf"), F.asc("term")))
     return (scored.withColumn("rk", F.row_number().over(wnd)
                               .cast("bigint"))
@@ -1450,57 +1457,41 @@ def complexity_signals(df: DataFrame, id_col: str = "doc_id",
     DEFLATE is not SQL-expressible, so this operator carries kernel
     golden tests + the driver's rows-only check instead of a DuckDB
     value oracle (the bloc_transformer precedent). Physical shape =
-    the winnowing kernel: document-local numpy/zlib inside
-    mapInArrow behind one explicit-width compute-spread repartition.
+    the winnowing kernel: document-local numpy/zlib in one doc_map
+    kernel.
     """
+    import zlib
+
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType([
-        StructField("id", df.schema[id_col].dataType),
-        StructField("n_bytes", LongType()),
-        StructField("deflate_bytes", LongType()),
-        StructField("compress_milli", LongType()),
-        StructField("entropy_milli", LongType())])
+    from ..plans.salt import doc_map
 
-    def fn(batches):
-        import zlib
+    def fn(ids, texts):
+        rows = ([], [], [], [], [])
+        for rid, text in zip(ids, texts):
+            if text is None:
+                continue
+            raw = text.encode("utf-8")
+            n = len(raw)
+            comp = len(zlib.compress(raw, 6))
+            if n:
+                counts = np.bincount(
+                    np.frombuffer(raw, dtype=np.uint8),
+                    minlength=256).astype(np.float64)
+                p = counts[counts > 0] / n
+                ent = float(-(p * np.log2(p)).sum())
+            else:
+                ent = 0.0
+            rows[0].append(rid)
+            rows[1].append(n)
+            rows[2].append(comp)
+            rows[3].append(1000 * comp // n if n else 0)
+            rows[4].append(int(ent * 1000))
+        return rows
 
-        for batch in batches:
-            id_type = batch.column(id_col).type
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            rows = ([], [], [], [])
-            out_ids = []
-            for rid, text in zip(ids, texts):
-                if text is None:
-                    continue
-                raw = text.encode("utf-8")
-                n = len(raw)
-                comp = len(zlib.compress(raw, 6))
-                if n:
-                    counts = np.bincount(
-                        np.frombuffer(raw, dtype=np.uint8),
-                        minlength=256).astype(np.float64)
-                    p = counts[counts > 0] / n
-                    ent = float(-(p * np.log2(p)).sum())
-                else:
-                    ent = 0.0
-                out_ids.append(rid)
-                rows[0].append(n)
-                rows[1].append(comp)
-                rows[2].append(1000 * comp // n if n else 0)
-                rows[3].append(int(ent * 1000))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=id_type)] +
-                [pa.array(r, pa.int64()) for r in rows],
-                names=["id", "n_bytes", "deflate_bytes",
-                       "compress_milli", "entropy_milli"])
-
-    width = df.sparkSession.sparkContext.defaultParallelism
-    return (df.select(id_col, text_col).repartition(width)
-            .mapInArrow(fn, schema=out_schema))
+    return doc_map(df, id_col, text_col, fn,
+                   "n_bytes bigint, deflate_bytes bigint, "
+                   "compress_milli bigint, entropy_milli bigint")
 
 
 # --- text normalization (dedup canonicalization) ---------------------------
@@ -1591,28 +1582,13 @@ def domain_top_terms(df: DataFrame, domain_col: str = "source",
     at what a domain actually contains (and a drift check between
     snapshots). Same integer-quantized idf and shuffle shape as
     tfidf_top_terms, with domains as the documents."""
-    toks = tokens(F.col(text_col))
     tf = (df.select(F.col(domain_col).alias("domain"),
-                    F.explode(toks).alias("term"))
+                    F.explode(tokens(F.col(text_col))).alias("term"))
           .groupBy("domain", "term")
           .agg(F.count(F.lit(1)).alias("tf")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_dom = tf.select("domain").distinct().groupBy().agg(
-        F.count(F.lit(1)).alias("n_domains"))
-    scored = (tf.join(F.broadcast(dfreq), "term")
-              .join(F.broadcast(n_dom))
-              .select("domain", "term", "tf", "df",
-                      (F.col("tf") *
-                       (F.length(F.bin(F.expr(
-                           f"(n_domains * {TFIDF_IDF_SCALE}L) div df")))
-                        - 1).cast("bigint")).alias("score_scaled")))
-    from pyspark.sql import Window
-    wnd = (Window.partitionBy("domain")
-           .orderBy(F.desc("score_scaled"), F.desc("tf"),
-                    F.asc("term")))
-    return (scored.withColumn("rk", F.row_number().over(wnd)
-                              .cast("bigint"))
-            .where(F.col("rk") <= top_k))
+        F.count(F.lit(1)).alias("n_units"))
+    return _tfidf_top(tf, "domain", n_dom, top_k)
 
 
 def dataset_card(df: DataFrame, id_col: str = "doc_id",
@@ -1673,34 +1649,7 @@ def hll_distinct_by(df: DataFrame, group_col: str, col: str,
     most m rows per group before one small shuffle; per-group
     sketches from different corpus shards merge by register max, so
     snapshots can be sketched incrementally and combined."""
-    m = 1 << p
-    rmax = 60 - p + 1
-    h = code15(F.col(col))
-    bucket = h % m
-    w = F.shiftright(h, p)
-    ilog2 = F.length(F.bin(w)) - 1
-    rho = F.when(w > 0, F.lit(60 - p) - ilog2).otherwise(F.lit(rmax))
-    regs = (df.select(F.col(group_col).alias("grp"),
-                      bucket.alias("b"), rho.alias("rho"))
-            .groupBy("grp", "b").agg(F.max("rho").alias("M")))
-    alpha = (F.lit(7213).cast("double") / 10000
-             / (F.lit(1.0) + F.lit(1079).cast("double") / 1000 / m))
-    agg = regs.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("used_registers"),
-        F.sum(F.expr(f"cast(1 as bigint) << ({rmax} - M)"))
-        .alias("s_present"))
-    out = agg.select(
-        F.col("grp").alias(group_col),
-        F.lit(m).cast("int").alias("m"),
-        F.col("used_registers").cast("bigint"),
-        (F.lit(m) - F.col("used_registers")).cast("bigint")
-        .alias("zero_registers"),
-        (F.col("s_present")
-         + (F.lit(m) - F.col("used_registers"))
-         * F.lit(1 << rmax).cast("bigint")).alias("s_scaled"))
-    est = (alpha * F.lit(float(m * m)) * F.lit(float(1 << rmax))
-           / F.col("s_scaled").cast("double"))
-    return out.withColumn("estimate", est)
+    return _hll_sketch(df, col, p, group_col)
 
 
 def char_profile(df: DataFrame, id_col: str = "doc_id",

@@ -240,31 +240,44 @@ def text_token_embed(blocs: DataFrame, vocabs: Dict[str, Vocabulary],
     sum is the 'sum' pooling of the word dimension).
 
     ONE mapInPandas stage (broadcast dicts + numpy row gather), no
-    shuffle; carries every input column through."""
-    import pandas as pd
+    shuffle; carries every input column through. The int64 row sum of
+    the token matrix is exact, so the pooling order is irrelevant."""
+    dim = next(iter(weights.values())).shape[1]
+    return _pool_token_matrix(blocs, vocabs, weights, dim, prefix,
+                              lambda E: E.sum(axis=0))
 
+
+def _pool_token_matrix(blocs: DataFrame, vocabs: Dict[str, Vocabulary],
+                       weights: Dict[str, np.ndarray], dim: int,
+                       prefix: str, pool) -> DataFrame:
+    """Append {prefix}0..{prefix}{dim-1} bigint columns: `pool(E)` per
+    bloc, where E is the bloc's (max(n_tokens, 1), width) int64 token
+    matrix — row t the shape+prefix+suffix weight sum of token t, one
+    zero row for a bloc with no tokens (empty or NULL text). ONE
+    mapInPandas stage, no shuffle; every input column carries
+    through."""
     from ..kernels.textfeatures import text_token_features
 
-    dim = next(iter(weights.values())).shape[1]
     idx = {f: dict(vocabs[f].indices) for f in FEATURE_FAMILIES}
     wts = {f: weights[f] for f in FEATURE_FAMILIES}
-    in_fields = blocs.schema.fields
+    width = next(iter(wts.values())).shape[1]
     out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in in_fields]
+        [f"{f.name} {f.dataType.simpleString()}" for f in blocs.schema]
         + [f"{prefix}{c} bigint" for c in range(dim)])
 
     def fn(batches):
         for pdf in batches:
-            sums = np.zeros((len(pdf), dim), dtype=np.int64)
+            outs = np.zeros((len(pdf), dim), dtype=np.int64)
             for r, text in enumerate(pdf["text"].tolist()):
-                acc = np.zeros(dim, dtype=np.int64)
-                for feats in text_token_features(text or ""):
+                toks = text_token_features(text or "")
+                E = np.zeros((max(len(toks), 1), width), dtype=np.int64)
+                for t, feats in enumerate(toks):
                     for fam in FEATURE_FAMILIES:
-                        acc += wts[fam][idx[fam].get(feats[fam], 0)]
-                sums[r] = acc
+                        E[t] += wts[fam][idx[fam].get(feats[fam], 0)]
+                outs[r] = pool(E)
             out = pdf.copy()
             for c in range(dim):
-                out[f"{prefix}{c}"] = sums[:, c]
+                out[f"{prefix}{c}"] = outs[:, c]
             yield out
 
     return blocs.mapInPandas(fn, schema=out_schema)
@@ -333,35 +346,9 @@ def text_cnn_pool(blocs: DataFrame, vocabs: Dict[str, Vocabulary],
     (the reference wires sub-box-cnn-pooler over simple-text-embedding,
     tests/core/config.cfg). Per-word embeddings are the integer
     shape+prefix+suffix sums; one mapInPandas stage, no shuffle."""
-    import pandas as pd
-
-    from ..kernels.textfeatures import text_token_features
-
-    dim = cnn["output_size"]
-    idx = {f: dict(vocabs[f].indices) for f in FEATURE_FAMILIES}
-    in_size = cnn["in_size"]
-    in_fields = blocs.schema.fields
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in in_fields]
-        + [f"{prefix}{c} bigint" for c in range(dim)])
-
-    def fn(batches):
-        for pdf in batches:
-            outs = np.zeros((len(pdf), dim), dtype=np.int64)
-            for r, text in enumerate(pdf["text"].tolist()):
-                toks = text_token_features(text or "")
-                E = np.zeros((max(len(toks), 1), in_size), dtype=np.int64)
-                for t, feats in enumerate(toks):
-                    for fam in FEATURE_FAMILIES:
-                        E[t] += text_weights[fam][
-                            idx[fam].get(feats[fam], 0)]
-                outs[r] = cnn_pool_bloc(E, cnn)
-            out = pdf.copy()
-            for c in range(dim):
-                out[f"{prefix}{c}"] = outs[:, c]
-            yield out
-
-    return blocs.mapInPandas(fn, schema=out_schema)
+    return _pool_token_matrix(blocs, vocabs, text_weights,
+                              cnn["output_size"], prefix,
+                              lambda E: cnn_pool_bloc(E, cnn))
 
 
 def embed_from_spec(blocs: DataFrame, spec: Dict,

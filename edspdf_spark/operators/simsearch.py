@@ -349,6 +349,44 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids,
     return _topk_per_query(scored, k)
 
 
+def _exact_cosine_blocks(ids, qvs, norm2, threshold: float):
+    """Blocked exact cosine of one group of equal-length quantized
+    vectors, for the per-group numpy kernels of cosine_bucket_pairs
+    and semantic_dedup. Returns (ids sorted stably, blocks); each
+    block is (a0, cos, hit) for rows a0.. of the id-sorted group
+    against all of it, in <=64 MB row blocks: `cos` the raw float64
+    cosine (NaN for a zero norm) and `hit` the pairs with cos >=
+    threshold, NaN counting as +inf (Spark/DuckDB NaN-is-largest),
+    whose column id is STRICTLY smaller than the row id (equal ids
+    never pair). Quantized ints make the float64 matmul exact, which
+    is asserted."""
+    import numpy as np
+
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    x = np.asarray([list(v) for v in qvs[order]], dtype=np.float64)
+    x_max = float(np.abs(x).max()) if x.size else 0.0
+    assert x.shape[1] * x_max * x_max < 2.0 ** 53, \
+        "quantized values too large for exact float64 dot products"
+    sq = np.sqrt(np.asarray(norm2[order], dtype=np.float64))
+    n = len(ids)
+    n_less = np.searchsorted(ids, ids, side="left")
+    col_idx = np.arange(n)
+    blk = max(1, min(n, (1 << 23) // max(n, 1)))
+
+    def blocks():
+        for a0 in range(0, n, blk):
+            b0 = min(n, a0 + blk)
+            gm = x[a0:b0] @ x.T                       # exact ints
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = gm / (sq[a0:b0, None] * sq[None, :])
+            hit = ((np.where(np.isnan(cos), np.inf, cos) >= threshold)
+                   & (col_idx[None, :] < n_less[a0:b0, None]))
+            yield a0, cos, hit
+
+    return ids, blocks()
+
+
 def cosine_bucket_pairs(df: DataFrame, threshold: float = 0.9,
                         band_dims: int = 8, id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
@@ -379,40 +417,23 @@ def cosine_bucket_pairs(df: DataFrame, threshold: float = 0.9,
     # filtered by `cos >= threshold`; the kernel reproduces that by
     # pairing only within equal-dimension groups. NaN cosines
     # (zero-norm vectors) satisfy `>= threshold` under Spark/DuckDB
-    # NaN-is-largest comparison semantics and are emitted as NaN.
+    # NaN-is-largest comparison semantics and are emitted; the NaN
+    # reaches Spark as a NULL cos (applyInPandas maps pandas NaN to
+    # NULL).
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         out_a, out_b, out_c = [], [], []
         lens = pdf["qv"].map(len).to_numpy()
         for dim in np.unique(lens):
             g = pdf[lens == dim]
-            n = len(g)
-            if n < 2:
+            if len(g) < 2:
                 continue
-            ids_raw = g["id"].to_numpy()
-            order = np.argsort(ids_raw, kind="stable")
-            ids = ids_raw[order]
-            x = np.asarray([list(v) for v in g["qv"].to_numpy()[order]],
-                           dtype=np.float64)
-            x_max = float(np.abs(x).max()) if x.size else 0.0
-            assert dim * x_max * x_max < 2.0 ** 53, \
-                "cosine_bucket_pairs: quantized values too large " \
-                "for exact float64 dot products"
-            sq = np.sqrt(np.asarray(g["norm2"].to_numpy()[order],
-                                    dtype=np.float64))
-            n_less = np.searchsorted(ids, ids, side="left")
-            col_idx = np.arange(n)
-            blk = max(1, min(n, (1 << 23) // max(n, 1)))
-            for a0 in range(0, n, blk):
-                b0 = min(n, a0 + blk)
-                gm = x[a0:b0] @ x.T                   # exact ints
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = gm / (sq[a0:b0, None] * sq[None, :])
-                cmp = np.where(np.isnan(cos), np.inf, cos)
-                # row r (the LARGER id side) pairs with every column
-                # c whose id is strictly smaller: id_a < id_b
-                hit_r, hit_c = np.nonzero(
-                    (cmp >= threshold)
-                    & (col_idx[None, :] < n_less[a0:b0, None]))
+            ids, blocks = _exact_cosine_blocks(
+                g["id"].to_numpy(), g["qv"].to_numpy(),
+                g["norm2"].to_numpy(), threshold)
+            for a0, cos, hit in blocks:
+                # row r (the LARGER id side) pairs with every column c
+                # whose id is strictly smaller: id_a < id_b
+                hit_r, hit_c = np.nonzero(hit)
                 out_a.extend(ids[hit_c].tolist())
                 out_b.extend(ids[hit_r + a0].tolist())
                 out_c.extend(cos[hit_r, hit_c].tolist())
@@ -595,32 +616,12 @@ def semantic_dedup(df: DataFrame, centroids, threshold: float = 0.95,
                 "would go quadratic. Re-fit the quantizer with more "
                 "cells (~sqrt(N); see semantic_dedup_autocells) or "
                 "raise max_cell_rows explicitly.")
-        ids_raw = pdf["id"].to_numpy()
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        x = np.asarray([list(v) for v in pdf["qv"].to_numpy()[order]],
-                       dtype=np.float64)
-        x_max = float(np.abs(x).max()) if x.size else 0.0
-        assert x.shape[1] * x_max * x_max < 2.0 ** 53, \
-            "semantic_dedup: quantized values too large for exact " \
-            "float64 dot products"
-        sq = np.sqrt(np.asarray(pdf["norm2"].to_numpy()[order],
-                                dtype=np.float64))
-        # j eligible to mark i iff id_j < id_i STRICTLY (equal ids
-        # never mark each other, as in the id_b < id_a join)
-        n_less = np.searchsorted(ids, ids, side="left")
+        ids, blocks = _exact_cosine_blocks(
+            pdf["id"].to_numpy(), pdf["qv"].to_numpy(),
+            pdf["norm2"].to_numpy(), threshold)
         dup = np.zeros(n, dtype=bool)
-        blk = max(1, min(n, (1 << 23) // max(n, 1)))  # <=64MB blocks
-        col_idx = np.arange(n)
-        for a0 in range(0, n, blk):
-            b0 = min(n, a0 + blk)
-            g = x[a0:b0] @ x.T                       # exact ints
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = g / (sq[a0:b0, None] * sq[None, :])
-            cos = np.where(np.isnan(cos), np.inf, cos)
-            hit = (cos >= threshold) & \
-                (col_idx[None, :] < n_less[a0:b0, None])
-            dup[a0:b0] = hit.any(axis=1)
+        for a0, _cos, hit in blocks:
+            dup[a0:a0 + len(hit)] = hit.any(axis=1)
         return pd.DataFrame({"id": ids, "cell": cell, "keep": ~dup})
 
     width = df.sparkSession.sparkContext.defaultParallelism

@@ -67,8 +67,7 @@ def bucket_of(url_col, n_buckets: int):
     return (F.pmod(F.xxhash64(url_col), F.lit(n_buckets))).cast("int")
 
 
-def spread_compute(df: DataFrame,
-                   min_partitions: Optional[int] = None) -> DataFrame:
+def spread_compute(df: DataFrame) -> DataFrame:
     """Row-preserving repartition applied ONLY when the input plan is
     narrower than the core count.
 
@@ -79,8 +78,7 @@ def spread_compute(df: DataFrame,
     more partitions than cores and this is a plan-time no-op, so the
     extra exchange is paid exactly when it buys parallelism.
     """
-    width = (min_partitions
-             or df.sparkSession.sparkContext.defaultParallelism)
+    width = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < width:
         return df.repartition(width)
     return df

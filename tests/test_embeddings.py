@@ -113,14 +113,16 @@ def test_text_token_embed_matches_kernel(spark):
     from edspdf_spark.kernels.textfeatures import text_token_features
 
     vocabs, weights = _mini_vocab_weights()
+    # the empty and NULL blocs have no tokens: their sum is zero
     rows = [("u1", 0, "alpha beta"), ("u1", 1, "Page 12"),
-            ("u2", 0, "beta beta unseen")]
+            ("u2", 0, "beta beta unseen"), ("u3", 0, ""), ("u4", 0, None)]
     df = spark.createDataFrame(rows, "url string, order_idx int, text string")
     got = {(r["url"], r["order_idx"]): [r[f"t{c}"] for c in range(4)]
            for r in text_token_embed(df, vocabs, weights).collect()}
+    assert len(got) == len(rows)
     for url, oi, text in rows:
         acc = np.zeros(4, dtype=np.int64)
-        for feats in text_token_features(text):
+        for feats in text_token_features(text or ""):
             for fam in ("shape", "prefix", "suffix"):
                 acc += weights[fam][vocabs[fam].indices.get(feats[fam], 0)]
         assert got[(url, oi)] == acc.tolist(), (url, oi)
@@ -193,13 +195,16 @@ def test_text_cnn_pool_matches_numpy(spark):
     vocabs, weights = _mini_vocab_weights()  # dim 4
     cnn = cnn_pool_weights(in_size=4, out_channels=2, kernel_sizes=(2, 3),
                            output_size=3, seed=5)
-    rows = [("u1", 0, "alpha beta"), ("u2", 0, "Page 12 beta alpha beta")]
+    # a bloc with no tokens (empty or NULL text) pools one zero row
+    rows = [("u1", 0, "alpha beta"), ("u2", 0, "Page 12 beta alpha beta"),
+            ("u3", 0, ""), ("u4", 0, None)]
     df = spark.createDataFrame(rows, "url string, order_idx int, text string")
     got = {r["url"]: [r[f"c{c}"] for c in range(3)]
            for r in text_cnn_pool(df, vocabs, weights, cnn).collect()}
+    assert len(got) == len(rows)
     for url, _oi, text in rows:
-        toks = text_token_features(text)
-        E = np.zeros((len(toks), 4), dtype=np.int64)
+        toks = text_token_features(text or "")
+        E = np.zeros((max(len(toks), 1), 4), dtype=np.int64)
         for t, feats in enumerate(toks):
             for fam in ("shape", "prefix", "suffix"):
                 E[t] += weights[fam][vocabs[fam].indices.get(feats[fam], 0)]

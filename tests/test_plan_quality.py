@@ -200,20 +200,24 @@ def test_simhash_single_shuffle_no_bit_explode(spark):
 
 
 def test_winnow_fingerprints_plan(spark):
-    """Winnowing is doc-local: ONE Arrow kernel stage, one
-    row-preserving repartition, no per-char explode (Generate), no
-    per-doc sort window, no per-row Python."""
+    """Winnowing is doc-local: ONE Arrow kernel stage, no per-char
+    explode (Generate), no per-doc sort window, no per-row Python.
+    Its one row-preserving repartition is doc_map's compute spread:
+    present on an input narrower than the core count, absent on one
+    already as wide (createDataFrame gives defaultParallelism
+    partitions)."""
     from edspdf_spark.operators.analysis import winnow_fingerprints
 
     df = spark.createDataFrame(
         [(1, "hello world this is a document with text")],
         "doc_id long, text string")
-    plan = _plan(winnow_fingerprints(df))
-    assert "EvalPython" not in plan
-    assert plan.count("MapInArrow") == 1, plan
-    assert plan.count("Exchange") == 1, plan
-    assert "Generate" not in plan, plan
-    assert "Window" not in plan, plan
+    for src, exchanges in ((df.coalesce(1), 1), (df, 0)):
+        plan = _plan(winnow_fingerprints(src))
+        assert "EvalPython" not in plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert plan.count("Exchange") == exchanges, plan
+        assert "Generate" not in plan, plan
+        assert "Window" not in plan, plan
 
 
 def test_gopher_quality_is_scan_local(spark):

@@ -464,6 +464,45 @@ def test_lm_ppl_buckets_frozen_cutoffs(spark):
     assert rows == {0: "head", 1: "middle", 2: "tail"}
 
 
+def test_cosine_bucket_pairs_edge_cases(spark):
+    """Within one sign bucket (band_dims=2): a zero-norm vector pairs
+    (its NaN cos passes the threshold) and the row is emitted, with the
+    NaN arriving as a NULL cos (applyInPandas maps a pandas NaN to
+    NULL); vectors of different lengths never pair; equal ids never
+    pair (each copy still pairs with the other ids); NULL vectors are
+    dropped."""
+    import math
+    from collections import Counter
+
+    from edspdf_spark.operators.simsearch import cosine_bucket_pairs
+
+    rows = [(1, [0.0, 0.0, 0.0]),    # zero norm: pairs with 2 and 11
+            (2, [1.0, 1.0, 1.0]),
+            (11, [1.0, 1.0, -1.0]),  # cos 1/3 with 2: below threshold
+            (3, [1.0, 1.0]),         # same bucket, length 2: pairs
+            (5, [2.0, 2.0]),         # with 5 only
+            (7, [-1.0, -1.0, 5.0]),  # bucket 0: the two id-7 copies
+            (7, [-1.0, -1.0, 5.0]),  # never pair with each other,
+            (8, [-1.0, -1.0, 5.0]),  # each pairs with 8
+            (9, None), (10, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def cos(a, b):
+        qa = [round(x * 1000) for x in a]
+        qb = [round(x * 1000) for x in b]
+        dot = sum(x * y for x, y in zip(qa, qb))
+        return dot / (math.sqrt(sum(x * x for x in qa))
+                      * math.sqrt(sum(x * x for x in qb)))
+
+    got = Counter((r["id_a"], r["id_b"], r["cos"])
+                  for r in cosine_bucket_pairs(df, threshold=0.9,
+                                               band_dims=2).collect())
+    c78 = cos([-1.0, -1.0, 5.0], [-1.0, -1.0, 5.0])
+    assert got == Counter({(1, 2, None): 1, (1, 11, None): 1,
+                           (3, 5, cos([1.0, 1.0], [2.0, 2.0])): 1,
+                           (7, 8, c78): 2})
+
+
 def test_semantic_dedup_keeps_first_per_cluster(spark):
     from edspdf_spark.operators.simsearch import semantic_dedup
 
