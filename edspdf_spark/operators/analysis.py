@@ -1147,13 +1147,14 @@ def cm_token_counts(df: DataFrame, id_col: str = "doc_id",
 
     vals = (spread_compute(df.select(F.col(text_col).alias("text")))
             .mapInArrow(count_fn, schema="tok string, cnt bigint"))
+    # the d sketch cells of a `tok` row, for the sketch and the probes
     code = code15(F.col("tok")) % CODE_MOD
-    rows = F.array(*[
+    tok_cells = F.explode(F.array(*[
         F.struct(F.lit(j).alias("j"),
                  ((F.lit(a) * code + F.lit(b)) % CODE_MOD % width)
                  .alias("bucket"))
-        for j, (a, b) in enumerate(CM_ROWS)])
-    cells = (vals.select(F.explode(rows).alias("c"), "cnt")
+        for j, (a, b) in enumerate(CM_ROWS)])).alias("c")
+    cells = (vals.select(tok_cells, "cnt")
              .select("c.j", "c.bucket", "cnt")
              .groupBy("j", "bucket")
              .agg(F.sum("cnt").alias("cnt")))
@@ -1164,14 +1165,7 @@ def cm_token_counts(df: DataFrame, id_col: str = "doc_id",
     probes = (truth.withColumn("rk", F.row_number().over(wnd))
               .where(F.col("rk") <= top_k).drop("rk"))
 
-    pcode = code15(F.col("tok")) % CODE_MOD
-    prows = F.array(*[
-        F.struct(F.lit(j).alias("j"),
-                 ((F.lit(a) * pcode + F.lit(b)) % CODE_MOD % width)
-                 .alias("bucket"))
-        for j, (a, b) in enumerate(CM_ROWS)])
-    probe_cells = (probes.select("tok", "true_count",
-                                 F.explode(prows).alias("c"))
+    probe_cells = (probes.select("tok", "true_count", tok_cells)
                    .select("tok", "true_count", "c.j", "c.bucket"))
     est = (cells.join(F.broadcast(probe_cells), ["j", "bucket"])
            .groupBy("tok")

@@ -27,11 +27,14 @@ from pyspark.sql import functions as F  # noqa: N812
 from ..plans import gate
 
 
-def _driver_union_find(table, pairs: DataFrame) -> DataFrame:
+def _driver_union_find(table, spark):
     """Exact components of the collected (id_a, id_b) `table`: numpy
     min-label propagation with pointer jumping over ids factorized in
     sorted order (a component's min index IS its min id), returned as
-    one Arrow (id, component) DataFrame of `pairs`' id type."""
+    one Arrow (id, component) DataFrame of the table's id type; None
+    when an id is NULL (the distributed joins never match it)."""
+    if any(c.null_count for c in table.columns):
+        return None
     ends = pa.chunked_array(table.column(0).chunks + table.column(1).chunks,
                             table.schema.field(0).type)
     _, first, inv = np.unique(ends.to_numpy(zero_copy_only=False),
@@ -50,7 +53,7 @@ def _driver_union_find(table, pairs: DataFrame) -> DataFrame:
             break
         comp = nxt
     node = ends.take(first)
-    return pairs.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({"id": node, "component": node.take(comp)}))
 
 
@@ -59,36 +62,25 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     reachable via pair edges. Nodes appearing in no pair are absent
     (callers union singletons if needed).
 
-    Size-adaptive strategy: near-dup pair sets are usually TINY
-    relative to the corpus (pairs above threshold after LSH), and each
-    distributed propagation round costs a join + checkpoint regardless
-    of size — pure overhead on a small graph. Pair sets within the
-    driver gate's EDGE_MAX_ROWS pair rows AND EDGE_MAX_BYTES in-memory
-    bytes (plans.gate.driver_table, measured in-plan, so wide string
+    Size-adaptive strategy under plans.gate.run_gated: near-dup pair
+    sets are usually TINY relative to the corpus, and each distributed
+    propagation round costs a join + checkpoint regardless of size.
+    Pair sets within the driver gate's EDGE_MAX_ROWS pair rows AND
+    EDGE_MAX_BYTES in-memory bytes (measured in-plan, so wide string
     ids route distributed) run exact union-find on the driver, which
-    needs neither symmetric nor distinct edges; pairs a driver pass
-    built (minhash_lsh_pairs, the one-block postings kernel) are gated
-    from their own table, with no Spark job. Larger sets, and sets
-    with a NULL id, build the symmetric distinct edge set and run the
-    distributed min-label propagation, whose per-round cost is then
-    actually amortized. Both paths produce identical labels.
+    needs neither symmetric nor distinct edges; a driver frame
+    (minhash_lsh_pairs, the one-block postings kernel) is gated from
+    its own table, with no Spark job and no cache. Larger sets, and
+    sets with a NULL id, run the distributed min-label propagation
+    over the symmetric distinct edges of the input, which is cached
+    for the call unless the caller cached it (pair generation usually
+    costs far more than the labeling). Both paths give identical
+    labels.
 
     Raises RuntimeError if the propagation has not converged after
     max_iter rounds (component diameter > max_iter) — unconverged
     labels must never masquerade as a correct keep-list."""
-    # persist the INPUT first: the gate sizes and collects it, and a
-    # refusal reads it in both union branches — pair generation (an
-    # LSH pipeline) is usually far more expensive than the labeling.
-    # A local (driver-built) frame is on the driver already: the gate
-    # answers from its table, and caching it would only copy it
-    if not pairs.isLocal():
-        pairs.persist()
-    try:
-        table = gate.driver_table(pairs, gate.EDGE_MAX_ROWS,
-                                  gate.EDGE_MAX_BYTES, ["id_a", "id_b"])
-        if table is not None and not any(c.null_count
-                                         for c in table.columns):
-            return _driver_union_find(table, pairs)
+    def distributed(pairs):
         edges = (pairs.select(F.col("id_a").alias("src"),
                               F.col("id_b").alias("dst"))
                  .unionByName(pairs.select(F.col("id_b").alias("src"),
@@ -99,8 +91,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             return _propagate(edges, max_iter)
         finally:
             edges.unpersist()
-    finally:
-        pairs.unpersist()
+
+    return gate.run_gated(
+        pairs, gate.EDGE_MAX_ROWS, gate.EDGE_MAX_BYTES, ["id_a", "id_b"],
+        lambda t: _driver_union_find(t, pairs.sparkSession), distributed)
 
 
 def _propagate(edges: DataFrame, max_iter: int) -> DataFrame:

@@ -42,7 +42,6 @@ from typing import Optional
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -185,53 +184,44 @@ def _factorize(vals, order):
     return sv[new], inv
 
 
-def _driver_shingles(shingles: DataFrame):
-    """The driver pair paths' prologue: the gated (id, code) table,
+def _driver_shingles(table: pa.Table):
+    """The driver pair paths' prologue on the gated (id, code) table:
     NULL ids/codes dropped (joins never match them), ids factorized in
-    sorted order (index order IS id order): (id_ddl, ids, codes,
-    doc_inv, order_d), or None to stay distributed."""
-    id_ddl = dict(shingles.dtypes).get("id")
-    if id_ddl not in ("bigint", "string"):
-        return None
-    # the gate reads its input twice (size, collect): a doc_map table
-    # is cached so that its Python stage runs once
-    owned = (not shingles.isLocal()
-             and shingles.storageLevel == StorageLevel.NONE)
-    if owned:
-        shingles.persist()
-    try:
-        table = gate.driver_table(shingles, None, PAIR_DRIVER_MAX_BYTES,
-                                  ["id", "code"])
-    finally:
-        if owned:
-            shingles.unpersist()
-    if table is None:
-        return None
+    sorted order (index order IS id order): (ids, codes, doc_inv,
+    order_d)."""
     table = table.drop_null()
     ids_raw = table.column("id").to_numpy(zero_copy_only=False)
     order_d = np.argsort(ids_raw, kind="stable")
     ids, doc_inv = _factorize(ids_raw, order_d)
-    return (id_ddl, ids, table.column("code").to_numpy().astype(np.int64),
+    return (ids, table.column("code").to_numpy().astype(np.int64),
             doc_inv, order_d)
 
 
-def _pairs_via_postings(shingles: DataFrame, max_doc_freq: Optional[int],
-                        mode: str, threshold: float, min_intersect: int):
-    """Gated all-pairs intersection counter. Returns the result
-    DataFrame, or None when the input exceeds PAIR_DRIVER_MAX_BYTES
-    (or has an id type the kernel does not handle) — caller falls
-    back to the join formulation. The kernel runs per block of 4,096
-    docs: one block runs in-process and comes back as a driver frame;
-    more run as one task each against a broadcast of the CSR arrays.
-    Semantics replicated exactly: rows are NOT deduplicated (doc
-    frequency and sizes count raw rows, as the join did), ids compare
-    strictly (equal ids never pair), sizes are taken after the
-    doc-frequency drop, and all ratios are the same int64 / float64
-    IEEE divisions."""
-    got = _driver_shingles(shingles)
-    if got is None:
-        return None
-    id_ddl, uniq_ids, codes, doc_inv, order_d = got
+def _gated_shingles(shingles: DataFrame, driver, distributed):
+    """plans.gate.run_gated on the (id, code) table within
+    PAIR_DRIVER_MAX_BYTES (a doc_map table runs its Python stage once);
+    an id type other than bigint or string goes distributed with no
+    sizing pass."""
+    if dict(shingles.dtypes).get("id") not in ("bigint", "string"):
+        return distributed(shingles)
+    return gate.run_gated(shingles, None, PAIR_DRIVER_MAX_BYTES,
+                          ["id", "code"], driver, distributed)
+
+
+def _pairs_via_postings(shingles: DataFrame, table: pa.Table,
+                        max_doc_freq: Optional[int], mode: str,
+                        threshold: float, min_intersect: int):
+    """All-pairs intersection counter on `shingles`' gated table
+    (_gated_shingles). The kernel runs per block of 4,096 docs: one
+    block runs in-process and comes back as a driver frame; more run
+    as one task each against a broadcast of the CSR arrays. Semantics
+    replicated exactly: rows are NOT deduplicated (doc frequency and
+    sizes count raw rows, as the join did), ids compare strictly
+    (equal ids never pair), sizes are taken after the doc-frequency
+    drop, and all ratios are the same int64 / float64 IEEE
+    divisions."""
+    id_ddl = dict(shingles.dtypes)["id"]
+    uniq_ids, codes, doc_inv, order_d = _driver_shingles(table)
     spark = shingles.sparkSession
     # TWO sorts total (by id, by code); factorizations, counts and
     # both CSR layouts derive from the sorted orders (np.unique would
@@ -370,14 +360,15 @@ def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5,
     4,096 docs); beyond it, the capped self-join _pair_join is the
     scale path. A pair whose denominator is not positive (ids
     repeated with equal row multisets) is dropped on both paths."""
-    fast = _pairs_via_postings(shingles, max_doc_freq, "jaccard",
-                               threshold, min_intersect)
-    if fast is not None:
-        return fast
     den = F.col("size_a") + F.col("size_b") - F.col("inter")
-    return (_pair_join(shingles, min_intersect, max_doc_freq)
-            .withColumn("jaccard", F.when(den > 0, F.col("inter") / den))
-            .where(F.col("jaccard") >= threshold))
+    return _gated_shingles(
+        shingles,
+        lambda t: _pairs_via_postings(shingles, t, max_doc_freq,
+                                      "jaccard", threshold, min_intersect),
+        lambda sh: (_pair_join(sh, min_intersect, max_doc_freq)
+                    .withColumn("jaccard",
+                                F.when(den > 0, F.col("inter") / den))
+                    .where(F.col("jaccard") >= threshold)))
 
 
 def _pair_join(shingles: DataFrame, min_intersect: int,
@@ -436,60 +427,57 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       threshold: float = 0.5,
                       max_doc_freq: Optional[int] = None) -> DataFrame:
     """Full near-dup chain: shingle -> minhash -> LSH bucket join ->
-    exact-Jaccard verification of the candidates only; within the
-    driver gate, one driver pass (_minhash_driver), which reads a
-    driver-shingled table with no Spark job and returns its pairs as
-    a driver frame (plans.gate.driver_frame), so connected_components
-    labels them with no job either. A repeated id's rows are a
-    multiset, as in jaccard_pairs: jaccard can exceed 1.
+    exact-Jaccard verification of the candidates only. The shingle
+    table runs under the pair operators' gate (_gated_shingles): when
+    it passes, one driver pass (_minhash_driver) reads a
+    driver-shingled table with no Spark job and returns its pairs as a
+    driver frame, so connected_components labels them with no job
+    either. A repeated id's rows are a multiset, as in jaccard_pairs:
+    jaccard can exceed 1.
 
-    The distributed fallback verifies only shingles of documents in
-    some candidate pair (leftsemi prune) through jaccard_pairs. The
-    call owns both of its caches and releases them before returning:
-    the shingle table unless it is a driver frame (read by the driver
-    gate, the signature build and the verification) and `cand` (read
-    by the prune and the final join). The returned pairs are an eager local checkpoint, so they
-    outlive both."""
+    The distributed fallback (also past gate.EDGE_MAX_ROWS bucket
+    pairs) runs on the gate's call-cached shingle table and verifies
+    only shingles of documents in some candidate pair (leftsemi prune)
+    through jaccard_pairs. It owns `cand` (read by the prune and the
+    final join); its pairs are an eager local checkpoint, so they
+    outlive both caches."""
+    assert n_hashes <= len(MINHASH_AB) and n_hashes % band_size == 0
     sh = shingle_table(df, id_col, text_col, k, max_doc_freq)
-    if not sh.isLocal():  # a driver frame needs no cache
-        sh.persist()
-    cand = None
-    try:
-        fast = _minhash_driver(sh, n_hashes, band_size, threshold)
-        if fast is not None:
-            return fast
+
+    def distributed(sh):
         cand = lsh_candidates(minhash_signatures(sh, n_hashes),
                               band_size).persist()
-        cand_ids = (cand.select(F.col("id_a").alias("id"))
-                    .unionByName(cand.select(F.col("id_b").alias("id")))
-                    .distinct())
-        # max_doc_freq=None: the verification input is leftsemi-pruned
-        # to candidate documents only (bounded by construction), and
-        # the verified jaccard must be over the SAME shingle universe
-        # the signatures were built from — corpus-level capping happens
-        # via this function's own max_doc_freq at shingle_table time
-        verified = jaccard_pairs(sh.join(cand_ids, "id", "leftsemi"),
-                                 threshold, 1, None)
-        return (cand.join(verified, ["id_a", "id_b"])
-                .select("id_a", "id_b", "jaccard")
-                .localCheckpoint(eager=True))
-    finally:
-        sh.unpersist()
-        if cand is not None:
+        try:
+            cand_ids = (cand.select(F.col("id_a").alias("id"))
+                        .unionByName(cand.select(F.col("id_b").alias("id")))
+                        .distinct())
+            # max_doc_freq=None: the verification input is pruned to
+            # candidate documents only (bounded by construction), and
+            # the verified jaccard must be over the SAME shingle
+            # universe the signatures were built from — corpus-level
+            # capping is this function's max_doc_freq, at shingling
+            verified = jaccard_pairs(sh.join(cand_ids, "id", "leftsemi"),
+                                     threshold, 1, None)
+            return (cand.join(verified, ["id_a", "id_b"])
+                    .select("id_a", "id_b", "jaccard")
+                    .localCheckpoint(eager=True))
+        finally:
             cand.unpersist()
 
+    return _gated_shingles(
+        sh, lambda t: _minhash_driver(sh, t, n_hashes, band_size,
+                                      threshold),
+        distributed)
 
-def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
-                    threshold: float) -> Optional[DataFrame]:
-    """minhash_lsh_pairs as one numpy pass over the gated shingle
-    table, row for row the distributed chain's output (inter counts
+
+def _minhash_driver(sh: DataFrame, table: pa.Table, n_hashes: int,
+                    band_size: int, threshold: float
+                    ) -> Optional[DataFrame]:
+    """minhash_lsh_pairs as one numpy pass over `sh`'s gated table,
+    row for row the distributed chain's output (inter counts
     code-matching row pairs and sizes count rows, as the join does);
-    None to stay distributed, also past gate.EDGE_MAX_ROWS pairs."""
-    assert n_hashes <= len(MINHASH_AB) and n_hashes % band_size == 0
-    got = _driver_shingles(sh)
-    if got is None:
-        return None
-    id_ddl, ids, codes, doc_inv, order_d = got
+    None to stay distributed past gate.EDGE_MAX_ROWS pairs."""
+    ids, codes, doc_inv, order_d = _driver_shingles(table)
     n = len(ids)
     docs, codes = doc_inv[order_d], codes[order_d]  # doc-major rows
     sizes = np.bincount(docs, minlength=n)
@@ -535,7 +523,7 @@ def _minhash_driver(sh: DataFrame, n_hashes: int, band_size: int,
     a, b, inter = a[ok], b[ok], inter[ok]
     jac = inter / (sizes[a] + sizes[b] - inter)
     keep = jac >= threshold
-    pa_id = pa.int64() if id_ddl == "bigint" else pa.string()
+    pa_id = pa.int64() if dict(sh.dtypes)["id"] == "bigint" else pa.string()
     return gate.driver_frame(sh.sparkSession, pa.table({
         "id_a": pa.array(ids[a[keep]], pa_id),
         "id_b": pa.array(ids[b[keep]], pa_id), "jaccard": jac[keep]}))
@@ -878,23 +866,23 @@ def containment_pairs(shingles: DataFrame, threshold: float = 0.8,
     aggregation — the direction fan-out happens on pair rows, never
     on shingle rows.
     """
-    fast = _pairs_via_postings(shingles, max_doc_freq, "containment",
-                               threshold, min_intersect)
-    if fast is not None:
-        return fast
-    j = _pair_join(shingles, min_intersect, max_doc_freq)
-    fwd = j.select(F.col("id_a").alias("id_src"),
-                   F.col("id_b").alias("id_dst"), "inter",
-                   F.col("size_a").alias("size_src"),
-                   F.col("size_b").alias("size_dst"))
-    rev = j.select(F.col("id_b").alias("id_src"),
-                   F.col("id_a").alias("id_dst"), "inter",
-                   F.col("size_b").alias("size_src"),
-                   F.col("size_a").alias("size_dst"))
-    out = fwd.unionByName(rev)
-    c = F.col("inter") / F.col("size_src")
-    return (out.withColumn("containment", c)
-            .where(F.col("containment") >= threshold))
+    def distributed(sh):
+        j = _pair_join(sh, min_intersect, max_doc_freq)
+        fwd, rev = (j.select(F.col(f"id_{s}").alias("id_src"),
+                             F.col(f"id_{d}").alias("id_dst"), "inter",
+                             F.col(f"size_{s}").alias("size_src"),
+                             F.col(f"size_{d}").alias("size_dst"))
+                    for s, d in ("ab", "ba"))
+        c = F.col("inter") / F.col("size_src")
+        return (fwd.unionByName(rev).withColumn("containment", c)
+                .where(F.col("containment") >= threshold))
+
+    return _gated_shingles(
+        shingles,
+        lambda t: _pairs_via_postings(shingles, t, max_doc_freq,
+                                      "containment", threshold,
+                                      min_intersect),
+        distributed)
 
 
 def edit_verified_pairs(corpus: DataFrame, pairs: DataFrame,

@@ -17,11 +17,12 @@ Scale design (10^12 pages):
   rank_scaled / 10^12): integer sums are associative, so the result
   is bit-identical regardless of partitioning, executor count, or
   aggregation order — the property every oracled operator in this
-  repo maintains. It and `host_label_propagation` share one rule
-  (`_fixpoint`): the driver gate first, else one distributed
-  iteration owned by the call — one broadcast join of edges with the
-  rank table and one map-side-combined sum on dst per round, ranks
-  localCheckpoint-ed each round to truncate lineage (the
+  repo maintains. It and `host_label_propagation` run their distinct
+  edges under plans.gate.run_gated: an exact integer driver mirror,
+  else one distributed iteration over the call-cached edges — one
+  broadcast join of edges with the rank table and one map-side-
+  combined sum on dst per round, ranks localCheckpoint-ed each round
+  to truncate lineage (the
   connected-components pattern, operators/components.py). Nothing
   stays cached after a call returns.
 
@@ -97,32 +98,6 @@ def _distinct_edges(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _fixpoint(edges: DataFrame, columns: str, driver, distributed
-              ) -> DataFrame:
-    """The one execution rule of the iterative host-graph operators.
-
-    The distinct edge set is persisted for this call and offered to
-    the driver gate (plans.gate.driver_table with EDGE_MAX_ROWS /
-    EDGE_MAX_BYTES, sized in-plan) whatever the iteration count. A
-    broadcast-scale graph then runs `driver(rows)`, the exact integer
-    mirror on collected (src, dst) tuples: per-iteration job
-    scheduling and broadcast latency would dwarf its arithmetic.
-    Otherwise `distributed(e)` iterates in Spark and returns an
-    eagerly materialized result. Either way the edge cache is
-    released before returning, so nothing outlives the call."""
-    e = _distinct_edges(edges).persist()
-    try:
-        table = gate.driver_table(e, gate.EDGE_MAX_ROWS,
-                                  gate.EDGE_MAX_BYTES)
-        if table is None:
-            return distributed(e)
-        rows = driver(list(zip(*table.to_pydict().values())))
-        return edges.sparkSession.createDataFrame(
-            rows, f"host {e.dtypes[0][1]}, {columns}")
-    finally:
-        e.unpersist()
-
-
 def _driver_pagerank_rows(rows, iterations: int, damping_pct: int,
                           scale: int):
     """Exact mirror of the distributed BIGINT iteration in plain
@@ -164,16 +139,20 @@ def host_pagerank(edges: DataFrame, iterations: int = 4,
     Every operation is BIGINT, so distributed sums are bit-exact and
     partition-invariant; `rank` is the single final float division.
 
-    Runs under the `_fixpoint` rule: the driver mirror
-    (_driver_pagerank_rows) when the edge set passes the driver gate,
-    else the distributed iteration below. Both give identical rows
-    (asserted in tests)."""
+    Runs under plans.gate.run_gated whatever the iteration count
+    (per-round job scheduling would dwarf a small graph's arithmetic):
+    the driver mirror (_driver_pagerank_rows) on the gated distinct
+    edges, else the distributed iteration below. Both give identical
+    rows (asserted in tests)."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    return _fixpoint(
-        edges, "rank_scaled bigint, rank double",
-        lambda rows: _driver_pagerank_rows(rows, iterations,
-                                           damping_pct, scale),
+    e = _distinct_edges(edges)
+    return gate.run_gated(
+        e, gate.EDGE_MAX_ROWS, gate.EDGE_MAX_BYTES, None,
+        lambda t: edges.sparkSession.createDataFrame(
+            _driver_pagerank_rows(list(zip(*t.to_pydict().values())),
+                                  iterations, damping_pct, scale),
+            f"host {e.dtypes[0][1]}, rank_scaled bigint, rank double"),
         lambda e: _distributed_pagerank(e, iterations, damping_pct,
                                         scale))
 
@@ -353,25 +332,29 @@ def host_label_propagation(edges: DataFrame, seeds: DataFrame,
     result is bit-identical under any partitioning.
 
     Output: (host, score_scaled, verdict) with verdict spam/ham/
-    unknown by the hi/lo per-mille cut. Runs under the `_fixpoint`
-    rule, like host_pagerank; the distributed iteration has the
+    unknown by the hi/lo per-mille cut. Runs under plans.gate.run_gated,
+    like host_pagerank; the distributed iteration has the
     host_pagerank plan shape (one broadcast of the score table into
     the edge join and one map-side-combined aggregation on dst per
     round)."""
+    e = _distinct_edges(edges)
 
-    def driver(rows):
+    def driver(table):
         # NULL-labeled seeds are unseeded in the distributed path
         # (isNotNull join); mirror that here instead of crashing on
         # None * int
         seed_rows = seeds.where(F.col("label").isNotNull()) \
             .select(F.col("host"),
                     F.col("label").cast("bigint")).collect()
-        return _driver_label_prop_rows(
-            rows, {r[0]: r[1] for r in seed_rows},
-            iterations, scale, hi_milli, lo_milli)
+        return edges.sparkSession.createDataFrame(
+            _driver_label_prop_rows(
+                list(zip(*table.to_pydict().values())),
+                {r[0]: r[1] for r in seed_rows},
+                iterations, scale, hi_milli, lo_milli),
+            f"host {e.dtypes[0][1]}, score_scaled bigint, verdict string")
 
-    return _fixpoint(
-        edges, "score_scaled bigint, verdict string", driver,
+    return gate.run_gated(
+        e, gate.EDGE_MAX_ROWS, gate.EDGE_MAX_BYTES, None, driver,
         lambda e: _distributed_label_prop(e, seeds, iterations, scale,
                                           hi_milli, lo_milli))
 

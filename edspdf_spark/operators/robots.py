@@ -108,11 +108,11 @@ def robots_rules(robots: DataFrame, agent: str = "spark-graft",
 
 
 def robots_verdicts(frontier: DataFrame, rules: DataFrame,
-                    url_col: str = "url",
-                    broadcast_rules: bool = True) -> DataFrame:
+                    url_col: str = "url") -> DataFrame:
     """frontier(url, ...) -> (url, host, path, allowed, match_len):
     longest matching applicable rule decides (allow wins ties); no
-    matching rule -> allowed. One host join + one struct-max groupBy."""
+    matching rule -> allowed. One host join against the broadcast rules
+    table + one struct-max groupBy."""
     host = F.lower(F.split_part(F.split_part(F.col(url_col),
                                              F.lit("//"), F.lit(2)),
                                 F.lit("/"), F.lit(1)))
@@ -123,10 +123,8 @@ def robots_verdicts(frontier: DataFrame, rules: DataFrame,
                F.expr(f"substring(split_part({url_col}, '//', 2), "
                       f"instr(split_part({url_col}, '//', 2), '/'))"))
         .otherwise(F.lit("/")).alias("path"))
-    r = rules.select("host", "is_allow",
-                     F.col("path").alias("rule_path"), "plen")
-    if broadcast_rules:
-        r = F.broadcast(r)
+    r = F.broadcast(rules.select("host", "is_allow",
+                                 F.col("path").alias("rule_path"), "plen"))
     j = (base.join(r, "host", "left")
          .withColumn("hit", F.col("rule_path").isNotNull() &
                      F.col("path").startswith(F.col("rule_path"))))

@@ -356,9 +356,9 @@ def _exact_cosine_blocks(ids, qvs, norm2, threshold: float):
     block is (a0, cos, hit) for rows a0.. of the id-sorted group
     against all of it, in <=64 MB row blocks: `cos` the raw float64
     cosine (NaN for a zero norm) and `hit` the pairs with cos >=
-    threshold, NaN counting as +inf (Spark/DuckDB NaN-is-largest),
-    whose column id is STRICTLY smaller than the row id (equal ids
-    never pair). Quantized ints make the float64 matmul exact, which
+    threshold, a NaN cosine never a hit (the oracles' division by a
+    zero norm is NULL, which no comparison passes), whose column id
+    is STRICTLY smaller than the row id (equal ids never pair). Quantized ints make the float64 matmul exact, which
     is asserted."""
     import numpy as np
 
@@ -380,7 +380,7 @@ def _exact_cosine_blocks(ids, qvs, norm2, threshold: float):
             gm = x[a0:b0] @ x.T                       # exact ints
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = gm / (sq[a0:b0, None] * sq[None, :])
-            hit = ((np.where(np.isnan(cos), np.inf, cos) >= threshold)
+            hit = ((cos >= threshold)
                    & (col_idx[None, :] < n_less[a0:b0, None]))
             yield a0, cos, hit
 
@@ -415,11 +415,9 @@ def cosine_bucket_pairs(df: DataFrame, threshold: float = 0.9,
     # bucket group is ONE exact float64 matmul. Pairs across vectors
     # of DIFFERENT lengths had a NULL dot (zip_with padding) and were
     # filtered by `cos >= threshold`; the kernel reproduces that by
-    # pairing only within equal-dimension groups. NaN cosines
-    # (zero-norm vectors) satisfy `>= threshold` under Spark/DuckDB
-    # NaN-is-largest comparison semantics and are emitted; the NaN
-    # reaches Spark as a NULL cos (applyInPandas maps pandas NaN to
-    # NULL).
+    # pairing only within equal-dimension groups. A zero-norm
+    # vector's cosine is NaN here and NULL in Spark and DuckDB (a
+    # division by zero), so it fails `>= threshold` and never pairs.
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         out_a, out_b, out_c = [], [], []
         lens = pdf["qv"].map(len).to_numpy()
@@ -600,9 +598,9 @@ def semantic_dedup(df: DataFrame, centroids, threshold: float = 0.95,
     # lambda invocations (~200M at sf1.0) — and which instantiated
     # the assignment kernel three times (a side, b side, final join).
     # Math is bit-identical: quantized ints make the float64 matmul
-    # exact (asserted), cos is the same IEEE expression, and NaN
-    # cosines (zero-norm vectors) compare GREATER than the threshold
-    # exactly as Spark/DuckDB's NaN-is-largest semantics do.
+    # exact (asserted), cos is the same IEEE expression, and a NaN
+    # cosine (a zero-norm vector) is never a hit, as the NULL cosine
+    # of the Spark/DuckDB division by a zero norm never passes.
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         cell = int(pdf["cell"].iloc[0])
         n = len(pdf)

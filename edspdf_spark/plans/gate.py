@@ -1,11 +1,19 @@
 """The driver gate of the size-adaptive operators (shingling, the
-postings pair counter, union-find, PageRank, label propagation):
-collect a small input to the driver as one Arrow table, or refuse so
-the caller stays distributed. Sizing runs inside the Spark plan and
-nothing is written to disk, so the gate routes the same whether or not
-the driver shares a disk with the executors. Caps are in-memory
-(Arrow) bytes, since what callers build from the table lives
+postings pair counter, the minhash pass, union-find, PageRank, label
+propagation): collect a small input to the driver as one Arrow table,
+or refuse so the caller stays distributed. Sizing runs inside the
+Spark plan and nothing is written to disk, so the gate routes the same
+whether or not the driver shares a disk with the executors. Caps are
+in-memory (Arrow) bytes, since what callers build from the table lives
 uncompressed on the driver.
+
+run_gated is the one rule around the gate, used by the pair operators
+and minhash_lsh_pairs (operators/dedup.py), connected_components and
+the host-graph fixpoints: cache the input for the call (never a driver
+frame or a caller's cache), ask the gate once, run the driver path or
+else the distributed one on the cached input, release only the cache
+it made. shingle_table's text gate calls driver_table alone: its
+fallback reads a plain scan once.
 
 A frame a driver path built (driver_frame) is known on the driver: the
 gate sizes and returns its table with no Spark job, so a chain of
@@ -19,6 +27,7 @@ from typing import Optional, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -88,3 +97,24 @@ def driver_table(df: DataFrame, max_rows: Optional[int], max_bytes: int,
     ]).write.format("noop").mode("overwrite").save()
     n, *payload = size.get.values()
     return df.toArrow() if fits(n, payload) else None
+
+
+def run_gated(df: DataFrame, max_rows: Optional[int], max_bytes: int,
+              columns: Optional[Sequence[str]], driver,
+              distributed) -> DataFrame:
+    """`driver(table)` on `df`'s driver_table (`max_rows`, `max_bytes`,
+    `columns`), or `distributed(df)` when the gate refuses or `driver`
+    returns None. `df` is cached for the call unless it is a local
+    relation or already cached, and only that cache is released: a
+    lazy result reads `df` uncached, so a path that reads it twice
+    materializes its result before returning."""
+    owned = not df.isLocal() and df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        table = driver_table(df, max_rows, max_bytes, columns)
+        out = None if table is None else driver(table)
+        return distributed(df) if out is None else out
+    finally:
+        if owned:
+            df.unpersist()

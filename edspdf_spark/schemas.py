@@ -48,10 +48,6 @@ BLOCS_SCHEMA = StructType([
     StructField("n_blocs", IntegerType()),
 ])
 
-LABELED_BLOCS_SCHEMA = StructType(
-    BLOCS_SCHEMA.fields + [StructField("label", StringType())]
-)
-
 # aggregated output (reference Text objects keyed by label,
 # structures.py:237-259)
 TEXTS_SCHEMA = StructType([
@@ -84,23 +80,4 @@ MASKS_SCHEMA = StructType([
     StructField("y1", DoubleType()),
     StructField("page_num", IntegerType()),   # null => all pages
     StructField("priority", IntegerType()),   # mask order (argmax tie-break)
-])
-
-METRICS_SCHEMA = StructType([
-    StructField("run_id", StringType()),
-    StructField("partition_id", IntegerType()),
-    StructField("docs", LongType()),
-    StructField("blocs", LongType()),
-    StructField("error_docs", LongType()),
-    StructField("bytes_in", LongType()),
-    StructField("wall_s", DoubleType()),
-    StructField("executor", StringType()),
-])
-
-PROGRESS_SCHEMA = StructType([
-    StructField("run_id", StringType()),
-    StructField("bucket", IntegerType()),
-    StructField("status", StringType()),
-    StructField("n_docs", LongType()),
-    StructField("updated_at", TimestampType()),
 ])

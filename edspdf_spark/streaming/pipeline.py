@@ -14,8 +14,6 @@ one-shot backfill case instead.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -24,24 +22,14 @@ from ..schemas import PAGES_SCHEMA
 
 
 def stream_pages(spark: SparkSession, input_dir: str, output_dir: str,
-                 checkpoint_dir: str, cfg: PipelineConfig,
-                 available_now: bool = True,
-                 max_files_per_trigger: Optional[int] = None
-                 ) -> StreamingQuery:
-    """Start (and return) the streaming query. With available_now=True
-    it drains the existing backlog and stops — call .awaitTermination()."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
-
-    out = run_fused(pages, cfg)
-
-    writer = (out.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+                 checkpoint_dir: str, cfg: PipelineConfig) -> StreamingQuery:
+    """Start (and return) the streaming query: an availableNow trigger
+    drains the existing backlog and stops — call .awaitTermination()."""
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
+    return (run_fused(pages, cfg).writeStream
+            .format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())

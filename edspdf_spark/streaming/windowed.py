@@ -37,19 +37,18 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
 def stream_event_counts(spark: SparkSession, input_dir: str,
                         output_dir: str, checkpoint_dir: str,
                         schema, window: str = "1 hour",
-                        watermark: str = "2 hours",
-                        available_now: bool = True) -> StreamingQuery:
+                        watermark: str = "2 hours") -> StreamingQuery:
     """File-stream version: readStream(parquet) -> watermark ->
-    windowed agg -> append parquet (only finalized windows emit)."""
+    windowed agg -> append parquet (only finalized windows emit),
+    under an availableNow trigger that drains the backlog and stops."""
     src = spark.readStream.schema(schema).parquet(input_dir)
     agg = windowed_event_counts(src, window=window, watermark=watermark)
-    writer = (agg.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (agg.writeStream.format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def sessionize(events: DataFrame, key_col: str = "user_id",

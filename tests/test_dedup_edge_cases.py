@@ -332,14 +332,18 @@ def test_pair_gate_refusal_matches_postings(spark, monkeypatch, id_type,
     # reads past the text gate
     monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
     sh = _gate_shingles(spark, id_type)
+    calls = []
+    orig = dedup._pairs_via_postings
+    monkeypatch.setattr(dedup, "_pairs_via_postings",
+                        lambda *a: calls.append(1) or orig(*a))
 
     def run(refused):
-        assert (dedup._pairs_via_postings(sh, max_doc_freq, "jaccard",
-                                          0.01, 1) is None) == refused
+        calls.clear()
         jac = {tuple(r) for r in dedup.jaccard_pairs(
             sh, threshold=0.01, max_doc_freq=max_doc_freq).collect()}
         con = {tuple(r) for r in dedup.containment_pairs(
             sh, threshold=0.01, max_doc_freq=max_doc_freq).collect()}
+        assert (not calls) == refused
         return jac, con
 
     postings = run(refused=False)

@@ -433,6 +433,83 @@ def test_driver_table_caps_rows_and_arrow_bytes(spark):
         assert sorted(got.column("id").to_pylist()) == [1, 2, 3]
 
 
+def test_run_gated_caches_only_for_the_call(spark, monkeypatch):
+    """run_gated, the one rule of the gated operators: a Spark input
+    is cached for the call and released after it, on the driver path
+    and on the fallback; a driver path that declines (returns None)
+    falls back while that cache is held; a caller's cache is never
+    released, also by connected_components; a driver frame is neither
+    cached nor sized by a job."""
+    import pyarrow as pa
+    from pyspark import StorageLevel
+
+    from edspdf_spark.operators.components import connected_components
+    from edspdf_spark.plans import gate
+
+    sc = spark.sparkContext
+
+    def cached(df):
+        return df.storageLevel != StorageLevel.NONE
+
+    def entries():
+        return spark._jsparkSession.sharedState().cacheManager() \
+            .numCachedEntries()
+
+    # connected_components keeps a caller's cache, on both paths
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "id_a long, id_b long").select("id_a",
+                                                                 "id_b")
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    pairs.persist()
+    try:
+        for rows in (gate.EDGE_MAX_ROWS, 0):
+            monkeypatch.setattr(gate, "EDGE_MAX_ROWS", rows)
+            assert {tuple(r) for r in
+                    connected_components(pairs).collect()} == want
+            assert cached(pairs)
+    finally:
+        pairs.unpersist()
+    monkeypatch.undo()
+
+    # the owned cache: held on both paths, released after either
+    df = spark.range(6).selectExpr("id", "id % 2 AS k")
+    seen = []
+
+    def path(name, out):
+        def run(x):
+            seen.append((name, cached(df)))
+            return out(x)
+        return run
+
+    for max_rows, driver_out, took in ((6, "frame", "driver"),
+                                      (6, None, "distributed"),
+                                      (5, "frame", "distributed")):
+        seen.clear()
+        before = entries()
+        got = gate.run_gated(
+            df, max_rows, 1 << 20, None,
+            path("driver", lambda t: driver_out and gate.driver_frame(
+                spark, t)),
+            path("distributed", lambda d: d))
+        assert seen[-1] == (took, True), seen
+        assert (len(seen) == 2) == (max_rows == 6 and driver_out is None)
+        assert not cached(df) and entries() == before
+        assert sorted(r.id for r in got.collect()) == list(range(6))
+
+    # a driver frame: no cache, no job, the driver path's own result
+    frame = gate.driver_frame(spark, pa.table(
+        {"id_a": pa.array([1, 2, 7], pa.int64()),
+         "id_b": pa.array([2, 3, 8], pa.int64())}))
+    sc.setJobGroup("driver_frame", "driver_frame")
+    try:
+        comp = connected_components(frame)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("driver_frame"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs == 0 and not cached(frame)
+    assert {tuple(r) for r in comp.collect()} == want
+
+
 def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
         spark, monkeypatch):
     """doc_map: the output id keeps the input's type, NULL text reaches

@@ -465,10 +465,9 @@ def test_lm_ppl_buckets_frozen_cutoffs(spark):
 
 
 def test_cosine_bucket_pairs_edge_cases(spark):
-    """Within one sign bucket (band_dims=2): a zero-norm vector pairs
-    (its NaN cos passes the threshold) and the row is emitted, with the
-    NaN arriving as a NULL cos (applyInPandas maps a pandas NaN to
-    NULL); vectors of different lengths never pair; equal ids never
+    """Within one sign bucket (band_dims=2): a zero-norm vector never
+    pairs (its cosine is NULL in the DuckDB oracle, which drops the
+    pair); vectors of different lengths never pair; equal ids never
     pair (each copy still pairs with the other ids); NULL vectors are
     dropped."""
     import math
@@ -476,7 +475,7 @@ def test_cosine_bucket_pairs_edge_cases(spark):
 
     from edspdf_spark.operators.simsearch import cosine_bucket_pairs
 
-    rows = [(1, [0.0, 0.0, 0.0]),    # zero norm: pairs with 2 and 11
+    rows = [(1, [0.0, 0.0, 0.0]),    # zero norm: pairs with nothing
             (2, [1.0, 1.0, 1.0]),
             (11, [1.0, 1.0, -1.0]),  # cos 1/3 with 2: below threshold
             (3, [1.0, 1.0]),         # same bucket, length 2: pairs
@@ -498,8 +497,7 @@ def test_cosine_bucket_pairs_edge_cases(spark):
                   for r in cosine_bucket_pairs(df, threshold=0.9,
                                                band_dims=2).collect())
     c78 = cos([-1.0, -1.0, 5.0], [-1.0, -1.0, 5.0])
-    assert got == Counter({(1, 2, None): 1, (1, 11, None): 1,
-                           (3, 5, cos([1.0, 1.0], [2.0, 2.0])): 1,
+    assert got == Counter({(3, 5, cos([1.0, 1.0], [2.0, 2.0])): 1,
                            (7, 8, c78): 2})
 
 
@@ -512,7 +510,8 @@ def test_semantic_dedup_keeps_first_per_cluster(spark):
          (1, [1.0, 0.0100001]),  # ~identical, larger id -> dropped
          (2, [-1.0, 0.0]),       # cluster 1, alone -> kept
          (3, [0.0, 1.0]),        # cluster 0 but orthogonal -> kept
-         (4, None)],             # invalid vector -> cell -1, kept
+         (4, None),              # invalid vector -> cell -1, kept
+         (5, [0.0, 0.0])],       # zero norm: NULL cosine, kept
         "vec_id long, embedding array<float>")
     rows = {r["id"]: r.asDict()
             for r in semantic_dedup(df, cents, threshold=0.95).collect()}
@@ -521,6 +520,7 @@ def test_semantic_dedup_keeps_first_per_cluster(spark):
     assert rows[2]["keep"] and rows[2]["cell"] == 1
     assert rows[3]["keep"] and rows[3]["cell"] == 0
     assert rows[4]["keep"] and rows[4]["cell"] == -1
+    assert rows[5]["keep"] and rows[5]["cell"] == 0
 
 
 def test_semantic_dedup_occupancy_guard_fires(spark):
