@@ -1,16 +1,21 @@
-"""Regenerate edspdf_spark/frozen.py — frozen-literal golden values
-backing the DuckDB oracle of `bloc_transformer` (softmax attention is
-not SQL-expressible, so the oracle derives the ROW SET independently
-from the synth-corpus CTE and pins the contextualized values as a
-VALUES table — the trainable_classify frozen-weights precedent).
+"""Regenerate the frozen golden values.
 
-Run after ANY change to the transformer kernel, the box-layout
-embedding, or the synth corpus:
+`transformer` rewrites edspdf_spark/frozen.py — frozen-literal golden
+values backing the DuckDB oracle of `bloc_transformer` (softmax
+attention is not SQL-expressible, so the oracle derives the ROW SET
+independently from the synth-corpus CTE and pins the contextualized
+values as a VALUES table — the trainable_classify frozen-weights
+precedent). Run after ANY change to the transformer kernel, the
+box-layout embedding, or the synth corpus. The contract test
+(tests/test_entry_contract.py) then enforces that the distributed
+Spark execution reproduces these values bit-exactly.
 
-    python jobs/freeze_goldens.py
+`kernel` rewrites tests/kernel_goldens.json — per-doc digests of the
+PDF kernels' outputs over the synth corpus, its structure mutants and
+its byte fuzz (tests/test_kernel_goldens.py). Run only after a
+deliberate change to what the kernels emit; no Spark needed.
 
-The contract test (tests/test_entry_contract.py) then enforces that
-the distributed Spark execution reproduces these values bit-exactly.
+    python jobs/freeze_goldens.py [transformer|kernel]   # default: both
 """
 import os
 import sys
@@ -19,7 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def main():
+def freeze_transformer():
     from pyspark.sql import SparkSession
 
     spark = (SparkSession.builder.master("local[4]")
@@ -50,5 +55,17 @@ def main():
     spark.stop()
 
 
+def freeze_kernel():
+    from tests.test_kernel_goldens import FIXTURE, write_fixture
+
+    print(f"wrote {FIXTURE}: {write_fixture()} docs")
+
+
+def main(argv):
+    targets = argv or ["transformer", "kernel"]
+    for t in targets:
+        {"transformer": freeze_transformer, "kernel": freeze_kernel}[t]()
+
+
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
