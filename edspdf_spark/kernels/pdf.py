@@ -89,17 +89,6 @@ class FontInfo:
         return [(ord(raw[i]) << 8) | ord(raw[i + 1])
                 for i in range(0, len(raw) - 1, 2)]
 
-    def code_advance(self, code: int, size: float) -> float:
-        if self.two_byte:
-            w = (self.cid_widths or {}).get(code, self.default_width)
-            return w * size / 1000.0
-        if self.widths is None:
-            return CHAR_WIDTH * size / 1000.0
-        lo, hi = self.first_char, self.first_char + len(self.widths)
-        w = self.widths[code - lo] if lo <= code < hi \
-            else self.missing_width
-        return w * size / 1000.0
-
     def decode_codes(self, codes: List[int]) -> str:
         """Map character codes through /ToUnicode (codes without an
         entry pass through as their codepoint — pdfminer's behavior
@@ -107,13 +96,6 @@ class FontInfo:
         if self.to_unicode is None:
             return "".join(chr(c) for c in codes)
         return "".join(self.to_unicode.get(c, chr(c)) for c in codes)
-
-    def advance(self, text: str, size: float) -> float:
-        return sum(self.code_advance(c, size)
-                   for c in self.iter_codes(text))
-
-    def decode(self, text: str) -> str:
-        return self.decode_codes(self.iter_codes(text))
 
     def show_info(self, raw: str, size: float):
         """One-pass metrics for a shown string: (decoded_text,
@@ -606,17 +588,7 @@ def _scan_objects(data: bytes) -> List[Tuple[int, int, int]]:
         sm = _STREAM_KW_RE.search(data, body_start)
         em = data.find(b"endobj", body_start)
         if sm is not None and (em < 0 or sm.start() < em):
-            dict_part = data[body_start:sm.start()]
-            lm = _LENGTH_RE.search(dict_part)
-            if lm:
-                ln: Optional[int] = int(lm.group(1))
-            else:
-                rm = _LENGTH_REF_RE.search(dict_part)
-                try:
-                    ln = (_resolve_int_obj(data, int(rm.group(1)))
-                          if rm else None)
-                except PdfParseError:
-                    ln = None
+            ln = _stream_length(data, data[body_start:sm.start()])
             scan_from = sm.end() + ln if ln is not None else sm.end()
             em = data.find(b"endobj", min(scan_from, n_data))
         if em < 0:
@@ -626,24 +598,26 @@ def _scan_objects(data: bytes) -> List[Tuple[int, int, int]]:
     return out
 
 
+def _dict_head(body: bytes) -> bytes:
+    """An object body up to its stream keyword (the body itself when
+    it has none): only this dict identifies the object's type, since
+    stream content may hold '/ObjStm' or '/XRef' as data."""
+    sm = _STREAM_KW_RE.search(body)
+    return body[:sm.start()] if sm else body
+
+
 def _expand_objstms(data: bytes, objs: Dict[int, bytes],
-                    body_starts: Dict[int, int]) -> Dict[int, List[int]]:
+                    starts: Dict[int, int]) -> Dict[int, List[int]]:
     """Expand PDF-1.5 object streams in-place: /ObjStm packs dictionary
     objects (never stream objects) as 'oid1 off1 oid2 off2 ...<bodies>'
     with body offsets relative to /First. Returns the containment map
-    {objstm_oid: [member oids]} so re-writers (annotate_pdf) can expand
-    members to top-level classic objects."""
+    {objstm_oid: [member oids]} so re-writers (annotate_pdf,
+    pdf_rewrite) can expand members to top-level classic objects."""
     members: Dict[int, List[int]] = {}
-    def _dict_head(body: bytes) -> bytes:
-        # only the dict BEFORE the stream keyword identifies the type —
-        # stream/text content may contain '/ObjStm' as data
-        sm = _STREAM_KW_RE.search(body)
-        return body[:sm.start()] if sm else body
-
     for oid in [o for o, b in objs.items()
                 if b"/ObjStm" in _dict_head(b)]:
         head = _dict_head(objs[oid])
-        stream = _stream_for_obj(data, oid, body_starts)
+        stream = _stream_for_obj(data, oid, starts)
         nm = re.search(rb"/N\s+(\d+)", head)
         fm = re.search(rb"/First\s+(\d+)", head)
         if nm is None or fm is None:
@@ -662,6 +636,24 @@ def _expand_objstms(data: bytes, objs: Dict[int, bytes],
             objs[sub_oid] = stream[first + off:first + end]
         members[oid] = [e[0] for e in entries]
     return members
+
+
+def _load_objects(data: bytes) -> Tuple[Dict[int, bytes], Dict[int, int],
+                                        Dict[int, List[int]]]:
+    """The object table every reader shares (parse_pdf, annotate_pdf,
+    pdf_rewrite.parse_objects): (bodies, body starts, ObjStm members).
+    Bodies are keyed by oid in first-occurrence order, the LAST
+    occurrence winning (incremental-update semantics), with /ObjStm
+    members expanded in; body starts cover the top-level objects, for
+    stream slicing."""
+    objs: Dict[int, bytes] = {}
+    starts: Dict[int, int] = {}
+    for oid, start, end in _scan_objects(data):
+        objs[oid] = data[start:end]
+        starts[oid] = start
+    if not objs:
+        raise PdfParseError("no objects found")
+    return objs, starts, _expand_objstms(data, objs, starts)
 
 
 def read_xref_stream(data: bytes) -> Dict[int, Tuple[int, int, int]]:
@@ -720,56 +712,45 @@ def read_xref_stream(data: bytes) -> Dict[int, Tuple[int, int, int]]:
     return out
 
 
-def _resolve_int_obj(data: bytes, oid: int) -> int:
-    """Resolve an indirect integer object ('N 0 obj 123 endobj') —
-    how real writers store stream /Length before the stream bytes are
-    known."""
+def _find_obj(data: bytes, oid: int) -> Optional[int]:
+    """Body start of the first `oid 0 obj` header in the file: how an
+    indirect /Length is found, and an object the scan could not delimit
+    (a neighbour with a damaged `endobj` swallowed it)."""
     hm = re.search(rb"(?<!\d)" + str(oid).encode() + rb"\s+0\s+obj\b",
                    data)
-    if hm is None:
-        raise PdfParseError(f"dangling /Length ref {oid}")
-    m = re.match(rb"\s*(\d+)", data[hm.end():hm.end() + 64])
-    if m is None:
-        raise PdfParseError(f"/Length ref {oid} is not an integer object")
-    return int(m.group(1))
+    return hm.end() if hm else None
 
 
-def _stream_for_obj(data: bytes, oid: int,
-                    body_start_by_oid: Optional[Dict[int, int]] = None
-                    ) -> bytes:
-    """Stream bytes of object `oid`, sliced out of the FULL file bytes
-    (binary/compressed stream content may contain `endobj` byte runs,
-    so the regex-scanned object body cannot be trusted for streams).
-    Slices by the dict's direct /Length when present (free-form
-    whitespace tolerated), else falls back to the endstream keyword;
-    inflates when /Filter names FlateDecode.
-
-    `body_start_by_oid` (offsets captured during the parser's single
-    object scan) avoids re-scanning the file per contents object — the
-    fallback search exists only for direct library callers."""
-    start = (body_start_by_oid or {}).get(oid)
+def _stream_length(data: bytes, dict_part: bytes) -> Optional[int]:
+    """A stream dict's /Length: direct, or an indirect integer object
+    ('N 0 obj 123 endobj' — how real writers store it before the
+    stream bytes are known). None when absent or when the ref does not
+    resolve to an integer — readers then fall back to the endstream
+    scan (repair-reader behavior) rather than failing the doc."""
+    lm = _LENGTH_RE.search(dict_part)
+    if lm:
+        return int(lm.group(1))
+    rm = _LENGTH_REF_RE.search(dict_part)
+    start = _find_obj(data, int(rm.group(1))) if rm else None
     if start is None:
-        hm = re.search(rb"(?<!\d)" + str(oid).encode() + rb"\s+0\s+obj\b",
-                       data)
-        if hm is None:
-            raise PdfParseError(f"dangling contents ref {oid}")
-        start = hm.end()
+        return None
+    m = re.match(rb"\s*(\d+)", data[start:start + 64])
+    return int(m.group(1)) if m else None
+
+
+def _raw_stream(data: bytes, start: int) -> Tuple[bytes, bytes]:
+    """(dict, RAW stream bytes) of the stream object whose body starts
+    at `start`, sliced out of the FULL file bytes (binary/compressed
+    stream content may contain `endobj` byte runs, so the scanned
+    object body cannot be trusted for streams). Slices by the dict's
+    /Length (direct or indirect) and checks that it reaches
+    `endstream`; with no usable /Length, scans for the keyword."""
     sm = _STREAM_KW_RE.search(data, start)
     if sm is None:
         raise PdfParseError("contents without stream")
     dict_part = data[start:sm.start()]
     body_start = sm.end()
-    lm = _LENGTH_RE.search(dict_part)
-    n: Optional[int] = int(lm.group(1)) if lm else None
-    if n is None:
-        rm = _LENGTH_REF_RE.search(dict_part)
-        if rm:  # indirect /Length N 0 R -> resolve the integer object;
-            # a dangling/garbled ref degrades to the endstream scan
-            # (repair-reader behavior) rather than failing the doc
-            try:
-                n = _resolve_int_obj(data, int(rm.group(1)))
-            except PdfParseError:
-                n = None
+    n = _stream_length(data, dict_part)
     if n is not None:
         if body_start + n > len(data):
             raise PdfParseError("stream /Length beyond end of file")
@@ -785,6 +766,20 @@ def _stream_for_obj(data: bytes, oid: int,
             body = body[:-2]
         elif body.endswith(b"\n") or body.endswith(b"\r"):
             body = body[:-1]
+    return dict_part, body
+
+
+def _stream_for_obj(data: bytes, oid: int, starts: Dict[int, int]) -> bytes:
+    """Stream bytes of object `oid`: its raw slice (`_raw_stream`),
+    inflated when /Filter names FlateDecode. `starts` are the scan's
+    body offsets; an oid the scan did not delimit is looked up by its
+    header."""
+    start = starts.get(oid)
+    if start is None:
+        start = _find_obj(data, oid)
+        if start is None:
+            raise PdfParseError(f"dangling contents ref {oid}")
+    dict_part, body = _raw_stream(data, start)
     if b"/FlateDecode" in dict_part:
         try:
             body = zlib.decompress(body)
@@ -836,6 +831,78 @@ def _decode_pdf_string(raw: bytes) -> str:
     return _text_bytes_to_str(bytes(out))
 
 
+def _walk_pages(objs: Dict[int, bytes]
+                ) -> Tuple[List[int], Dict[int, bytes]]:
+    """Page object ids in document order via the Pages tree when
+    present, with the /MediaBox each page inherits. The tree may be
+    NESTED (/Kids pointing at intermediate /Pages nodes — real writers
+    balance wide documents this way), and /MediaBox is inheritable from
+    any ancestor node (PDF 32000-1 table 30), so pages are collected by
+    depth-first traversal from the catalog's root node, carrying the
+    inherited box down."""
+    page_ids: List[int] = []
+    inherited_box: Dict[int, bytes] = {}
+
+    def walk(oid: int, box: Optional[bytes], depth: int) -> None:
+        if depth > 64:  # cycle guard: malformed self-referential trees
+            raise PdfParseError("Pages tree deeper than 64")
+        body = objs.get(oid)
+        if body is None:
+            raise PdfParseError(f"dangling page ref {oid}")
+        mb_here = _MEDIABOX_RE.search(body)
+        if mb_here:
+            box = mb_here.group(0)
+        km_ = _KIDS_RE.search(body)
+        if km_ is not None and re.search(rb"/Type\s*/Pages\b", body):
+            for r in _REF_RE.finditer(km_.group(1)):
+                walk(int(r.group(1)), box, depth + 1)
+        else:
+            page_ids.append(oid)
+            if box is not None:
+                inherited_box[oid] = box
+
+    root_pages: Optional[int] = None
+    cat = next((body for body in objs.values()
+                if b"/Type" in body and b"/Catalog" in body), None)
+    if cat is not None:
+        pm = re.search(rb"/Pages\s+(\d+)\s+0\s+R", cat)
+        if pm and int(pm.group(1)) in objs:
+            root_pages = int(pm.group(1))
+    if root_pages is None:
+        pages_nodes = [
+            oid for oid, body in objs.items()
+            if b"/Type" in body and b"/Pages" in body and b"/Kids" in body
+        ]
+        # the root node is the one no other /Pages node lists as a kid
+        kids_of = {int(r.group(1))
+                   for oid in pages_nodes
+                   for km_ in [_KIDS_RE.search(objs[oid])] if km_
+                   for r in _REF_RE.finditer(km_.group(1))}
+        roots = [oid for oid in pages_nodes if oid not in kids_of]
+        if roots:
+            root_pages = min(roots)
+    if root_pages is not None:
+        walk(root_pages, None, 0)
+    if not page_ids:
+        page_ids = sorted(
+            oid for oid, body in objs.items()
+            if b"/Type" in body and b"/Page" in body and b"/Pages" not in body
+        )
+    if not page_ids:
+        raise PdfParseError("no pages")
+    return page_ids, inherited_box
+
+
+def _content_ids(page: bytes) -> List[int]:
+    """A page's content stream oids: one /Contents ref, or an array."""
+    cm = _CONTENTS_RE.search(page)
+    if cm:
+        return [int(cm.group(1))]
+    am = _CONTENTS_ARR_RE.search(page)
+    return [int(r.group(1)) for r in _REF_RE.finditer(am.group(1))] \
+        if am else []
+
+
 def parse_pdf(data: bytes) -> List[ParsedPage]:
     """Parse the deterministic PDF subset into pages of positioned lines.
 
@@ -843,6 +910,13 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
     error semantics, pdfminer.py:128-135: the caller converts this into
     ``error=True`` and zero pages unless ``raise_on_error``).
     """
+    return _read_pdf(data)[2]
+
+
+def _read_pdf(data: bytes):
+    """parse_pdf's whole read: (object table as `_load_objects` returns
+    it, page ids in document order, parsed pages). annotate_pdf
+    rewrites the file from the same table and page order."""
     if not isinstance(data, (bytes, bytearray)):
         raise PdfParseError("not bytes")
     data = bytes(data)
@@ -850,16 +924,8 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
         raise PdfParseError("missing %PDF- header")
     if b"%%EOF" not in data:
         raise PdfParseError("missing %%EOF marker")
-
-    objs: Dict[int, bytes] = {}
-    body_starts: Dict[int, int] = {}  # for stream slicing, one scan total
-    for oid, start, end in _scan_objects(data):
-        objs[oid] = data[start:end]
-        body_starts[oid] = start
-    if not objs:
-        raise PdfParseError("no objects found")
-
-    _expand_objstms(data, objs, body_starts)
+    table = _load_objects(data)
+    objs, starts, _members = table
 
     # font metrics by object id (BaseFont + optional /Widths array)
     fonts_by_obj: Dict[int, FontInfo] = {}
@@ -893,7 +959,7 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
             tm = _TOUNICODE_RE.search(body)
             if tm:
                 to_uni = parse_cmap(
-                    _stream_for_obj(data, int(tm.group(1)), body_starts))
+                    _stream_for_obj(data, int(tm.group(1)), starts))
             two_byte = False
             cid_widths = None
             default_width = 1000
@@ -929,68 +995,10 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
                 to_unicode=to_uni, two_byte=two_byte,
                 cid_widths=cid_widths, default_width=default_width)
 
-    # Page object ids, in document order via the Pages tree when
-    # present. The tree may be NESTED (/Kids pointing at intermediate
-    # /Pages nodes — real writers balance wide documents this way), and
-    # /MediaBox is inheritable from any ancestor node (PDF 32000-1
-    # table 30), so pages are collected by depth-first traversal from
-    # the catalog's root node, carrying the inherited box down.
-    page_ids: List[int] = []
-    inherited_box: Dict[int, bytes] = {}
-
-    def _walk_pages(oid: int, box: Optional[bytes], depth: int) -> None:
-        if depth > 64:  # cycle guard: malformed self-referential trees
-            raise PdfParseError("Pages tree deeper than 64")
-        body = objs.get(oid)
-        if body is None:
-            raise PdfParseError(f"dangling page ref {oid}")
-        mb_here = _MEDIABOX_RE.search(body)
-        if mb_here:
-            box = mb_here.group(0)
-        km_ = _KIDS_RE.search(body)
-        if km_ is not None and re.search(rb"/Type\s*/Pages\b", body):
-            for r in _REF_RE.finditer(km_.group(1)):
-                _walk_pages(int(r.group(1)), box, depth + 1)
-        else:
-            page_ids.append(oid)
-            if box is not None:
-                inherited_box[oid] = box
-
-    root_pages: Optional[int] = None
-    cat = next((body for body in objs.values()
-                if b"/Type" in body and b"/Catalog" in body), None)
-    if cat is not None:
-        pm = re.search(rb"/Pages\s+(\d+)\s+0\s+R", cat)
-        if pm and int(pm.group(1)) in objs:
-            root_pages = int(pm.group(1))
-    if root_pages is None:
-        pages_nodes = [
-            oid for oid, body in objs.items()
-            if b"/Type" in body and b"/Pages" in body and b"/Kids" in body
-        ]
-        # the root node is the one no other /Pages node lists as a kid
-        kids_of = {int(r.group(1))
-                   for oid in pages_nodes
-                   for km_ in [_KIDS_RE.search(objs[oid])] if km_
-                   for r in _REF_RE.finditer(km_.group(1))}
-        roots = [oid for oid in pages_nodes if oid not in kids_of]
-        if roots:
-            root_pages = min(roots)
-    if root_pages is not None:
-        _walk_pages(root_pages, None, 0)
-    if not page_ids:
-        page_ids = sorted(
-            oid for oid, body in objs.items()
-            if b"/Type" in body and b"/Page" in body and b"/Pages" not in body
-        )
-    if not page_ids:
-        raise PdfParseError("no pages")
-
+    page_ids, inherited_box = _walk_pages(objs)
     pages: List[ParsedPage] = []
     for page_num, pid in enumerate(page_ids):
-        body = objs.get(pid)
-        if body is None:
-            raise PdfParseError(f"dangling page ref {pid}")
+        body = objs[pid]
         mb = _MEDIABOX_RE.search(body)
         if not mb and pid in inherited_box:
             mb = _MEDIABOX_RE.search(inherited_box[pid])
@@ -1016,22 +1024,13 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
         }
 
         lines: List[ParsedLine] = []
-        content_ids: List[int] = []
-        cm = _CONTENTS_RE.search(body)
-        if cm:
-            content_ids = [int(cm.group(1))]
-        else:
-            am = _CONTENTS_ARR_RE.search(body)
-            if am:
-                content_ids = [int(r.group(1))
-                               for r in _REF_RE.finditer(am.group(1))]
+        content_ids = _content_ids(body)
         if content_ids:
             # array streams concatenate with a token break between
             # parts (PDF 32000-1 §7.8.2) — a newline joint is that
             # break and never splits a token
             stream = b"\n".join(
-                _stream_for_obj(data, cid, body_starts)
-                for cid in content_ids)
+                _stream_for_obj(data, cid, starts) for cid in content_ids)
             lines = _run_content(
                 stream,
                 {tag: fonts_by_obj.get(oid, FontInfo(name="Unknown"))
@@ -1039,7 +1038,7 @@ def parse_pdf(data: bytes) -> List[ParsedPage]:
             )
         pages.append(ParsedPage(page_num=page_num, width=width, height=height,
                                 lines=lines))
-    return pages
+    return table, page_ids, pages
 
 
 _MAT_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
@@ -1361,49 +1360,20 @@ def annotate_pdf(data: bytes, annotations, colors=None,
     (page_num, x0, x1, y0, y1, label) — coordinates normalized with
     y0=top (extractor output). Streams are re-emitted uncompressed;
     everything else in the file is preserved byte-for-byte."""
-    pages = parse_pdf(data)  # raises PdfParseError on malformed input
+    # parse_pdf's read: raises PdfParseError on malformed input, and
+    # gives the live objects (ObjStm members expanded) and page order
+    (objs, starts, members), page_ids, pages = _read_pdf(data)
     cmap = _resolve_colors(annotations, colors)
 
-    # page_num -> contents oid + dims, following parse_pdf's page order;
-    # spans come from the stream-aware scan, so binary stream bytes can
-    # neither truncate a copied object nor inject phantom ones
-    objs: Dict[int, bytes] = {}
-    spans: Dict[int, Tuple[int, int]] = {}
-    order: List[int] = []
-    for oid, start, end in _scan_objects(data):
-        objs[oid] = data[start:end]
-        spans[oid] = (start, end)
-        order.append(oid)
-    # ObjStm sub-objects join `objs` for page/contents lookup AND for
-    # re-emission: members are expanded to top-level classic objects in
-    # the output (the container is dropped), so the classic xref we
-    # write covers the catalog/page dicts — spec-compliant viewers that
-    # trust the xref can locate them, not just scan-based repair readers
-    body_starts = {oid: s for oid, (s, _e) in spans.items()}
-    stm_members = _expand_objstms(data, objs, body_starts)
-
-    page_ids: List[int] = []
-    for oid, body in objs.items():
-        if b"/Type" in body and b"/Pages" in body and b"/Kids" in body:
-            km = _KIDS_RE.search(body)
-            if km:
-                page_ids = [int(r.group(1))
-                            for r in _REF_RE.finditer(km.group(1))]
-            break
-    if not page_ids:
-        page_ids = sorted(
-            oid for oid, body in objs.items()
-            if b"/Type" in body and b"/Page" in body and b"/Pages" not in body)
-
     overlays: Dict[int, bytes] = {}  # contents oid -> ops to append
-    for page_num, pid in enumerate(page_ids):
-        cm = _CONTENTS_RE.search(objs[pid])
-        if cm is None:
+    for page, pid in zip(pages, page_ids):
+        content_ids = _content_ids(objs[pid])
+        if not content_ids:
             continue
-        w, h = pages[page_num].width, pages[page_num].height
+        w, h = page.width, page.height
         ops: List[str] = []
         for a in annotations:
-            if a[0] != page_num or a[5] not in cmap:
+            if a[0] != page.page_num or a[5] not in cmap:
                 continue
             r, g, b = _hex_rgb(cmap[a[5]])
             x0, x1, y0, y1 = a[1], a[2], a[3], a[4]
@@ -1411,38 +1381,39 @@ def annotate_pdf(data: bytes, annotations, colors=None,
                 f"q {r:g} {g:g} {b:g} RG {line_width:g} w "
                 f"{x0 * w:g} {(1 - y1) * h:g} {(x1 - x0) * w:g} "
                 f"{(y1 - y0) * h:g} re S Q")
-        if ops:
-            overlays[int(cm.group(1))] = "\n".join(ops).encode("latin-1")
+        if ops:  # after the page's last content stream, so on top
+            overlays[content_ids[-1]] = "\n".join(ops).encode("latin-1")
 
     # preserve the input's version header (an /ObjStm file is 1.5)
     hdr_end = data.find(b"\n")
     out = bytearray(data[:hdr_end + 1] if 0 < hdr_end < 32
                     else b"%PDF-1.4\n")
     offsets: Dict[int, int] = {}
-    for oid in order:
-        head_m = _STREAM_KW_RE.search(objs[oid])
-        head = objs[oid][:head_m.start()] if head_m else objs[oid]
+    # each top-level object once, where it first occurs, with the body
+    # of its last occurrence (the live one of an incremental update)
+    for oid in starts:
+        head = _dict_head(objs[oid])
         if b"/XRef" in head and b"/Type" in head:
             # stale cross-reference stream: superseded by the classic
             # xref table written below, and its offsets would be wrong
             continue
-        if oid in stm_members:
+        if oid in members:
             # expand the ObjStm: members become classic objects (they
             # are dict objects by spec, so this is always legal) and
-            # the now-redundant container is not re-emitted
-            for sub_oid in stm_members[oid]:
+            # the now-redundant container is not re-emitted, so the
+            # classic xref we write covers the catalog/page dicts
+            for sub_oid in members[oid]:
                 offsets[sub_oid] = len(out)
                 out += (f"{sub_oid} 0 obj\n".encode()
                         + objs[sub_oid].strip() + b"\nendobj\n")
             continue
         offsets[oid] = len(out)
+        body = objs[oid]
         if oid in overlays:
-            stream = _stream_for_obj(data, oid, body_starts)
+            stream = _stream_for_obj(data, oid, starts)
             stream = stream + b"\n" + overlays[oid]
             body = (b"<< /Length " + str(len(stream)).encode()
                     + b" >>\nstream\n" + stream + b"\nendstream")
-        else:
-            body = data[spans[oid][0]:spans[oid][1]]
         out += f"{oid} 0 obj\n".encode() + body.strip() + b"\nendobj\n"
 
     rm = _ROOT_RE.search(data)
@@ -1463,9 +1434,6 @@ def compare_pdfs(data: bytes, pred, gold, colors=None) -> Tuple[bytes, bytes]:
     """compare_results analog (annotations.py:86-130): one shared color
     assignment over pred+gold labels, two annotated PDFs instead of
     hstacked page images (no PIL here)."""
-    if colors is None:
-        unique = list(dict.fromkeys(
-            [a[5] for a in pred] + [a[5] for a in gold]))
-        colors = dict(zip(unique, CATEGORY20))
+    colors = _resolve_colors(list(pred) + list(gold), colors)
     return (annotate_pdf(data, pred, colors),
             annotate_pdf(data, gold, colors))

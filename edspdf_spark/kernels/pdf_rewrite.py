@@ -13,30 +13,30 @@ asserts against the reference's own frozen pdfminer ground truth
 (reference: tests/pipes/extractors/blocks_ground_truth.py, parser
 surface pipes/extractors/pdfminer.py:103-111).
 
-The rewriters deliberately reuse the parser's own low-level scanners
-(_scan_objects, _stream_for_obj) for READING, but serialize through
-an independent writer — so a scan bug that mangled structure would
-produce a mutant whose parse diverges, not one that round-trips the
-bug invisibly.
+The rewriters deliberately reuse the parser's own reader (the object
+table of _load_objects and the stream slice of _raw_stream) for
+READING, but serialize through an independent writer — so a scan bug
+that mangled structure would produce a mutant whose parse diverges,
+not one that round-trips the bug invisibly.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, Optional, Tuple
 
 from .pdf import (
     PdfParseError,
     _LENGTH_RE,
     _LENGTH_REF_RE,
-    _OBJ_HDR_RE,
     _REF_RE,
     _STREAM_KW_RE,
     _TOKEN_RE,
-    _resolve_int_obj,
+    _dict_head,
+    _load_objects,
+    _raw_stream,
     _scan_objects,
-    _stream_for_obj,
 )
 
 __all__ = [
@@ -76,40 +76,6 @@ class PdfObj:
         return self.stream
 
 
-def _raw_stream_slice(data: bytes, body_start: int) -> bytes:
-    """RAW stream bytes (no inflation) via the dict's /Length —
-    the read-side logic of _stream_for_obj, minus the decode."""
-    sm = _STREAM_KW_RE.search(data, body_start)
-    if sm is None:
-        raise PdfParseError("stream object without stream keyword")
-    dict_part = data[body_start:sm.start()]
-    body_start2 = sm.end()
-    lm = _LENGTH_RE.search(dict_part)
-    n: Optional[int] = int(lm.group(1)) if lm else None
-    if n is None:
-        rm = _LENGTH_REF_RE.search(dict_part)
-        if rm:
-            n = _resolve_int_obj(data, int(rm.group(1)))
-    if n is None:
-        em = data.find(b"endstream", body_start2)
-        if em < 0:
-            raise PdfParseError("unterminated stream")
-        body = data[body_start2:em]
-        if body.endswith(b"\r\n"):
-            body = body[:-2]
-        elif body.endswith(b"\n") or body.endswith(b"\r"):
-            body = body[:-1]
-        return body
-    if body_start2 + n > len(data):
-        raise PdfParseError("stream /Length beyond end of file")
-    return data[body_start2:body_start2 + n]
-
-
-def _dict_head(body: bytes) -> bytes:
-    sm = _STREAM_KW_RE.search(body)
-    return body[:sm.start()] if sm else body
-
-
 def parse_objects(data: bytes) -> Dict[int, PdfObj]:
     """All live indirect objects, LAST occurrence winning (incremental
     -update semantics), with PDF-1.5 object streams expanded to plain
@@ -118,39 +84,16 @@ def parse_objects(data: bytes) -> Dict[int, PdfObj]:
     writers below regenerate from scratch)."""
     if not data.startswith(b"%PDF-"):
         raise PdfParseError("missing %PDF- header")
+    objs, starts, members = _load_objects(data)
     out: Dict[int, PdfObj] = {}
-    spans = _scan_objects(data)
-    if not spans:
-        raise PdfParseError("no objects found")
-    for oid, start, end in spans:
-        body = data[start:end]
+    for oid, body in objs.items():
+        if oid in members:  # an ObjStm container, expanded into objs
+            continue
         head = _dict_head(body)
-        if head is not body:  # has a stream
-            out[oid] = PdfObj(head.strip(), _raw_stream_slice(data, start))
-        else:
-            out[oid] = PdfObj(head.strip())
-    # expand object streams (reuse the parser's member layout rules)
-    objstm_oids = [oid for oid, o in out.items()
-                   if o.stream is not None and b"/ObjStm" in o.head]
-    for oid in objstm_oids:
-        o = out[oid]
-        stream = o.decoded()
-        nm = re.search(rb"/N\s+(\d+)", o.head)
-        fm = re.search(rb"/First\s+(\d+)", o.head)
-        if nm is None or fm is None:
-            raise PdfParseError("ObjStm without /N or /First")
-        n, first = int(nm.group(1)), int(fm.group(1))
-        pairs = stream[:first].split()
-        entries = [(int(pairs[2 * j]), int(pairs[2 * j + 1]))
-                   for j in range(n)]
-        for j, (sub_oid, off) in enumerate(entries):
-            stop = entries[j + 1][1] if j + 1 < n else len(stream) - first
-            out[sub_oid] = PdfObj(stream[first + off:first + stop].strip())
-        del out[oid]
-    for oid in [oid for oid, o in out.items()
-                if o.stream is not None and b"/XRef" in o.head
-                and b"/W" in o.head]:
-        del out[oid]
+        if head is body or oid not in starts:  # ObjStm members are plain
+            out[oid] = PdfObj(body.strip())
+        elif not (b"/XRef" in head and b"/W" in head):
+            out[oid] = PdfObj(head.strip(), _raw_stream(data, starts[oid])[1])
     return out
 
 
@@ -415,7 +358,7 @@ def incremental_override(data: bytes) -> bytes:
         if oid not in content_oids:
             continue
         sm = _STREAM_KW_RE.search(bytes(buf), start)
-        raw = _raw_stream_slice(bytes(buf), start)
+        raw = _raw_stream(bytes(buf), start)[1]
         filler = zlib.compress(b"% overridden\n" * 4, 6)
         junk = (filler * (len(raw) // len(filler) + 1))[:len(raw)]
         buf[sm.end():sm.end() + len(raw)] = junk

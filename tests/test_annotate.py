@@ -2,12 +2,16 @@
 operators/annotate.py): rectangles land in the right places with the
 reference's color assignment, and extraction is unaffected."""
 
+import re
+
 import pytest
 
 from edspdf_spark import synth
 from edspdf_spark.kernels.extract import extract_doc
 from edspdf_spark.kernels.pdf import (CATEGORY20, annotate_pdf,
                                       compare_pdfs, parse_pdf)
+from edspdf_spark.kernels.pdf_rewrite import (ALL_MUTATIONS, PdfObj,
+                                              parse_objects, write_classic)
 from edspdf_spark.operators.annotate import annotate_doc, run_annotate
 from edspdf_spark.operators.fused import PipelineConfig
 
@@ -21,12 +25,46 @@ def _annotations(data):
             for b in res["blocs"]]
 
 
-@pytest.mark.parametrize("i", [1, 2, 4, 7, 17, 22])  # raw/flate/objstm mix
-def test_annotate_preserves_extraction(i):
-    data = synth.make_pdf_bytes(i)
-    ann = annotate_pdf(data, _annotations(data))
+def _nested_pages(data):
+    """`data` with its page-tree root's kids moved under an
+    intermediate /Pages node that also carries the pages' /MediaBox
+    (inherited, PDF 32000-1 table 30)."""
+    objs = parse_objects(data)
+    root = next(oid for oid, o in objs.items()
+                if re.search(rb"/Type\s*/Pages\b", o.head))
+    mid = max(objs) + 1
+    kids = re.search(rb"/Kids\s*\[[^\]]*\]", objs[root].head).group(0)
+    objs[mid] = PdfObj(b"<< /Type /Pages /Parent %d 0 R %s /Count %d "
+                       b"/MediaBox [0 0 612 792] >>"
+                       % (root, kids, kids.count(b" R")))
+    objs[root].head = objs[root].head.replace(kids, b"/Kids [%d 0 R]" % mid)
+    for o in objs.values():
+        if re.search(rb"/Type\s*/Page\b", o.head):
+            o.head = (o.head.replace(b"/MediaBox [0 0 612 792] ", b"")
+                      .replace(b"/Parent %d 0 R" % root,
+                               b"/Parent %d 0 R" % mid))
+    return write_classic(objs)
+
+
+# raw/flate/objstm synth docs, the 9 structure mutants of a two-page
+# /ObjStm doc (split content arrays, incremental updates, ...) and a
+# nested page tree
+ANNOTATE_INPUTS = (
+    [pytest.param(lambda i=i: synth.make_pdf_bytes(i), id=str(i))
+     for i in (1, 2, 4, 7, 17, 22)]
+    + [pytest.param(lambda m=m: ALL_MUTATIONS[m](synth.make_pdf_bytes(4)),
+                    id=m) for m in sorted(ALL_MUTATIONS)]
+    + [pytest.param(lambda: _nested_pages(synth.make_pdf_bytes(1)),
+                    id="nested_pages")])
+
+
+@pytest.mark.parametrize("make", ANNOTATE_INPUTS)
+def test_annotate_preserves_extraction(make):
+    data = make()
+    anns = _annotations(data)
+    ann = annotate_pdf(data, anns)
     assert extract_doc(ann) == extract_doc(data)
-    assert b" re S Q" in ann  # outline ops present
+    assert ann.count(b" re S Q") == len(anns)  # one outline per bloc
     # reference color 0 for the first label, as stroke RGB
     r, g, b = (int(CATEGORY20[0].lstrip("#")[k:k + 2], 16) / 255.0
                for k in (0, 2, 4))
@@ -66,12 +104,17 @@ def test_compare_pdfs_shared_colors():
     data = synth.make_pdf_bytes(1)
     anns = _annotations(data)
     gold = [(a[0], a[1], a[2], a[3], a[4], "gold") for a in anns]
-    p, g = compare_pdfs(data, anns, gold)
-    assert extract_doc(p) == extract_doc(data) == extract_doc(g)
-    # pred labels get color 0, gold labels color 1 (shared assignment)
-    c1 = tuple(int(CATEGORY20[1].lstrip("#")[k:k + 2], 16) / 255.0
-               for k in (0, 2, 4))
-    assert f"{c1[0]:g} {c1[1]:g} {c1[2]:g} RG".encode() in g
+    # pred labels get color 0, gold labels color 1 (one assignment over
+    # pred+gold), from the default palette or a given list alike
+    for colors in (None, ["#ff0000", "#00ff00"]):
+        p, g = compare_pdfs(data, anns, gold, colors)
+        assert extract_doc(p) == extract_doc(data) == extract_doc(g)
+        c0, c1 = (tuple(int(c.lstrip("#")[k:k + 2], 16) / 255.0
+                        for k in (0, 2, 4))
+                  for c in (colors or CATEGORY20)[:2])
+        assert f"{c0[0]:g} {c0[1]:g} {c0[2]:g} RG".encode() in p
+        assert f"{c1[0]:g} {c1[1]:g} {c1[2]:g} RG".encode() in g
+        assert f"{c0[0]:g} {c0[1]:g} {c0[2]:g} RG".encode() not in g
 
 
 def test_annotate_doc_passthrough_on_error():

@@ -18,8 +18,14 @@ import pytest
 
 from edspdf_spark.kernels.extract import extract_doc
 from edspdf_spark.kernels.pdf import (Line, PdfParseError, Segment,
-                                      _stream_for_obj, build_pdf, parse_pdf)
+                                      _scan_objects, _stream_for_obj,
+                                      build_pdf, parse_pdf)
 from edspdf_spark import synth
+
+
+def _starts(blob):
+    """The scanned body offsets `_stream_for_obj` slices from."""
+    return {oid: start for oid, start, _end in _scan_objects(blob)}
 
 
 def _fixture_pages():
@@ -276,11 +282,9 @@ def test_indirect_stream_length_resolves():
 def test_indirect_length_dangling_falls_back_to_scan():
     """A dangling /Length ref degrades to the endstream scan
     (repair-reader behavior) instead of failing the document."""
-    from edspdf_spark.kernels.pdf import _stream_for_obj
-
     data = (b"%PDF-1.4\n4 0 obj\n<< /Length 9 0 R >>\nstream\nxx\n"
             b"endstream\nendobj\n%%EOF\n")
-    assert _stream_for_obj(data, 4) == b"xx"
+    assert _stream_for_obj(data, 4, _starts(data)) == b"xx"
 
 
 def test_tj_numeric_kerning_adjusts_advance():
@@ -378,20 +382,20 @@ def test_stream_sliced_by_length_survives_binary_keywords():
     body = b"q Q % " + b"endstream endobj " * 3 + b"\nBT /F1 10 Tf ET"
     blob = (b"%PDF-1.4\n7 0 obj\n<< /Length " + str(len(body)).encode()
             + b" >>\nstream\n" + body + b"\nendstream\nendobj\n")
-    assert _stream_for_obj(blob, 7) == body
+    assert _stream_for_obj(blob, 7, _starts(blob)) == body
     # compressed variant: deflated bytes that *contain* `endstream`
     comp = zlib.compress(body, 6)
     blob2 = (b"%PDF-1.4\n7 0 obj\n<< /Length " + str(len(comp)).encode()
              + b" /Filter /FlateDecode >>\nstream\n" + comp
              + b"\nendstream\nendobj\n")
-    assert _stream_for_obj(blob2, 7) == body
+    assert _stream_for_obj(blob2, 7, _starts(blob2)) == body
 
 
 def test_stream_without_length_falls_back_to_endstream_scan():
     body = b"BT /F1 10 Tf ET"
     blob = (b"%PDF-1.4\n3 0 obj\n<< >>\nstream\n" + body
             + b"\nendstream\nendobj\n")
-    assert _stream_for_obj(blob, 3) == body
+    assert _stream_for_obj(blob, 3, _starts(blob)) == body
 
 
 def test_indirect_length_ref_uses_endstream_fallback():
@@ -400,14 +404,12 @@ def test_indirect_length_ref_uses_endstream_fallback():
     body = b"BT /F1 10 Tf ET"
     blob = (b"%PDF-1.4\n3 0 obj\n<< /Length 12 0 R >>\nstream\n" + body
             + b"\nendstream\nendobj\n")
-    assert _stream_for_obj(blob, 3) == body
+    assert _stream_for_obj(blob, 3, _starts(blob)) == body
 
 
 def test_scan_objects_skips_binary_stream_bodies():
     """Stream bytes containing 'endobj' / 'N 0 obj' runs must neither
     truncate the containing object's span nor spawn phantom objects."""
-    from edspdf_spark.kernels.pdf import _scan_objects
-
     payload = b"x endobj y 9 0 obj z endstream w"
     blob = (b"%PDF-1.4\n"
             b"1 0 obj\n<< /Type /Catalog >>\nendobj\n"

@@ -48,6 +48,11 @@ def _persistent_rdds(spark):
 
 
 def test_checkpoint_resume_after_crash(spark, tmp_path, monkeypatch):
+    # start from an empty registry: the context cleaner unpersists the
+    # RDDs that earlier tests' local checkpoints left behind whenever
+    # the JVM collects them, which may fall inside the cycle below
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
     out_dir = str(tmp_path / "ckpt")
     pages = synth.pages_spark(spark, 30, num_partitions=4).cache()
     pages.count()
