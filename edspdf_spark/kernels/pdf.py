@@ -12,7 +12,9 @@ parser for a strict, deterministic subset of PDF 1.4:
   writer and parser agree on glyph advances by construction
 
 The *writer* (`build_pdf`) is the fixture generator required by
-FIXTURES.md §1.1; the *parser* (`parse_pdf`) recovers pages, line boxes
+FIXTURES.md §1.1; it serializes through `write_pdf`, the one object,
+xref and trailer writer that `annotate_pdf` and the `pdf_rewrite`
+mutations share. The *parser* (`parse_pdf`) recovers pages, line boxes
 and per-char font runs. Layout semantics that the reference implements
 on top of pdfminer (coordinate normalization + y-flip, reading order,
 style runs — see /root/reference/edspdf/pipes/extractors/pdfminer.py:103-194)
@@ -177,6 +179,54 @@ def _cmap_stream_obj(mapping: Dict[int, str]) -> bytes:
             + cmap + b"\nendstream")
 
 
+def write_pdf(header: bytes, objects: List[Tuple[int, bytes]], root: int,
+              in_objstm: Optional[Dict[int, Tuple[int, int]]] = None,
+              xref_stream: bool = False) -> bytes:
+    """The one PDF serializer (build_pdf, annotate_pdf, pdf_rewrite):
+    `header`, then each (oid, body) in the given order as
+    `oid 0 obj\\n<body>\\nendobj\\n`, then a classic xref table and
+    trailer, or with ``xref_stream=True`` a PDF-1.5 cross-reference
+    STREAM (/Type/XRef, /W [1 4 2]) under the next free oid, then
+    `startxref` and `%%EOF`. `in_objstm` maps the oids packed in an
+    /ObjStm to (container oid, index): type-2 entries of the xref
+    stream, free entries of a classic table (which cannot name them;
+    this scanning parser never reads the table). Every other oid up to
+    the highest one is a free entry."""
+    in_objstm = in_objstm or {}
+    out = bytearray(header)
+    offsets: Dict[int, int] = {}
+    for oid, body in objects:
+        offsets[oid] = len(out)
+        out += b"%d 0 obj\n%s\nendobj\n" % (oid, body)
+    top = max([*offsets, *in_objstm], default=0)
+    xref_at = len(out)
+    if not xref_stream:
+        out += b"xref\n0 %d\n0000000000 65535 f \n" % (top + 1)
+        for oid in range(1, top + 1):
+            out += (b"%010d 00000 n \n" % offsets[oid] if oid in offsets
+                    else b"0000000000 65535 f \n")
+        out += b"trailer\n<< /Size %d /Root %d 0 R >>\n" % (top + 1, root)
+    else:
+        offsets[top + 1] = xref_at  # the xref stream object itself
+        entries = bytearray()
+        for oid in range(top + 2):
+            if oid in offsets:
+                entries += b"\x01%s\x00\x00" % offsets[oid].to_bytes(4, "big")
+            elif oid in in_objstm:
+                stm, idx = in_objstm[oid]
+                entries += b"\x02%s%s" % (stm.to_bytes(4, "big"),
+                                          idx.to_bytes(2, "big"))
+            else:
+                entries += b"\x00\x00\x00\x00\x00\xff\xff"
+        comp = zlib.compress(bytes(entries), 6)
+        out += (b"%d 0 obj\n<< /Type /XRef /Size %d /W [1 4 2] /Root %d 0 R "
+                b"/Filter /FlateDecode /Length %d >>\nstream\n%s\n"
+                b"endstream\nendobj\n" % (top + 1, top + 2, root, len(comp),
+                                          comp))
+    out += b"startxref\n%d\n%%%%EOF\n" % xref_at
+    return bytes(out)
+
+
 def build_pdf(pages: List[List[Line]], page_width: float = PAGE_WIDTH,
               page_height: float = PAGE_HEIGHT,
               compress: bool = False, objstm: bool = False,
@@ -297,57 +347,8 @@ def build_pdf(pages: List[List[Line]], page_width: float = PAGE_WIDTH,
         in_objstm = {oid: (stm_oid, idx)
                      for idx, (oid, _b) in enumerate(in_stream)}
 
-    out = bytearray()
-    out += b"%PDF-1.4\n" if not (objstm or xref_stream) else b"%PDF-1.5\n"
-    offsets: Dict[int, int] = {}
-    for oid, body in numbered:
-        offsets[oid] = len(out)
-        out += f"{oid} 0 obj\n".encode() + body + b"\nendobj\n"
-    max_oid = max(oid for oid, _ in numbered) if numbered else 0
-
-    if xref_stream:
-        # PDF-1.5 cross-reference stream (/W [1 4 2]): type 0 = free,
-        # type 1 = (offset, gen), type 2 = (objstm oid, index within)
-        xr_oid = max(max_oid, max(in_objstm, default=0)) + 1
-        size = xr_oid + 1
-        entries = bytearray()
-        xref_pos = len(out)
-        for oid in range(size):
-            if oid == xr_oid:
-                typ, f2, f3 = 1, xref_pos, 0
-            elif oid in offsets:
-                typ, f2, f3 = 1, offsets[oid], 0
-            elif oid in in_objstm:
-                typ, f2, f3 = 2, in_objstm[oid][0], in_objstm[oid][1]
-            else:
-                typ, f2, f3 = 0, 0, 65535
-            entries += bytes([typ]) + f2.to_bytes(4, "big") \
-                + f3.to_bytes(2, "big")
-        content = zlib.compress(bytes(entries), 6)
-        out += (f"{xr_oid} 0 obj\n<< /Type /XRef /Size {size} "
-                f"/W [1 4 2] /Index [0 {size}] /Root 1 0 R "
-                f"/Length {len(content)} /Filter /FlateDecode >>\n"
-                "stream\n").encode()
-        out += content
-        out += b"\nendstream\nendobj\n"
-        out += f"startxref\n{xref_pos}\n%%EOF\n".encode()
-        return bytes(out)
-
-    xref_pos = len(out)
-    out += f"xref\n0 {max_oid + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for oid in range(1, max_oid + 1):
-        # in-ObjStm objects get free entries here: a spec-complete file
-        # would carry an xref STREAM for them (xref_stream=True does),
-        # but this parser (and the scan-based repair path of real
-        # readers) never consults xref
-        out += (f"{offsets[oid]:010d} 00000 n \n".encode()
-                if oid in offsets else b"0000000000 65535 f \n")
-    out += (
-        f"trailer\n<< /Size {max_oid + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_pos}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+    header = b"%PDF-1.5\n" if objstm or xref_stream else b"%PDF-1.4\n"
+    return write_pdf(header, numbered, 1, in_objstm, xref_stream)
 
 
 def _content_stream(lines: List[Line],
@@ -1386,9 +1387,8 @@ def annotate_pdf(data: bytes, annotations, colors=None,
 
     # preserve the input's version header (an /ObjStm file is 1.5)
     hdr_end = data.find(b"\n")
-    out = bytearray(data[:hdr_end + 1] if 0 < hdr_end < 32
-                    else b"%PDF-1.4\n")
-    offsets: Dict[int, int] = {}
+    header = data[:hdr_end + 1] if 0 < hdr_end < 32 else b"%PDF-1.4\n"
+    objects: List[Tuple[int, bytes]] = []
     # each top-level object once, where it first occurs, with the body
     # of its last occurrence (the live one of an incremental update)
     for oid in starts:
@@ -1402,32 +1402,16 @@ def annotate_pdf(data: bytes, annotations, colors=None,
             # are dict objects by spec, so this is always legal) and
             # the now-redundant container is not re-emitted, so the
             # classic xref we write covers the catalog/page dicts
-            for sub_oid in members[oid]:
-                offsets[sub_oid] = len(out)
-                out += (f"{sub_oid} 0 obj\n".encode()
-                        + objs[sub_oid].strip() + b"\nendobj\n")
+            objects += [(sub, objs[sub].strip()) for sub in members[oid]]
             continue
-        offsets[oid] = len(out)
         body = objs[oid]
         if oid in overlays:
-            stream = _stream_for_obj(data, oid, starts)
-            stream = stream + b"\n" + overlays[oid]
-            body = (b"<< /Length " + str(len(stream)).encode()
-                    + b" >>\nstream\n" + stream + b"\nendstream")
-        out += f"{oid} 0 obj\n".encode() + body.strip() + b"\nendobj\n"
-
+            stream = _stream_for_obj(data, oid, starts) + b"\n" + overlays[oid]
+            body = b"<< /Length %d >>\nstream\n%s\nendstream" % (
+                len(stream), stream)
+        objects.append((oid, body.strip()))
     rm = _ROOT_RE.search(data)
-    root = int(rm.group(1)) if rm else 1
-    xref_pos = len(out)
-    max_oid = max(offsets)
-    out += f"xref\n0 {max_oid + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for oid in range(1, max_oid + 1):
-        out += (f"{offsets[oid]:010d} 00000 n \n".encode()
-                if oid in offsets else b"0000000000 65535 f \n")
-    out += (f"trailer\n<< /Size {max_oid + 1} /Root {root} 0 R >>\n"
-            f"startxref\n{xref_pos}\n%%EOF\n").encode()
-    return bytes(out)
+    return write_pdf(header, objects, int(rm.group(1)) if rm else 1)
 
 
 def compare_pdfs(data: bytes, pred, gold, colors=None) -> Tuple[bytes, bytes]:

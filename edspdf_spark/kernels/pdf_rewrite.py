@@ -15,9 +15,11 @@ surface pipes/extractors/pdfminer.py:103-111).
 
 The rewriters deliberately reuse the parser's own reader (the object
 table of _load_objects and the stream slice of _raw_stream) for
-READING, but serialize through an independent writer — so a scan bug
-that mangled structure would produce a mutant whose parse diverges,
-not one that round-trips the bug invisibly.
+READING, and serialize through `kernels.pdf.write_pdf`, the object,
+xref and trailer writer that `build_pdf` and `annotate_pdf` share.
+That writer is independent of the READER, so a scan bug that mangled
+structure would produce a mutant whose parse diverges, not one that
+round-trips the bug invisibly.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from .pdf import (
     _load_objects,
     _raw_stream,
     _scan_objects,
+    write_pdf,
 )
 
 __all__ = [
@@ -118,34 +121,20 @@ def _set_length(head: bytes, n: int) -> bytes:
     return head[:close] + val + b" " + head[close:]
 
 
-def _serialize_obj(oid: int, o: PdfObj) -> bytes:
+def _body(o: PdfObj) -> bytes:
+    """The body `write_pdf` frames: the head, plus the stream under a
+    direct /Length."""
     if o.stream is None:
-        return b"%d 0 obj\n%s\nendobj\n" % (oid, o.head)
-    head = _set_length(o.head, len(o.stream))
-    return (b"%d 0 obj\n%s\nstream\n" % (oid, head)
-            + o.stream + b"\nendstream\nendobj\n")
+        return o.head
+    return b"%s\nstream\n%s\nendstream" % (_set_length(o.head, len(o.stream)),
+                                          o.stream)
 
 
 def write_classic(objs: Dict[int, PdfObj]) -> bytes:
     """Serialize with a CLASSIC cross-reference table + trailer."""
-    root = _find_root(objs)
-    buf = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets: Dict[int, int] = {}
-    for oid in sorted(objs):
-        offsets[oid] = len(buf)
-        buf += _serialize_obj(oid, objs[oid])
-    size = max(objs) + 1
-    xref_at = len(buf)
-    buf += b"xref\n0 %d\n" % size
-    buf += b"0000000000 65535 f \n"
-    for oid in range(1, size):
-        if oid in offsets:
-            buf += b"%010d 00000 n \n" % offsets[oid]
-        else:
-            buf += b"0000000000 65535 f \n"
-    buf += (b"trailer\n<< /Size %d /Root %d 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-            % (size, root, xref_at))
-    return bytes(buf)
+    return write_pdf(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n",
+                     [(oid, _body(objs[oid])) for oid in sorted(objs)],
+                     _find_root(objs))
 
 
 def write_xref_stream(objs: Dict[int, PdfObj], pack: bool = False) -> bytes:
@@ -156,54 +145,24 @@ def write_xref_stream(objs: Dict[int, PdfObj], pack: bool = False) -> bytes:
     objs = {oid: o for oid, o in objs.items()}
     root = _find_root(objs)
     in_objstm: Dict[int, Tuple[int, int]] = {}  # oid -> (container, idx)
-    next_oid = max(objs) + 1
-    if pack:
-        packable = [oid for oid in sorted(objs)
-                    if objs[oid].stream is None and oid != root]
-        if packable:
-            container = next_oid
-            next_oid += 1
-            header = bytearray()
-            bodies = bytearray()
-            for idx, oid in enumerate(packable):
-                header += b"%d %d " % (oid, len(bodies))
-                bodies += objs[oid].head + b"\n"
-                in_objstm[oid] = (container, idx)
-            payload = bytes(header) + bytes(bodies)
-            comp = zlib.compress(payload, 6)
-            objs[container] = PdfObj(
-                b"<< /Type /ObjStm /N %d /First %d /Length %d "
-                b"/Filter /FlateDecode >>"
-                % (len(packable), len(header), len(comp)), comp)
-            for oid in packable:
-                del objs[oid]
-    xref_oid = next_oid
-    buf = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets: Dict[int, int] = {}
-    for oid in sorted(objs):
-        offsets[oid] = len(buf)
-        buf += _serialize_obj(oid, objs[oid])
-    size = xref_oid + 1
-    entries = bytearray()
-    for oid in range(size):
-        if oid in offsets:
-            entries += b"\x01" + offsets[oid].to_bytes(4, "big") + b"\x00\x00"
-        elif oid in in_objstm:
-            cont, idx = in_objstm[oid]
-            entries += b"\x02" + cont.to_bytes(4, "big") + idx.to_bytes(2, "big")
-        elif oid == xref_oid:
-            entries += b"\x01" + len(buf).to_bytes(4, "big") + b"\x00\x00"
-        else:
-            entries += b"\x00" + (0).to_bytes(4, "big") + b"\xff\xff"
-    comp = zlib.compress(bytes(entries), 6)
-    xref_at = len(buf)
-    buf += (b"%d 0 obj\n<< /Type /XRef /Size %d /W [1 4 2] /Root %d 0 R "
-            b"/Filter /FlateDecode /Length %d >>\nstream\n"
-            % (xref_oid, size, root, len(comp)))
-    buf += comp
-    buf += b"\nendstream\nendobj\n"
-    buf += b"startxref\n%d\n%%%%EOF\n" % xref_at
-    return bytes(buf)
+    packable = [oid for oid in sorted(objs)
+                if objs[oid].stream is None and oid != root] if pack else []
+    if packable:
+        container = max(objs) + 1
+        header = bytearray()
+        bodies = bytearray()
+        for idx, oid in enumerate(packable):
+            header += b"%d %d " % (oid, len(bodies))
+            bodies += objs.pop(oid).head + b"\n"
+            in_objstm[oid] = (container, idx)
+        comp = zlib.compress(bytes(header) + bytes(bodies), 6)
+        objs[container] = PdfObj(
+            b"<< /Type /ObjStm /N %d /First %d /Length %d "
+            b"/Filter /FlateDecode >>"
+            % (len(packable), len(header), len(comp)), comp)
+    return write_pdf(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n",
+                     [(oid, _body(objs[oid])) for oid in sorted(objs)],
+                     root, in_objstm, xref_stream=True)
 
 
 # --- mutation classes -------------------------------------------------------
@@ -367,7 +326,7 @@ def incremental_override(data: bytes) -> bytes:
     offsets: Dict[int, int] = {}
     for oid in sorted(content_oids):
         offsets[oid] = len(buf)
-        buf += _serialize_obj(oid, objs[oid])
+        buf += b"%d 0 obj\n%s\nendobj\n" % (oid, _body(objs[oid]))
     root = _find_root(objs)
     size = max(objs) + 1
     xref_at = len(buf)
