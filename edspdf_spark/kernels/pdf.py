@@ -371,6 +371,9 @@ def _content_stream(lines: List[Line],
 # ---------------------------------------------------------------------------
 
 
+_MAT_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
+
+
 @dataclass
 class ParsedLine:
     """A text line in PDF user space (y axis up)."""
@@ -402,6 +405,8 @@ class ParsedPage:
     width: float
     height: float
     lines: List[ParsedLine] = field(default_factory=list)
+    # initial CTM: user space -> page space (box origin and /Rotate)
+    ctm: Tuple[float, ...] = _MAT_ID
 
 
 _OBJ_HDR_RE = re.compile(rb"(\d+)\s+0\s+obj\b")
@@ -518,6 +523,8 @@ _MISSINGW_RE = re.compile(rb"/MissingWidth\s+(\d+)")
 _MEDIABOX_RE = re.compile(
     rb"/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s*\]"
 )
+# an integer /Rotate; pdfminer reads any other value as 0
+_ROTATE_RE = re.compile(rb"/Rotate\s+([-+]?\d+)(?![\d.])")
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+0\s+R")
 # real writers also emit /Contents as an ARRAY of stream refs (the
 # spec allows splitting a page's content at any token boundary)
@@ -835,16 +842,17 @@ def _decode_pdf_string(raw: bytes) -> str:
 def _walk_pages(objs: Dict[int, bytes]
                 ) -> Tuple[List[int], Dict[int, bytes]]:
     """Page object ids in document order via the Pages tree when
-    present, with the /MediaBox each page inherits. The tree may be
-    NESTED (/Kids pointing at intermediate /Pages nodes — real writers
-    balance wide documents this way), and /MediaBox is inheritable from
-    any ancestor node (PDF 32000-1 table 30), so pages are collected by
+    present, with the /MediaBox and /Rotate each page inherits (as one
+    `/MediaBox [..] /Rotate r` fragment). The tree may be NESTED (/Kids
+    pointing at intermediate /Pages nodes — real writers balance wide
+    documents this way), and both keys are inheritable from any
+    ancestor node (PDF 32000-1 table 30), so pages are collected by
     depth-first traversal from the catalog's root node, carrying the
-    inherited box down."""
+    inherited values down."""
     page_ids: List[int] = []
-    inherited_box: Dict[int, bytes] = {}
+    inherited: Dict[int, bytes] = {}
 
-    def walk(oid: int, box: Optional[bytes], depth: int) -> None:
+    def walk(oid: int, box: bytes, rotate: bytes, depth: int) -> None:
         if depth > 64:  # cycle guard: malformed self-referential trees
             raise PdfParseError("Pages tree deeper than 64")
         body = objs.get(oid)
@@ -853,14 +861,17 @@ def _walk_pages(objs: Dict[int, bytes]
         mb_here = _MEDIABOX_RE.search(body)
         if mb_here:
             box = mb_here.group(0)
+        rm = _ROTATE_RE.search(body)
+        if rm:
+            rotate = rm.group(0)
         km_ = _KIDS_RE.search(body)
         if km_ is not None and re.search(rb"/Type\s*/Pages\b", body):
             for r in _REF_RE.finditer(km_.group(1)):
-                walk(int(r.group(1)), box, depth + 1)
+                walk(int(r.group(1)), box, rotate, depth + 1)
         else:
             page_ids.append(oid)
-            if box is not None:
-                inherited_box[oid] = box
+            if box or rotate:
+                inherited[oid] = box + b" " + rotate
 
     root_pages: Optional[int] = None
     cat = next((body for body in objs.values()
@@ -883,7 +894,7 @@ def _walk_pages(objs: Dict[int, bytes]
         if roots:
             root_pages = min(roots)
     if root_pages is not None:
-        walk(root_pages, None, 0)
+        walk(root_pages, b"", b"", 0)
     if not page_ids:
         page_ids = sorted(
             oid for oid, body in objs.items()
@@ -891,7 +902,7 @@ def _walk_pages(objs: Dict[int, bytes]
         )
     if not page_ids:
         raise PdfParseError("no pages")
-    return page_ids, inherited_box
+    return page_ids, inherited
 
 
 def _content_ids(page: bytes) -> List[int]:
@@ -996,17 +1007,31 @@ def _read_pdf(data: bytes):
                 to_unicode=to_uni, two_byte=two_byte,
                 cid_widths=cid_widths, default_width=default_width)
 
-    page_ids, inherited_box = _walk_pages(objs)
+    page_ids, inherited = _walk_pages(objs)
     pages: List[ParsedPage] = []
     for page_num, pid in enumerate(page_ids):
         body = objs[pid]
-        mb = _MEDIABOX_RE.search(body)
-        if not mb and pid in inherited_box:
-            mb = _MEDIABOX_RE.search(inherited_box[pid])
+        attrs = inherited.get(pid, body)
+        mb = _MEDIABOX_RE.search(attrs)
         if not mb:
             raise PdfParseError("page without MediaBox")
         x0, y0, x1, y1 = (float(mb.group(i)) for i in range(1, 5))
-        width, height = x1 - x0, y1 - y0
+        # pdfminer's PDFPageInterpreter.process_page: the initial CTM
+        # moves the box origin to (0, 0) and applies /Rotate; the page
+        # size is the box's extent under it (PDFLayoutAnalyzer.begin_page)
+        rm = _ROTATE_RE.search(attrs)
+        rotate = (int(rm.group(1)) + 360) % 360 if rm else 0
+        if rotate == 90:
+            ctm = (0.0, -1.0, 1.0, 0.0, 0.0 - y0, x1)
+        elif rotate == 180:
+            ctm = (-1.0, 0.0, 0.0, -1.0, x1, y1)
+        elif rotate == 270:
+            ctm = (0.0, 1.0, -1.0, 0.0, y1, 0.0 - x0)
+        else:
+            ctm = (1.0, 0.0, 0.0, 1.0, 0.0 - x0, 0.0 - y0)
+        a, b, c, d, e, f = ctm
+        width = abs((a * x0 + c * y0 + e) - (a * x1 + c * y1 + e))
+        height = abs((b * x0 + d * y0 + f) - (b * x1 + d * y1 + f))
 
         # /Resources (and its /Font dict) may each be indirect objects
         # — Word/LibreOffice share one resource dict across pages that
@@ -1036,13 +1061,11 @@ def _read_pdf(data: bytes):
                 stream,
                 {tag: fonts_by_obj.get(oid, FontInfo(name="Unknown"))
                  for tag, oid in font_res.items()},
+                ctm,
             )
         pages.append(ParsedPage(page_num=page_num, width=width, height=height,
-                                lines=lines))
+                                lines=lines, ctm=ctm))
     return table, page_ids, pages
-
-
-_MAT_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 
 def _mat_mult(m1, m2):
@@ -1073,12 +1096,13 @@ def _floats(stack: List[object], n: int) -> Optional[List[float]]:
         return None
 
 
-def _run_content(stream: bytes,
-                 font_names: Dict[str, object]) -> List[ParsedLine]:
+def _run_content(stream: bytes, font_names: Dict[str, object],
+                 ctm: Tuple[float, ...] = _MAT_ID) -> List[ParsedLine]:
     """Interpret a content stream; every BT..ET block becomes one line.
 
     `font_names` maps resource tag -> FontInfo (or a bare BaseFont
-    string for direct callers; normalized to monospaced FontInfo)."""
+    string for direct callers; normalized to monospaced FontInfo).
+    `ctm` is the page's initial transformation matrix."""
     fonts: Dict[str, FontInfo] = {
         tag: (f if isinstance(f, FontInfo) else FontInfo(name=f))
         for tag, f in font_names.items()}
@@ -1094,7 +1118,6 @@ def _run_content(stream: bytes,
     # synth documents parse bit-identically; real-world writers
     # (Skia/Google Docs: y-flip cm + scale + d=-1 Tm) now land where
     # they render.
-    ctm = _MAT_ID
     gstack: List[Tuple[float, ...]] = []
     tm = tlm = _MAT_ID
     leading = 0.0
@@ -1337,6 +1360,8 @@ CATEGORY20 = [
 ]
 
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+0\s+R")
+# outline stroke: the reference's 3 px at render scale 2
+_LINE_WIDTH = 1.5
 
 
 def _hex_rgb(color: str) -> Tuple[float, float, float]:
@@ -1355,23 +1380,42 @@ def _resolve_colors(annotations, colors) -> Dict[str, str]:
     return dict(colors)
 
 
-def annotate_pdf(data: bytes, annotations, colors=None,
-                 line_width: float = 1.5) -> bytes:
+def annotate_pdf(data: bytes, annotations, colors=None) -> bytes:
     """Rewrite `data` with rectangle outlines for each annotation
     (page_num, x0, x1, y0, y1, label) — coordinates normalized with
     y0=top (extractor output). Streams are re-emitted uncompressed;
-    everything else in the file is preserved byte-for-byte."""
+    everything else in the file is preserved byte-for-byte. A page
+    draws after its last content stream; when another page shows that
+    stream too, the page gets its own overlaid copy of it instead."""
     # parse_pdf's read: raises PdfParseError on malformed input, and
     # gives the live objects (ObjStm members expanded) and page order
     (objs, starts, members), page_ids, pages = _read_pdf(data)
     cmap = _resolve_colors(annotations, colors)
 
+    def overlaid(oid: int, ops: bytes) -> bytes:
+        stream = _stream_for_obj(data, oid, starts) + b"\n" + ops
+        return b"<< /Length %d >>\nstream\n%s\nendstream" % (
+            len(stream), stream)
+
     overlays: Dict[int, bytes] = {}  # contents oid -> ops to append
+    copies: List[Tuple[int, bytes]] = []  # overlaid copies, new oids
+    # a stream an earlier page claimed, or one a page shows before its
+    # last, cannot take this page's outlines in place
+    claimed = {cid for pid in page_ids for cid in _content_ids(objs[pid])[:-1]}
     for page, pid in zip(pages, page_ids):
         content_ids = _content_ids(objs[pid])
         if not content_ids:
             continue
+        last = content_ids[-1]
+        shared = last in claimed
+        claimed.add(last)
         w, h = page.width, page.height
+        to_user = ""  # page space -> user space: the page CTM's inverse
+        if page.ctm != _MAT_ID:
+            m = page.ctm  # a rotation and a shift: determinant 1
+            inv = (m[3], -m[1], -m[2], m[0],
+                   m[2] * m[5] - m[3] * m[4], m[1] * m[4] - m[0] * m[5])
+            to_user = "".join(f"{v + 0.0:g} " for v in inv) + "cm "
         ops: List[str] = []
         for a in annotations:
             if a[0] != page.page_num or a[5] not in cmap:
@@ -1379,11 +1423,21 @@ def annotate_pdf(data: bytes, annotations, colors=None,
             r, g, b = _hex_rgb(cmap[a[5]])
             x0, x1, y0, y1 = a[1], a[2], a[3], a[4]
             ops.append(
-                f"q {r:g} {g:g} {b:g} RG {line_width:g} w "
+                f"q {to_user}{r:g} {g:g} {b:g} RG {_LINE_WIDTH:g} w "
                 f"{x0 * w:g} {(1 - y1) * h:g} {(x1 - x0) * w:g} "
                 f"{(y1 - y0) * h:g} re S Q")
-        if ops:  # after the page's last content stream, so on top
-            overlays[content_ids[-1]] = "\n".join(ops).encode("latin-1")
+        if not ops:
+            continue
+        ops_b = "\n".join(ops).encode("latin-1")
+        if not shared:  # after the page's last content stream, on top
+            overlays[last] = ops_b
+            continue
+        new = max(objs) + 1 + len(copies)
+        copies.append((new, overlaid(last, ops_b)))
+        body = objs[pid]
+        cm = _CONTENTS_RE.search(body) or _CONTENTS_ARR_RE.search(body)
+        ref = list(_REF_RE.finditer(body, cm.start(), cm.end()))[-1]
+        objs[pid] = body[:ref.start()] + b"%d 0 R" % new + body[ref.end():]
 
     # preserve the input's version header (an /ObjStm file is 1.5)
     hdr_end = data.find(b"\n")
@@ -1404,14 +1458,10 @@ def annotate_pdf(data: bytes, annotations, colors=None,
             # classic xref we write covers the catalog/page dicts
             objects += [(sub, objs[sub].strip()) for sub in members[oid]]
             continue
-        body = objs[oid]
-        if oid in overlays:
-            stream = _stream_for_obj(data, oid, starts) + b"\n" + overlays[oid]
-            body = b"<< /Length %d >>\nstream\n%s\nendstream" % (
-                len(stream), stream)
+        body = overlaid(oid, overlays[oid]) if oid in overlays else objs[oid]
         objects.append((oid, body.strip()))
     rm = _ROOT_RE.search(data)
-    return write_pdf(header, objects, int(rm.group(1)) if rm else 1)
+    return write_pdf(header, objects + copies, int(rm.group(1)) if rm else 1)
 
 
 def compare_pdfs(data: bytes, pred, gold, colors=None) -> Tuple[bytes, bytes]:

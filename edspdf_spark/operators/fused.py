@@ -105,11 +105,6 @@ def process_doc(url: str, html: bytes, cfg: PipelineConfig
     return rows
 
 
-_PROPS_PA_FIELDS = [("italic", "bool_"), ("bold", "bool_"),
-                    ("begin", "int32"), ("end", "int32"),
-                    ("fontname", "string")]
-
-
 def run_fused(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """pages(url, html, ...) -> FUSED_SCHEMA. Zero-shuffle map.
 
@@ -117,9 +112,10 @@ def run_fused(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     large binary, and skipping the Arrow<->pandas conversion on both
     sides is worth ~20% end-to-end on this pipeline (measured)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    props_type = pa.list_(pa.struct(
-        [(n, getattr(pa, t)()) for n, t in _PROPS_PA_FIELDS]))
+    types = [to_arrow_type(f.dataType) for f in FUSED_SCHEMA.fields]
+    names = FUSED_SCHEMA.fieldNames()
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         from pyspark import TaskContext
@@ -136,17 +132,8 @@ def run_fused(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 rows.extend(r[:-1] + (pid,) for r in doc_rows)
             if not rows:
                 continue
-            cols = list(zip(*rows))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.string()),
-                 pa.array(cols[1], pa.string()),
-                 pa.array(cols[2], pa.string()),
-                 pa.array(cols[3], props_type),
-                 pa.array(cols[4], pa.bool_()),
-                 pa.array(cols[5], pa.int32()),
-                 pa.array(cols[6], pa.int32()),
-                 pa.array(cols[7], pa.int64()),
-                 pa.array(cols[8], pa.int32())],
-                names=[f.name for f in FUSED_SCHEMA.fields])
+                [pa.array(c, t) for c, t in zip(zip(*rows), types)],
+                names=names)
 
     return pages.select("url", "html").mapInArrow(fn, schema=FUSED_SCHEMA)

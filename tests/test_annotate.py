@@ -46,16 +46,31 @@ def _nested_pages(data):
     return write_classic(objs)
 
 
+def _shared_contents(data):
+    """`data` with its second page's /Contents pointed at the first
+    page's stream: two pages showing one content stream (legal, and
+    how writers repeat a template page)."""
+    objs = parse_objects(data)
+    pages = [o for _oid, o in sorted(objs.items())
+             if re.search(rb"/Type\s*/Page\b", o.head)]
+    ref = re.compile(rb"/Contents\s+\d+\s+0\s+R")
+    pages[1].head = ref.sub(ref.search(pages[0].head).group(0),
+                            pages[1].head)
+    return write_classic(objs)
+
+
 # raw/flate/objstm synth docs, the 9 structure mutants of a two-page
-# /ObjStm doc (split content arrays, incremental updates, ...) and a
-# nested page tree
+# /ObjStm doc (split content arrays, incremental updates, ...), a
+# nested page tree and two pages sharing one content stream
 ANNOTATE_INPUTS = (
     [pytest.param(lambda i=i: synth.make_pdf_bytes(i), id=str(i))
      for i in (1, 2, 4, 7, 17, 22)]
     + [pytest.param(lambda m=m: ALL_MUTATIONS[m](synth.make_pdf_bytes(4)),
                     id=m) for m in sorted(ALL_MUTATIONS)]
     + [pytest.param(lambda: _nested_pages(synth.make_pdf_bytes(1)),
-                    id="nested_pages")])
+                    id="nested_pages"),
+       pytest.param(lambda: _shared_contents(synth.make_pdf_bytes(1)),
+                    id="shared_contents")])
 
 
 @pytest.mark.parametrize("make", ANNOTATE_INPUTS)

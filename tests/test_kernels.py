@@ -1,13 +1,16 @@
 """Kernel unit tests — golden cases lifted from the reference test
 suite (FIXTURES.md §4; citations per case)."""
 
+import re
+
 import pytest
 
 from edspdf_spark.kernels import (PdfParseError, aggregate_doc, align_labels,
                                   build_pdf, classify_with_masks, extract_doc,
                                   parse_pdf, reading_order, to_markdown,
                                   walk_line)
-from edspdf_spark.kernels.pdf import Line, Segment
+from edspdf_spark.kernels.pdf import Line, Segment, annotate_pdf
+from edspdf_spark.kernels.pdf_rewrite import parse_objects, write_classic
 from edspdf_spark.synth import make_pdf_bytes
 
 
@@ -59,6 +62,63 @@ def test_pdf_parse_error_on_truncated():
         parse_pdf(data[:100])
     with pytest.raises(PdfParseError):
         parse_pdf(b"not a pdf at all")
+
+
+# (box, plain page size, /Rotate, the node carrying /Rotate, the
+# inverse `cm` of the page's initial CTM per pdfminer's
+# PDFPageInterpreter.process_page); 90 and 270 use a square box
+_PAGE_FRAMES = [
+    pytest.param(b"[100 100 712 892]", (612, 792), b"", "page",
+                 b"1 0 0 1 100 100", id="origin"),
+    pytest.param(b"[0 0 612 792]", (612, 792), b"180", "page",
+                 b"-1 0 0 -1 612 792", id="rotate180"),
+    pytest.param(b"[0 0 792 792]", (792, 792), b"90", "page",
+                 b"0 1 -1 0 792 0", id="rotate90"),
+    pytest.param(b"[0 0 792 792]", (792, 792), b"270", "page",
+                 b"0 -1 1 0 0 792", id="rotate270"),
+    pytest.param(b"[0 0 792 792]", (792, 792), b"-90", "pages",
+                 b"0 -1 1 0 0 792", id="inherited_rotate-90"),
+    pytest.param(b"[100 100 892 892]", (792, 792), b"90", "page",
+                 b"0 1 -1 0 892 100", id="origin_rotate90"),
+]
+
+
+@pytest.mark.parametrize("box,size,rotate,holder,inverse_cm", _PAGE_FRAMES)
+def test_page_ctm_follows_box_origin_and_rotate(box, size, rotate, holder,
+                                                inverse_cm):
+    """A page whose content starts with the inverse `cm` of its initial
+    CTM extracts the same blocs as the plain page, and annotate_pdf
+    draws its outlines through that same inverse."""
+    plain = build_pdf([[Line.simple(72, 700, "Framed page", size=12),
+                        Line(x=72, y=300, segments=[
+                            Segment(text="plain ", size=10),
+                            Segment(text="bold", font="Helvetica-Bold",
+                                    size=10)])]],
+                      page_width=size[0], page_height=size[1])
+    objs = parse_objects(plain)
+    for o in objs.values():
+        if o.stream is not None:
+            o.stream = inverse_cm + b" cm\n" + o.stream
+        elif re.search(rb"/Type\s*/Page\b", o.head):
+            o.head = re.sub(rb"/MediaBox \[[^\]]*\]", b"/MediaBox " + box,
+                            o.head)
+        if rotate and re.search(rb"/Type\s*/" + holder.title().encode()
+                                + rb"\b", o.head):
+            o.head = o.head.replace(b" >>", b" /Rotate %s >>" % rotate, 1)
+    framed = write_classic(objs)
+    want = extract_doc(plain, extract_style=True)
+    assert len(want["blocs"]) == 2
+    assert extract_doc(framed, extract_style=True) == want
+
+    anns = [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"], "body")
+            for b in want["blocs"]]
+
+    def outlines(data):
+        return re.findall(rb"q [^\n]*? re S Q", annotate_pdf(data, anns))
+
+    assert outlines(framed) == [
+        op.replace(b"q ", b"q " + inverse_cm + b" cm ", 1)
+        for op in outlines(plain)]
 
 
 # ---------------------------------------------------------------------------

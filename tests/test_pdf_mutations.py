@@ -14,15 +14,18 @@ pinned to the reference's pdfminer ground truth by
 test_real_pdf_parity.py) are extra cases when that checkout exists.
 
 Mutants are built by edspdf_spark/kernels/pdf_rewrite.py, which
-serializes through an independent writer: a scanner bug that mangled
-structure would produce a mutant whose parse diverges here, not one
-that round-trips the bug invisibly."""
+serializes through `kernels.pdf.write_pdf` (the writer `build_pdf`
+uses too), independent of the parser's reader: a scanner bug that
+mangled structure would produce a mutant whose parse diverges here,
+not one that round-trips the bug invisibly."""
 
 import pytest
 
 from edspdf_spark.kernels.extract import extract_doc
-from edspdf_spark.kernels.pdf import Line, PdfParseError, Segment, build_pdf
-from edspdf_spark.kernels.pdf_rewrite import ALL_MUTATIONS
+from edspdf_spark.kernels.pdf import (Line, PdfParseError, Segment,
+                                      _dict_head, _load_objects, build_pdf,
+                                      read_xref_stream)
+from edspdf_spark.kernels.pdf_rewrite import ALL_MUTATIONS, objstm_repack
 from edspdf_spark.synth import make_pdf_bytes
 from tests.test_pdf_flate import _fixture_pages
 from tests.test_pdf_tounicode import CMAP
@@ -174,3 +177,40 @@ def test_extract_doc_byte_flip_fuzz_never_raises():
                                       for _ in range(rng.randint(1, 8)))
             rows = process_doc(f"doc{i}", bytes(data), cfg)
             assert isinstance(rows, list), (i, trial)
+
+
+XREF_STREAM_DOCS = (
+    [pytest.param(lambda kw=kw: build_pdf(_fixture_pages(), xref_stream=True,
+                                          **kw), id=name)
+     for name, kw in [("synth_xref", {}), ("synth_xref_objstm",
+                                           {"objstm": True}),
+                      ("synth_xref_objstm_flate",
+                       {"objstm": True, "compress": True})]]
+    + [pytest.param(lambda i=i: objstm_repack(make_pdf_bytes(i)),
+                    id=f"objstm_repack{i:02d}") for i in (0, 2, 4, 7, 17)])
+
+
+@pytest.mark.parametrize("make", XREF_STREAM_DOCS)
+def test_xref_stream_entries_locate_every_object(make):
+    """The one xref-stream form of `write_pdf`, read back by
+    read_xref_stream: each type-1 entry points at its `oid 0 obj`
+    header, each type-2 entry names the /ObjStm container and the
+    member's index in it, and together they cover every object."""
+    data = make()
+    entries = read_xref_stream(data)
+    objs, starts, members = _load_objects(data)
+    assert entries[0] == (0, 0, 65535)  # free-list head
+    direct, packed = set(), set()
+    for oid, (typ, f2, f3) in entries.items():
+        if typ == 1:
+            assert data.startswith(b"%d 0 obj" % oid, f2), oid
+            direct.add(oid)
+        elif typ == 2:
+            assert entries[f2][0] == 1, oid
+            assert b"/ObjStm" in _dict_head(objs[f2]), oid
+            assert members[f2][f3] == oid
+            packed.add(oid)
+        else:
+            assert typ == 0, oid
+    assert direct == set(starts)
+    assert packed == {m for ms in members.values() for m in ms}
