@@ -1428,12 +1428,12 @@ def annotate_pdf(data: bytes, annotations, colors=None) -> bytes:
                 f"{(y1 - y0) * h:g} re S Q")
         if not ops:
             continue
-        ops_b = "\n".join(ops).encode("latin-1")
+        overlay = "\n".join(ops).encode("latin-1")
         if not shared:  # after the page's last content stream, on top
-            overlays[last] = ops_b
+            overlays[last] = overlay
             continue
         new = max(objs) + 1 + len(copies)
-        copies.append((new, overlaid(last, ops_b)))
+        copies.append((new, overlaid(last, overlay)))
         body = objs[pid]
         cm = _CONTENTS_RE.search(body) or _CONTENTS_ARR_RE.search(body)
         ref = list(_REF_RE.finditer(body, cm.start(), cm.end()))[-1]
