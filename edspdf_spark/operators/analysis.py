@@ -106,8 +106,8 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     """Stopword-voting language ID with deterministic tie-break
     (language list order). Returns (id, lang_pred, vote_<lang>...).
 
-    Doc-local Arrow kernel (mapInArrow straight on the scan
-    partitions — zero shuffle, like gopher_repetition): one token
+    Doc-local Arrow kernel (plans.salt.batch_map straight on the
+    scan partitions — zero shuffle, like gopher_repetition): one token
     Counter per doc, then a fixed walk of the stopword->language
     table. Cost is O(tokens + vocabulary) per doc and FLAT in the
     number of languages. The previous formulation summed one
@@ -122,11 +122,15 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     stopwords; argmax first-wins in LANG_STOPWORDS order; NULL text
     -> NULL votes and lang_pred = first language (the CASE-chain
     null semantics of the oracle)."""
-    import pyarrow as pa
+    from collections import Counter
+
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
+    from ..plans.salt import batch_map
+
     langs = list(LANG_STOPWORDS)
+    n_langs = len(langs)
     # stopword -> indexes of every language that lists it ('de', 'la',
     # 'en'... appear in several packs; each gets the same count)
     word_langs: dict[str, list[int]] = {}
@@ -138,40 +142,30 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
          StructField("lang_pred", StringType())]
         + [StructField(f"vote_{lang}", LongType()) for lang in langs])
 
-    def fn(batches):
-        from collections import Counter
+    def fn(ids, texts):
+        votes: list[list] = [[0] * n_langs for _ in texts]
+        preds = []
+        for r, text in enumerate(texts):
+            if text is None:
+                votes[r] = [None] * n_langs
+                preds.append(langs[0])
+                continue
+            cnt = Counter(text.split(" "))
+            row = votes[r]
+            for w, lis in word_langs.items():
+                c = cnt.get(w)
+                if c:
+                    for li in lis:
+                        row[li] += c
+            bi = 0
+            for li in range(1, n_langs):
+                if row[li] > row[bi]:
+                    bi = li
+            preds.append(langs[bi])
+        return [ids, preds] + [[v[li] for v in votes]
+                               for li in range(n_langs)]
 
-        n_langs = len(langs)
-        for batch in batches:
-            ids = batch.column(id_col)
-            texts = batch.column(text_col).to_pylist()
-            votes: list[list] = [[0] * n_langs for _ in texts]
-            preds = []
-            for r, text in enumerate(texts):
-                if text is None:
-                    votes[r] = [None] * n_langs
-                    preds.append(langs[0])
-                    continue
-                cnt = Counter(text.split(" "))
-                row = votes[r]
-                for w, lis in word_langs.items():
-                    c = cnt.get(w)
-                    if c:
-                        for li in lis:
-                            row[li] += c
-                bi = 0
-                for li in range(1, n_langs):
-                    if row[li] > row[bi]:
-                        bi = li
-                preds.append(langs[bi])
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(preds, pa.string())]
-                + [pa.array([v[li] for v in votes], pa.int64())
-                   for li in range(n_langs)],
-                names=["id", "lang_pred"]
-                + [f"vote_{lang}" for lang in langs])
-
-    return df.select(id_col, text_col).mapInArrow(fn, schema=out_schema)
+    return batch_map(df, [id_col, text_col], fn, out_schema)
 
 
 def fingerprint(df: DataFrame, id_col: str = "doc_id",

@@ -5,20 +5,21 @@ drawn as colored rectangle outlines INTO the PDF itself, so the dump
 is viewable in any PDF tool and round-trips through the extractor
 unchanged.
 
-Plan shape: one mapInPandas over (url, html) — extract, classify,
-rewrite — zero shuffles, same as the fused pipeline; pair with
-sources.writers.write_files for an annotation-tool export."""
+Plan shape: one Arrow batch map (plans.salt.batch_map) over (url,
+html) — extract, classify, rewrite — zero shuffles, same as the fused
+pipeline; pair with sources.writers.write_files for an
+annotation-tool export."""
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels.alignment import classify_with_masks
 from ..kernels.extract import extract_doc
 from ..kernels.pdf import PdfParseError, annotate_pdf
+from ..plans.salt import batch_map
 from .fused import PipelineConfig
 
 
@@ -45,17 +46,10 @@ def annotate_doc(url: str, html: bytes, cfg: PipelineConfig,
 def run_annotate(pages: DataFrame, cfg: PipelineConfig,
                  colors: Optional[dict] = None) -> DataFrame:
     """pages(url, html, ...) -> (url, html) with overlay rectangles."""
-    pruned = pages.select("url", "html")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame({
-                "url": pdf["url"],
-                "html": [annotate_doc(u, h if h is not None else b"",
-                                      cfg, colors)
-                         for u, h in zip(pdf["url"].tolist(),
-                                         pdf["html"].tolist())],
-            })
-            yield out
+    def fn(urls, htmls):
+        return urls, [annotate_doc(u, h if h is not None else b"",
+                                   cfg, colors)
+                      for u, h in zip(urls, htmls)]
 
-    return pruned.mapInPandas(fn, schema="url string, html binary")
+    return batch_map(pages, ["url", "html"], fn, "url string, html binary")

@@ -1,4 +1,4 @@
-"""Fused extract->classify->aggregate pipeline: ONE mapInArrow pass.
+"""Fused extract->classify->aggregate pipeline: ONE Arrow batch map.
 
 Every reference operator is document-local (SURVEY.md §2.9), so the
 whole pipeline is an embarrassingly-parallel map: no bloc explosion,
@@ -8,7 +8,8 @@ no re-grouping shuffle, no window. The plan is
 
 which is the plan that survives a 100x scale-up: the only shuffle is
 the optional skew-defusing repartition, and each Python worker sees
-Arrow batches of (url, html) and emits (url, label, text, ...) rows.
+batches of (url, html) as lists and emits (url, label, text, ...)
+rows; plans.salt.batch_map owns the Arrow framing.
 
 Per-doc accounting columns (bytes_in, n_blocs, partition_id) ride on
 the output so the metrics rollup (plans/metrics.py) is a cheap
@@ -18,15 +19,15 @@ aggregate instead of a second parse.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple, Union
+from typing import Dict, List, Optional, Sequence, Tuple, Union
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels.aggregate import aggregate_doc, to_markdown
 from ..kernels.alignment import classify_with_masks
 from ..kernels.extract import extract_doc
 from ..kernels.html import extract_html_text, looks_like_html
+from ..plans.salt import batch_map
 from ..schemas import FUSED_SCHEMA
 
 # (page_num|None, x0, x1, y0, y1, label) — kernel mask layout
@@ -108,32 +109,19 @@ def process_doc(url: str, html: bytes, cfg: PipelineConfig
 def run_fused(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """pages(url, html, ...) -> FUSED_SCHEMA. Zero-shuffle map.
 
-    Uses mapInArrow, not mapInPandas: the input payload column is
-    large binary, and skipping the Arrow<->pandas conversion on both
-    sides is worth ~20% end-to-end on this pipeline (measured)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    One plans.salt.batch_map over (url, html): Arrow in and out, no
+    pandas round trip on the large binary payload (worth ~20%
+    end-to-end on this pipeline, measured)."""
+    from pyspark import TaskContext
 
-    types = [to_arrow_type(f.dataType) for f in FUSED_SCHEMA.fields]
-    names = FUSED_SCHEMA.fieldNames()
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from pyspark import TaskContext
-
+    def fn(urls: List[str], htmls: List[bytes]) -> List[Tuple]:
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            rows: List[Tuple] = []
-            for url, html in zip(urls, htmls):
-                doc_rows = process_doc(
-                    url, html if html is not None else b"", cfg)
-                rows.extend(r[:-1] + (pid,) for r in doc_rows)
-            if not rows:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t) for c, t in zip(zip(*rows), types)],
-                names=names)
+        rows: List[Tuple] = []
+        for url, html in zip(urls, htmls):
+            doc_rows = process_doc(
+                url, html if html is not None else b"", cfg)
+            rows.extend(r[:-1] + (pid,) for r in doc_rows)
+        return list(zip(*rows))
 
-    return pages.select("url", "html").mapInArrow(fn, schema=FUSED_SCHEMA)
+    return batch_map(pages, ["url", "html"], fn, FUSED_SCHEMA)

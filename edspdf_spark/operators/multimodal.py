@@ -11,21 +11,20 @@ vector from the bytes, `decode_stub=False` raises NotImplementedError
 at the point where PIL/torchaudio/ffmpeg would be invoked).
 
 binary_metadata() is pure native expressions (magic-byte sniffing via
-hex prefixes) — no Python; extract_features() is the mapInPandas
-pattern for the heavy decode path (batch in, batch out, bounded by
-Arrow batch size like the PDF extractor); png_pixel_stats() is the
+hex prefixes) — no Python; extract_features() is the Arrow batch map
+(plans.salt.batch_map) for the heavy decode path (batch in, batch
+out, bounded by Arrow batch size like the PDF extractor); png_pixel_stats() is the
 integer-exact decode evidence (oracled closed-form from the synth
 pixel formula, never through the codec)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, LongType,
                                StringType, StructField, StructType)
+
+from ..plans.salt import batch_map
 
 _MAGIC = [
     ("25504446", "pdf"),       # %PDF
@@ -63,26 +62,19 @@ FEATURES_SCHEMA = StructType([
 def extract_features(df: DataFrame, id_col: str = "url",
                      bin_col: str = "html", dim: int = 16,
                      decode_stub: bool = True) -> DataFrame:
-    """Decode + featurize binary payloads via mapInPandas.
+    """Decode + featurize binary payloads in one plans.salt.batch_map.
 
     Real deployments swap `_fake_decode` for PIL/torchvision etc.;
     the Spark plumbing (Arrow batches of binary, executor-side loop,
     fixed-dim float output) is identical.
     """
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sizes, feats = [], [], []
-            for rid, payload in zip(pdf[id_col].tolist(),
-                                    pdf[bin_col].tolist()):
-                data = bytes(payload) if payload is not None else b""
-                ids.append(rid)
-                sizes.append(len(data))
-                feats.append(_decode(data, dim, decode_stub))
-            yield pd.DataFrame({"id": ids, "n_bytes": sizes,
-                                "feature": feats})
+    def fn(ids, payloads):
+        datas = [p if p is not None else b"" for p in payloads]
+        return (ids, [len(d) for d in datas],
+                [_decode(d, dim, decode_stub) for d in datas])
 
-    return df.select(id_col, bin_col).mapInPandas(fn, schema=FEATURES_SCHEMA)
+    return batch_map(df, [id_col, bin_col], fn, FEATURES_SCHEMA)
 
 
 def _decode(data: bytes, dim: int, stub: bool):
@@ -282,31 +274,22 @@ def png_pixel_stats(df: DataFrame, id_col: str = "url",
     channels, n_vals, sum_val, min_val, max_val, checksum) where
     checksum = sum(v_i * ((i mod 97) + 1)) over the flat scanline
     order — position-sensitive, so a transposed/misfiltered decode
-    cannot pass. Doc-local mapInPandas straight on the scan (zero
+    cannot pass. Doc-local batch_map straight on the scan (zero
     shuffle); non-PNG / corrupt rows yield width = -1 and zero stats
     (never dropped, mirroring extract_doc's error-row contract)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in PNG_STATS_SCHEMA}
-            for rid, payload in zip(pdf[id_col].tolist(),
-                                    pdf[bin_col].tolist()):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, ch, vals = decode_png(data)
-                    cs = sum(v * ((i % 97) + 1)
-                             for i, v in enumerate(vals))
-                    rec = (w, h, ch, len(vals), sum(vals),
-                           min(vals) if vals else 0,
-                           max(vals) if vals else 0, cs)
-                except PngError:
-                    rec = (-1, 0, 0, 0, 0, 0, 0, 0)
-                rows["id"].append(rid)
-                for k, v in zip(("width", "height", "channels", "n_vals",
-                                 "sum_val", "min_val", "max_val",
-                                 "checksum"), rec):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def fn(ids, payloads):
+        recs = []
+        for payload in payloads:
+            data = payload if payload is not None else b""
+            try:
+                w, h, ch, vals = decode_png(data)
+                cs = sum(v * ((i % 97) + 1) for i, v in enumerate(vals))
+                recs.append((w, h, ch, len(vals), sum(vals),
+                             min(vals) if vals else 0,
+                             max(vals) if vals else 0, cs))
+            except PngError:
+                recs.append((-1, 0, 0, 0, 0, 0, 0, 0))
+        return [ids, *zip(*recs)]
 
-    return df.select(id_col, bin_col).mapInPandas(
-        fn, schema=PNG_STATS_SCHEMA)
+    return batch_map(df, [id_col, bin_col], fn, PNG_STATS_SCHEMA)

@@ -84,41 +84,53 @@ def spread_compute(df: DataFrame) -> DataFrame:
     return df
 
 
-def doc_map(df: DataFrame, id_col: str, text_col: str, fn,
-            schema: str) -> DataFrame:
-    """The doc-local Arrow kernel scaffold: ONE mapInArrow behind
-    spread_compute, so a kernel owns only its per-document math.
+def batch_map(df: DataFrame, cols: Sequence, fn, schema) -> DataFrame:
+    """The Arrow batch scaffold: ONE mapInArrow over `df`'s `cols`, so
+    a kernel owns only its per-row math.
 
-    `fn(ids, texts)` gets one batch's ids and texts as Python lists
-    (NULL text arrives as None) and returns the output columns, ids
-    first, as equal-length sequences. The output is `id`, with id_col's
-    type (the input batch's Arrow type is kept), followed by the
-    columns of the `schema` DDL string, whose Arrow types the other
-    columns take. A batch for which fn returns no rows emits nothing.
+    `fn` gets one batch as one Python list per column of `cols` (NULL
+    arrives as None) and returns the output columns in `schema` order
+    as equal-length sequences; `schema` is a StructType or a DDL
+    string, and each output column takes its Arrow type from it. A
+    batch for which fn returns no rows (or no columns) emits nothing.
+    No exchange and no `df.rdd` call, so it runs on streaming
+    DataFrames; partitioning is the caller's.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructType
 
-    rest = StructType.fromDDL(schema)
-    types = [to_arrow_type(f.dataType) for f in rest.fields]
-    out = StructType([StructField("id", df.schema[id_col].dataType)]
-                     + rest.fields)
+    out = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    types = [to_arrow_type(f.dataType) for f in out.fields]
     names = out.fieldNames()
 
     def kernel(batches):
         for batch in batches:
-            ids = batch.column("id")
-            cols = fn(ids.to_pylist(), batch.column("text").to_pylist())
-            if len(cols[0]):
+            outs = fn(*(c.to_pylist() for c in batch.columns))
+            if len(outs) and len(outs[0]):
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[0], type=ids.type)]
-                    + [pa.array(c, t) for c, t in zip(cols[1:], types)],
+                    [pa.array(c, t) for c, t in zip(outs, types)],
                     names=names)
 
-    return (spread_compute(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col).alias("text")))
-            .mapInArrow(kernel, schema=out))
+    return df.select(*cols).mapInArrow(kernel, schema=out)
+
+
+def doc_map(df: DataFrame, id_col: str, text_col: str, fn,
+            schema: str) -> DataFrame:
+    """The doc-local scaffold: batch_map over (id, text) behind
+    spread_compute, so a kernel owns only its per-document math.
+
+    `fn(ids, texts)` returns the output columns, ids first. The output
+    is `id`, with id_col's type, followed by the columns of the
+    `schema` DDL string.
+    """
+    from pyspark.sql.types import StructField, StructType
+
+    out = StructType([StructField("id", df.schema[id_col].dataType)]
+                     + StructType.fromDDL(schema).fields)
+    return batch_map(spread_compute(df.select(F.col(id_col).alias("id"),
+                                              F.col(text_col).alias("text"))),
+                     ["id", "text"], fn, out)
 
 
 def group_map(df: DataFrame, key: str, order: Sequence[str], fn,

@@ -120,46 +120,35 @@ def row_minhash_bands(docs: DataFrame, url_col: str = "url",
     lambdas, so the column form recomputed the md5 once per hash
     function (8x). Here each shingle hashes once (hashlib) and the 8
     mins are one vectorized numpy pass; works identically on batch
-    and streaming DataFrames (mapInArrow is stream-safe)."""
+    and streaming DataFrames (plans.salt.batch_map is stream-safe)."""
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import StringType, StructField, StructType
 
     from ..functions import (CODE_MOD, MINHASH_AB, code15_py, ngrams_py,
                              tokens_py)
+    from ..plans.salt import batch_map
 
     assert n_hashes % band_size == 0
     ab = np.array(MINHASH_AB[:n_hashes], dtype=np.int64)
     n_bands = n_hashes // band_size
-    out_schema = StructType([
-        StructField("band_key", StringType()),
-        StructField("url", StringType())])
 
-    def fn(batches):
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            texts = batch.column("t").to_pylist()
-            out_keys, out_urls = [], []
-            for url, text in zip(urls, texts):
-                if text is None:
-                    continue
-                shingles = set(ngrams_py(tokens_py(text), k))
-                if not shingles:
-                    continue
-                codes = np.array([code15_py(s) % CODE_MOD
-                                  for s in shingles], dtype=np.int64)
-                # (n_hashes, n_codes) affine mod, then row mins
-                hs = ((ab[:, 0:1] * codes[None, :] + ab[:, 1:2])
-                      % CODE_MOD).min(axis=1)
-                for i in range(n_bands):
-                    vals = hs[i * band_size:(i + 1) * band_size]
-                    out_keys.append(
-                        ":".join([str(i)] + [str(v) for v in vals]))
-                    out_urls.append(url)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_keys, pa.string()),
-                 pa.array(out_urls, pa.string())],
-                names=["band_key", "url"])
+    def fn(urls, texts):
+        out_keys, out_urls = [], []
+        for url, text in zip(urls, texts):
+            if text is None:
+                continue
+            shingles = set(ngrams_py(tokens_py(text), k))
+            if not shingles:
+                continue
+            codes = np.array([code15_py(s) % CODE_MOD for s in shingles],
+                             dtype=np.int64)
+            # (n_hashes, n_codes) affine mod, then row mins
+            hs = ((ab[:, 0:1] * codes[None, :] + ab[:, 1:2])
+                  % CODE_MOD).min(axis=1)
+            for i in range(n_bands):
+                vals = hs[i * band_size:(i + 1) * band_size]
+                out_keys.append(":".join([str(i)] + [str(v) for v in vals]))
+                out_urls.append(url)
+        return out_keys, out_urls
 
     slim = docs.select(F.col(url_col).cast("string").alias("url"),
                        F.col(text_col).alias("t"))
@@ -168,7 +157,8 @@ def row_minhash_bands(docs: DataFrame, url_col: str = "url",
     # winnowing-kernel pattern; explicit count keeps AQE from
     # byte-coalescing below the core count). Works on streams too.
     width = docs.sparkSession.sparkContext.defaultParallelism
-    return slim.repartition(width).mapInArrow(fn, schema=out_schema)
+    return batch_map(slim.repartition(width), ["url", "t"], fn,
+                     "band_key string, url string")
 
 
 def _band_fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],

@@ -273,7 +273,7 @@ def test_bloc_embed_python_stages_are_bounded(spark):
 
     df = entry_mod.q_bloc_embed(spark, "/root/testdata/sf0.01")
     plan = _plan(df)
-    assert plan.count("MapInPandas") + plan.count("PythonMapInArrow") == 3, \
+    assert plan.count("MapInPandas") + plan.count("MapInArrow") == 3, \
         plan  # synth generator + extract + text embed
     assert "Exchange" not in plan, plan
 
@@ -687,3 +687,4 @@ def test_every_persist_is_released_by_its_function():
                     released.add(node.func.value.id)
             unowned |= {(module, fn.name, n) for n in cached - released}
     assert unowned == set()
+

@@ -517,9 +517,11 @@ def test_run_gated_caches_only_for_the_call(spark, monkeypatch):
 
 def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
         spark, monkeypatch):
-    """doc_map: the output id keeps the input's type, NULL text reaches
-    fn, a batch for which fn returns no rows emits no batch, and the
-    plan is one MapInArrow behind at most one spread Exchange."""
+    """doc_map: the output id keeps the input's Spark type (its Arrow
+    type comes from that schema, whatever the batch carries), NULL text
+    reaches fn, a batch for which fn returns no rows emits no batch,
+    and the plan is one MapInArrow behind at most one spread
+    Exchange."""
     import pyarrow as pa
 
     from edspdf_spark.plans.salt import doc_map
@@ -556,7 +558,7 @@ def test_doc_map_keeps_id_type_passes_nulls_and_skips_empty_batches(
                     "text": [None, "y"]})]
     emitted = list(kernels[0](iter(batches)))
     assert len(emitted) == 1
-    assert emitted[0].schema.field("id").type == pa.int32()
+    assert emitted[0].schema.field("id").type == pa.int64()
     assert emitted[0].to_pydict() == {"id": [8, 9],
                                       "is_null": [True, False]}
 
