@@ -43,7 +43,11 @@ def extract_doc(content: bytes, extract_style: bool = False,
         if raise_on_error:
             raise
         return {"error": True, "num_pages": 0, "pages": [], "blocs": []}
+    return extract_pages(parsed, extract_style)
 
+
+def extract_pages(parsed, extract_style: bool = False) -> Dict[str, object]:
+    """extract_doc over pages `parse_pdf` already returned."""
     blocs: List[Bloc] = []
     pages = []
     for page in parsed:

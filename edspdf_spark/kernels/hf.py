@@ -51,6 +51,7 @@ from typing import Dict, List, Optional, Sequence
 import numpy as np
 
 from ..functions import code15_py, tokens_py
+from .transformer import matmul
 
 CLS_ID = 1
 SEP_ID = 2
@@ -152,15 +153,15 @@ def _contextualize(tok_emb: np.ndarray, rows: List[List[int]],
                 out[wi, :len(row)] = (x + j * POS_STEP + wi * WIN_STEP)
             elif contextualizer == "attention":
                 xf = x.astype(np.float64)
-                q = xf @ weights["wq"]
-                k = xf @ weights["wk"]
-                v = xf @ weights["wv"]
-                a = q @ k.T / np.sqrt(dim)
+                q = matmul(xf, weights["wq"])
+                k = matmul(xf, weights["wk"])
+                v = matmul(xf, weights["wv"])
+                a = matmul(q, k.T) / np.sqrt(dim)
                 a -= a.max(axis=1, keepdims=True)
                 e = np.exp(a)
                 p = e / e.sum(axis=1, keepdims=True)
                 out[wi, :len(row)] = xf + weights["resweight"] * (
-                    (p @ v) @ weights["wo"])
+                    matmul(matmul(p, v), weights["wo"]))
             else:
                 raise ValueError(f"unknown contextualizer "
                                  f"'{contextualizer}'")

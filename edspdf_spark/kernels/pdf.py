@@ -1389,7 +1389,13 @@ def annotate_pdf(data: bytes, annotations, colors=None) -> bytes:
     stream too, the page gets its own overlaid copy of it instead."""
     # parse_pdf's read: raises PdfParseError on malformed input, and
     # gives the live objects (ObjStm members expanded) and page order
-    (objs, starts, members), page_ids, pages = _read_pdf(data)
+    return annotate_read(data, _read_pdf(data), annotations, colors)
+
+
+def annotate_read(data: bytes, read, annotations, colors=None) -> bytes:
+    """annotate_pdf over `read = _read_pdf(data)`, for a caller that
+    extracted from that same read. Rewrites its object table."""
+    (objs, starts, members), page_ids, pages = read
     cmap = _resolve_colors(annotations, colors)
 
     def overlaid(oid: int, ops: bytes) -> bytes:

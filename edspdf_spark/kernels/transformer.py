@@ -17,7 +17,8 @@ Replicates the reference's layers without torch:
 The reference initializes weights randomly, so numeric parity targets
 a FROZEN deterministic weight set (same policy as the trainable
 classifier and the embedding stack). All math is float64; gelu is the
-exact erf form torch.nn.functional.gelu uses.
+exact erf form torch.nn.functional.gelu uses. Matrix products go
+through `matmul`, never BLAS, so the bytes do not depend on the CPU.
 """
 
 from __future__ import annotations
@@ -30,6 +31,17 @@ import numpy as np
 IMPOSSIBLE = -10000.0
 
 _erf = np.frompyfunc(math.erf, 1, 1)
+
+
+def matmul(x: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """x @ w in a fixed, BLAS-free summation order: the sum over the
+    inner index runs in ascending order, one elementwise multiply and
+    add per step. `@` goes through OpenBLAS, which picks its kernel
+    (and so its rounding) per CPU model."""
+    out = x[..., 0, None] * w[0]
+    for i in range(1, w.shape[0]):
+        out = out + x[..., i, None] * w[i]
+    return out
 
 
 def gelu(x: np.ndarray) -> np.ndarray:
@@ -116,9 +128,9 @@ def relative_attention(w: Dict, content: np.ndarray, mask: np.ndarray,
     enabled — the configuration BoxTransformerLayer uses
     (box_transformer.py:66-75). Returns (pooled, attention logits)."""
     n, seq, _ = content.shape
-    keys = make_heads(content @ w["key_w"] + w["key_b"], n_heads)
-    queries = make_heads(content @ w["query_w"] + w["query_b"], n_heads)
-    values = make_heads(content @ w["value_w"] + w["value_b"], n_heads)
+    keys = make_heads(matmul(content, w["key_w"]) + w["key_b"], n_heads)
+    queries = make_heads(matmul(content, w["query_w"]) + w["query_b"], n_heads)
+    values = make_heads(matmul(content, w["value_w"]) + w["value_b"], n_heads)
     head_size = queries.shape[-1]
 
     attn_weights: List[np.ndarray] = []
@@ -174,8 +186,8 @@ def transformer_layer(w: Dict, embeds: np.ndarray, mask: np.ndarray,
         n_heads=n_heads, mode=mode)
     embeds = embeds + update * w["resweight"]
     embeds = layer_norm(embeds, w["norm1_g"], w["norm1_b"])
-    update = gelu(embeds @ w["lin1_w"] + w["lin1_b"]) @ w["lin2_w"] \
-        + w["lin2_b"]
+    update = matmul(gelu(matmul(embeds, w["lin1_w"]) + w["lin1_b"]),
+                    w["lin2_w"]) + w["lin2_b"]
     embeds = embeds + update * w["resweight2"]
     return layer_norm(embeds, w["norm2_g"], w["norm2_b"])
 

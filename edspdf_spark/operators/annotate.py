@@ -17,8 +17,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 from ..kernels.alignment import classify_with_masks
-from ..kernels.extract import extract_doc
-from ..kernels.pdf import PdfParseError, annotate_pdf
+from ..kernels.extract import extract_pages
+from ..kernels.pdf import PdfParseError, _read_pdf, annotate_read
 from ..plans.salt import batch_map
 from .fused import PipelineConfig
 
@@ -27,20 +27,21 @@ def annotate_doc(url: str, html: bytes, cfg: PipelineConfig,
                  colors: Optional[dict] = None) -> bytes:
     """One document: extract -> mask-classify -> overlay. Documents the
     extractor cannot parse (corrupt, HTML payloads) pass through
-    unchanged — annotation is best-effort tooling, never a failure."""
-    res = extract_doc(html)
-    if res["error"] or not res["blocs"]:
+    unchanged — annotation is best-effort tooling, never a failure.
+    The PDF is read once; extraction and overlay share the read."""
+    try:
+        read = _read_pdf(html)
+    except PdfParseError:
         return bytes(html)
-    blocs = res["blocs"]
+    blocs = extract_pages(read[2])["blocs"]
+    if not blocs:
+        return bytes(html)
     keys = [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"])
             for b in blocs]
     labels = classify_with_masks(cfg.masks, keys, threshold=cfg.threshold)
     annotations = [(b["page_num"], b["x0"], b["x1"], b["y0"], b["y1"], lab)
                    for b, lab in zip(blocs, labels)]
-    try:
-        return annotate_pdf(bytes(html), annotations, colors)
-    except PdfParseError:  # pragma: no cover - extract_doc just parsed it
-        return bytes(html)
+    return annotate_read(bytes(html), read, annotations, colors)
 
 
 def run_annotate(pages: DataFrame, cfg: PipelineConfig,

@@ -204,8 +204,12 @@ def _gated_shingles(shingles: DataFrame, driver, distributed):
     sizing pass."""
     if dict(shingles.dtypes).get("id") not in ("bigint", "string"):
         return distributed(shingles)
+    # a refused gate leaves the sizing pass's cache of `shingles`: the
+    # lazy fallback reads a checkpoint of it, taken before run_gated
+    # releases the cache, so the Python shingling runs once
     return gate.run_gated(shingles, None, PAIR_DRIVER_MAX_BYTES,
-                          ["id", "code"], driver, distributed)
+                          ["id", "code"], driver,
+                          lambda sh: distributed(sh.localCheckpoint()))
 
 
 def _pairs_via_postings(shingles: DataFrame, table: pa.Table,

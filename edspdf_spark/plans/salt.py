@@ -1,4 +1,15 @@
-"""Skew defusal for heavy-tailed document sizes.
+"""Skew defusal for heavy-tailed document sizes, and the scaffolds
+that frame the Python stages' Arrow batches.
+
+Scaffolds: `batch_map` is the one mapInArrow framing (select the
+input columns, hand the kernel one Python list per column, build
+typed Arrow arrays from its output, skip empty batches); `doc_map` is
+batch_map over (id, text) behind `spread_compute`; `group_map` is the
+group-local mapInPandas. A kernel owns only its per-row or per-group
+math. tests/test_plan_quality.py lists the few stages that stay
+hand-framed, each with its reason.
+
+Skew defusal:
 
 At 10^12-document scale a partition that happens to collect several
 5000-page PDFs stalls the stage (SURVEY.md §7.4). The reference's

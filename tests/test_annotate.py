@@ -149,3 +149,26 @@ def test_run_annotate_spark(spark):
     for u, orig in rows[:2]:
         assert b" re S Q" in out[u]
         assert extract_doc(out[u]) == extract_doc(orig)
+
+
+def test_annotate_doc_reads_each_pdf_once(monkeypatch):
+    """Extraction and overlay share one `_read_pdf` per document."""
+    from edspdf_spark.kernels import pdf
+    from edspdf_spark.operators import annotate
+
+    calls = []
+    real = pdf._read_pdf
+
+    def counting(data):
+        calls.append(1)
+        return real(data)
+
+    monkeypatch.setattr(pdf, "_read_pdf", counting)
+    monkeypatch.setattr(annotate, "_read_pdf", counting)
+    for i in (1, 2, 7, 13):
+        doc = synth.make_pdf_bytes(i)
+        calls.clear()
+        out = annotate_doc("u", doc, CFG)
+        assert len(calls) == 1, i
+        if i != 13:
+            assert b" re S Q" in out

@@ -702,3 +702,32 @@ def test_md5_code_format_has_one_owner():
     owners = sorted(str(p.relative_to(root)) for p in root.rglob("*.py")
                     if "hexdigest()[:15]" in p.read_text("utf-8"))
     assert owners == ["functions/__init__.py"]
+
+
+def test_pair_fallback_reads_the_shingles_once(spark, monkeypatch):
+    """Past both caps (text and pair), jaccard_pairs / containment_pairs
+    return a plan that no longer holds the Python shingling: the
+    fallback reads a checkpoint of the table the sizing pass cached, so
+    acting on the result does not shingle again. Rows equal the
+    within-cap path's."""
+    from edspdf_spark.operators import dedup
+
+    df = (spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+          .orderBy("doc_id").limit(300))
+
+    def run():
+        sh = dedup.shingle_table(df, k=3)
+        return [dedup.jaccard_pairs(sh, threshold=0.3),
+                dedup.containment_pairs(sh, threshold=0.5)]
+
+    def rows(out):
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    want = [rows(out) for out in run()]
+    monkeypatch.setattr(dedup, "TEXT_DRIVER_MAX_BYTES", 0)
+    monkeypatch.setattr(dedup, "PAIR_DRIVER_MAX_BYTES", 0)
+    for out, exp in zip(run(), want):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in plan, plan
+        assert rows(out) == exp
+    assert want[0] and want[1]

@@ -688,3 +688,62 @@ def test_every_persist_is_released_by_its_function():
             unowned |= {(module, fn.name, n) for n in cached - released}
     assert unowned == set()
 
+
+# Python-stage call sites framed by hand rather than by plans/salt.py's
+# batch_map / group_map, each with the reason it cannot use them.
+_HAND_FRAMED = {
+    ("operators/simsearch.py", "cosine_bucket_pairs"):
+        "applyInPandas: works on whole groups",
+    ("operators/simsearch.py", "semantic_dedup"):
+        "applyInPandas: works on whole groups",
+    ("streaming/stateful.py", "streaming_first_seen"):
+        "applyInPandasWithState: keeps state across micro-batches",
+    ("streaming/stateful.py", "streaming_near_dup_bands"):
+        "applyInPandasWithState: keeps state across micro-batches",
+    ("operators/analysis.py", "_bucket_totals"):
+        "carries per-task partial counts across batches",
+    ("operators/analysis.py", "cm_token_counts"):
+        "carries per-task partial counts across batches",
+    ("operators/simsearch.py", "brute_force_topk"):
+        "carries a per-task top-k heap across batches",
+    ("operators/pack.py", "pack_sequences"):
+        "carries the open sequence across batches",
+    ("operators/simsearch.py", "_with_cell"):
+        "passes every input column through untouched",
+    ("operators/simsearch.py", "int8_quantize"):
+        "works on the vector column's Arrow buffers directly",
+    ("operators/embeddings.py", "_pool_token_matrix"):
+        "passes every input column through and works on pandas frames",
+    ("operators/dedup.py", "_pairs_via_postings"):
+        "broadcast block tasks over a spark.range, not a row map",
+    ("sources/warc.py", "parse_warc_column"):
+        "reads whole-file blobs one at a time; a batch to_pylist would "
+        "hold every file of the batch as Python bytes at once",
+    ("synth.py", "pages_spark"):
+        "a fixture generator with a timestamp column",
+}
+
+
+def test_python_stages_go_through_the_batch_scaffolds():
+    """Static framing guard: every mapInArrow / mapInPandas /
+    applyInPandas / applyInPandasWithState call under edspdf_spark/
+    sits in plans/salt.py's batch_map or group_map, or in one of the
+    hand-framed functions listed above with its reason."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "edspdf_spark"
+    stages = ("mapInArrow", "mapInPandas", "applyInPandas",
+              "applyInPandasWithState")
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        module = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            calls += [(module, getattr(top, "name", "<module>"))
+                      for node in ast.walk(top)
+                      if isinstance(node, ast.Call)
+                      and isinstance(node.func, ast.Attribute)
+                      and node.func.attr in stages]
+    scaffolds = {("plans/salt.py", "batch_map"), ("plans/salt.py", "group_map")}
+    assert sorted(set(calls) - scaffolds) == sorted(_HAND_FRAMED)
+    assert len(calls) == len(set(calls)) == 16

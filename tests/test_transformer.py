@@ -158,3 +158,46 @@ def test_box_transformer_spark_matches_kernel(spark):
         exp = expected[(r["url"], r["page_num"], r["order_idx"])]
         got = np.array([r[f"z{c}"] for c in range(size)])
         assert np.array_equal(got, exp), (r["url"], r["order_idx"])
+
+
+_CORETYPE_PROBE = """
+import hashlib
+import numpy as np
+from edspdf_spark.kernels.hf import attention_weights, hf_page_embed
+from edspdf_spark.kernels.transformer import (box_transformer_page,
+                                              box_transformer_weights)
+rng = np.random.RandomState(4)
+n, size = 36, 24
+x0 = rng.rand(n) * 0.5
+y0 = np.sort(rng.rand(n)) * 0.7
+boxes = {"x0": x0, "x1": x0 + 0.2, "y0": y0, "y1": y0 + 0.012,
+         "width": np.full(n, 0.2), "height": np.full(n, 0.012)}
+z = box_transformer_page(box_transformer_weights(size, n_layers=2),
+                         rng.randn(n, size), boxes)
+page = ["alpha beta gamma delta epsilon " * 3 + str(i) for i in range(20)]
+h = hf_page_embed(page, dim=16, window=40, stride=20,
+                  contextualizer="attention", weights=attention_weights(16))
+print(hashlib.md5(z.tobytes()).hexdigest(),
+      hashlib.md5(np.ascontiguousarray(h).tobytes()).hexdigest())
+"""
+
+
+def test_float_products_do_not_depend_on_the_blas_kernel():
+    """The box transformer and the hf attention contextualizer give the
+    same bytes whichever OpenBLAS kernel the CPU selects: run in two
+    processes pinned to different OPENBLAS_CORETYPE values (a
+    (37x24)@(24x24) float64 `@` gives different bytes under each)."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    outs = []
+    for core in ("Prescott", "Haswell"):
+        env = dict(os.environ, OPENBLAS_CORETYPE=core,
+                   PYTHONPATH=str(root))
+        outs.append(subprocess.run(
+            [sys.executable, "-c", _CORETYPE_PROBE], env=env, cwd=root,
+            capture_output=True, text=True, check=True).stdout)
+    assert outs[0] and outs[0] == outs[1]
