@@ -13,9 +13,9 @@ at the point where PIL/torchaudio/ffmpeg would be invoked).
 binary_metadata() is pure native expressions (magic-byte sniffing via
 hex prefixes) — no Python; extract_features() is the Arrow batch map
 (plans.salt.batch_map) for the heavy decode path (batch in, batch
-out, bounded by Arrow batch size like the PDF extractor); png_pixel_stats() is the
-integer-exact decode evidence (oracled closed-form from the synth
-pixel formula, never through the codec)."""
+out, bounded by Arrow batch size like the PDF extractor);
+png_pixel_stats() is the integer-exact decode evidence (oracled
+closed-form from the synth pixel formula, never through the codec)."""
 
 from __future__ import annotations
 

@@ -744,6 +744,7 @@ def test_python_stages_go_through_the_batch_scaffolds():
                       if isinstance(node, ast.Call)
                       and isinstance(node.func, ast.Attribute)
                       and node.func.attr in stages]
-    scaffolds = {("plans/salt.py", "batch_map"), ("plans/salt.py", "group_map")}
+    scaffolds = {("plans/salt.py", "batch_map"),
+                 ("plans/salt.py", "group_map")}
     assert sorted(set(calls) - scaffolds) == sorted(_HAND_FRAMED)
     assert len(calls) == len(set(calls)) == 16
